@@ -128,3 +128,67 @@ def test_writer_row_cap_redirects_to_pme(spark, tmp_path, monkeypatch):
     # at the cap: writes fine (parity layer unaffected below the cap)
     ok = spark.range(5).selectExpr("CAST(id AS STRING) AS Name")
     rf.write_reference_format(ok, str(tmp_path / "ok.bin"), CONFIG)
+
+
+def test_writer_rejects_newline_in_value(spark, tmp_path):
+    """The ``"col: value\\n"`` encoding cannot represent a newline inside
+    a value: written as-is it would split the row and misalign every
+    later row of the column, so the writer refuses and names the column."""
+    df = spark.createDataFrame(
+        [("1", "a\nb"), ("2", "c")], "Name string, Location string"
+    )
+    with pytest.raises(ValueError, match="'Location'"):
+        write_reference_format(df, str(tmp_path / "nl.bin"), CONFIG)
+
+
+def _plaintext_file(path, blob: bytes, entry: dict, row_count: int) -> str:
+    """One PLAINTEXT column ``c`` (footer fields overridden by ``entry``)
+    under a footer sealed with the suite's master key."""
+    from cryptography.hazmat.primitives.ciphers.aead import AESGCM
+
+    footer = {
+        "row_count": row_count,
+        "columns": {
+            "c": {"mode": "PLAINTEXT", "key_type": "none", "offset": 0,
+                  "size": len(blob), **entry}
+        },
+    }
+    iv = b"\x01" * 12
+    key = AESGCM(bytes.fromhex(CONFIG.master_key_hex))
+    enc = iv + key.encrypt(iv, json.dumps(footer).encode(), None)
+    path.write_bytes(blob + enc + struct.pack("<Q", len(enc)))
+    return str(path)
+
+
+def test_driver_reader_rejects_out_of_body_offset(spark, tmp_path):
+    """A footer offset pointing past the column blobs must fail loudly in
+    the driver reader too, not come back as empty rows."""
+    path = _plaintext_file(
+        tmp_path / "hostile.bin", b"c: x\n" * 3, {"offset": 1000}, 3
+    )
+    with pytest.raises(ValueError, match="outside body"):
+        read_reference_format(spark, path, CONFIG)
+
+
+@pytest.mark.parametrize("rows_written", [2, 4], ids=["short", "long"])
+def test_row_count_rule_shared_by_both_readers(spark, tmp_path, rows_written):
+    """Both readers apply one rule against the footer's row_count: a
+    column that decodes short pads with "" (reference
+    src/parquet_reader.cpp:162-164), one that decodes long raises."""
+    from project_final_parquet_spark.operators.reffile_source import (
+        read_ref_file,
+    )
+
+    path = _plaintext_file(
+        tmp_path / "rows.bin", b"c: v\n" * rows_written, {}, 3
+    )
+    opts = {"master_key_hex": CONFIG.master_key_hex}
+    if rows_written > 3:
+        with pytest.raises(ValueError, match="footer says 3"):
+            read_reference_format(spark, path, CONFIG)
+        with pytest.raises(ValueError, match="footer says 3"):
+            read_ref_file(path, opts)
+        return
+    padded = ["v", "v", ""]
+    assert [r.c for r in read_reference_format(spark, path, CONFIG).collect()] == padded
+    assert read_ref_file(path, opts) == (["c"], [padded])

@@ -7,6 +7,10 @@ Parity target: reference src/parquet_reader.cpp — selective decrypt,
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -329,3 +333,48 @@ def test_streaming_reader_batch_equivalence(spark, sf_dir, tmp_path):
         map(tuple, spark.sql("SELECT * FROM reffile_stream_sink").collect())
     )
     assert got == batch and len(got) > 0
+
+
+def test_datasource_ships_by_value_from_neutral_cwd(sf_dir, tmp_path):
+    """Drill for the pickling note in the module docstring: a fresh
+    vanilla session started from a cwd outside the checkout, with the
+    checkout on the DRIVER's sys.path only. Its Python workers cannot
+    import this package, so the scan only works if the Data Source and
+    the codec it calls reach them by value."""
+    repo = str(Path(__file__).resolve().parent.parent)
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import SparkSession
+        from project_final_parquet_spark.operators.reffile_source import (
+            RefFileDataSource, _MASTER_HEX, staged_ref_dir,
+        )
+
+        def worker_sees_package(_):
+            import importlib.util
+            return importlib.util.find_spec("project_final_parquet_spark") is not None
+
+        spark = (SparkSession.builder.master("local[2]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        spark.sparkContext.setLogLevel("ERROR")
+        sees = spark.sparkContext.parallelize([0], 1).map(worker_sees_package).first()
+        print("WORKER_SEES_PACKAGE", sees)
+        root = staged_ref_dir(spark, {sf_dir!r})
+        spark.dataSource.register(RefFileDataSource)
+        got = (spark.read.format("reffile").option("master_key_hex", _MASTER_HEX)
+               .load(root).count())
+        want = (spark.read.parquet({sf_dir!r} + "/customer.parquet")
+                .filter("c_custkey < 30").count())
+        print("COUNTS", got, want)
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["TMPDIR"] = str(tmp_path)  # stage fresh files with this checkout's writer
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    log = out.stdout + out.stderr
+    assert "WORKER_SEES_PACKAGE False" in out.stdout, log
+    assert "COUNTS 30 30" in out.stdout, log
