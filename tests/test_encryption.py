@@ -173,3 +173,87 @@ def test_blob_layout_parity(spark):
         .head()[0]
     )
     assert len(blob) == 12 + len(plain.encode()) + 16
+
+
+@pytest.mark.parametrize("master", [None, ""], ids=["none", "empty"])
+def test_read_footer_requires_master_key(spark, table_path, master):
+    """Mirrors the writer: no master key is a plain ValueError, not an
+    error from deep inside the cipher."""
+    cfg = EncryptionConfig(column_keys=CONFIG.column_keys, master_key_hex=master)
+    with pytest.raises(ValueError, match="master \\(footer\\) key required"):
+        read_footer(spark, table_path, cfg)
+
+
+def _jobs_run_by(spark, fn):
+    """(number of Spark jobs ``fn`` ran, its result), counted under a job
+    group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def test_write_runs_one_job_and_footer_read_none(spark, tmp_path):
+    """The row count is observed during the write and the footer is
+    sealed and opened on the driver, so the write is one Spark job and
+    opening the footer runs none."""
+    path = str(tmp_path / "t")
+    df = sparse_rows_df(spark, EMPLOYEE_ROWS)
+    jobs, footer = _jobs_run_by(spark, lambda: write_encrypted_table(df, path, CONFIG))
+    assert jobs == 1
+    assert footer.row_count == len(EMPLOYEE_ROWS)
+    jobs, read = _jobs_run_by(spark, lambda: read_footer(spark, path, CONFIG))
+    assert jobs == 0
+    assert read == footer
+
+
+def test_footer_opens_with_spark_aes(spark, table_path):
+    """A footer written by the table writer opens with Spark's own
+    aes_decrypt: the [12B IV][ct][16B tag] layout is unchanged."""
+    import json
+
+    from project_final_parquet_spark.encryption.io import _aes_bytes
+
+    blob = open(f"{table_path}/footer.enc", "rb").read()
+    raw = _aes_bytes(spark, blob, CONFIG.master_key_hex, encrypt=False)
+    assert json.loads(raw) == read_footer(spark, table_path, CONFIG).to_dict()
+
+
+def test_spark_sealed_footer_still_reads(spark, tmp_path):
+    """Tables whose footer Spark's aes_encrypt sealed stay readable."""
+    import json
+
+    from project_final_parquet_spark.encryption.io import _aes_bytes
+
+    path = str(tmp_path / "t")
+    footer = write_encrypted_table(sparse_rows_df(spark, EMPLOYEE_ROWS), path, CONFIG)
+    blob = _aes_bytes(
+        spark, json.dumps(footer.to_dict()), CONFIG.master_key_hex, encrypt=True
+    )
+    with open(f"{path}/footer.enc", "wb") as f:
+        f.write(blob)
+    assert read_footer(spark, path, CONFIG) == footer
+    got = read_encrypted_table(spark, path, CONFIG, ["Name"]).collect()
+    assert sorted(r["Name"] for r in got) == sorted(r.get("Name", "") for r in EMPLOYEE_ROWS)
+
+
+@pytest.mark.parametrize("shape", ["no_partitions", "filtered_empty"])
+def test_empty_frame_roundtrip(spark, tmp_path, shape):
+    """An empty frame, with no partitions or filtered down to no rows,
+    writes a footer with row_count 0 and reads back no rows."""
+    from pyspark.sql import functions as F
+
+    if shape == "no_partitions":
+        df = spark.createDataFrame([], "Name string, Salary string")
+    else:
+        df = sparse_rows_df(spark, EMPLOYEE_ROWS).filter(F.col("Name") == "nobody")
+    path = str(tmp_path / "t")
+    assert write_encrypted_table(df, path, CONFIG).row_count == 0
+    assert read_footer(spark, path, CONFIG).row_count == 0
+    assert read_encrypted_table(spark, path, CONFIG).count() == 0

@@ -192,3 +192,33 @@ def test_row_count_rule_shared_by_both_readers(spark, tmp_path, rows_written):
     padded = ["v", "v", ""]
     assert [r.c for r in read_reference_format(spark, path, CONFIG).collect()] == padded
     assert read_ref_file(path, opts) == (["c"], [padded])
+
+
+@pytest.mark.parametrize("case", ["full", "masked", "empty"])
+def test_reader_schema_is_pinned(spark, ref_path, tmp_path, case):
+    """Every read returns the lexicographic all-string schema with
+    non-nullable fields, whether full, masked or of an empty file."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    path, requested = ref_path, None
+    if case == "masked":
+        requested = ["Location"]
+    elif case == "empty":
+        path = str(tmp_path / "empty.bin")
+        df = sparse_rows_df(spark, EMPLOYEE_ROWS).filter(F.col("Name") == "nobody")
+        write_reference_format(df, path, CONFIG)
+    got = read_reference_format(spark, path, CONFIG, requested)
+    assert got.schema == T.StructType(
+        [T.StructField(c, T.StringType(), False) for c in ALL_COLS]
+    )
+    assert got.count() == (0 if case == "empty" else len(EMPLOYEE_ROWS))
+
+
+def test_zero_column_frame_keeps_its_rows(spark, tmp_path):
+    """A frame of all-empty rows (no columns at all) round-trips its row
+    count, although a zero-column Arrow table carries none."""
+    path = str(tmp_path / "zero.bin")
+    write_reference_format(sparse_rows_df(spark, [{}, {}, {}]), path, CONFIG)
+    got = read_reference_format(spark, path, CONFIG)
+    assert got.columns == [] and got.count() == 3
