@@ -171,52 +171,72 @@ def graph_modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the identical IEEE expression in both engines — no pow(), the
     square is written as x·x.
 
-    NOTE: eager — the shared edge list is localCheckpointed ONCE and
-    the ≤|brands|-row result checkpointed behind it (the registry
-    contract note lists this query): three consumers (degrees,
-    within-edges, total) would otherwise each replay the basket-pair
-    generation — battery14 first measured exactly that (13.5× at 10×
-    data from the 3× replay); with the shared checkpoint the edge
-    derivation runs once and the ratio drops to the edge build's own
-    ~linear curve.
+    Lazy, one aggregation: each edge looks up both endpoint brands
+    (LEFT joins to one broadcast of the part dim) and emits two
+    endpoint rows, (brand_a, within) and (brand_b, 0), so ONE groupBy
+    over brand gives d_c (row count) and m_c (Σ within) together. m is
+    Σ d_c / 2 over every group — including the group of endpoints with
+    no part row, which the output then drops — taken by an
+    unpartitioned window over those ≤ |brands|+2 rows, so it equals
+    the oracle's COUNT(*) over the edges. The edge list therefore has
+    a single consumer: the basket-pair generation runs once with no
+    checkpoint (battery14 first measured 13.5× at 10× data when three
+    consumers each replayed it).
 
-    Scale: the checkpointed copurchase_edges frame (basket-bounded
-    pair generation, ONE pair shuffle, built once); brands join via
-    broadcast of the part dim; the community frame is ≤ |brands| rows
-    and m is a broadcast 1-row aggregate. Adding the contributions
-    gives Q with zero extra passes."""
-    from ..ckpt import checkpoint, release
+    Scale: one copurchase_edges derivation (basket-bounded pair
+    generation, ONE pair shuffle), two broadcast lookups sharing one
+    broadcast exchange, one partial-aggregated brand rollup, then a
+    single-partition window over ≤ |brands|+2 rows. Adding the
+    contributions gives Q with zero extra passes."""
     from .graph import copurchase_edges
 
-    part = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    edges = checkpoint(copurchase_edges(spark, sf_dir))
-    adj = edges.select(F.col("a").alias("v")).unionAll(
-        edges.select(F.col("b").alias("v"))
-    )
-    deg = adj.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    dc = (
-        deg.join(
-            F.broadcast(part.select(F.col("p_partkey").alias("v"), "p_brand")),
-            "v",
+    part = load(spark, sf_dir, "part")
+
+    def lookup(end: str) -> DataFrame:
+        # known marks a matched part row, so a part whose brand is NULL
+        # stays a community (as in the oracle's inner join) while an
+        # endpoint with no part row only counts towards m
+        return F.broadcast(
+            part.select(
+                F.col("p_partkey").alias(end),
+                F.col("p_brand").alias(f"b{end}"),
+                F.lit(True).alias(f"k{end}"),
+            )
         )
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(F.sum("d").cast("long").alias("degree_sum"))
+
+    ends = (
+        copurchase_edges(spark, sf_dir)
+        .join(lookup("a"), "a", "left")
+        .join(lookup("b"), "b", "left")
+        .select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("ka").alias("known"),
+                        F.col("ba").alias("brand"),
+                        F.when(F.col("ba") == F.col("bb"), 1)
+                        .otherwise(0)
+                        .alias("within"),
+                    ),
+                    F.struct(
+                        F.col("kb").alias("known"),
+                        F.col("bb").alias("brand"),
+                        F.lit(0).alias("within"),
+                    ),
+                )
+            ).alias("e")
+        )
+        .select("e.*")
     )
-    pa = part.select(F.col("p_partkey").alias("a"), F.col("p_brand").alias("ba"))
-    pb = part.select(F.col("p_partkey").alias("b"), F.col("p_brand").alias("bb"))
-    mc = (
-        edges.join(F.broadcast(pa), "a")
-        .join(F.broadcast(pb), "b")
-        .filter(F.col("ba") == F.col("bb"))
-        .groupBy(F.col("ba").alias("brand"))
-        .agg(F.count(F.lit(1)).cast("long").alias("m_within"))
+    comm = ends.groupBy("known", "brand").agg(
+        F.count(F.lit(1)).cast("long").alias("degree_sum"),
+        F.sum("within").cast("long").alias("m_within"),
     )
-    m = edges.agg(F.count(F.lit(1)).cast("long").alias("m"))
+    m = F.sum("degree_sum").over(W.partitionBy()) / 2
     dd = F.col("degree_sum").cast("double") / (2 * F.col("m"))
-    out = checkpoint(
-        dc.join(mc, "brand", "left")
-        .na.fill({"m_within": 0})
-        .crossJoin(F.broadcast(m))
+    return (
+        comm.withColumn("m", m.cast("long"))
+        .filter(F.col("known").isNotNull())
         .select(
             "brand",
             "m_within",
@@ -225,9 +245,8 @@ def graph_modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "contribution"
             ),
         )
+        .orderBy("brand")
     )
-    release(edges)
-    return out.orderBy("brand")
 
 
 _ZIPF_TOPK = 20
@@ -1226,9 +1245,11 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     view) with the subgraph-density view. Exact integer counts; one
     IEEE ratio.
 
-    NOTE: eager — shares the edge-list localCheckpoint pattern with
-    graph_modularity_brands (three consumers of the derived edges; the
-    registry contract note lists it).
+    NOTE: eager — the derived edge list is localCheckpointed once:
+    the degree rollup reads it twice (a and b endpoints) and the
+    edges×degree join once more, and the two driver-side collects
+    would otherwise each replay the basket-pair generation for every
+    read (the registry contract note lists it).
 
     Scale: the checkpointed copurchase_edges frame, one degree rollup,
     ONE edges×degree double hash join, then three conditional

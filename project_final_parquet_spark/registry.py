@@ -37,7 +37,7 @@ graph_label_propagation, events_markov_stationary,
 embeddings_top_eigenvector, sim_pq_trained, sim_mmr_diversify,
 sample_kcenter_coreset, graph_kcore, pipeline_e2e_pretrain,
 graph_degree_assortativity, graph_bridge_edges, graph_wcc_sizes,
-graph_modularity_brands, graph_rich_club, graph_hits_authorities,
+graph_rich_club, graph_hits_authorities,
 graph_avg_neighbor_degree, graph_katz_3step, graph_local_clustering,
 graph_resource_allocation_linkpred, graph_2hop_reach (shared
 co-purchase edge list checkpointed once for plans whose column-pruned

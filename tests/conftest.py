@@ -21,3 +21,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_run_by(spark):
+    """``jobs_run_by(fn)`` -> (number of Spark jobs ``fn`` ran, its
+    result), counted under a job group of its own."""
+    import uuid
+
+    def run(fn):
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+    return run

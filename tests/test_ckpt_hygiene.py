@@ -63,6 +63,8 @@ _LEFTOVER_BUDGET = {
     # driver-side codebook training: NO checkpoint blocks at all
     "sim_pq_trained": 0,
     "ml_kmeans": 0,
+    # one lazy aggregation over the edge list: no checkpoint at all
+    "graph_modularity_brands": 0,
 }
 
 

@@ -184,31 +184,16 @@ def test_read_footer_requires_master_key(spark, table_path, master):
         read_footer(spark, table_path, cfg)
 
 
-def _jobs_run_by(spark, fn):
-    """(number of Spark jobs ``fn`` ran, its result), counted under a job
-    group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), result
-
-
-def test_write_runs_one_job_and_footer_read_none(spark, tmp_path):
+def test_write_runs_one_job_and_footer_read_none(spark, tmp_path, jobs_run_by):
     """The row count is observed during the write and the footer is
     sealed and opened on the driver, so the write is one Spark job and
     opening the footer runs none."""
     path = str(tmp_path / "t")
     df = sparse_rows_df(spark, EMPLOYEE_ROWS)
-    jobs, footer = _jobs_run_by(spark, lambda: write_encrypted_table(df, path, CONFIG))
+    jobs, footer = jobs_run_by(lambda: write_encrypted_table(df, path, CONFIG))
     assert jobs == 1
     assert footer.row_count == len(EMPLOYEE_ROWS)
-    jobs, read = _jobs_run_by(spark, lambda: read_footer(spark, path, CONFIG))
+    jobs, read = jobs_run_by(lambda: read_footer(spark, path, CONFIG))
     assert jobs == 0
     assert read == footer
 

@@ -331,7 +331,7 @@ BATTERY13 = [
 BATTERY14 = [
     "q73_mode_per_group",              # (status,priority) rollup
     "q74_percent_rank_cume_dist",      # one partition window
-    "graph_modularity_brands",         # shared edges + broadcast dims
+    "graph_modularity_brands",         # one edge pass + broadcast dims
     "text_zipf_constancy",             # tf rollup + TakeOrdered(20)
     "orders_pareto_frontier",          # day rollup + running max
     "sim_ann_recall_adaptive",         # 8 broadcast anchors x corpus
