@@ -7,8 +7,9 @@ encrypted JSON footer + KMS envelope keys, with selective per-column
 decryption (see SURVEY.md §1.5, §2.1 O1-O15). Here the same capabilities
 are built on Spark primitives:
 
-- cell-level: ``F.aes_encrypt/aes_decrypt`` (verified byte-layout
-  identical to the reference blobs: [12B IV][ciphertext][16B tag]) over
+- cell-level: the ``cell_gcm_encrypt/cell_gcm_decrypt`` JVM kernel
+  (jvm/GcmCell.java; byte layout identical to the reference blobs and to
+  Spark's ``aes_encrypt``: [12B IV][ciphertext][16B tag]) over
   BinaryType columns inside ordinary DataFrame plans;
 - storage: real Parquet (columnar, footer-last by design) with an
   AES-GCM-encrypted JSON footer sidecar mirroring the reference footer

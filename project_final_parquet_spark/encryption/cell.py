@@ -12,12 +12,18 @@ Capability parity with the reference writer/reader pipeline
   cast to string before encryption and come back as strings;
 - missing cells round-trip as "" (src/parquet_writer.cpp:65-71).
 
-``F.aes_encrypt(col, key, 'GCM')`` emits the byte-identical blob layout
-[12B IV][ciphertext][16B tag] (verified against src/crypto_utils.cpp:63-95),
-so files produced here are bit-compatible at the blob level. Everything is
-a JVM-side expression — encryption/decryption runs inside whole-stage
-codegen on executors, no Python in the data path, which is what makes
-this viable at 100 TB (the reference is single-threaded; here every
+Cells are sealed and opened by a JVM kernel registered as the SQL
+functions ``cell_gcm_encrypt`` / ``cell_gcm_decrypt`` (jvm/GcmCell.java,
+built and added by ``pme.ensure_pme_jar``). It emits the blob layout
+[12B IV][ciphertext][16B tag] of Spark's ``aes_encrypt(..., 'GCM')`` and
+of the reference (src/crypto_utils.cpp:63-95), so files produced here are
+bit-compatible at the blob level, and tables sealed by Spark's
+``aes_encrypt`` read back unchanged. Unlike Spark's function, which sets
+up a new Cipher and key schedule per cell, the kernel keeps one Cipher
+per (executor thread, key) and a fresh random IV per cell. Everything
+stays a JVM-side expression inside the DataFrame plan — encryption and
+decryption run on executors, no Python in the data path, which is what
+makes this viable at 100 TB (the reference is single-threaded; here every
 partition encrypts in parallel).
 """
 
@@ -26,9 +32,11 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
+from . import pme
 from .config import EncryptionConfig, is_valid_aes_key_hex
 from .kms import MockKMS
 
@@ -36,6 +44,11 @@ log = logging.getLogger(__name__)
 
 ENCRYPTED_PLACEHOLDER = "[ENCRYPTED]"  # reference src/parquet_reader.cpp:99
 GCM = "GCM"
+ENCRYPT_FN, DECRYPT_FN = "cell_gcm_encrypt", "cell_gcm_decrypt"
+_KERNEL_CLASSES = {
+    ENCRYPT_FN: "sparkgraft.cell.GcmCell$Encrypt",
+    DECRYPT_FN: "sparkgraft.cell.GcmCell$Decrypt",
+}
 
 
 @dataclass
@@ -146,16 +159,26 @@ def resolve_read_key(
     raise KeyError(f"no key available to decrypt column {col!r}")
 
 
+def _register_kernel(spark: SparkSession) -> None:
+    """Register the cell AES-GCM functions once per session (a restarted
+    SparkContext brings a session without them)."""
+    if all(spark.catalog.functionExists(fn) for fn in _KERNEL_CLASSES):
+        return
+    pme.ensure_pme_jar(spark)
+    for fn, cls in _KERNEL_CLASSES.items():
+        spark.udf.registerJavaFunction(fn, cls, BinaryType())
+
+
 def _enc_expr(col: str, key_hex: str) -> Column:
-    return F.aes_encrypt(
-        F.coalesce(F.col(col).cast("string"), F.lit("")),
+    return F.call_function(
+        ENCRYPT_FN,
+        F.coalesce(F.col(col).cast("string"), F.lit("")).cast("binary"),
         F.unhex(F.lit(key_hex)),
-        F.lit(GCM),
     )
 
 
 def _dec_expr(col: str, key_hex: str) -> Column:
-    return F.aes_decrypt(F.col(col), F.unhex(F.lit(key_hex)), F.lit(GCM)).cast(
+    return F.call_function(DECRYPT_FN, F.col(col), F.unhex(F.lit(key_hex))).cast(
         "string"
     )
 
@@ -174,6 +197,7 @@ def encrypt_columns(
     footer to persist.
     """
     keys, meta = resolve_write_keys(df.columns, config, kms)
+    _register_kernel(df.sparkSession)
     exprs = []
     for c in df.columns:
         if keys[c] is None:
@@ -198,6 +222,7 @@ def decrypt_columns(
     ``[ENCRYPTED]`` placeholder — same arity, all-string schema.
     """
     requested = set(requested_columns or df.columns)
+    _register_kernel(df.sparkSession)
     exprs = []
     for c in df.columns:
         meta = footer.columns[c]

@@ -12,8 +12,8 @@ Layout under ``<path>/``:
   src/parquet_reader.cpp:45-78). The footer is sealed and opened on the
   driver by the reference-format codec (reffile.py,
   ``make_reffile_codec``), in the same [12B IV][ct][16B tag] layout as
-  the column blobs that Spark's aes_encrypt writes, so neither the write
-  nor the read of the footer runs a Spark job.
+  the column blobs that the cell kernel (cell.py) writes, so neither the
+  write nor the read of the footer runs a Spark job.
 
 Scale: the data files are written/read by executors in parallel with
 column pruning and predicate pushdown intact — selective decryption here

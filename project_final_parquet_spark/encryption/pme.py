@@ -11,7 +11,7 @@ this module provides it through BOTH stacks:
    parallel, nothing funnels through the driver. The KMS side is a
    compiled ``LocalWrapKmsClient`` subclass (jvm/InMemoryKmsClient.java;
    parquet-mr ships only abstract/test KMS clients) whose jar rides on
-   ``sparkContext.addJar`` — so the path works on a VANILLA session, no
+   ``ADD JAR`` — so the path works on a VANILLA session, no
    session-create classpath needed. All crypto confs travel as
    per-operation reader/writer options, so nothing leaks into unrelated
    scans in the same session.
@@ -34,6 +34,7 @@ import base64
 import hashlib
 import os
 import subprocess
+import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,33 +62,34 @@ JVM_KMS_CLASS = "sparkgraft.pme.InMemoryKmsClient"
 KEY_LIST_PROPERTY = "sparkgraft.pme.key.list"
 
 _JVM_DIR = Path(__file__).resolve().parent / "jvm"
-_JAVA_SRC = _JVM_DIR / "InMemoryKmsClient.java"
 # Build products live in a gitignored cache keyed by the source hash —
 # NO prebuilt jar is committed (unreviewable bytecode), every session
 # loads bytecode compiled from the reviewed .java in this checkout.
 _BUILD_DIR = _JVM_DIR / "build"
 
 
-def _jar_path() -> Path:
-    src_hash = hashlib.sha256(_JAVA_SRC.read_bytes()).hexdigest()[:16]
-    return _BUILD_DIR / f"sparkgraft-pme-kms-{src_hash}.jar"
+def _jar_for(sources: list[Path]) -> Path:
+    h = hashlib.sha256()
+    for src in sources:
+        h.update(src.name.encode() + b"\0" + src.read_bytes() + b"\0")
+    return _BUILD_DIR / f"sparkgraft-jvm-{h.hexdigest()[:16]}.jar"
 
 
 def _resolve_dep_jar(jars: Path, pat: str) -> str:
     matches = sorted(jars.glob(pat))
     if not matches:
         raise FileNotFoundError(
-            f"PME build dependency {pat!r} not found in {jars} "
+            f"JVM build dependency {pat!r} not found in {jars} "
             f"(SPARK_HOME={os.environ.get('SPARK_HOME', '<unset>')}). "
-            "The JVM PME path needs the parquet/hadoop jars Spark ships."
+            "The JVM sources need the parquet/hadoop/spark-sql-api jars Spark ships."
         )
     # Deterministic pick: highest version sorts last.
     return str(matches[-1])
 
 
-def _build_jar(jar: Path) -> None:
-    """Compile the KmsClient from the committed source (javac 17 + the
-    parquet/hadoop jars Spark already ships)."""
+def _build_jar(sources: list[Path], jar: Path) -> None:
+    """Compile ``sources`` into ``jar`` (javac 17 + the parquet/hadoop/
+    spark-sql-api jars Spark already ships)."""
     spark_home = os.environ.get("SPARK_HOME", "/opt/spark")
     jars = Path(spark_home) / "jars"
     cp = os.pathsep.join(
@@ -96,31 +98,36 @@ def _build_jar(jar: Path) -> None:
             "parquet-hadoop-*.jar",
             "parquet-common-*.jar",
             "hadoop-client-api-*.jar",
+            "spark-sql-api_*.jar",
         )
     )
-    classes = _BUILD_DIR / "classes"
-    subprocess.run(
-        ["javac", "-encoding", "UTF-8", "-proc:none", "-cp", cp,
-         "-d", str(classes), str(_JAVA_SRC)],
-        check=True,
-    )
-    tmp = jar.with_suffix(".jar.tmp")
-    subprocess.run(
-        ["jar", "cf", str(tmp), "-C", str(classes), "."], check=True
-    )
+    with tempfile.TemporaryDirectory(dir=_BUILD_DIR) as classes:
+        subprocess.run(
+            ["javac", "-encoding", "UTF-8", "-proc:none", "-cp", cp,
+             "-d", classes, *map(str, sources)],
+            check=True,
+        )
+        tmp = jar.with_suffix(f".{os.getpid()}.tmp")
+        subprocess.run(["jar", "cf", str(tmp), "-C", classes, "."], check=True)
     os.replace(tmp, jar)
 
 
 def ensure_pme_jar(spark: SparkSession) -> str:
-    """Make the KMS jar visible to this session's executors (idempotent;
-    addJar is the one session-global step — confs stay per-operation).
-    Always built from the committed .java source, cached by source hash
-    (a source edit invalidates the cache and recompiles)."""
-    jar = _jar_path()
+    """Make the one jar built from ``jvm/`` (the PME KmsClient and the
+    cell AES-GCM kernel) visible to this session (idempotent).
+
+    Always built from every committed .java source there, cached by a
+    hash over all of them (a source edit invalidates the cache and
+    recompiles). ``ADD JAR`` ships the jar to the executors and puts it
+    on the session's class loader, through which ``registerJavaFunction``
+    loads the cell kernel; it is the one session-global step — PME confs
+    stay per-operation."""
+    sources = sorted(_JVM_DIR.glob("*.java"))
+    jar = _jar_for(sources)
     if not jar.exists():
         _BUILD_DIR.mkdir(parents=True, exist_ok=True)
-        _build_jar(jar)
-    spark.sparkContext._jsc.addJar(str(jar))
+        _build_jar(sources, jar)
+    spark.sql(f"ADD JAR '{jar}'")
     return str(jar)
 
 

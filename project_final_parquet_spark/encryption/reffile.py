@@ -19,9 +19,9 @@ This layer exists for FORMAT parity — the format is single-file by
 construction (one blob per column, offsets in one footer), so the writer
 pivots via the driver exactly like the reference's single process; the
 scalable path for real data is io.py / pme.py. Cell values (cell.py)
-are sealed by Spark's aes_encrypt/aes_decrypt expressions inside the
-query plan. Blobs sealed or opened outside a plan go through one codec,
-``make_reffile_codec``, on ``cryptography``'s AESGCM: this format's
+are sealed by the ``cell_gcm_encrypt``/``cell_gcm_decrypt`` JVM kernel
+inside the query plan. Blobs sealed or opened outside a plan go through
+one codec, ``make_reffile_codec``, on ``cryptography``'s AESGCM: this format's
 column blobs and footer (the driver writer/reader here and the
 ``reffile`` Data Source, operators/reffile_source.py) and the cell
 path's ``footer.enc`` (io.py). Both implementations emit the same
