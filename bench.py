@@ -393,9 +393,8 @@ def main() -> None:
         "sim_topk_cosine",          # HOF zip_with/aggregate fold
         "q7_top3_orders_per_customer",  # window functions
         "graph_pagerank",           # localCheckpoint + iterative joins
-        "sim_pairs_label_block",    # mapInArrow pair-cosine kernel:
-        # Python-worker spin-up + Arrow serializer init (~3-4 s once
-        # per session, measured rep0 7.0 s vs 2.3 s warm — opt r13)
+        "sim_pairs_label_block",    # vec_dot JVM pair-cosine kernel:
+        # jar build/ADD JAR and UDF registration, once per session
     ):
         queries[_warm](spark, _tiny).write.format("noop").mode(
             "overwrite"

@@ -32,7 +32,7 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
@@ -45,9 +45,9 @@ log = logging.getLogger(__name__)
 ENCRYPTED_PLACEHOLDER = "[ENCRYPTED]"  # reference src/parquet_reader.cpp:99
 GCM = "GCM"
 ENCRYPT_FN, DECRYPT_FN = "cell_gcm_encrypt", "cell_gcm_decrypt"
-_KERNEL_CLASSES = {
-    ENCRYPT_FN: "sparkgraft.cell.GcmCell$Encrypt",
-    DECRYPT_FN: "sparkgraft.cell.GcmCell$Decrypt",
+_KERNEL_FUNCTIONS = {
+    ENCRYPT_FN: ("sparkgraft.cell.GcmCell$Encrypt", BinaryType()),
+    DECRYPT_FN: ("sparkgraft.cell.GcmCell$Decrypt", BinaryType()),
 }
 
 
@@ -159,16 +159,6 @@ def resolve_read_key(
     raise KeyError(f"no key available to decrypt column {col!r}")
 
 
-def _register_kernel(spark: SparkSession) -> None:
-    """Register the cell AES-GCM functions once per session (a restarted
-    SparkContext brings a session without them)."""
-    if all(spark.catalog.functionExists(fn) for fn in _KERNEL_CLASSES):
-        return
-    pme.ensure_pme_jar(spark)
-    for fn, cls in _KERNEL_CLASSES.items():
-        spark.udf.registerJavaFunction(fn, cls, BinaryType())
-
-
 def _enc_expr(col: str, key_hex: str) -> Column:
     return F.call_function(
         ENCRYPT_FN,
@@ -197,7 +187,7 @@ def encrypt_columns(
     footer to persist.
     """
     keys, meta = resolve_write_keys(df.columns, config, kms)
-    _register_kernel(df.sparkSession)
+    pme.register_java_functions(df.sparkSession, _KERNEL_FUNCTIONS)
     exprs = []
     for c in df.columns:
         if keys[c] is None:
@@ -222,7 +212,7 @@ def decrypt_columns(
     ``[ENCRYPTED]`` placeholder — same arity, all-string schema.
     """
     requested = set(requested_columns or df.columns)
-    _register_kernel(df.sparkSession)
+    pme.register_java_functions(df.sparkSession, _KERNEL_FUNCTIONS)
     exprs = []
     for c in df.columns:
         meta = footer.columns[c]

@@ -38,6 +38,7 @@ import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 try:  # gate: pyarrow PME needs an encryption-enabled build
     import pyarrow as pa
@@ -81,7 +82,8 @@ def _resolve_dep_jar(jars: Path, pat: str) -> str:
         raise FileNotFoundError(
             f"JVM build dependency {pat!r} not found in {jars} "
             f"(SPARK_HOME={os.environ.get('SPARK_HOME', '<unset>')}). "
-            "The JVM sources need the parquet/hadoop/spark-sql-api jars Spark ships."
+            "The JVM sources need the parquet/hadoop/spark-sql-api/scala jars "
+            "Spark ships."
         )
     # Deterministic pick: highest version sorts last.
     return str(matches[-1])
@@ -89,7 +91,7 @@ def _resolve_dep_jar(jars: Path, pat: str) -> str:
 
 def _build_jar(sources: list[Path], jar: Path) -> None:
     """Compile ``sources`` into ``jar`` (javac 17 + the parquet/hadoop/
-    spark-sql-api jars Spark already ships)."""
+    spark-sql-api/scala-library jars Spark already ships)."""
     spark_home = os.environ.get("SPARK_HOME", "/opt/spark")
     jars = Path(spark_home) / "jars"
     cp = os.pathsep.join(
@@ -99,28 +101,35 @@ def _build_jar(sources: list[Path], jar: Path) -> None:
             "parquet-common-*.jar",
             "hadoop-client-api-*.jar",
             "spark-sql-api_*.jar",
+            "scala-library-*.jar",
         )
     )
+    # Both tools are short-lived JVMs: C1-only JIT and the serial GC
+    # halve javac's CPU (2.7 -> 1.4 CPU-s for the three sources, 4 vCPUs).
+    quick_jvm = ["-J-XX:TieredStopAtLevel=1", "-J-XX:+UseSerialGC"]
     with tempfile.TemporaryDirectory(dir=_BUILD_DIR) as classes:
         subprocess.run(
-            ["javac", "-encoding", "UTF-8", "-proc:none", "-cp", cp,
-             "-d", classes, *map(str, sources)],
+            ["javac", *quick_jvm, "-encoding", "UTF-8", "-proc:none",
+             "-cp", cp, "-d", classes, *map(str, sources)],
             check=True,
         )
         tmp = jar.with_suffix(f".{os.getpid()}.tmp")
-        subprocess.run(["jar", "cf", str(tmp), "-C", classes, "."], check=True)
+        subprocess.run(
+            ["jar", *quick_jvm, "cf", str(tmp), "-C", classes, "."], check=True
+        )
     os.replace(tmp, jar)
 
 
 def ensure_pme_jar(spark: SparkSession) -> str:
-    """Make the one jar built from ``jvm/`` (the PME KmsClient and the
-    cell AES-GCM kernel) visible to this session (idempotent).
+    """Make the one jar built from ``jvm/`` (the PME KmsClient, the cell
+    AES-GCM kernel and the vector kernels) visible to this session
+    (idempotent).
 
     Always built from every committed .java source there, cached by a
     hash over all of them (a source edit invalidates the cache and
     recompiles). ``ADD JAR`` ships the jar to the executors and puts it
     on the session's class loader, through which ``registerJavaFunction``
-    loads the cell kernel; it is the one session-global step — PME confs
+    loads the kernels; it is the one session-global step — PME confs
     stay per-operation."""
     sources = sorted(_JVM_DIR.glob("*.java"))
     jar = _jar_for(sources)
@@ -129,6 +138,19 @@ def ensure_pme_jar(spark: SparkSession) -> str:
         _build_jar(sources, jar)
     spark.sql(f"ADD JAR '{jar}'")
     return str(jar)
+
+
+def register_java_functions(
+    spark: SparkSession, functions: dict[str, tuple[str, DataType]]
+) -> None:
+    """Register SQL functions ``{name: (Java UDF class, return type)}``
+    from the ``jvm/`` jar, once per session (a restarted SparkContext
+    brings a session without them)."""
+    if all(spark.catalog.functionExists(fn) for fn in functions):
+        return
+    ensure_pme_jar(spark)
+    for fn, (cls, return_type) in functions.items():
+        spark.udf.registerJavaFunction(fn, cls, return_type)
 
 
 def _crypto_options(key_ids: list[str]) -> dict[str, str]:
@@ -140,6 +162,14 @@ def _crypto_options(key_ids: list[str]) -> dict[str, str]:
         "parquet.crypto.factory.class": JVM_FACTORY,
         "parquet.encryption.kms.client.class": JVM_KMS_CLASS,
         KEY_LIST_PROPERTY: key_list,
+        # Parquet's KeyToolkit caches KMS clients JVM-wide by access
+        # token, and InMemoryKmsClient reads the key list only when it is
+        # created. Under one shared token the first key list used in a
+        # session would serve every later operation: a reader would get
+        # keys it was never given. One token per key list keeps them apart.
+        "parquet.encryption.key.access.token": hashlib.sha256(
+            key_list.encode()
+        ).hexdigest(),
     }
 
 

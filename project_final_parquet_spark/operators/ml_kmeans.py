@@ -13,30 +13,35 @@ iterative float algorithm):
   convergence loop).
 
 Scale (100 TB): the iteration state is k×64 doubles and lives on the
-DRIVER (the MLlib pattern): each round ships the centroids inside an
-Arrow-vectorized assignment UDF (numpy argmin per batch — see
-``_assign_udf`` for why built-in HOFs lose here), then ONE aggregation
-collects k×dim rows of (count, scaled-integer sum) back to the driver —
-no crossJoin, no per-vector window shuffle, no localCheckpoint blocks.
-Per round the cluster shuffles k×dim longs per task (map-side partial
-aggs) and the driver holds k×64 doubles; data rows never shuffle at
-all. The returned assignment frame is a fully LAZY projection over the
-source — the only eager work at construction is the (iters-1) tiny
-stats collects. (The round-5 form — crossJoin + row_number window +
-localCheckpoint per round — measured 6.1 s at sf0.1 isolated and
-151.7 s under suite memory pressure, BENCH_r05; this form is one
-map-side pass per round.)
+DRIVER (the MLlib pattern): each round ships the centroids as one array
+literal into the ``kmeans_assign`` JVM kernel (see ``_assign_col`` for
+why built-in HOFs lose here), then ONE aggregation over a posexplode of
+the floor-scaled values collects k×dim rows of (count, scaled-integer
+sum) back to the driver — no crossJoin, no per-vector window shuffle, no
+localCheckpoint blocks, no Python worker. Per round the cluster shuffles
+k×dim partial sums per task (map-side partial aggs) and the driver holds
+k×64 doubles; data rows never shuffle at all. The returned assignment
+frame is a fully LAZY projection over the source — the only eager work
+at construction is the (iters-1) tiny stats collects. (The round-5
+form — crossJoin + row_number window + localCheckpoint per round —
+measured 6.1 s at sf0.1 isolated and 151.7 s under suite memory
+pressure, BENCH_r05; this form is one map-side pass per round.)
+
+NULLs follow the oracle: a NULL element or a NULL row drops out of the
+distance and of the centroid sums but counts in the cluster size.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load
+from . import vecmath
 
 _K = 4
 _ITERS = 3
@@ -113,150 +118,118 @@ def _kmeans_oracle() -> str:
 # --- Spark implementation --------------------------------------------------
 
 
-def _assign_udf(cents: list[tuple[int, list[float]]]):
-    """argmin by (dist, cid) over driver-held centroids, as an
-    Arrow-vectorized pandas UDF.
+def _assign_col(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> Column:
+    """The cluster id of each row: argmin by (dist, cid) over the
+    driver-held centroids, through the ``kmeans_assign`` JVM kernel.
 
-    Why a UDF here and not built-ins: the distance is a 64-term fold, so
-    the builtin forms are (a) zip_with+aggregate HOFs — interpreted, no
-    codegen, measured ~70 µs/row, and 64× worse when a downstream
-    posexplode collapses the projection into the Generate — or (b) an
-    unrolled 128-deep expression tree, measured 3× slower still (defeats
-    codegen; see SCALE.md "HOF fold"). NumPy does the same IEEE ops
-    SIMD-vectorized per Arrow batch, and ArrowEvalPython is a projection
-    barrier, so the assignment evaluates exactly once per row.
+    Why a kernel and not built-ins: the distance is a 64-term fold per
+    centroid, and as zip_with+aggregate HOFs it is interpreted (~70
+    µs/row, no codegen); unrolled into a 128-deep expression tree it is
+    3× slower still (see SCALE.md "HOF fold"). The centroids travel as
+    ONE k×dim array literal: 256 scalar literals made plan construction
+    slower than the Python UDF the kernel replaced.
 
     Bit-exactness vs the oracle: float32→float64 is exact; (v-c)·(v-c)
-    ·S elementwise and floor are the identical IEEE-754 ops; the per-dim
-    summands are int64 (exact, order-free); np.argmin takes the FIRST
-    minimum, and centroid columns are sorted by cid — exactly the
-    oracle's ROW_NUMBER ORDER BY dist, cid."""
-    from pyspark.sql.functions import pandas_udf
+    ·S and floor are the identical IEEE-754 ops; the int64 summands are
+    exact and order-free; the kernel takes the FIRST minimum over
+    centroids sorted by cid — the oracle's ORDER BY dist, cid. A NULL
+    centroid dimension travels as NaN, which the kernel drops as a NULL
+    term. The kernel returns the centroid's position and ``ids`` maps it
+    to the cid: a cluster that emptied has no centroid next round."""
+    vecmath.register_kernels(emb.sparkSession)
+    ids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    flat = np.array([c for _, c in cents], dtype=np.float64).reshape(-1)
+    pos = F.call_function(
+        vecmath.KMEANS_ASSIGN,
+        F.col("embedding"),
+        F.lit(flat),
+        F.lit(_DIM),
+        F.lit(float(_DSCALE)),
+    )
+    return F.lit(ids)[pos]
 
-    ids = np.array([int(cid) for cid, _ in cents], dtype=np.int64)
-    cmat = np.array([c for _, c in cents], dtype=np.float64)  # (k, dim)
-    dscale = float(_DSCALE)
 
-    @pandas_udf("long")
-    def assign(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype="int64")
-        vmat = np.stack(emb.to_numpy()).astype(np.float64)  # (n, dim)
-        dists = np.empty((vmat.shape[0], cmat.shape[0]), dtype=np.int64)
-        for j in range(cmat.shape[0]):
-            d = vmat - cmat[j]
-            dists[:, j] = (
-                np.floor(d * d * dscale).astype(np.int64).sum(axis=1)
-            )
-        return pd.Series(ids[np.argmin(dists, axis=1)])
-
-    return assign
+def _fixed_dim(vec) -> list[float]:
+    """``vec`` as exactly _DIM doubles, NaN where the oracle's
+    ``vec[d+1]`` is NULL (a NULL row, a NULL element, a short row)."""
+    vals = list(vec or [])[:_DIM]
+    vals += [None] * (_DIM - len(vals))
+    return [math.nan if x is None else float(x) for x in vals]
 
 
 def _collect_init(emb: DataFrame) -> list[tuple[int, list[float]]]:
     """c0 = embeddings of vec_id 0..k-1, as driver-side doubles."""
     rows = (
         emb.filter(F.col("vec_id") < _K)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.transform("embedding", lambda x: x.cast("double")).alias("c"),
-        )
+        .select(F.col("vec_id").alias("cid"), "embedding")
         .collect()
     )
-    return sorted((int(r["cid"]), list(r["c"])) for r in rows)
-
-
-def _stats_stage(cents: list[tuple[int, list[float]]]):
-    """mapInPandas partial-stats stage (the treeAggregate shape): per
-    Arrow batch, assign every vector (same numpy argmin as _assign_udf)
-    and emit per-cluster partials — k×dim long rows of (cid, d,
-    floor-scaled sum, count). Doing assignment AND the scaled sums in
-    ONE Python stage avoids the UDF-above-Generate trap (Catalyst
-    extracts a scalar pandas UDF ABOVE a posexplode in the same select,
-    re-serializing 64× the rows through Arrow — measured 3.7 s vs
-    0.9 s at sf1). Nested for by-value pickling."""
-    import numpy as _np
-    import pandas as _pd
-
-    ids = _np.array([int(cid) for cid, _ in cents], dtype=_np.int64)
-    cmat = _np.array([c for _, c in cents], dtype=_np.float64)
-    dscale, cscale = float(_DSCALE), float(_CSCALE)
-
-    def stage(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vmat = _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64)
-            dists = _np.empty((vmat.shape[0], cmat.shape[0]), dtype=_np.int64)
-            for j in range(cmat.shape[0]):
-                d = vmat - cmat[j]
-                dists[:, j] = (
-                    _np.floor(d * d * dscale).astype(_np.int64).sum(axis=1)
-                )
-            assign = _np.argmin(dists, axis=1)
-            sv = _np.floor(vmat * cscale).astype(_np.int64)  # (n, dim)
-            out = {"cid": [], "d": [], "sv": [], "n": []}
-            for j in range(cmat.shape[0]):
-                mask = assign == j
-                n = int(mask.sum())
-                if n == 0:
-                    continue
-                sums = sv[mask].sum(axis=0)  # exact int64 per dim
-                out["cid"].extend([int(ids[j])] * sums.size)
-                out["d"].extend(range(sums.size))
-                out["sv"].extend(int(x) for x in sums)
-                out["n"].extend([n] * sums.size)
-            yield _pd.DataFrame(out)
-
-    return stage
+    return sorted((int(r["cid"]), _fixed_dim(r["embedding"])) for r in rows)
 
 
 def _collect_stats(
     emb: DataFrame, cents: list[tuple[int, list[float]]]
-) -> list[tuple[int, int, tuple[int, ...]]]:
+) -> list[tuple[int, int, tuple[int | None, ...]]]:
     """One aggregation pass: per (cluster, dim), the floor-scaled integer
     sum and the cluster row count — k×dim tiny rows back to the driver.
-    The mapInPandas stage emits per-batch partials, so the shuffle moves
-    k×dim longs per batch regardless of row count."""
-    partials = emb.select("embedding").mapInPandas(
-        _stats_stage(cents), schema="cid long, d int, sv long, n long"
-    )
+
+    The assignment is projected BEFORE the explode, so the kernel runs
+    once per row (a select holding both would evaluate it above the
+    Generate, once per element). ``posexplode_outer`` keeps a NULL or
+    empty row as one (NULL, NULL) element, so COUNT(*) counts it as the
+    oracle does while SUM skips it: a cluster's row count is its d = 0
+    count plus its d = NULL count. A (cluster, dim) whose every value is
+    NULL has a NULL sum, the oracle's NULL centroid dimension."""
+    assigned = emb.select(_assign_col(emb, cents).alias("cid"), "embedding")
     rows = (
-        partials.groupBy("cid", "d")
+        assigned.select(
+            "cid",
+            F.posexplode_outer(
+                F.transform(
+                    "embedding", lambda x: F.floor(x.cast("double") * _CSCALE)
+                )
+            ).alias("d", "sv"),
+        )
+        .groupBy("cid", "d")
         # DECIMAL(38,0): Spark's integral SUM overflows int64 silently;
         # with CSCALE=1e9 and |v|~0.1 the long headroom is ~1e11 rows
         # per (cid, dim) — under the 100 TB design point (ADVICE r6)
         .agg(
             F.sum(F.col("sv").cast("decimal(38,0)")).alias("sv"),
-            F.sum("n").alias("n"),
+            F.count(F.lit(1)).alias("n"),
         )
         .collect()
     )
-    by_cid: dict[int, dict[int, tuple[int, int]]] = {}
+    sums: dict[tuple[int, int], int] = {}
+    counts: dict[int, int] = {}
     for r in rows:
-        by_cid.setdefault(int(r["cid"]), {})[int(r["d"])] = (
-            int(r["sv"]),
-            int(r["n"]),
-        )
+        cid, d = int(r["cid"]), r["d"]
+        if d in (0, None):
+            counts[cid] = counts.get(cid, 0) + int(r["n"])
+        if r["sv"] is not None:
+            sums[cid, d] = int(r["sv"])
     return sorted(
-        (
-            cid,
-            dims[0][1],
-            tuple(dims[d][0] for d in range(_DIM)),
-        )
-        for cid, dims in by_cid.items()
+        (cid, n, tuple(sums.get((cid, d)) for d in range(_DIM)))
+        for cid, n in counts.items()
     )
 
 
 def _means(
-    stats: list[tuple[int, int, tuple[int, ...]]],
+    stats: list[tuple[int, int, tuple[int | None, ...]]],
 ) -> list[tuple[int, list[float]]]:
     """Centroid means from integer stats, with the engines' exact cast
     order: sum → double FIRST (float(s) is round-to-nearest, the same as
     Spark's ``.cast("double")`` and DuckDB's ``CAST(... AS DOUBLE)``),
-    then two IEEE double divisions."""
+    then two IEEE double divisions. A NULL sum is a NULL mean, carried
+    as NaN."""
     return [
-        (cid, [(float(s) / float(_CSCALE)) / float(n) for s in sums])
+        (
+            cid,
+            [
+                math.nan if s is None else (float(s) / float(_CSCALE)) / float(n)
+                for s in sums
+            ],
+        )
         for cid, n, sums in stats
     ]
 
@@ -293,9 +266,7 @@ def _lloyd(
             break
         prev_stats = stats
         cents = _means(stats)
-    assigned = emb.select(
-        emb["*"], _assign_udf(cents)(F.col("embedding")).alias("cid")
-    )
+    assigned = emb.select(emb["*"], _assign_col(emb, cents).alias("cid"))
     return assigned, rounds
 
 

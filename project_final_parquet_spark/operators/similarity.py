@@ -123,11 +123,13 @@ def sim_pairs_label_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — O(N·dim) — instead of inside the pair expression —
     O(pairs·dim) (measured at sf0.1: 13.7 s → 5.9 s, bit-identical
     values since the per-row norm is the same left-fold). The pair dot
-    itself runs in the vectorized mapInArrow kernel (vecmath.py,
-    optimization r13): Catalyst's interpreted HOF fold was the per-task
-    bottleneck (unrolling it into 64 explicit products was 3× SLOWER —
-    the 128-deep expression tree defeats codegen; the NumPy kernel
-    replays the identical IEEE fold at a fraction of the cost)."""
+    itself runs in the ``vec_dot`` JVM kernel (vecmath.py): Catalyst's
+    interpreted HOF fold was the per-task bottleneck (unrolling it into
+    64 explicit products was 3× SLOWER — the 128-deep expression tree
+    defeats codegen; the kernel replays the identical IEEE fold with no
+    Python worker). Catalyst pushes the ``cosine >= 0.35`` filter into
+    the join condition, so a pair that passes is scored twice: once
+    there and once in the projection."""
     emb = load(spark, sf_dir, "embeddings")
     a = emb.select(
         F.col("vec_id").alias("vec_a"),

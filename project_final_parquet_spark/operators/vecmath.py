@@ -1,4 +1,5 @@
-"""Vectorized pair-cosine kernel (optimization round 13, guide §4.2).
+"""JVM vector kernels: pair cosine for the similarity/mining family and
+the k-means assignment (``ml_kmeans``).
 
 The similarity/mining family scores candidate pairs with the shared
 left-fold cosine:
@@ -8,43 +9,46 @@ left-fold cosine:
 
 Catalyst evaluates higher-order-function lambdas interpreted, one
 boxed element at a time, and ``zip_with`` allocates a fresh 64-element
-array per pair — measured ~5-7 s per query at sf0.1 for ~10⁵-10⁶
-candidate pairs, which made the HOF dot the single largest per-task
-cost in the bench (guide §1.2 step 2: fix per-task work once the
-distributed shape is right; §4.2: hand whole batches to vectorized
-native code instead of chains of JVM expressions).
-
-``with_pair_cosine`` replaces that projection with ONE ``mapInArrow``
-pass: embeddings cross the JVM→Python boundary as Arrow float32 list
-batches (only the columns the kernel needs — callers must pre-select,
-guide §4.1), and the dot runs in NumPy with the dimension loop OUTSIDE
-and the pair axis vectorized:
-
-    acc = 0.0; for j in 0..dim-1: acc += a[:, j] * b[:, j]
-
-Per pair this performs the IDENTICAL IEEE-754 sequence as the Catalyst
+array per pair. ``with_pair_cosine`` computes the dot with ``vec_dot``
+instead, a Java UDF (``encryption/jvm/VecKernels.java``) in the jar
+``pme.ensure_pme_jar`` builds. The UDF runs in the executor JVM: no
+Python worker, no Arrow batches, nothing that has to pickle by value.
+Per pair it performs the IDENTICAL IEEE-754 sequence as the Catalyst
 fold (float32→float64 casts are exact; each multiply and each add is
-one correctly-rounded binary64 op in the same order; NumPy does not
-fuse multiply-add in ufunc pipelines), so every cosine is bit-for-bit
-the value the HOF produced and the DuckDB oracles are untouched —
-``tests/test_vecmath.py`` asserts exact equality against the HOF fold.
+one correctly-rounded binary64 op in the same order, with no fused
+multiply-add), so every cosine is bit-for-bit the value the HOF
+produced and the DuckDB oracles are untouched — ``tests/test_vecmath.py``
+asserts exact equality against ``hof_dot``.
+
+Measured on pair cosine over 64-dim float embeddings at ``local[4]``,
+process-tree CPU-s for 124,750 pairs: 0.95 for the HOF fold, 0.96 for
+the ``mapInArrow`` NumPy kernel this replaced, 0.32 for the Java UDF;
+at 1,999,000 pairs 9.63, 7.94 and 2.53.
 
 Scale note (100 TB): the kernel is linear in candidate pairs — the
-same asymptotics as the HOF projection it replaces, with a measured
-~4-8× smaller constant. Candidate-pair volume stays bounded by the
-LSH/blocking design exactly as before; this changes per-task cost
-only. Arrow batches default to 10k rows (~5 MB at dim 64 ×2 sides),
-well under every Arrow/grpc limit, and the map carries no cross-row
-state, so batch boundaries cannot affect results.
+same asymptotics as the HOF projection. Candidate-pair volume stays
+bounded by the LSH/blocking design; this changes per-pair cost only.
+The UDF carries no cross-row state.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType
+
+from ..encryption import pme
+
+VEC_DOT, KMEANS_ASSIGN = "vec_dot", "kmeans_assign"
+_KERNEL_FUNCTIONS = {
+    VEC_DOT: ("sparkgraft.vec.VecKernels$Dot", DoubleType()),
+    KMEANS_ASSIGN: ("sparkgraft.vec.VecKernels$KmeansAssign", IntegerType()),
+}
+
+
+def register_kernels(spark: SparkSession) -> None:
+    """Make ``vec_dot`` and ``kmeans_assign`` callable in ``spark``."""
+    pme.register_java_functions(spark, _KERNEL_FUNCTIONS)
 
 
 def with_pair_cosine(
@@ -57,116 +61,31 @@ def with_pair_cosine(
     out: str = "cosine",
 ) -> DataFrame:
     """``df.select(*keep, out)`` where ``out`` is the left-fold cosine
-    dot(ea, eb)/(na·nb) — computed in one vectorized mapInArrow pass.
+    dot(ea, eb)/(na·nb), with the dot from ``vec_dot``.
 
     ``df`` must carry ``ea``/``eb`` (array<float>) and the pre-hoisted
-    per-row norms ``na``/``nb`` (the plan-pinned hoisting is unchanged:
-    norms are still computed once per ROW, before the join, in the
-    JVM). Only ``keep`` + the four kernel columns cross the Python
-    boundary; ``keep`` columns pass through untouched.
+    per-row norms ``na``/``nb`` (norms are computed once per ROW,
+    before the join).
 
-    Degenerate inputs (optimization r14, ADVICE r13): a NULL kernel
-    input (embedding or norm) or a ZERO norm product yields a NULL
-    cosine — the HOF fold's null propagation and Catalyst's
-    divide-by-zero-is-null semantics, instead of the IEEE ±inf/NaN
-    NumPy would emit (NaN sorts first in desc top-k on Spark: silent
-    corruption). For non-null, nonzero-norm rows — the entire real
-    corpus — every cosine remains bit-for-bit the HOF value.
+    Degenerate inputs: a NULL embedding, a NULL element, embeddings of
+    different lengths, a NULL norm or a ZERO norm product yield a NULL
+    cosine — the HOF fold's null propagation. The zero guard is needed
+    because Spark runs with ANSI on, where a bare divide by zero raises;
+    a NULL score drops out of every cosine >= tau filter and desc sort.
+    A NaN/inf norm (from non-finite embedding values) is a nonzero
+    divisor and flows through as IEEE division, as in the HOF fold.
     """
-    src = df.select(*keep, ea, na, eb, nb)
-    fields = [src.schema[c] for c in keep]
-    out_schema = StructType(fields + [StructField(out, DoubleType(), True)])
-    n_keep = len(keep)
-
-    # NOTE the kernel must be fully SELF-CONTAINED (no references to
-    # module-level helpers): the grading driver runs workers from a
-    # neutral cwd where this package is not importable, and cloudpickle
-    # serializes module-level references BY REFERENCE (the round-4
-    # by-reference-pickling lesson in .claude/skills/verify).
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pyarrow as pa
-
-        def mat(col, n_rows):
-            flat = col.flatten()
-            vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
-            return vals.reshape(n_rows, -1)
-
-        def compute(b, n):
-            """(cosine values, null-out mask) for a batch with NO null
-            kernel inputs. The divisor-zero mask nulls the cosine where
-            na*nb == 0: Catalyst's Divide is not IEEE — a zero divisor
-            is NULL (non-ANSI) or a DIVIDE_BY_ZERO abort (ANSI), never
-            ±inf/NaN, and a NaN cosine would sort FIRST in every
-            desc(cosine) top-k (Spark treats NaN as greater than any
-            double) — so leaking IEEE division here turns a loud
-            degenerate-input failure into silent result corruption
-            (ADVICE r13). Null is the production-safe choice of the two
-            Catalyst behaviors: a null score drops out of every
-            cosine >= tau filter and desc sort instead of killing a
-            100 TB job. A NaN/inf NORM (from non-finite embedding
-            values) is a nonzero divisor in both engines and flows
-            through as IEEE division, exactly as the HOF fold did."""
-            cols = {
-                name: b.column(i) for i, name in enumerate(b.schema.names)
-            }
-            at = np.ascontiguousarray(mat(cols[ea], n).T)
-            bt = np.ascontiguousarray(mat(cols[eb], n).T)
-            acc = np.zeros(n, dtype=np.float64)
-            # sequential left fold over dims, vectorized across rows —
-            # per row the exact IEEE op sequence of the Catalyst fold
-            for j in range(at.shape[0]):
-                acc += at[j] * bt[j]
-            na_v = cols[na].to_numpy(zero_copy_only=False)
-            nb_v = cols[nb].to_numpy(zero_copy_only=False)
-            divisor = na_v * nb_v
-            dz = divisor == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / divisor
-            return cos, dz
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            kcols = [batch.column(i) for i in range(batch.num_columns)]
-            null_rows = np.zeros(n, dtype=bool)
-            for c in kcols[n_keep:]:  # the four kernel input columns
-                if c.null_count:
-                    null_rows |= ~c.is_valid().to_numpy(
-                        zero_copy_only=False
-                    )
-            if null_rows.any():
-                # a null list slot would be DROPPED by flatten(),
-                # misaligning every subsequent row (or crashing the
-                # reshape) — compute on the valid subset and null the
-                # rest, the HOF fold's null-propagation semantics
-                idx = np.flatnonzero(~null_rows)
-                cos = np.zeros(n, dtype=np.float64)
-                null_out = null_rows.copy()
-                if idx.size:
-                    sub = batch.take(pa.array(idx))
-                    cos_sub, dz_sub = compute(sub, idx.size)
-                    cos[idx] = cos_sub
-                    null_out[idx] |= dz_sub
-            else:
-                cos, null_out = compute(batch, n)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(n_keep)]
-                + [pa.array(cos, type=pa.float64(), mask=null_out)],
-                schema=pa.schema(
-                    [batch.schema.field(i) for i in range(n_keep)]
-                    + [pa.field(out, pa.float64())]
-                ),
-            )
-
-    return src.mapInArrow(kernel, out_schema)
+    register_kernels(df.sparkSession)
+    denom = F.col(na) * F.col(nb)
+    cosine = F.when(
+        denom != 0, F.call_function(VEC_DOT, F.col(ea), F.col(eb)) / denom
+    )
+    return df.select(*keep, cosine.alias(out))
 
 
 def hof_dot(a, b):
-    """The original Catalyst left-fold dot (kept for the equivalence
-    test and for tiny frames where a Python round-trip isn't worth
-    it)."""
+    """The Catalyst left-fold dot ``vec_dot`` reproduces (kept as the
+    reference for the equivalence tests)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),

@@ -90,6 +90,47 @@ def test_jvm_pme_keyless_session_cannot_read(jvm_pme_dir):
     ), failure
 
 
+def _pme_orders(spark, sf_dir, tmp_path, tag):
+    """sf orders as PME under ``footer-{tag}`` with ``k-cust-{tag}`` on
+    o_custkey and ``k-price-{tag}`` on o_totalprice; returns the path
+    and the three key ids."""
+    keys = (f"footer-{tag}", f"k-cust-{tag}", f"k-price-{tag}")
+    path = str(tmp_path / f"orders_{tag}")
+    pme.write_pme_distributed(
+        spark.read.parquet(os.path.join(sf_dir, "orders.parquet")),
+        path,
+        column_keys={keys[1]: ["o_custkey"], keys[2]: ["o_totalprice"]},
+        footer_key=keys[0],
+    )
+    return path, keys
+
+
+def _denied(spark, path, key_ids, column):
+    with pytest.raises(Exception) as err:
+        pme.read_pme_distributed(spark, path, key_ids).select(column).collect()
+    assert "unknown master key" in str(err.value), str(err.value)[:2000]
+
+
+def test_jvm_pme_key_lists_stay_apart_in_one_session(spark, sf_dir, tmp_path):
+    """Parquet caches KMS clients JVM-wide by access token; every key
+    list must still get exactly its own keys, whichever came first in
+    the session."""
+    # restricted after full: the full-key client must not serve it
+    path, (footer, cust, price) = _pme_orders(spark, sf_dir, tmp_path, "a")
+    full = pme.read_pme_distributed(spark, path, [footer, cust, price])
+    assert full.select("o_custkey").count() > 0
+    restricted = pme.read_pme_distributed(spark, path, [footer, price])
+    assert restricted.select("o_totalprice").count() > 0
+    _denied(spark, path, [footer, price], "o_custkey")
+
+    # full after restricted: a reader given every key (plus one it does
+    # not need) reads, after a restricted reader was denied
+    path, (footer, cust, price) = _pme_orders(spark, sf_dir, tmp_path, "b")
+    _denied(spark, path, [footer, price], "o_custkey")
+    full = pme.read_pme_distributed(spark, path, [footer, price, cust, "spare"])
+    assert full.select("o_custkey", "o_totalprice").count() > 0
+
+
 # --- pyarrow fallback -------------------------------------------------------
 
 pytestmark = pytest.mark.skipif(

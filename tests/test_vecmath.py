@@ -1,12 +1,13 @@
-"""Bit-equality of the vectorized pair-cosine kernel (vecmath.py)
-against the Catalyst HOF left-fold it replaced (optimization r13).
+"""Bit-equality of the JVM pair-cosine kernel (vecmath.py, ``vec_dot``)
+against the Catalyst HOF left-fold it replaced.
 
-The kernel's correctness claim is EXACT: for every pair, the NumPy
-dimension-loop performs the identical IEEE-754 op sequence as
+The kernel's correctness claim is EXACT: for every pair, the kernel's
+fold performs the identical IEEE-754 op sequence as
 ``aggregate(zip_with(...))``, so cosines are bit-for-bit equal — not
 approximately equal. These tests assert that on adversarial float32
 data (denormal-ish magnitudes, mixed signs, values whose sums cancel),
-plus the empty-frame edge case.
+on the fold's NULL cases, and on the empty-frame edge case; and that
+the queries using the kernels run no Python worker.
 """
 
 from __future__ import annotations
@@ -19,7 +20,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from project_final_parquet_spark.operators.vecmath import (
+    VEC_DOT,
     hof_dot,
+    register_kernels,
     with_pair_cosine,
 )
 
@@ -184,3 +187,69 @@ def test_null_embedding_yields_null_cosine(spark):
             acc = acc + float(x) * float(y)
         expect = acc / (math.sqrt(_self_fold(xa)) * math.sqrt(_self_fold(xb)))
         assert struct.pack("d", expect) == struct.pack("d", got[pid])
+
+
+def _bits(v):
+    return None if v is None else struct.pack("d", v)
+
+
+def test_vec_dot_bit_equal_to_hof_dot(spark, pair_df):
+    """``vec_dot`` against ``hof_dot`` on the adversarial-magnitude
+    pairs and on the fold's NULL cases: arrays of different lengths, a
+    NULL element, a NULL array, and two empty arrays (0.0)."""
+    rng = random.Random(23)
+    va, vb = _rand_vec(rng), _rand_vec(rng)
+    with_null = list(va)
+    with_null[17] = None
+    odd = spark.createDataFrame(
+        [
+            (1000, va, vb[:40]),
+            (1001, va[:1], vb),
+            (1002, with_null, vb),
+            (1003, vb, with_null),
+            (1004, None, vb),
+            (1005, [], []),
+            (1006, [], vb),
+            (1007, va[:1], vb[:1]),
+        ],
+        "pair_id long, ea array<float>, eb array<float>",
+    )
+    register_kernels(spark)
+    rows = (
+        pair_df.select("pair_id", "ea", "eb")
+        .unionByName(odd)
+        .select(
+            "pair_id",
+            hof_dot(F.col("ea"), F.col("eb")).alias("hof"),
+            F.call_function(VEC_DOT, "ea", "eb").alias("ker"),
+        )
+        .collect()
+    )
+    assert len(rows) == 308
+    by_id = {r["pair_id"]: r for r in rows}
+    assert by_id[1005]["ker"] == 0.0
+    for pid in (1000, 1001, 1002, 1003, 1004, 1006):
+        assert by_id[pid]["ker"] is None, pid
+    for r in rows:
+        assert _bits(r["hof"]) == _bits(r["ker"]), (
+            f"pair {r['pair_id']}: HOF {r['hof']!r} != kernel {r['ker']!r}"
+        )
+
+
+_PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+@pytest.mark.parametrize("name", ["sim_pairs_label_block", "ml_kmeans"])
+def test_executed_plan_has_no_python_node(spark, sf_dir, name):
+    """The vector kernels run in the JVM: the plan Spark executed holds
+    no operator that ships rows to a Python worker."""
+    from project_final_parquet_spark.registry import all_queries
+
+    df = all_queries()[name](spark, sf_dir)
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert adaptive.isFinalPlan()
+    plan = adaptive.executedPlan().toString()
+    assert "vec_dot(" in plan or "kmeans_assign(" in plan, plan
+    found = [n for n in _PYTHON_NODES if n in plan]
+    assert not found, plan

@@ -134,7 +134,7 @@ BATTERY7 = [
     "sample_kcenter_coreset",         # k corpus aggregates + broadcasts
     "events_forecast_backtest",       # day-grain lags + MAE rollup
     "graph_label_propagation",        # per-round label join + argmax
-    "ml_kmeans",                      # driver centroids + Arrow argmin
+    "ml_kmeans",                      # driver centroids + JVM argmin
     "ml_cluster_purity",              # same + one (cid,label) rollup
 ]
 
