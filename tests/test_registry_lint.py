@@ -45,6 +45,24 @@ def test_static_lint_clean():
     assert lint_registry.static_problems() == []
 
 
+# SHA-256 over the sorted (name, oracle SQL) pairs of the whole
+# registry. Any change to a query name or an oracle string changes it;
+# moving a query between modules, or changing the import order, does not.
+REGISTRY_DIGEST = (
+    "22b091faf616884d97da7b8e20944d331747a025af0f16bcafe725354f892e62"
+)
+
+
+def test_registry_snapshot():
+    import hashlib
+
+    _load_all()
+    pairs = sorted((n, r.oracle) for n, r in _REGISTRY.items())
+    assert len(pairs) == 459
+    digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
+    assert digest == REGISTRY_DIGEST
+
+
 def test_gate_first_names_registered():
     _load_all()
     unknown = [n for n in _GATE_FIRST if n not in _REGISTRY]
