@@ -1,35 +1,43 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+Runs the HEADLINE queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE final JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+   "queries": {name: sec, ...}, "sf": ..., "families": {family: sec, ...},
+   "omitted": n}
 
 Execution is forced through the noop sink so timings measure the
 distributed plan (scan→shuffle→agg), not driver-side row transfer.
 
-Per-query deltas vs the newest committed BENCH_r{N}.json (positive =
-slower than last round) print on an EARLIER stdout line and land in
-.benchmarks/last_run.json. The driver records only the last 2000 bytes
-of stdout, and round 4's single line (summary + deltas) outgrew that —
-BENCH_r04.json has parsed:null. So the FINAL line now carries only the
-driver-contract fields ({metric, value, unit, queries, sf}) and a
-self-check asserts it fits the capture window with headroom.
+The driver records only the last 2000 bytes of stdout, so the final line
+is kept within 1900 bytes: ``value`` and ``families`` cover every query,
+and ``queries`` holds the longest prefix of HEADLINE that fits (``omitted``
+counts the rest). The line is a pure function of the run's timings
+(``final_line``), so two runs of the same tree publish the same detail
+names whatever BENCH records sit on disk.
+
+The full per-query map, the per-family subtotals and the deltas against
+the newest committed BENCH_r{N}.json (positive = slower) print on EARLIER
+lines and land in .benchmarks/last_run.json.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+_HERE = Path(__file__).resolve().parent
+sys.path.insert(0, str(_HERE))
 
 from project_final_parquet_spark.registry import all_queries
 from project_final_parquet_spark.session import get_spark
 
+# HEADLINE order is also the execution order; keep it stable so per-query
+# timings stay comparable across records.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_star_join_revenue",
@@ -45,25 +53,20 @@ HEADLINE = [
     "text_chunking",
     "stream_session_windows",
     "enc_roundtrip_agg",
-    # round-2 additions
     "text_decontaminate",
     "text_repetition_filter",
     "text_oov_rate",
     "sim_scalar_quant",
     "events_rollup_multigrain",
     "upsert_snapshot",
-    # round-2 late additions
     "sim_pq_adc",
     "text_bm25_rank",
     "graph_pagerank",
     "stream_static_enrich",
-    # round-3 additions: heaviest families that had no bench coverage
     "scd2_build",
     "dedup_containment",
     "q63_hll_sketch_union",
     "pipeline_e2e_pretrain",
-    # round-4 additions: r3 registry families start round-over-round
-    # tracking (judge item 4), plus the new real-codec path
     "dedup_semantic",
     "sim_pq_trained",
     "src_bucketed_join",
@@ -75,18 +78,12 @@ HEADLINE = [
     "text_quality_gate",
     "cdc_merge_on_read",
     "sample_temperature_mix",
-    # round-5 additions: the remaining heavy r5-queue families (judge
-    # item 3) + the new sketch-based rolling distinct
     "sim_ivf_pq",
     "text_chunk_dedup",
     "orders_backlog_timeseries",
     "events_rolling_distinct_hll",
-    # round-5 sweep fixes: start round-over-round tracking for the two
-    # queries the full-registry sweep caught slow (see SCALE.md)
     "q42_approx_aggs",
     "sim_pairs_label_block",
-    # round-5 late additions (ROUND6_QUEUE): every new family tracks
-    # round-over-round from its first round
     "dedup_incremental",
     "profile_dict_encoding",
     "sample_domain_reweight",
@@ -94,25 +91,21 @@ HEADLINE = [
     "profile_join_fanout",
     "lake_time_travel_read",
     "lake_stats_pruning",
-    # round-5 fourth-session additions (ROUND6_QUEUE tail)
     "lake_merge_upsert",
     "lake_zorder_pruned_read",
     "text_unicode_normalize",
     "sample_epoch_shuffle",
-    # round-5 fifth-session additions (ROUND6_QUEUE tail)
     "lake_change_feed",
     "dedup_exact_substring",
     "graph_triangle_count",
     "events_changepoint_cusum",
     "mm_phash_dedup",
     "text_ngram_novelty",
-    # round-5 sixth-session additions (ROUND6_QUEUE tail)
     "sim_hybrid_rrf",
     "sim_mmr_diversify",
     "pack_length_buckets",
     "dedup_band_tuning_curve",
     "sim_ann_multitable",
-    # round-5 seventh-session additions (ROUND6_QUEUE tail)
     "graph_jaccard_link_prediction",
     "events_anomaly_mad",
     "dq_k_anonymity",
@@ -123,14 +116,10 @@ HEADLINE = [
     "sample_kcenter_coreset",
     "events_forecast_backtest",
     "graph_label_propagation",
-    # round-6 additions (ROUND7_QUEUE): tracked from their first round
     "dq_referential_integrity",
     "events_churn_hazard",
     "graph_kcore",
-    # round-6 rework: ml_cluster_purity joins the bench so the kmeans
-    # family's new driver-side-centroid shape is tracked on both paths
     "ml_cluster_purity",
-    # round-6 in-round additions (ROUND7_QUEUE)
     "ml_score_deciles_lift",
     "ml_confusion_thresholds",
     "embeddings_centroid_drift",
@@ -149,7 +138,6 @@ HEADLINE = [
     "sim_multi_query_topk",
     "mix_token_budget_allocator",
     "events_ab_power",
-    # round-7 additions (ROUND8_QUEUE): tracked from their first round
     "events_retention_cohorts",
     "events_sessionize_gap",
     "events_rfm_segments",
@@ -163,8 +151,6 @@ HEADLINE = [
     "pipeline_e2e_eval_harness",
     "sim_pq_recall_audit",
     "lake_manifest_audit",
-    # round-7 in-session additions (ROUND8_QUEUE tail): tracked from
-    # their first round
     "events_survival_km",
     "events_cross_correlation",
     "events_funnel_time_to_convert",
@@ -193,9 +179,6 @@ HEADLINE = [
     "lake_bloom_point_lookup",
     "events_covisitation_matrix",
     "sample_time_split_leakage",
-    # round-8 additions (ROUND9_QUEUE): the corpus-scale bucketed
-    # mining variants and the analytics batch, tracked from their
-    # first round
     "sample_hard_negatives_bucketed",
     "sim_reciprocal_nn_bucketed",
     "ml_retrieval_mrr",
@@ -220,7 +203,6 @@ HEADLINE = [
     "text_sentence_length_profile",
     "stream_error_rate_alert",
     "lake_vacuum_plan",
-    # round 9
     "events_growth_accounting",
     "events_concurrency_peak",
     "events_power_user_curve",
@@ -257,15 +239,7 @@ HEADLINE = [
     "ml_expected_calibration_error",
     "events_error_budget_burn",
     "orders_open_order_aging",
-    # NOTE: slowest single query in any record (6.8-14.5 s observed).
-    # Iterate-to-fixpoint pointer doubling: wall time = rounds x
-    # per-round job latency, so it is the bench's most page-cache-
-    # sensitive entry (each round re-reads the checkpointed label
-    # frame; a drained cache pays disk every round). The per-record
-    # cache_state field is the denominator for comparing its numbers
-    # across records; the plan shape itself is converged (r10 verdict).
     "graph_wcc_sizes",
-    # round 10: the corpus-adaptive LSH index
     "sim_range_search_adaptive",
     "sim_pair_margin_adaptive",
     "ml_knn_purity_adaptive",
@@ -299,7 +273,6 @@ HEADLINE = [
     "events_first_session_profile",
     "orders_pareto_8020_point",
     "events_value_drawdown",
-    # round 11: the corpus-adaptive IVF index + widening batch
     "sim_ivf_adaptive",
     "sim_ivf_adaptive_occupancy",
     "sim_ivf_adaptive_recall",
@@ -315,7 +288,6 @@ HEADLINE = [
     "dedup_minhash_adaptive_bands",
     "ml_auc_delong_ci",
     "orders_spearman_price_items",
-    # round 12: nonparametric stats batch + the sharded IVF
     "events_winsorized_mean_binned",
     "events_mann_whitney_u",
     "events_wilcoxon_signed_rank",
@@ -334,8 +306,6 @@ HEADLINE = [
     "sim_ivf_sharded_recall",
     "orders_laspeyres_price_index",
     "dq_completeness_profile",
-    # round-13 additions: trend/randomness tests, robust shape,
-    # dispersion, index numbers, embedding-geometry audit, GROUP BY ALL
     "orders_mann_kendall_trend",
     "orders_runs_test_median",
     "events_bowley_skewness",
@@ -345,7 +315,6 @@ HEADLINE = [
     "q77_group_by_all",
     "dq_fd_violation_profile",
     "text_rake_keyphrases",
-    # round-13 batch 3: the classical-test tier completion
     "events_kruskal_wallis",
     "events_friedman_dow",
     "events_cochran_armitage_hour",
@@ -354,7 +323,6 @@ HEADLINE = [
     "orders_hodges_lehmann",
     "events_ljung_box",
     "orders_durbin_watson",
-    # round-13 batch 4: the effect-size / scale-test tier
     "events_mood_median_test",
     "events_cliffs_delta",
     "orders_page_trend_test",
@@ -365,6 +333,118 @@ HEADLINE = [
 # The driver keeps the last 2000 bytes of stdout; leave headroom for
 # the trailing newline and any straggler log line.
 _MAX_FINAL_LINE = 1900
+
+
+def _dumps(obj) -> str:
+    return json.dumps(obj, separators=(",", ":"))
+
+
+def _family(name: str) -> str:
+    """First name segment; the qNN SQL queries form one family."""
+    key = name.split("_", 1)[0]
+    return "sql" if key[:1] == "q" and key[1:].isdigit() else key
+
+
+def family_totals(timings: dict[str, float]) -> dict[str, float]:
+    families: dict[str, float] = {}
+    for name, sec in timings.items():
+        key = _family(name)
+        families[key] = round(families.get(key, 0.0) + sec, 3)
+    return dict(sorted(families.items()))
+
+
+def final_line(timings: dict[str, float], sf) -> dict:
+    """The final-line record for ``timings`` (in HEADLINE order): every
+    timing counts in ``value`` and ``families``, and ``queries`` is the
+    longest prefix that keeps the line within _MAX_FINAL_LINE bytes,
+    rounded to 2 and then 1 decimal before any name is cut."""
+    out = {
+        "metric": "headline_queries_total_runtime",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": dict(timings),
+        "sf": sf,
+        "families": {k: round(v, 1) for k, v in family_totals(timings).items()},
+        "omitted": 0,
+    }
+    for digits in (2, 1):
+        if len(_dumps(out)) <= _MAX_FINAL_LINE:
+            break
+        out["queries"] = {n: round(s, digits) for n, s in timings.items()}
+    names = list(out["queries"])
+    while len(_dumps(out)) > _MAX_FINAL_LINE and names:
+        del out["queries"][names.pop()]
+        out["omitted"] += 1
+    return out
+
+
+def report(
+    timings: dict[str, float],
+    sf,
+    cache_state: dict[str, int],
+    bench_dir: Path = _HERE / ".benchmarks",
+) -> None:
+    """Print the earlier lines and the final line; write last_run.json."""
+    families = family_totals(timings)
+    print(_dumps({"families": families}))
+
+    deltas: dict = {"cache_state": cache_state, "families": families}
+    prev = _latest_prev_bench()
+    if prev is not None:
+        prev_q = prev.get("queries", {})
+        shared = [n for n in timings if n in prev_q]
+        deltas["delta_vs_prev"] = {
+            n: round(timings[n] - prev_q[n], 3) for n in shared
+        }
+        # per-family drift over SHARED names only
+        fam_delta: dict[str, float] = {}
+        for n in shared:
+            key = _family(n)
+            fam_delta[key] = round(
+                fam_delta.get(key, 0.0) + (timings[n] - prev_q[n]), 3
+            )
+        deltas["families_delta_vs_prev"] = dict(sorted(fam_delta.items()))
+        # total delta over the INTERSECTION of query sets, so adding new
+        # headline queries doesn't read as a regression
+        if shared:
+            deltas["delta_vs_prev_total"] = round(
+                sum(timings[n] for n in shared)
+                - sum(prev_q[n] for n in shared),
+                3,
+            )
+        print(_dumps(deltas))
+
+    bench_dir.mkdir(exist_ok=True)
+    (bench_dir / "last_run.json").write_text(
+        json.dumps(
+            {
+                "metric": "headline_queries_total_runtime",
+                "value": round(sum(timings.values()), 3),
+                "unit": "sec",
+                "queries": timings,
+                "sf": sf,
+                **deltas,
+            },
+            indent=1,
+        )
+    )
+    print(_dumps({"queries_full": timings}))
+    print(_dumps(final_line(timings, sf)))
+
+
+def _latest_prev_bench(root: Path = _HERE) -> dict | None:
+    """Newest parseable main BENCH_r{N}.json in ``root``; the low-core
+    siblings (BENCH_r{N}_c8.json) are skipped."""
+    recs = []
+    for p in root.glob("BENCH_r*.json"):
+        m = re.fullmatch(r"BENCH_r(\d+)", p.stem)
+        if m:
+            recs.append((int(m.group(1)), p))
+    for _, p in sorted(recs, reverse=True):
+        rec = _parse_bench_file(p)
+        if rec is not None:
+            return rec
+    return None
 
 
 def main() -> None:
@@ -455,252 +535,8 @@ def main() -> None:
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)
 
-    out = {
-        "metric": "headline_queries_total_runtime",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # families + their shared-name deltas ride the FINAL contract
-        # line (VERDICT r12 item 8: they must parse from the recorded
-        # BENCH tail; extra keys are contract-safe, and the degrade
-        # loop below makes room by dropping rotated query detail).
-        "families": None,  # filled after the subtotal pass below
-    }
-
-    # per-family subtotals (VERDICT r11 item 7): the headline total now
-    # mixes 250+ queries of very different weights, so round-over-round
-    # drift needs an attributable breakdown without the shared-name
-    # join. Family = first name segment (qNN → "sql").
-    families: dict[str, float] = {}
-    for _name, _sec in timings.items():
-        _key = _name.split("_", 1)[0]
-        if _key[:1] == "q" and _key[1:].isdigit():
-            _key = "sql"
-        families[_key] = round(families.get(_key, 0.0) + _sec, 3)
-    families = dict(sorted(families.items()))
-    # 1-decimal on the FINAL line (full precision stays on the earlier
-    # line + last_run.json): ~100B saved = ~10 more query details kept
-    out["families"] = {k: round(v, 1) for k, v in families.items()}
-    # own EARLIER line too: informative in the captured tail when space
-    # allows, never at the expense of the parseable final line
-    print(json.dumps({"families": families}, separators=(",", ":")))
-
-    deltas: dict = {"cache_state": cache_state, "families": families}
-    prev = _latest_prev_bench()
-    if prev is not None:
-        prev_q = prev.get("queries", {})
-        deltas["delta_vs_prev"] = {
-            name: round(sec - prev_q[name], 3)
-            for name, sec in timings.items()
-            if name in prev_q
-        }
-        # per-family delta over SHARED names only (VERDICT r12 item 8):
-        # the attributable drift map, small enough for the final line
-        fam_delta: dict[str, float] = {}
-        for name, sec in timings.items():
-            if name not in prev_q:
-                continue
-            _k = name.split("_", 1)[0]
-            if _k[:1] == "q" and _k[1:].isdigit():
-                _k = "sql"
-            fam_delta[_k] = round(
-                fam_delta.get(_k, 0.0) + (sec - prev_q[name]), 3
-            )
-        deltas["families_delta_vs_prev"] = dict(sorted(fam_delta.items()))
-        out["families_delta_vs_prev"] = {
-            k: round(v, 1)
-            for k, v in deltas["families_delta_vs_prev"].items()
-        }
-        # total delta over the INTERSECTION of query sets, so adding new
-        # headline queries doesn't read as a regression
-        shared = [n for n in timings if n in prev_q]
-        if shared:
-            deltas["delta_vs_prev_total"] = round(
-                sum(timings[n] for n in shared)
-                - sum(prev_q[n] for n in shared),
-                3,
-            )
-        # deltas go on their own EARLIER line: informative in the
-        # captured tail when space allows, never at the expense of the
-        # parseable final line
-        print(json.dumps(deltas, separators=(",", ":")))
-
-    # full record (summary + deltas) for round-over-round archaeology
-    bench_dir = Path(__file__).resolve().parent / ".benchmarks"
-    bench_dir.mkdir(exist_ok=True)
-    (bench_dir / "last_run.json").write_text(
-        json.dumps({**out, **deltas}, indent=1)
-    )
-
-    # full per-query map on its own EARLIER line: survives in the
-    # captured tail when space allows, never at the expense of the
-    # parseable final line (the complete record is always in
-    # .benchmarks/last_run.json and the round notes)
-    print(json.dumps({"queries_full": timings}, separators=(",", ":")))
-
-    # compact separators: ~2 bytes/entry of headroom at zero cost
-    line = json.dumps(out, separators=(",", ":"))
-    # degrade rounding before ever risking a truncated line; if even
-    # 1-decimal doesn't fit, drop the FASTEST queries' detail first —
-    # the driver contract needs {metric, value, unit, queries, sf}
-    # parseable, and the heavy queries are the ones round-over-round
-    # tracking cares about; "omitted" records how many were cut
-    for digits in (2, 1):
-        if len(line) <= _MAX_FINAL_LINE:
-            break
-        out["queries"] = {n: round(s, digits) for n, s in timings.items()}
-        line = json.dumps(out, separators=(",", ":"))
-    # Rotate which queries lose final-line detail. HEADLINE (197 after
-    # round 9) has outgrown what one 1900-byte line holds (~66-70
-    # entries), so even a 3-round union sits at the knife edge
-    # (3 x 66 = 198 — measured overflowing by 2 the round HEADLINE hit
-    # 197); the rotation is now FOUR-deep: drop names covered by the
-    # newest parsed record first, then the one before, then the one
-    # before that, and PROTECT names absent from all three. Steady
-    # state: every name lands in the parsed history at least once per
-    # ~4 rounds (capacity ~4 x 66 = 264 names), and the warn line below
-    # stays empty while capacity holds.
-    #
-    # Within a priority class the drop ORDER is a deterministic hash of
-    # (round, name) — NOT the current run's timings (optimization r14;
-    # VERDICT r13 item 1 under "What's wrong"): the driver benches the
-    # SAME tree twice per round (32-core and low-core) to measure
-    # scaling, and a timing tie-break made those two runs publish
-    # near-disjoint detail sets, so the driver's scaling.per_query came
-    # back empty. Two same-round runs now emit the same drop order (the
-    # retained sets differ by at most the line-width margin), while the
-    # hash still varies round over round so multi-round coverage keeps
-    # rotating.
-    prevs = _prev_benches(3)
-    prev_detail = set(prevs[0].get("queries", {})) if prevs else set()
-    prev2_detail = (
-        set(prevs[1].get("queries", {})) if len(prevs) > 1 else set()
-    )
-    prev3_detail = (
-        set(prevs[2].get("queries", {})) if len(prevs) > 2 else set()
-    )
-    rnd = _current_round()
-    omitted = 0
-    while len(line) > _MAX_FINAL_LINE and out["queries"]:
-        drop = min(
-            out["queries"],
-            key=lambda n: _drop_priority(
-                n, rnd, prev_detail, prev2_detail, prev3_detail
-            ),
-        )
-        del out["queries"][drop]
-        omitted += 1
-        out["omitted"] = omitted
-        line = json.dumps(out, separators=(",", ":"))
-    assert len(line) <= _MAX_FINAL_LINE, (
-        f"final bench line {len(line)}B > {_MAX_FINAL_LINE}B — would be "
-        "truncated by the driver's tail capture; trim HEADLINE"
-    )
-    # self-check (r7 VERDICT item 4, retuned for the 4-deep rotation):
-    # a HEADLINE name absent from the last THREE parsed records is in
-    # the protected class and must be in this line; if it still is
-    # not, it's about to miss a fourth consecutive record — the
-    # rotation is out of capacity, so warn loudly on an earlier line.
-    gone_four = sorted(
-        n
-        for n in timings
-        if n not in out["queries"]
-        and n not in prev_detail
-        and n not in prev2_detail
-        and n not in prev3_detail
-    )
-    if gone_four:
-        print(
-            json.dumps(
-                {"warn_missing_four_parsed_records": gone_four},
-                separators=(",", ":"),
-            )
-        )
-    print(line)
-
-
-def _drop_priority(
-    name: str,
-    rnd: int,
-    prev_detail: set,
-    prev2_detail: set,
-    prev3_detail: set,
-) -> tuple:
-    """Sort key for dropping per-query detail from the final line:
-    class first (names already covered by the newest parsed record go
-    first, protected names last), then a deterministic md5 of
-    (round, name) so any two runs of the same round — the driver's
-    32-core and low-core scaling pair — drop in the SAME order. Run
-    timings must never enter this key (see the rotation comment in
-    main)."""
-    import hashlib
-
-    cls = (
-        0
-        if name in prev_detail
-        else (1 if name in prev2_detail else (2 if name in prev3_detail else 3))
-    )
-    h = hashlib.md5(f"{rnd}:{name}".encode()).hexdigest()
-    return (cls, h, name)
-
-
-def _current_round() -> int:
-    """The round this run belongs to: newest committed BENCH_r{N} + 1.
-    Both same-round bench invocations (c32 and c8) see the same
-    committed records, so they agree on this number."""
-    here = Path(__file__).resolve().parent
-    newest = 0
-    for p in here.glob("BENCH_r*.json"):
-        rnd = _bench_file_round(p)
-        if rnd is not None:
-            newest = max(newest, rnd)
-    return newest + 1
-
-
-def _bench_file_round(p: Path) -> int | None:
-    """Round number from a BENCH_r{N}[.suffix].json filename. A plain
-    digit-scrape misparses the driver's low-core sibling record
-    (BENCH_r13_c8 → "138"), which both inflated the round ordering and
-    let the c8 detail set masquerade as its own rotation generation."""
-    import re
-
-    m = re.match(r"BENCH_r(\d+)", p.stem)
-    return int(m.group(1)) if m else None
-
-
-def _latest_prev_bench() -> dict | None:
-    """Newest parseable BENCH_r{N}.json next to this script, if any."""
-    recs = _prev_benches(1)
-    return recs[0] if recs else None
-
-
-def _prev_benches(n: int) -> list[dict]:
-    """The ``n`` newest parseable BENCH_r{N}.json records, newest
-    first (each reduced to a dict with a ``queries`` map). One record
-    per ROUND: when a round has both the main and a low-core sibling
-    record (BENCH_r13.json + BENCH_r13_c8.json), the main record is the
-    round's representative — the two are the same tree, and counting
-    them as two rotation generations would halve coverage depth."""
-    here = Path(__file__).resolve().parent
-    cands: list[tuple[int, int, Path]] = []
-    for p in here.glob("BENCH_r*.json"):
-        rnd = _bench_file_round(p)
-        if rnd is not None:
-            is_main = 1 if p.stem == f"BENCH_r{rnd:02d}" else 0
-            cands.append((rnd, is_main, p))
-    out: list[dict] = []
-    seen_rounds: set[int] = set()
-    for rnd, _, p in sorted(cands, reverse=True):
-        if rnd in seen_rounds:
-            continue
-        rec = _parse_bench_file(p)
-        if rec is not None:
-            out.append(rec)
-            seen_rounds.add(rnd)
-        if len(out) == n:
-            break
-    return out
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    report(timings, sf_val, cache_state)
 
 
 def _parse_bench_file(path: Path) -> dict | None:
@@ -728,8 +564,6 @@ def _parse_bench_file(path: Path) -> dict | None:
         # salvage a head-truncated tail (BENCH_r04: the 2000-byte
         # capture cut the line's start, but the flat `"queries": {...}`
         # object survives intact mid-stream)
-        import re
-
         m = re.search(r'eries": (\{[^{}]*\})', rec["tail"])
         if m:
             try:

@@ -2,25 +2,19 @@
 
 The reference's design is explicitly "Parquet Modular Encryption
 inspired" (its README) — per-column keys, an encrypted footer, and KMS
-envelope wrapping. PME is the standardized form of exactly that, and
-this module provides it through BOTH stacks:
+envelope wrapping. PME is the standardized form of exactly that.
 
-1. **JVM-native (primary, distributed):** parquet-hadoop's
-   ``PropertiesDrivenCryptoFactory`` driven through ``df.write.parquet``
-   / ``spark.read.parquet`` — executors encrypt/decrypt partitions in
-   parallel, nothing funnels through the driver. The KMS side is a
-   compiled ``LocalWrapKmsClient`` subclass (jvm/InMemoryKmsClient.java;
-   parquet-mr ships only abstract/test KMS clients) whose jar rides on
-   ``ADD JAR`` — so the path works on a VANILLA session, no
-   session-create classpath needed. All crypto confs travel as
-   per-operation reader/writer options, so nothing leaks into unrelated
-   scans in the same session.
+parquet-hadoop's ``PropertiesDrivenCryptoFactory`` is driven through
+``df.write.parquet`` / ``spark.read.parquet``, so executors encrypt and
+decrypt partitions in parallel and nothing funnels through the driver.
+The KMS side is a compiled ``LocalWrapKmsClient`` subclass
+(jvm/InMemoryKmsClient.java; parquet-mr ships only abstract/test KMS
+clients) whose jar rides on ``ADD JAR`` — so the path works on a VANILLA
+session, no session-create classpath needed. All crypto confs travel as
+per-operation reader/writer options, so nothing leaks into unrelated
+scans in the same session.
 
-2. **pyarrow (fallback, driver-side):** single-file CryptoFactory
-   harness, kept for environments without the jar/javac and for
-   artifact-level format poking.
-
-Both implement the same contract as the reference: envelope encryption
+It implements the same contract as the reference: envelope encryption
 through a KmsClient (wrap_key/unwrap_key ≙ reference
 KMS::GenerateDataKey/DecryptDataKey, src/kms.cpp:8-30), per-column
 master-key ids (≙ column_keys config, src/main.cpp:109-111), encrypted
@@ -40,23 +34,12 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType
 
-try:  # gate: pyarrow PME needs an encryption-enabled build
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pyarrow.parquet.encryption as pe
-
-    PME_AVAILABLE = True
-except ImportError:  # pragma: no cover
-    PME_AVAILABLE = False
-
 
 def _master_key(key_id: str) -> bytes:
     """Deterministic mock master-key derivation (stand-in for a real KMS
     backend, same spirit as the reference's stub kms.cpp:10-15)."""
     return hashlib.sha256(f"master:{key_id}".encode()).digest()[:16]
 
-
-# --- JVM-native distributed PME --------------------------------------------
 
 JVM_FACTORY = "org.apache.parquet.crypto.keytools.PropertiesDrivenCryptoFactory"
 JVM_KMS_CLASS = "sparkgraft.pme.InMemoryKmsClient"
@@ -182,12 +165,14 @@ def write_pme_distributed(
     """Executor-parallel PME write: standard ``df.write.parquet`` with
     the crypto factory + key confs as writer options. ``column_keys``
     maps master-key-id → column list; unlisted columns (and the footer)
-    are protected by ``footer_key``. Output is ordinary partitioned
+    are encrypted under ``footer_key``. Output is ordinary partitioned
     parquet — every part file PME-encrypted — readable by ANY PME-aware
     reader holding the keys."""
     ensure_pme_jar(df.sparkSession)
     opts = _crypto_options([footer_key, *column_keys])
     opts["parquet.encryption.footer.key"] = footer_key
+    # parquet-mr leaves unlisted columns in plaintext unless told otherwise
+    opts["parquet.encryption.complete.columns"] = "true"
     opts["parquet.encryption.column.keys"] = ";".join(
         f"{kid}:{','.join(cols)}" for kid, cols in column_keys.items()
     )
@@ -203,65 +188,3 @@ def read_pme_distributed(
     ensure_pme_jar(spark)
     return spark.read.options(**_crypto_options(key_ids)).parquet(path)
 
-
-# --- pyarrow fallback (driver-side, single file) ----------------------------
-
-if PME_AVAILABLE:
-
-    class MockPmeKmsClient(pe.KmsClient):
-        """Standard PME KmsClient contract over the mock key store.
-
-        wrap_key returns UTF-8 (base64) as the PME key-metadata format
-        requires.
-        """
-
-        def __init__(self, kms_connection_config):
-            pe.KmsClient.__init__(self)
-
-        def wrap_key(self, key_bytes: bytes, master_key_identifier: str) -> str:
-            mk = _master_key(master_key_identifier)
-            stream = (mk * ((len(key_bytes) // len(mk)) + 1))[: len(key_bytes)]
-            return base64.b64encode(
-                bytes(a ^ b for a, b in zip(key_bytes, stream))
-            ).decode()
-
-        def unwrap_key(self, wrapped_key: str, master_key_identifier: str) -> bytes:
-            mk = _master_key(master_key_identifier)
-            raw = base64.b64decode(wrapped_key)
-            stream = (mk * ((len(raw) // len(mk)) + 1))[: len(raw)]
-            return bytes(a ^ b for a, b in zip(raw, stream))
-
-    def _factory() -> "pe.CryptoFactory":
-        return pe.CryptoFactory(MockPmeKmsClient)
-
-    def write_pme_encrypted(
-        df: DataFrame,
-        path: str,
-        column_keys: dict[str, list[str]],
-        footer_key: str = "footer-master-key",
-    ) -> None:
-        """FALLBACK: write ``df`` as ONE PME-encrypted parquet file via
-        pyarrow on the driver — a local format harness for when the JVM
-        path (``write_pme_distributed``, the scale-correct form) can't
-        run. The ``toPandas`` funnel is the reason it's the fallback."""
-        table = pa.Table.from_pandas(df.toPandas(), preserve_index=False)
-        enc_cfg = pe.EncryptionConfiguration(
-            footer_key=footer_key,
-            column_keys=column_keys,
-            encryption_algorithm="AES_GCM_V1",
-        )
-        props = _factory().file_encryption_properties(
-            pe.KmsConnectionConfig(), enc_cfg
-        )
-        with pq.ParquetWriter(path, table.schema, encryption_properties=props) as w:
-            w.write_table(table)
-
-    def read_pme_encrypted(
-        spark: SparkSession, path: str, columns: list[str] | None = None
-    ) -> DataFrame:
-        """FALLBACK: read a single pyarrow-written PME file on the driver."""
-        dec = _factory().file_decryption_properties(
-            pe.KmsConnectionConfig(), pe.DecryptionConfiguration()
-        )
-        table = pq.ParquetFile(path, decryption_properties=dec).read(columns=columns)
-        return spark.createDataFrame(table.to_pandas())

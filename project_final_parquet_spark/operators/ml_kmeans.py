@@ -136,17 +136,29 @@ def _assign_col(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> Column:
     centroid dimension travels as NaN, which the kernel drops as a NULL
     term. The kernel returns the centroid's position and ``ids`` maps it
     to the cid: a cluster that emptied has no centroid next round."""
-    vecmath.register_kernels(emb.sparkSession)
+    spark = emb.sparkSession
+    vecmath.register_kernels(spark)
     ids = np.array([cid for cid, _ in cents], dtype=np.int64)
     flat = np.array([c for _, c in cents], dtype=np.float64).reshape(-1)
     pos = F.call_function(
         vecmath.KMEANS_ASSIGN,
         F.col("embedding"),
-        F.lit(flat),
+        _double_array_lit(spark, flat),
         F.lit(_DIM),
         F.lit(float(_DSCALE)),
     )
     return F.lit(ids)[pos]
+
+
+def _double_array_lit(spark: SparkSession, a: np.ndarray) -> Column:
+    """``F.lit(a)`` for a 1-d float64 array, bit for bit (NaN and -0.0
+    included), built in one py4j transfer: pyspark's numpy converter
+    sets the Java array one element per gateway call."""
+    jvm = spark.sparkContext._jvm
+    jarr = spark.sparkContext._gateway.new_array(jvm.double, len(a))
+    buf = jvm.java.nio.ByteBuffer.wrap(bytearray(a.astype("<f8").tobytes()))
+    buf.order(jvm.java.nio.ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().get(jarr)
+    return F.lit(jarr)
 
 
 def _fixed_dim(vec) -> list[float]:

@@ -12,11 +12,16 @@ in DuckDB over the same file.
 from __future__ import annotations
 
 import duckdb
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.ml_kmeans import ml_kmeans
+from project_final_parquet_spark.operators.ml_kmeans import (
+    _double_array_lit,
+    ml_kmeans,
+)
 from project_final_parquet_spark.registry import all_oracles
 
 
@@ -69,3 +74,15 @@ def test_degenerate_inputs_match_oracle(spark, sf_dir, tmp_path, edit):
     assert got == want
     # one NULL must not pull every row into a single cluster
     assert len(want) > 1
+
+
+def test_centroid_literal_is_bit_identical_to_numpy_lit(spark):
+    a = np.random.default_rng(0).standard_normal(256)
+    a[[3, 7, 9]] = [np.nan, -0.0, np.inf]
+    df = spark.range(1).select(
+        F.lit(a).alias("numpy"), _double_array_lit(spark, a).alias("buffer")
+    )
+    assert df.schema["numpy"].dataType == df.schema["buffer"].dataType
+    row = df.head()
+    for got in (row.numpy, row.buffer):
+        assert np.asarray(got, "<f8").tobytes() == a.tobytes()

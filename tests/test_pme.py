@@ -1,5 +1,5 @@
-"""Format-level Parquet Modular Encryption tests — the JVM-native
-distributed path (primary) and the pyarrow driver-side fallback."""
+"""Format-level Parquet Modular Encryption tests (the JVM-native
+distributed path)."""
 
 from __future__ import annotations
 
@@ -11,9 +11,6 @@ import textwrap
 import pytest
 
 from project_final_parquet_spark.encryption import pme
-
-
-# --- JVM-native distributed PME (PropertiesDrivenCryptoFactory) ------------
 
 
 @pytest.fixture(scope="module")
@@ -131,41 +128,27 @@ def test_jvm_pme_key_lists_stay_apart_in_one_session(spark, sf_dir, tmp_path):
     assert full.select("o_custkey", "o_totalprice").count() > 0
 
 
-# --- pyarrow fallback -------------------------------------------------------
-
-pytestmark = pytest.mark.skipif(
-    not pme.PME_AVAILABLE, reason="pyarrow PME not available"
-)
-
-
-@pytest.fixture(scope="module")
-def pme_file(spark, tmp_path_factory, sf_dir):
-    path = str(tmp_path_factory.mktemp("pme") / "documents.parquet")
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    pme.write_pme_encrypted(
-        df,
-        path,
-        column_keys={"key-text": ["text"], "key-meta": ["lang", "source"]},
+def test_jvm_pme_encrypts_unlisted_columns(spark, tmp_path):
+    """A column that no key lists is encrypted under the footer key: its
+    values never appear in the raw bytes of an uncompressed write."""
+    df = spark.range(2000).selectExpr(
+        "id", "concat('plainmarker-', id) AS note"
     )
-    return path, df
-
-
-def test_keyless_read_fails(pme_file):
-    import pyarrow.parquet as pq
-
-    path, _ = pme_file
-    with pytest.raises(Exception):
-        pq.read_table(path)
-
-
-def test_roundtrip_matches_source(spark, pme_file):
-    path, df = pme_file
-    got = pme.read_pme_encrypted(spark, path)
+    path = str(tmp_path / "unlisted")
+    codec = "spark.sql.parquet.compression.codec"
+    old = spark.conf.get(codec)
+    spark.conf.set(codec, "uncompressed")
+    try:
+        pme.write_pme_distributed(
+            df, path, column_keys={"k-id": ["id"]}, footer_key="k-footer"
+        )
+    finally:
+        spark.conf.set(codec, old)
+    raw = b"".join(
+        open(os.path.join(path, f), "rb").read()
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    assert raw.count(b"plainmarker-") == 0
+    got = pme.read_pme_distributed(spark, path, ["k-footer", "k-id"])
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_column_pruned_read(spark, pme_file):
-    path, df = pme_file
-    got = pme.read_pme_encrypted(spark, path, columns=["doc_id", "lang"])
-    assert got.columns == ["doc_id", "lang"]
-    assert got.count() == df.count()

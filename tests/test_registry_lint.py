@@ -7,10 +7,9 @@ gate at least as strict as the driver on output shape:
 
 - no registered query emits an Array/Map/Struct output column
 - every registered query has a docstring; no oracle table typos
-- the round-13 gate window (first 50 of ``_GATE_FIRST``) leads with the
-  ROUND13_QUEUE verbatim and spends every refill slot on the oldest
-  remaining driver evidence (the last 19 round-4 names, then the oldest
-  round-5 names, in their original window order)
+- the registry's names and oracle SQL match a committed digest
+- the driver-gate order, computed from the CORRECTNESS records, puts
+  never-gated queries first and then the oldest evidence
 - the registry docstring's eager-at-construction contract note names
   every query whose module-local call graph reaches localCheckpoint
 """
@@ -28,11 +27,12 @@ import lint_registry
 
 import project_final_parquet_spark.registry as registry_mod
 from project_final_parquet_spark.registry import (
-    _GATE_FIRST,
     _load_all,
     _REGISTRY,
-    ROUND13_QUEUE,
-    ROUND14_QUEUE,
+    all_queries,
+    correctness_records,
+    gate_order,
+    latest_green,
 )
 
 
@@ -63,74 +63,51 @@ def test_registry_snapshot():
     assert digest == REGISTRY_DIGEST
 
 
-def test_gate_first_names_registered():
+def _records_through(last_round: int) -> dict[int, dict]:
+    return {r: rec for r, rec in correctness_records().items() if r <= last_round}
+
+
+def test_gate_order_puts_never_gated_first():
     _load_all()
-    unknown = [n for n in _GATE_FIRST if n not in _REGISTRY]
-    assert not unknown
+    records = correctness_records()
+    latest = latest_green(records)
+    order = gate_order(_REGISTRY, records)
+    assert sorted(order) == sorted(_REGISTRY)
+    rounds = [latest.get(n, 0) for n in order]
+    never = rounds.count(0)
+    assert 0 not in rounds[never:]
+    # evidence rounds never decrease along the order
+    assert rounds == sorted(rounds)
 
 
-def _latest_green(max_round: int | None = None) -> dict[str, int]:
-    # ADVICE r9: glob every round and parse ALL trailing digits — the
-    # old CORRECTNESS_r0[12345678] single-char class broke at round 10
-    # (r10 would have parsed as round 0 under stem[-1]).
-    import re
-
-    repo = Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    for p in repo.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)", p.stem)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if max_round is not None and rnd > max_round:
-            continue
-        rec = json.loads(p.read_text())
-        for name, row in rec.items():
-            if row.get("hash_match") or row.get("rows_match"):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def test_round13_window_leads_with_queue():
-    """The round-13 rotation contract, asserted mechanically:
-
-    - positions 1-18 are ROUND13_QUEUE verbatim (the round-12 in-round
-      additions, never driver-gated) — after this round the driver
-      union r1..r13 covers every pre-freeze registration (437/437);
-    - every never-driver-gated query (vs CORRECTNESS_r01..r12) is
-      either in the window or a declared post-freeze ROUND14_QUEUE
-      name, and ROUND14_QUEUE contains nothing else;
-    - refill slots re-gate the oldest evidence in the ledger: the 19
-      remaining round-4 rows first, then only round-5 rows (nothing
-      fresher), and no round-1/2/3-evidence rows remain anywhere in
-      the ledger after this window runs.
-    """
+def test_gate_window_is_computed_from_the_records():
     _load_all()
-    latest_green = _latest_green(max_round=12)
-    window = _GATE_FIRST[:50]
-    assert len(window) == len(set(window)) == 50
-    assert window[: len(ROUND13_QUEUE)] == ROUND13_QUEUE
-    never_gated = {n for n in _REGISTRY if n not in latest_green}
-    assert set(ROUND14_QUEUE) == never_gated - set(window), (
-        "ROUND14_QUEUE must be exactly the never-driver-gated "
-        "registrations outside the round-13 window"
-    )
-    refills = window[len(ROUND13_QUEUE):]
-    # the 19 round-4 stragglers lead the refills; everything after them
-    # carries round-5 evidence (the oldest remaining tier)
-    r4 = [n for n in refills if latest_green[n] == 4]
-    assert refills[: len(r4)] == r4 and len(r4) == 19, (
-        "the last 19 round-4 evidence rows must lead the refill slots"
-    )
-    fresh = {n: latest_green[n] for n in refills if latest_green[n] > 5}
-    assert not fresh, f"refill slots wasted on fresh evidence: {fresh}"
-    # no r1/r2/r3-only names remain anywhere in the ledger
-    leftover = {
-        n
-        for n, rnd in latest_green.items()
-        if rnd <= 3 and n in _REGISTRY
-    }
-    assert leftover == set(), leftover
+    records = _records_through(14)
+    latest = latest_green(records)
+    window = gate_order(_REGISTRY, records)[:50]
+    assert sum(1 for n in window if n not in latest) == 22
+    assert sum(1 for n in window if latest.get(n) == 5) == 28
+    # all_queries() exposes the same order to the driver
+    assert list(all_queries())[:50] == gate_order(
+        _REGISTRY, correctness_records()
+    )[:50]
+
+
+def test_gated_window_moves_to_the_back():
+    _load_all()
+    records = _records_through(14)
+    window = gate_order(_REGISTRY, records)[:50]
+    # a synthetic next round that gated exactly that window
+    r15 = {n: {"hash_match": True} for n in window}
+    order = gate_order(_REGISTRY, {**records, 15: r15})
+    assert order[-50:] == sorted(window)
+    # after it, every registered query has driver evidence
+    assert set(latest_green({**records, 15: r15})) >= set(_REGISTRY)
+
+
+def test_gate_order_without_records_is_name_order():
+    _load_all()
+    assert gate_order(_REGISTRY, {}) == sorted(_REGISTRY)
 
 
 def test_eager_contract_note_is_complete():
