@@ -24,6 +24,13 @@ the oracle SQL; deviations are bugs):
 5.  Any LIMIT/top-k is preceded by a TOTAL ordering (unique tiebreaker
     column included).
 
+Gate order — the driver's CORRECTNESS gate runs the first 50 queries
+of ``all_queries()``. The order is computed, never hand-kept: queries
+with no green row in any committed ``CORRECTNESS_r*.json`` come first,
+then by the round of their newest green row, ties by name
+(``gate_order``). Each round's window therefore moves to the back once
+the driver records it.
+
 Contract note — some queries materialize intermediate state at
 construction time (eager per-round localCheckpoint for iterative
 algorithms, a shared shortlist/edge-list checkpoint for multi-consumer
@@ -111,19 +118,17 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver's per-round CORRECTNESS gate covers the FIRST 50 queries of
-# all_queries(). The order is computed from the committed CORRECTNESS
-# records so that every round gates the queries with the oldest (or no)
-# evidence: never-gated names first, then by the round of their newest
-# green row, ties by name.
+# --- driver-gate order (see "Gate order" in the module docstring) ----------
 
 _EVIDENCE_DIR = Path(__file__).resolve().parent.parent
 
 
-def correctness_records(root: Path = _EVIDENCE_DIR) -> dict[int, dict]:
-    """``{round: record}`` for every ``CORRECTNESS_r{N}.json`` in ``root``."""
+@functools.cache
+def correctness_records() -> dict[int, dict]:
+    """``{round: record}`` for every committed ``CORRECTNESS_r{N}.json``
+    (read once per process; callers must not mutate it)."""
     records: dict[int, dict] = {}
-    for p in root.glob("CORRECTNESS_r*.json"):
+    for p in _EVIDENCE_DIR.glob("CORRECTNESS_r*.json"):
         # parse ALL trailing digits: r10 is round 10, not round 0
         m = re.fullmatch(r"CORRECTNESS_r(\d+)", p.stem)
         if m:
@@ -132,8 +137,8 @@ def correctness_records(root: Path = _EVIDENCE_DIR) -> dict[int, dict]:
 
 
 def latest_green(records: dict[int, dict]) -> dict[str, int]:
-    """Newest round in which each query had a green row (its hash or,
-    for oracle-less queries, its row count matched)."""
+    """Newest round in which each query had a green row (``hash_match``
+    or ``rows_match``)."""
     latest: dict[str, int] = {}
     for rnd, rec in records.items():
         for name, row in rec.items():
@@ -148,14 +153,9 @@ def gate_order(names, records: dict[int, dict]) -> list[str]:
     return sorted(names, key=lambda n: (latest.get(n, 0), n))
 
 
-@functools.cache
-def _committed_records() -> dict[int, dict]:
-    return correctness_records()
-
-
 def _ordered() -> dict[str, RegisteredQuery]:
     _load_all()
-    return {n: _REGISTRY[n] for n in gate_order(_REGISTRY, _committed_records())}
+    return {n: _REGISTRY[n] for n in gate_order(_REGISTRY, correctness_records())}
 
 
 def all_queries() -> dict[str, QueryFn]:
