@@ -239,6 +239,9 @@ HEADLINE = [
     "ml_expected_calibration_error",
     "events_error_budget_burn",
     "orders_open_order_aging",
+    # the slowest single query (6.8-14.5 s at sf0.1): pointer doubling
+    # re-reads its checkpointed label frame every round, so it is the most
+    # page-cache-sensitive entry (see cache_state on the deltas line)
     "graph_wcc_sizes",
     "sim_range_search_adaptive",
     "sim_pair_margin_adaptive",
@@ -353,17 +356,23 @@ def family_totals(timings: dict[str, float]) -> dict[str, float]:
     return dict(sorted(families.items()))
 
 
+def _summary(timings: dict[str, float], sf) -> dict:
+    return {
+        "metric": "headline_queries_total_runtime",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": dict(timings),
+        "sf": sf,
+    }
+
+
 def final_line(timings: dict[str, float], sf) -> dict:
     """The final-line record for ``timings`` (in HEADLINE order): every
     timing counts in ``value`` and ``families``, and ``queries`` is the
     longest prefix that keeps the line within _MAX_FINAL_LINE bytes,
     rounded to 2 and then 1 decimal before any name is cut."""
     out = {
-        "metric": "headline_queries_total_runtime",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": dict(timings),
-        "sf": sf,
+        **_summary(timings, sf),
         "families": {k: round(v, 1) for k, v in family_totals(timings).items()},
         "omitted": 0,
     }
@@ -416,17 +425,7 @@ def report(
 
     bench_dir.mkdir(exist_ok=True)
     (bench_dir / "last_run.json").write_text(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_runtime",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                **deltas,
-            },
-            indent=1,
-        )
+        json.dumps({**_summary(timings, sf), **deltas}, indent=1)
     )
     print(_dumps({"queries_full": timings}))
     print(_dumps(final_line(timings, sf)))

@@ -134,7 +134,8 @@ def test_jvm_pme_encrypts_unlisted_columns(spark, tmp_path):
     df = spark.range(2000).selectExpr(
         "id", "concat('plainmarker-', id) AS note"
     )
-    path = str(tmp_path / "unlisted")
+    out = tmp_path / "unlisted"
+    path = str(out)
     codec = "spark.sql.parquet.compression.codec"
     old = spark.conf.get(codec)
     spark.conf.set(codec, "uncompressed")
@@ -144,11 +145,7 @@ def test_jvm_pme_encrypts_unlisted_columns(spark, tmp_path):
         )
     finally:
         spark.conf.set(codec, old)
-    raw = b"".join(
-        open(os.path.join(path, f), "rb").read()
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    raw = b"".join(p.read_bytes() for p in out.glob("*.parquet"))
     assert raw.count(b"plainmarker-") == 0
     got = pme.read_pme_distributed(spark, path, ["k-footer", "k-id"])
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
