@@ -398,7 +398,7 @@ def report(
     print(_dumps({"families": families}))
 
     deltas: dict = {"cache_state": cache_state, "families": families}
-    prev = _latest_prev_bench()
+    prev = _latest_prev_bench(sf)
     if prev is not None:
         prev_q = prev.get("queries", {})
         shared = [n for n in timings if n in prev_q]
@@ -431,9 +431,10 @@ def report(
     print(_dumps(final_line(timings, sf)))
 
 
-def _latest_prev_bench(root: Path = _HERE) -> dict | None:
-    """Newest parseable main BENCH_r{N}.json in ``root``; the low-core
-    siblings (BENCH_r{N}_c8.json) are skipped."""
+def _latest_prev_bench(sf, root: Path = _HERE) -> dict | None:
+    """Newest parseable main BENCH_r{N}.json in ``root`` run at scale
+    ``sf``; the low-core siblings (BENCH_r{N}_c8.json) and records of
+    another or unknown scale are skipped."""
     recs = []
     for p in root.glob("BENCH_r*.json"):
         m = re.fullmatch(r"BENCH_r(\d+)", p.stem)
@@ -441,7 +442,7 @@ def _latest_prev_bench(root: Path = _HERE) -> dict | None:
             recs.append((int(m.group(1)), p))
     for _, p in sorted(recs, reverse=True):
         rec = _parse_bench_file(p)
-        if rec is not None:
+        if rec is not None and rec.get("sf") == sf:
             return rec
     return None
 
@@ -453,7 +454,7 @@ def main() -> None:
     queries = all_queries()
 
     # warm-up: JVM/codegen/session init outside the measured window.
-    # One aggregate query alone leaves the shared HOF-fold / window /
+    # One aggregate query alone leaves the shared vector-kernel / window /
     # checkpoint machinery cold — the first HEADLINE query of each
     # expression class then pays multi-second C2 JIT that reads as a
     # phantom round-over-round regression (measured: ml_linear_probe_auc
@@ -469,7 +470,7 @@ def main() -> None:
     if not os.path.isdir(_tiny):
         _tiny = sf_dir
     for _warm in (
-        "sim_topk_cosine",          # HOF zip_with/aggregate fold
+        "sim_topk_cosine",          # vec_dot query-vs-corpus cosine
         "q7_top3_orders_per_customer",  # window functions
         "graph_pagerank",           # localCheckpoint + iterative joins
         "sim_pairs_label_block",    # vec_dot JVM pair-cosine kernel:

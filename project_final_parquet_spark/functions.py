@@ -12,9 +12,9 @@ from .encryption.cell import decrypt_columns, encrypt_columns
 from .operators.asof import asof_join
 from .operators.dedup import _ngrams as ngrams
 from .operators.dedup import _shingles3 as shingles3
-from .operators.similarity import _dot as dot_product
-from .operators.similarity import _norm as l2_norm
 from .operators.skew import salted_join
+from .operators.vecmath import dot as dot_product
+from .operators.vecmath import norm as l2_norm
 from .registry import davg, dsum
 from .streaming.events import session_windows, sliding_counts, tumbling_counts
 

@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load
-from .similarity import _DOT_SQL, _NORM_SQL, _dot, _norm
+from .similarity import _DOT_SQL, _NORM_SQL
+from .vecmath import norm, with_pair_cosine
 
 _K = 16  # seed clusters (vec_id < _K); production: ml_kmeans_converged.
 # SemDeDup's cost knob: the pair join is Σ|cluster|² ≈ N²/K, so K scales
@@ -140,7 +141,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "cid",
-            _norm(F.col("embedding")).alias("nrm"),
+            norm(F.col("embedding")).alias("nrm"),
         )
     )
     a = assign.select(
@@ -155,8 +156,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cid").alias("cid_b"),
         F.col("nrm").alias("nb"),
     )
-    # vectorized pair-cosine kernel (vecmath.py, optimization r13)
-    from .vecmath import with_pair_cosine
 
     pairs = with_pair_cosine(
         a.join(

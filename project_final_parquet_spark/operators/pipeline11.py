@@ -17,7 +17,8 @@ from ..ckpt import checkpoint
 from ..registry import query, dsum, DSUM_SQL
 from ..tables import load
 from .graph import copurchase_edges
-from .similarity import _DIM, _dot, _DOT_SQL, _norm, _NORM_SQL
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL
+from .vecmath import dot, norm
 from .vector_stats import PROBE_SCORED_CTES, probe_scores
 
 _N_QUERIES = 20  # retrieval-eval query set: vec_id < this
@@ -60,15 +61,15 @@ def _first_hit_ranks(spark: SparkSession, sf_dir: str):
         F.col("vec_id").alias("qid"),
         F.col("label").cast("int").alias("qlabel"),
         F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("nq"),
+        norm(F.col("embedding")).alias("nq"),
     )
     corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
         "embedding",
-        _norm(F.col("embedding")).alias("nc"),
+        norm(F.col("embedding")).alias("nc"),
     )
-    cosine = _dot(F.col("qv"), F.col("embedding")) / (
+    cosine = dot(F.col("qv"), F.col("embedding")) / (
         F.col("nq") * F.col("nc")
     )
     scored = corpus.crossJoin(F.broadcast(q)).select(

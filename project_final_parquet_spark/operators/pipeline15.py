@@ -23,7 +23,8 @@ from pyspark.sql import Window as W
 
 from ..registry import query
 from ..tables import load
-from .similarity import _DIM, _dot, _DOT_SQL, _norm, _NORM_SQL
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL
+from .vecmath import dot, norm
 from .vector_stats import PROBE_SCORED_CTES
 
 # --- NDCG@10 over the shared retrieval-eval frame ---------------------------
@@ -111,15 +112,15 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("label").cast("int").alias("qlabel"),
         F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("nq"),
+        norm(F.col("embedding")).alias("nq"),
     )
     corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
         "embedding",
-        _norm(F.col("embedding")).alias("nc"),
+        norm(F.col("embedding")).alias("nc"),
     )
-    cosine = _dot(F.col("qv"), F.col("embedding")) / (
+    cosine = dot(F.col("qv"), F.col("embedding")) / (
         F.col("nq") * F.col("nc")
     )
     scored = corpus.crossJoin(F.broadcast(q)).select(

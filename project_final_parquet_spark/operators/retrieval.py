@@ -25,8 +25,8 @@ Scale (100 TB):
 Determinism: ranks are integers from total orderings (score DESC, id
 ASC); RRF adds two exact double divisions 1/(60+rank); MMR uses
 λ=0.75 / (1-λ)=0.25 — both exact binary doubles — and relevance /
-pair-similarities come from the same zip_with/aggregate fold DuckDB's
-list fold reproduces bit-for-bit (operators/similarity.py).
+pair-similarities come from the same left fold (``vecmath.dot``) that
+DuckDB's list fold reproduces bit-for-bit.
 """
 
 from __future__ import annotations
@@ -38,8 +38,9 @@ from pyspark.sql.window import Window as W
 from ..ckpt import checkpoint, release
 from ..registry import query
 from ..tables import load
-from .similarity import _DIM, _DOT_SQL, _NORM_SQL, _dot, _norm
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL
 from .text_index import BM25_BYDOC_SQL, BM25_SCORED_CTES, bm25_doc_scores
+from .vecmath import dot, norm
 
 _RRF_K = 60  # the standard RRF damping constant
 _RRF_N = 50  # per-retriever shortlist depth
@@ -109,10 +110,10 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("nq")
+        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     sem = (
         emb.crossJoin(F.broadcast(q))
@@ -233,10 +234,10 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle twin is untouched — the gate hash-checks it."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("nq")
+        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
-    rel = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    rel = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     sl_rows = (
         emb.crossJoin(F.broadcast(q))
@@ -267,7 +268,7 @@ def _driver_mmr(sl_rows, k: int) -> list[tuple[int, int, float]]:
     def _pydot(a: list[float], b: list[float]) -> float:
         acc = 0.0
         for x, y in zip(a, b):
-            acc = acc + x * y  # the zip_with/aggregate left fold
+            acc = acc + x * y  # the vecmath.dot left fold
         return acc
 
     norms = {v: math.sqrt(_pydot(vecs[v], vecs[v])) for v in ids}
@@ -381,7 +382,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered(1). The oracle unrolls the identical greedy as
     MATERIALIZED chained CTEs (the sim_mmr_diversify lesson)."""
     emb = load(spark, sf_dir, "embeddings")
-    n = emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nv"))
+    n = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nv"))
     seed = n.filter(F.col("vec_id") == 0)
 
     def dist_to_row(pick_row):
@@ -395,7 +396,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with NO join anywhere in the loop (31 -> ~17 jobs).
         pe = F.array(*[F.lit(float(x)) for x in pick_row["embedding"]])
         pn = F.lit(float(pick_row["nv"]))
-        return 1 - _dot(F.col("embedding"), pe) / (F.col("nv") * pn)
+        return 1 - dot(F.col("embedding"), pe) / (F.col("nv") * pn)
 
     seed_row = seed.first()
     if seed_row is None:  # degenerate slice without the seed vector

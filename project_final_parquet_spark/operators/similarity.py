@@ -1,9 +1,10 @@
 """Embedding similarity-search operators over ``embeddings``
 (array<float> dim=64).
 
-Driver-mandated extension surface. Vector math stays in JVM expressions:
-``zip_with`` + ``aggregate`` folds (bit-identical to DuckDB's list folds
-— verified), so the DuckDB oracles are exact, including cosine scores.
+Driver-mandated extension surface. Every dot and norm is
+``vecmath.dot``/``vecmath.norm``: the ``vec_dot`` JVM kernel, a left
+fold bit-identical to DuckDB's list folds, so the DuckDB oracles are
+exact, including cosine scores.
 
 Scale design (100 TB):
 - top-k vs a query vector: the query row is broadcast (crossJoin of a
@@ -26,26 +27,9 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load
+from .vecmath import dot, norm, with_pair_cosine
 
 _DIM = 64
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
 
 
 _DOT_SQL = """list_aggregate(list_transform(range({dim}),
@@ -75,10 +59,10 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query norm hoisted into the broadcast 1-row frame: computed once,
     # not once per corpus row (same left-fold => bit-identical cosine)
     q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("nq")
+        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     return (
         emb.crossJoin(F.broadcast(q))
@@ -135,16 +119,14 @@ def sim_pairs_label_block(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_a"),
         "label",
         F.col("embedding").alias("ea"),
-        _norm(F.col("embedding")).alias("na"),
+        norm(F.col("embedding")).alias("na"),
     )
     b = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col("label").alias("label_b"),
         F.col("embedding").alias("eb"),
-        _norm(F.col("embedding")).alias("nb"),
+        norm(F.col("embedding")).alias("nb"),
     )
-    from .vecmath import with_pair_cosine
-
     pairs = a.join(
         b, (a.label == b.label_b) & (F.col("vec_a") < F.col("vec_b"))
     )
@@ -181,8 +163,8 @@ def _bucket_sql(vec: str) -> str:
     terms = []
     for p in range(_N_PLANES):
         plane_lit = "[" + ",".join(repr(c) for c in _PLANES[p]) + "]"
-        dot = _DOT_SQL.format(dim=_DIM, a=vec, b=plane_lit)
-        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
+        dot_sql = _DOT_SQL.format(dim=_DIM, a=vec, b=plane_lit)
+        terms.append(f"(CASE WHEN {dot_sql} > 0 THEN {1 << p} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
 
 
@@ -190,7 +172,7 @@ def _bucket_expr(vec):
     out = F.lit(0)
     for p in range(_N_PLANES):
         plane = F.array(*[F.lit(c) for c in _PLANES[p]])
-        out = out + F.when(_dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
+        out = out + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
     return out
 
 
@@ -224,10 +206,10 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = buck.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"),
         F.col("bucket").alias("qb"),
-        _norm(F.col("embedding")).alias("nq"),
+        norm(F.col("embedding")).alias("nq"),
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     return (
         buck.crossJoin(F.broadcast(q))
@@ -268,13 +250,13 @@ def ann_multiprobe(
     q = buck.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"),
         F.col("bucket").alias("qb"),
-        _norm(F.col("embedding")).alias("nq"),
+        norm(F.col("embedding")).alias("nq"),
     )
     probe = (
         F.bit_count(F.col("bucket").bitwiseXOR(F.col("qb"))) <= radius
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     return (
         buck.crossJoin(F.broadcast(q))
@@ -386,10 +368,10 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     best = dist.orderBy("d2", "label").limit(1).select(F.col("label").alias("best_label"))
     q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("nq")
+        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     return (
         emb.join(F.broadcast(best), emb.label == F.col("best_label"))
@@ -434,16 +416,16 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("ea"),
         "bucket",
-        _norm(F.col("embedding")).alias("na"),
+        norm(F.col("embedding")).alias("na"),
     )
     b = buck.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("eb"),
         F.col("bucket").alias("bucket_b"),
-        _norm(F.col("embedding")).alias("nb"),
+        norm(F.col("embedding")).alias("nb"),
     )
     # norms hoisted out of the pair expression (O(N·dim), not O(pairs·dim))
-    cosine = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cosine = dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
     return (
         a.join(b, (a.bucket == b.bucket_b) & (F.col("vec_a") < F.col("vec_b")))
         .select("vec_a", "vec_b", cosine.alias("cosine"))
@@ -562,10 +544,10 @@ def sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("label").alias("best_label"))
     )
     q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("nq")
+        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     return (
         emb.join(F.broadcast(best2), emb.label == F.col("best_label"))
@@ -592,8 +574,8 @@ def _bucket_sql_for(planes, vec: str) -> str:
     terms = []
     for p in range(_N_PLANES):
         plane_lit = "[" + ",".join(repr(c) for c in planes[p]) + "]"
-        dot = _DOT_SQL.format(dim=_DIM, a=vec, b=plane_lit)
-        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
+        dot_sql = _DOT_SQL.format(dim=_DIM, a=vec, b=plane_lit)
+        terms.append(f"(CASE WHEN {dot_sql} > 0 THEN {1 << p} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
 
 
@@ -601,7 +583,7 @@ def _bucket_expr_for(planes, vec):
     out = F.lit(0)
     for p in range(_N_PLANES):
         plane = F.array(*[F.lit(c) for c in planes[p]])
-        out = out + F.when(_dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
+        out = out + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
     return out
 
 
@@ -657,15 +639,15 @@ def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv"),
         F.col("b0").alias("qb0"),
         F.col("b1").alias("qb1"),
-        _norm(F.col("embedding")).alias("nq"),
+        norm(F.col("embedding")).alias("nq"),
     )
     probe = (
         F.bit_count(F.col("b0").bitwiseXOR(F.col("qb0"))) <= _PROBE_RADIUS
     ) | (
         F.bit_count(F.col("b1").bitwiseXOR(F.col("qb1"))) <= _PROBE_RADIUS
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     return (
         buck.crossJoin(F.broadcast(q))

@@ -48,15 +48,8 @@ from pyspark.sql import functions as F
 
 from ..registry import DSUM_SQL, dsum, query
 from ..tables import load
-from .similarity import (
-    _DIM,
-    _DOT_SQL,
-    _dot,
-    _NORM_SQL,
-    _norm,
-    _plane_coeff,
-)
-from .vecmath import with_pair_cosine
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL, _plane_coeff
+from .vecmath import dot, norm, with_pair_cosine
 
 _TARGET_OCC = 32  # expected vectors per bucket the index aims for
 _MAX_PLANES = 24  # oracle literal width; 2^24 buckets ≈ 537M vectors
@@ -91,9 +84,9 @@ def _abucket_sql(vec: str) -> str:
     terms = []
     for p in range(_MAX_PLANES):
         lit = "[" + ",".join(repr(c) for c in _PLANES24[p]) + "]"
-        dot = _DOT_SQL.format(dim=_DIM, a=vec, b=lit)
+        dot_sql = _DOT_SQL.format(dim=_DIM, a=vec, b=lit)
         terms.append(
-            f"(CASE WHEN {p} < np.k AND {dot} > 0 "
+            f"(CASE WHEN {p} < np.k AND {dot_sql} > 0 "
             f"THEN {1 << p} ELSE 0 END)"
         )
     return "(" + " + ".join(terms) + ")"
@@ -107,7 +100,7 @@ def _abucket_expr(vec, k: int):
     out = F.lit(0)
     for p in range(k):
         plane = F.array(*[F.lit(c) for c in _PLANES24[p]])
-        out = out + F.when(_dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
+        out = out + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
     return out
 
 
@@ -158,7 +151,7 @@ def _bucketed(spark: SparkSession, sf_dir: str, ckpt: bool = False):
         F.col("label").cast("int").alias("label"),
         "embedding",
         _abucket_expr(F.col("embedding"), k).alias("bucket"),
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     if ckpt:
         from ..ckpt import checkpoint
@@ -831,7 +824,7 @@ def sim_topk_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nq"),
         F.col("bucket").alias("qb"),
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
         F.col("nrm") * F.col("nq")
     )
     return (

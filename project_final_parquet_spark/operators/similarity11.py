@@ -51,8 +51,9 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load
-from .similarity import _DIM, _DOT_SQL, _dot, _NORM_SQL, _norm
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL
 from .similarity10 import _corpus_count, _PLANES24
+from .vecmath import dot, norm
 
 _CELL_CAP = 12  # 4096 cells ≈ 16M vectors at the √n balance point
 _NPROBE = 2  # probed cells per query — the recall/cost dial
@@ -82,9 +83,9 @@ def _acell_sql(vec: str) -> str:
     terms = []
     for p in range(_CELL_CAP):
         lit = "[" + ",".join(repr(c) for c in _PLANES24[p]) + "]"
-        dot = _DOT_SQL.format(dim=_DIM, a=vec, b=lit)
+        dot_sql = _DOT_SQL.format(dim=_DIM, a=vec, b=lit)
         terms.append(
-            f"(CASE WHEN {p} < nc.m AND {dot} > 0 "
+            f"(CASE WHEN {p} < nc.m AND {dot_sql} > 0 "
             f"THEN {1 << p} ELSE 0 END)"
         )
     return "(" + " + ".join(terms) + ")"
@@ -97,7 +98,7 @@ def _acell_expr(vec, m: int):
     out = F.lit(0)
     for p in range(m):
         plane = F.array(*[F.lit(c) for c in _PLANES24[p]])
-        out = out + F.when(_dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
+        out = out + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
     return out
 
 
@@ -145,7 +146,7 @@ def _celled(spark: SparkSession, sf_dir: str):
         "label",
         "embedding",
         _acell_expr(F.col("embedding"), m).alias("cell"),
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     return m, celled
 
@@ -220,9 +221,9 @@ def sim_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = _best_cells(celled)
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("nq")
+        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
         F.col("nrm") * F.col("nq")
     )
     return (
@@ -434,7 +435,7 @@ def sim_ivf_adaptive_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("cand"),
             F.coalesce(F.col("probe_hit"), F.lit(0)).alias("in_probe"),
             (
-                _dot(F.col("ea"), F.col("embedding"))
+                dot(F.col("ea"), F.col("embedding"))
                 / (F.col("na") * F.col("nrm"))
             ).alias("cosine"),
         )

@@ -37,7 +37,7 @@ from pyspark.sql import Window as W
 
 from ..registry import query
 from ..tables import load
-from .similarity import _DIM, _DOT_SQL, _dot, _NORM_SQL, _norm
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL
 from .similarity10 import _corpus_count
 from .similarity11 import (
     _acell_expr,
@@ -48,6 +48,7 @@ from .similarity11 import (
     _NPROBE,
     adaptive_cell_bits,
 )
+from .vecmath import dot, norm
 
 _NSHARDS = 4  # literal shard count; cluster form: ceil(n / 16M)
 
@@ -146,7 +147,7 @@ def sim_ivf_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         (F.col("vec_id") % _NSHARDS).alias("shard"),
         _acell_expr(F.col("embedding"), m).alias("cell"),
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     dims = celled.select(
         "vec_id", "shard", "cell", F.posexplode("embedding").alias("j", "val")
@@ -183,9 +184,9 @@ def sim_ivf_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("nq")
+        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
         F.col("nrm") * F.col("nq")
     )
     return (
@@ -377,7 +378,7 @@ def sim_ivf_sharded_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         (F.col("vec_id") % _NSHARDS).alias("shard"),
         _acell_expr(F.col("embedding"), m).alias("cell"),
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     dims = celled.select(
         "vec_id", "shard", "cell", F.posexplode("embedding").alias("j", "val")
@@ -438,7 +439,7 @@ def sim_ivf_sharded_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("cand"),
             F.coalesce(F.col("probe_hit"), F.lit(0)).alias("in_probe"),
             (
-                _dot(F.col("ea"), F.col("embedding"))
+                dot(F.col("ea"), F.col("embedding"))
                 / (F.col("na") * F.col("nrm"))
             ).alias("cosine"),
         )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load
+from .vecmath import dot, norm
 
 _DIM = 64
 _HALF = 32
@@ -144,24 +145,7 @@ def sim_matryoshka_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def cos(a, b, dims: int):
         sa, sb = F.slice(a, 1, dims), F.slice(b, 1, dims)
-        dot = F.aggregate(
-            F.zip_with(
-                sa, sb, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-        def nrm(c):
-            return F.sqrt(
-                F.aggregate(
-                    F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            )
-
-        return dot / (nrm(sa) * nrm(sb))
+        return dot(sa, sb) / (norm(sa) * norm(sb))
 
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     e, qv = F.col("embedding"), F.col("qv")

@@ -5,7 +5,7 @@ unfiltered query (sim_topk_cosine) this repo already proves.
 
 Not in the reference (no vector surface, SURVEY.md §2.1); extends the
 similarity family with the query shapes, not new math — scores reuse
-the shared fold (similarity.py _dot/_norm ↔ _DOT_SQL/_NORM_SQL), so
+the shared fold (vecmath.dot/norm ↔ _DOT_SQL/_NORM_SQL), so
 rankings are bit-identical cross-engine by the same argument.
 """
 
@@ -17,7 +17,8 @@ from pyspark.sql.window import Window as W
 
 from ..registry import query
 from ..tables import load
-from .similarity import _DIM, _DOT_SQL, _NORM_SQL, _dot, _norm
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL
+from .vecmath import dot, norm
 
 _FILT_LABEL = 3
 _FILT_K = 10
@@ -59,10 +60,10 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     score the survivors, never materialize the unfiltered ranking."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), _norm(F.col("embedding")).alias("nq")
+        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     return (
         emb.filter((F.col("label") == _FILT_LABEL) & (F.col("vec_id") != 0))
@@ -128,10 +129,10 @@ def sim_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id").isin(_BATCH_QIDS)).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("nq"),
+        norm(F.col("embedding")).alias("nq"),
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     scored = (
         emb.crossJoin(F.broadcast(q))

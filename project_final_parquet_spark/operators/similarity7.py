@@ -21,15 +21,8 @@ from pyspark.sql import Window as W
 
 from ..registry import query
 from ..tables import load
-from .similarity import (
-    _DIM,
-    _DOT_SQL,
-    _NORM_SQL,
-    _bucket_expr,
-    _bucket_sql,
-    _dot,
-    _norm,
-)
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL, _bucket_expr, _bucket_sql
+from .vecmath import dot, norm, with_pair_cosine
 
 _RECALL_K = 10
 _RADII = [0, 1, 2, 3]
@@ -166,10 +159,10 @@ def sim_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = buck.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"),
         F.col("bucket").alias("qb"),
-        _norm(F.col("embedding")).alias("nq"),
+        norm(F.col("embedding")).alias("nq"),
     )
-    cosine = _dot(F.col("embedding"), F.col("qv")) / (
-        _norm(F.col("embedding")) * F.col("nq")
+    cosine = dot(F.col("embedding"), F.col("qv")) / (
+        norm(F.col("embedding")) * F.col("nq")
     )
     scored = (
         buck.crossJoin(F.broadcast(q))
@@ -441,7 +434,7 @@ def sim_reciprocal_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     shapes) bounds each shard's candidate set."""
     emb = load(spark, sf_dir, "embeddings")
     s = emb.filter(F.col("vec_id") < _RNN_N).select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
     )
     a = s.select(
         F.col("vec_id").alias("src"),
@@ -453,8 +446,6 @@ def sim_reciprocal_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    # vectorized pair-cosine kernel (vecmath.py, optimization r13)
-    from .vecmath import with_pair_cosine
 
     scored = with_pair_cosine(
         a.crossJoin(F.broadcast(b)).filter(F.col("src") != F.col("dst")),
@@ -536,16 +527,14 @@ def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("anchor"),
         F.col("label").cast("int").alias("anchor_label"),
         F.col("embedding").alias("ea"),
-        _norm(F.col("embedding")).alias("na"),
+        norm(F.col("embedding")).alias("na"),
     )
     pool = emb.filter(F.col("vec_id") < _HN_POOL).select(
         F.col("vec_id").alias("negative"),
         F.col("label").cast("int").alias("negative_label"),
         F.col("embedding").alias("ep"),
-        _norm(F.col("embedding")).alias("np_"),
+        norm(F.col("embedding")).alias("np_"),
     )
-    # vectorized pair-cosine kernel (vecmath.py, optimization r13)
-    from .vecmath import with_pair_cosine
 
     scored = with_pair_cosine(
         a.crossJoin(F.broadcast(pool)).filter(

@@ -31,16 +31,8 @@ from pyspark.sql.window import Window as W
 
 from ..registry import query
 from ..tables import load
-from .similarity import (
-    _bucket_expr,
-    _bucket_sql,
-    _DIM,
-    _dot,
-    _DOT_SQL,
-    _norm,
-    _NORM_SQL,
-)
-from .vecmath import with_pair_cosine
+from .similarity import _bucket_expr, _bucket_sql, _DIM, _DOT_SQL, _NORM_SQL
+from .vecmath import norm, with_pair_cosine
 
 # radius-1 multiprobe: the home bucket plus each 1-bit flip. Mask 0 is
 # the home probe; masks 1<<p flip plane p. Distinct masks => a
@@ -119,7 +111,7 @@ def sample_hard_negatives_bucketed(
         "vec_id",
         F.col("label").cast("int").alias("label"),
         "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
         _bucket_expr(F.col("embedding")).alias("bucket"),
     )
     probes = buck.select(
@@ -223,7 +215,7 @@ def sim_reciprocal_nn_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     buck = emb.select(
         "vec_id",
         "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
         _bucket_expr(F.col("embedding")).alias("bucket"),
     )
     probes = buck.select(

@@ -7,9 +7,9 @@ cosine τ", next to the existing top-k / recall-curve family.
 Not in the reference (no vector surface — SURVEY.md §2.1); extends the
 similarity / vector_stats families.
 
-Determinism: every dot/norm is the shared left-fold (similarity.py
-module note — bit-identical across engines because both fold in list
-order); corpus-wide reductions are DSUM folds; orderings carry vec_id
+Determinism: every dot/norm is the shared left-fold (``vecmath.dot``
+/ ``vecmath.norm`` — bit-identical across engines because both fold in
+list order); corpus-wide reductions are DSUM folds; orderings carry vec_id
 tiebreaks.
 """
 
@@ -20,16 +20,8 @@ from pyspark.sql import functions as F
 
 from ..registry import DSUM_SQL, dsum, query
 from ..tables import load
-from .similarity import (
-    _bucket_expr,
-    _bucket_sql,
-    _DIM,
-    _dot,
-    _DOT_SQL,
-    _norm,
-    _NORM_SQL,
-)
-from .vecmath import with_pair_cosine
+from .similarity import _bucket_expr, _bucket_sql, _DIM, _DOT_SQL, _NORM_SQL
+from .vecmath import dot, norm, with_pair_cosine
 
 _RANGE_TAU = "0.35"  # literal shared by both engines
 
@@ -84,17 +76,18 @@ def embeddings_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity every embedding-QA pipeline should use instead."""
     emb = load(spark, sf_dir, "embeddings")
     nrm = emb.select(
+        "vec_id", "embedding", norm(F.col("embedding")).alias("n")
+    ).select(
         "vec_id",
         F.transform(
-            "embedding",
-            lambda x: x.cast("double") / _norm(F.col("embedding")),
+            "embedding", lambda x: x.cast("double") / F.col("n")
         ).alias("u"),
     )
     flat = nrm.select(F.posexplode("u").alias("dim", "uv"))
     dims = flat.groupBy("dim").agg(dsum(F.col("uv")).alias("s"))
     scalars = nrm.agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
-        dsum(_dot(F.col("u"), F.col("u"))).alias("sum_sq"),
+        dsum(dot(F.col("u"), F.col("u"))).alias("sum_sq"),
     )
     return (
         dims.crossJoin(F.broadcast(scalars))
@@ -155,7 +148,7 @@ def sim_range_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         _bucket_expr(F.col("embedding")).alias("bucket"),
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     a = buck.select(
         F.col("bucket").alias("bucket"),
@@ -260,7 +253,7 @@ def sim_pair_margin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("int").alias("label"),
         "embedding",
         _bucket_expr(F.col("embedding")).alias("bucket"),
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     masks = F.array(*[F.lit(m) for m in [0] + [1 << p for p in range(6)]])
     probes = (
@@ -383,7 +376,7 @@ def ml_knn_label_purity_bucketed(
         F.col("label").cast("int").alias("label"),
         "embedding",
         _bucket_expr(F.col("embedding")).alias("bucket"),
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     masks = F.array(*[F.lit(m) for m in [0] + [1 << p for p in range(6)]])
     probes = (

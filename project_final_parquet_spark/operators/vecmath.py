@@ -1,34 +1,36 @@
-"""JVM vector kernels: pair cosine for the similarity/mining family and
-the k-means assignment (``ml_kmeans``).
+"""JVM vector kernels: the one embedding dot product (``dot``/``norm``,
+used by every similarity, retrieval and mining operator), pair cosine
+(``with_pair_cosine``) and the k-means assignment (``ml_kmeans``).
 
-The similarity/mining family scores candidate pairs with the shared
-left-fold cosine:
+Every double-precision embedding dot is the left fold
 
-    cosine = aggregate(zip_with(ea, eb, (x, y) -> double(x) * double(y)),
-                       0.0, (acc, v) -> acc + v) / (na * nb)
+    dot(a, b) = aggregate(zip_with(a, b, (x, y) -> double(x) * double(y)),
+                          0.0, (acc, v) -> acc + v)
 
-Catalyst evaluates higher-order-function lambdas interpreted, one
-boxed element at a time, and ``zip_with`` allocates a fresh 64-element
-array per pair. ``with_pair_cosine`` computes the dot with ``vec_dot``
-instead, a Java UDF (``encryption/jvm/VecKernels.java``) in the jar
-``pme.ensure_pme_jar`` builds. The UDF runs in the executor JVM: no
-Python worker, no Arrow batches, nothing that has to pickle by value.
-Per pair it performs the IDENTICAL IEEE-754 sequence as the Catalyst
-fold (float32→float64 casts are exact; each multiply and each add is
-one correctly-rounded binary64 op in the same order, with no fused
-multiply-add), so every cosine is bit-for-bit the value the HOF
-produced and the DuckDB oracles are untouched — ``tests/test_vecmath.py``
-asserts exact equality against ``hof_dot``.
+and ``norm(a) = sqrt(dot(a, a))``. Catalyst evaluates that
+higher-order-function (HOF) fold interpreted, one boxed element at a
+time, and ``zip_with`` allocates a fresh array per row. ``dot`` calls
+``vec_dot`` instead, a Java UDF (``encryption/jvm/VecKernels.java``) in
+the jar ``pme.ensure_pme_jar`` builds. The UDF runs in the executor
+JVM: no Python worker, no Arrow batches, nothing that has to pickle by
+value. It performs the IDENTICAL IEEE-754 sequence as the fold
+(float32→float64 casts are exact; each multiply and each add is one
+correctly-rounded binary64 op in the same order, with no fused
+multiply-add), and returns NULL for a NULL array, a NULL element or
+arrays of different lengths, as the fold does. So every score is
+bit-for-bit the value the HOF produced and the DuckDB oracles are
+untouched — ``tests/test_vecmath.py`` asserts exact equality against
+``hof_dot``, the fold kept as the test reference.
 
 Measured on pair cosine over 64-dim float embeddings at ``local[4]``,
 process-tree CPU-s for 124,750 pairs: 0.95 for the HOF fold, 0.96 for
-the ``mapInArrow`` NumPy kernel this replaced, 0.32 for the Java UDF;
-at 1,999,000 pairs 9.63, 7.94 and 2.53.
+a ``mapInArrow`` NumPy kernel, 0.32 for the Java UDF; at 1,999,000
+pairs 9.63, 7.94 and 2.53.
 
-Scale note (100 TB): the kernel is linear in candidate pairs — the
-same asymptotics as the HOF projection. Candidate-pair volume stays
-bounded by the LSH/blocking design; this changes per-pair cost only.
-The UDF carries no cross-row state.
+Scale note (100 TB): the kernel is linear in the elements it folds —
+the same asymptotics as the HOF. Candidate-pair volume stays bounded
+by the LSH/blocking design; this changes per-element cost only. The
+UDF carries no cross-row state.
 """
 
 from __future__ import annotations
@@ -49,6 +51,18 @@ _KERNEL_FUNCTIONS = {
 def register_kernels(spark: SparkSession) -> None:
     """Make ``vec_dot`` and ``kmeans_assign`` callable in ``spark``."""
     pme.register_java_functions(spark, _KERNEL_FUNCTIONS)
+
+
+def dot(a, b):
+    """The left-fold dot product of two numeric arrays, as a double
+    (NULL for a NULL array, a NULL element or a length mismatch)."""
+    register_kernels(SparkSession.active())
+    return F.call_function(VEC_DOT, a, b)
+
+
+def norm(a):
+    """The L2 norm ``sqrt(dot(a, a))``."""
+    return F.sqrt(dot(a, a))
 
 
 def with_pair_cosine(
@@ -75,11 +89,8 @@ def with_pair_cosine(
     A NaN/inf norm (from non-finite embedding values) is a nonzero
     divisor and flows through as IEEE division, as in the HOF fold.
     """
-    register_kernels(df.sparkSession)
     denom = F.col(na) * F.col(nb)
-    cosine = F.when(
-        denom != 0, F.call_function(VEC_DOT, F.col(ea), F.col(eb)) / denom
-    )
+    cosine = F.when(denom != 0, dot(F.col(ea), F.col(eb)) / denom)
     return df.select(*keep, cosine.alias(out))
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..ckpt import checkpoint, release
 from ..registry import DSUM_SQL, dsum, query
 from ..tables import load
+from .vecmath import dot, norm
 
 _DIM = 64
 _VSCALE = 1_000_000_000_000  # 1e-12 granularity; 64·N·0.5·1e12 ≪ 2^63
@@ -140,7 +141,6 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH/IVF variants (sim_ann_lsh, sim_ivf_multiprobe) replace the
     full scan when |src| ≈ |corpus|."""
     emb = load(spark, sf_dir, "embeddings")
-    from .similarity import _dot, _norm
 
     # both sides' norms hoisted out of the pair expression: each source's
     # norm is computed once in the broadcast frame and each corpus row's
@@ -148,17 +148,17 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     srcs = emb.filter(F.col("vec_id") < _KNN_SRC).select(
         F.col("vec_id").alias("src"),
         F.col("embedding").alias("se"),
-        _norm(F.col("embedding")).alias("sn"),
+        norm(F.col("embedding")).alias("sn"),
     )
     scored = (
-        emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("en"))
+        emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("en"))
         .crossJoin(F.broadcast(srcs))
         .filter(F.col("vec_id") != F.col("src"))
         .select(
             "src",
             F.col("vec_id").alias("dst"),
             (
-                _dot(F.col("se"), F.col("embedding"))
+                dot(F.col("se"), F.col("embedding"))
                 / (F.col("sn") * F.col("en"))
             ).alias("cosine"),
         )
@@ -401,15 +401,7 @@ def probe_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.crossJoin(F.broadcast(wl)).select(
         "vec_id",
         "label",
-        F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.col("wv"),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("score"),
+        dot(F.col("embedding"), F.col("wv")).alias("score"),
     )
 
 

@@ -65,7 +65,7 @@ def test_final_line_ignores_bench_records_on_disk(
     newer = {"queries": {n: 9.9 for n in bench.HEADLINE[:60]}}
     lines = []
     for prev in (None, r14, newer):
-        monkeypatch.setattr(bench, "_latest_prev_bench", lambda p=prev: p)
+        monkeypatch.setattr(bench, "_latest_prev_bench", lambda sf, p=prev: p)
         bench.report(timings, 0.1, {}, bench_dir=tmp_path)
         lines.append(capsys.readouterr().out.splitlines()[-1])
     assert lines[0] == lines[1] == lines[2]
@@ -75,6 +75,25 @@ def test_final_line_ignores_bench_records_on_disk(
 def test_latest_prev_bench_skips_low_core_sibling(tmp_path):
     for name in ("BENCH_r13.json", "BENCH_r14.json", "BENCH_r14_c8.json"):
         shutil.copy(_REPO / name, tmp_path / name)
-    got = bench._latest_prev_bench(tmp_path)
+    got = bench._latest_prev_bench(0.1, tmp_path)
     assert got == bench._parse_bench_file(_REPO / "BENCH_r14.json")
     assert got != bench._parse_bench_file(_REPO / "BENCH_r14_c8.json")
+
+
+def test_report_skips_bench_records_of_another_scale(tmp_path, capsys):
+    """A run diffs only against a record of its own ``sf``: the sf0.1
+    records on disk give a sf0.001 run no deltas line and no delta
+    keys, and a record with no ``sf`` never matches."""
+    for name in ("BENCH_r13.json", "BENCH_r14.json"):
+        shutil.copy(_REPO / name, tmp_path / name)
+    assert bench._latest_prev_bench(0.001, tmp_path) is None
+    (tmp_path / "BENCH_r15.json").write_text(json.dumps({"queries": {}}))
+    assert bench._latest_prev_bench(0.1, tmp_path) == bench._parse_bench_file(
+        _REPO / "BENCH_r14.json"
+    )
+
+    bench.report(_timings(), 0.001, {}, bench_dir=tmp_path)
+    out = capsys.readouterr().out
+    assert "delta_vs_prev" not in out
+    last = json.loads((tmp_path / "last_run.json").read_text())
+    assert not [k for k in last if "delta" in k], sorted(last)

@@ -1,27 +1,34 @@
-"""Bit-equality of the JVM pair-cosine kernel (vecmath.py, ``vec_dot``)
+"""Bit-equality of the JVM dot-product kernel (vecmath.py, ``vec_dot``)
 against the Catalyst HOF left-fold it replaced.
 
 The kernel's correctness claim is EXACT: for every pair, the kernel's
 fold performs the identical IEEE-754 op sequence as
-``aggregate(zip_with(...))``, so cosines are bit-for-bit equal — not
-approximately equal. These tests assert that on adversarial float32
-data (denormal-ish magnitudes, mixed signs, values whose sums cancel),
-on the fold's NULL cases, and on the empty-frame edge case; and that
-the queries using the kernels run no Python worker.
+``aggregate(zip_with(...))``, so dots, norms and cosines are
+bit-for-bit equal — not approximately equal. These tests assert that
+on adversarial float32 data (denormal-ish magnitudes, mixed signs,
+values whose sums cancel), on every input shape the operators pass
+(float·float, float·double literal, sliced prefixes, self-dot norms),
+on the fold's NULL cases, and on the empty-frame edge case; that the
+queries using the kernels run no Python worker; and that no operator
+module grows its own dot or norm fold again.
 """
 
 from __future__ import annotations
 
+import ast
 import math
 import random
 import struct
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from project_final_parquet_spark.operators.vecmath import (
     VEC_DOT,
+    dot,
     hof_dot,
+    norm,
     register_kernels,
     with_pair_cosine,
 )
@@ -215,31 +222,53 @@ def test_vec_dot_bit_equal_to_hof_dot(spark, pair_df):
         "pair_id long, ea array<float>, eb array<float>",
     )
     register_kernels(spark)
+    ea, eb = F.col("ea"), F.col("eb")
+    # a ±1/[-1, 1] double literal row: the LSH-plane and projection shape
+    plane = F.array(*[F.lit(_f32(rng.uniform(-1, 1))) for _ in range(DIM)])
+    pa, pb = F.slice(ea, 1, 16), F.slice(eb, 1, 16)
+    hof_norm = F.sqrt(
+        F.aggregate(
+            F.transform(ea, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+    )
+    shapes = {
+        "pair": (hof_dot(ea, eb), F.call_function(VEC_DOT, "ea", "eb")),
+        "norm": (hof_norm, norm(ea)),
+        "literal": (hof_dot(ea, plane), dot(ea, plane)),
+        "prefix": (hof_dot(pa, pb), dot(pa, pb)),
+    }
     rows = (
         pair_df.select("pair_id", "ea", "eb")
         .unionByName(odd)
         .select(
             "pair_id",
-            hof_dot(F.col("ea"), F.col("eb")).alias("hof"),
-            F.call_function(VEC_DOT, "ea", "eb").alias("ker"),
+            *[h.alias(f"hof_{k}") for k, (h, _) in shapes.items()],
+            *[v.alias(f"ker_{k}") for k, (_, v) in shapes.items()],
         )
         .collect()
     )
     assert len(rows) == 308
     by_id = {r["pair_id"]: r for r in rows}
-    assert by_id[1005]["ker"] == 0.0
+    assert by_id[1005]["ker_pair"] == 0.0
     for pid in (1000, 1001, 1002, 1003, 1004, 1006):
-        assert by_id[pid]["ker"] is None, pid
+        assert by_id[pid]["ker_pair"] is None, pid
+    assert by_id[1002]["ker_norm"] is None and by_id[1004]["ker_norm"] is None
     for r in rows:
-        assert _bits(r["hof"]) == _bits(r["ker"]), (
-            f"pair {r['pair_id']}: HOF {r['hof']!r} != kernel {r['ker']!r}"
-        )
+        for k in shapes:
+            assert _bits(r[f"hof_{k}"]) == _bits(r[f"ker_{k}"]), (
+                f"pair {r['pair_id']} {k}: HOF {r[f'hof_{k}']!r} "
+                f"!= kernel {r[f'ker_{k}']!r}"
+            )
 
 
 _PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
 
 
-@pytest.mark.parametrize("name", ["sim_pairs_label_block", "ml_kmeans"])
+@pytest.mark.parametrize(
+    "name", ["sim_pairs_label_block", "ml_kmeans", "sim_random_projection"]
+)
 def test_executed_plan_has_no_python_node(spark, sf_dir, name):
     """The vector kernels run in the JVM: the plan Spark executed holds
     no operator that ships rows to a Python worker."""
@@ -253,3 +282,102 @@ def test_executed_plan_has_no_python_node(spark, sf_dir, name):
     assert "vec_dot(" in plan or "kmeans_assign(" in plan, plan
     found = [n for n in _PYTHON_NODES if n in plan]
     assert not found, plan
+    if name == "sim_random_projection":
+        # the query side's vec_id = 0 filter still reaches the scan
+        assert "EqualTo(vec_id,0)]" in plan, plan
+
+
+def test_random_projection_null_element_ranks_last(spark, sf_dir, tmp_path):
+    """A NULL embedding element nulls that row's projection and score,
+    as the HOF fold does, so the row drops out of the desc top-10
+    instead of ranking first with a NaN score."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from project_final_parquet_spark.registry import all_queries
+
+    run = all_queries()["sim_random_projection"]
+    clean = [tuple(r) for r in run(spark, sf_dir).collect()]
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    victim = clean[0][0]
+    embs = t.column("embedding").to_pylist()
+    for i, vid in enumerate(t.column("vec_id").to_pylist()):
+        if vid == victim:
+            embs[i][3] = None
+    col = t.schema.get_field_index("embedding")
+    t = t.set_column(
+        col, t.schema.field(col), pa.array(embs, t.schema.field(col).type)
+    )
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+
+    got = [tuple(r) for r in run(spark, str(tmp_path)).collect()]
+    assert all(not math.isnan(r[2]) for r in got), got
+    assert victim not in [r[0] for r in got]
+    # every other row keeps its exact score and rank
+    assert got[:9] == clean[1:]
+
+
+_PKG = Path(__file__).resolve().parent.parent / "project_final_parquet_spark"
+
+
+def _is_double_dot_fold(call: ast.Call) -> bool:
+    """``F.aggregate(F.zip_with|F.transform(.., lambda: x * y), F.lit(0.0),
+    ..)`` where both factors are lambda parameters, cast or not: the
+    double-precision dot/norm fold ``vec_dot`` replaces."""
+    if not (
+        isinstance(call.func, ast.Attribute)
+        and call.func.attr == "aggregate"
+        and len(call.args) >= 2
+        and isinstance(call.args[0], ast.Call)
+        and isinstance(call.args[0].func, ast.Attribute)
+        and call.args[0].func.attr in ("zip_with", "transform")
+        and ast.unparse(call.args[1]) == "F.lit(0.0)"
+    ):
+        return False
+    lam = call.args[0].args[-1]
+    if not isinstance(lam, ast.Lambda):
+        return False
+    params = {a.arg for a in lam.args.args}
+
+    def factor(e) -> bool:
+        if isinstance(e, ast.Call) and isinstance(e.func, ast.Attribute):
+            e = e.func.value if e.func.attr == "cast" else e
+        return isinstance(e, ast.Name) and e.id in params
+
+    body = lam.body
+    return (
+        isinstance(body, ast.BinOp)
+        and isinstance(body.op, ast.Mult)
+        and factor(body.left)
+        and factor(body.right)
+    )
+
+
+def test_one_dot_product_implementation():
+    """Every double embedding dot and norm goes through ``vecmath.dot``.
+    ``F.zip_with`` stays only in ``hof_dot`` (the test reference) and
+    the three non-dot folds: similarity2's BIGINT quantized dot and the
+    squared-distance folds of similarity4 and dedup3."""
+    zip_with, folds, defs = set(), [], []
+    for path in sorted(_PKG.rglob("*.py")):
+        src = path.read_text()
+        if "F.zip_with(" in src:
+            zip_with.add(path.name)
+        if path.name == "vecmath.py":
+            continue
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Call) and _is_double_dot_fold(node):
+                folds.append(f"{path.name}:{node.lineno}")
+            if isinstance(node, ast.FunctionDef) and node.name in (
+                "_dot",
+                "_norm",
+            ):
+                defs.append(f"{path.name}:{node.lineno}")
+    assert zip_with == {
+        "vecmath.py",
+        "similarity2.py",
+        "similarity4.py",
+        "dedup3.py",
+    }
+    assert not folds, folds
+    assert not defs, defs
