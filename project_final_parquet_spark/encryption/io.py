@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import read_parquet
 from .cell import Footer, decrypt_columns, encrypt_columns
 from .config import EncryptionConfig
 from .kms import MockKMS
@@ -101,5 +102,5 @@ def read_encrypted_table(
     if config.use_kms and kms is None:
         kms = MockKMS()
     footer = read_footer(spark, path, config)
-    df = spark.read.parquet(os.path.join(path, _DATA_DIR))
+    df = read_parquet(spark, os.path.join(path, _DATA_DIR))
     return decrypt_columns(df, config, footer, requested_columns, kms)

@@ -273,19 +273,12 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
-    pairs = arr.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ps",
-                    lambda a, i: F.transform(
-                        F.slice(F.col("ps"), i + 2, F.size("ps")),
-                        lambda b: F.struct(a.alias("a"), b.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.a", "p.b")
+    # Each part a (0-based position i) pairs with every part after it,
+    # through built-ins only: higher-order-function lambdas run
+    # interpreted.
+    pairs = arr.select("ps", F.posexplode("ps").alias("i", "a")).select(
+        "a", F.explode(F.slice("ps", F.col("i") + 2, F.size("ps"))).alias("b")
+    )
     return (
         pairs.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))

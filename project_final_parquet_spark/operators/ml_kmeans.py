@@ -143,22 +143,11 @@ def _assign_col(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> Column:
     pos = F.call_function(
         vecmath.KMEANS_ASSIGN,
         F.col("embedding"),
-        _double_array_lit(spark, flat),
+        vecmath.double_array_lit(flat),
         F.lit(_DIM),
         F.lit(float(_DSCALE)),
     )
     return F.lit(ids)[pos]
-
-
-def _double_array_lit(spark: SparkSession, a: np.ndarray) -> Column:
-    """``F.lit(a)`` for a 1-d float64 array, bit for bit (NaN and -0.0
-    included), built in one py4j transfer: pyspark's numpy converter
-    sets the Java array one element per gateway call."""
-    jvm = spark.sparkContext._jvm
-    jarr = spark.sparkContext._gateway.new_array(jvm.double, len(a))
-    buf = jvm.java.nio.ByteBuffer.wrap(bytearray(a.astype("<f8").tobytes()))
-    buf.order(jvm.java.nio.ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().get(jarr)
-    return F.lit(jarr)
 
 
 def _fixed_dim(vec) -> list[float]:

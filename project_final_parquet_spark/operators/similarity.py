@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load
-from .vecmath import dot, norm, with_pair_cosine
+from .vecmath import dot, double_array_lit, norm, with_pair_cosine
 
 _DIM = 64
 
@@ -169,11 +169,7 @@ def _bucket_sql(vec: str) -> str:
 
 
 def _bucket_expr(vec):
-    out = F.lit(0)
-    for p in range(_N_PLANES):
-        plane = F.array(*[F.lit(c) for c in _PLANES[p]])
-        out = out + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
-    return out
+    return _bucket_expr_for(_PLANES, vec)
 
 
 @query(
@@ -580,10 +576,12 @@ def _bucket_sql_for(planes, vec: str) -> str:
 
 
 def _bucket_expr_for(planes, vec):
+    """The bucket id of ``vec``: bit p is set when it lies on the
+    positive side of ``planes[p]``."""
     out = F.lit(0)
-    for p in range(_N_PLANES):
-        plane = F.array(*[F.lit(c) for c in planes[p]])
-        out = out + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
+    for p, plane in enumerate(planes):
+        side = dot(vec, double_array_lit(plane))
+        out = out + F.when(side > 0, F.lit(1 << p)).otherwise(0)
     return out
 
 

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..registry import DSUM_SQL, dsum, query
 from ..tables import load
-from .similarity import _DIM, _DOT_SQL, _NORM_SQL, _plane_coeff
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL, _bucket_expr_for, _plane_coeff
 from .vecmath import dot, norm, with_pair_cosine
 
 _TARGET_OCC = 32  # expected vectors per bucket the index aims for
@@ -97,11 +97,7 @@ def _abucket_expr(vec, k: int):
     Python int from the corpus count, so only the needed dots are in
     the plan). Identical value to the SQL form: bit p is independent
     of every other plane."""
-    out = F.lit(0)
-    for p in range(k):
-        plane = F.array(*[F.lit(c) for c in _PLANES24[p]])
-        out = out + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
-    return out
+    return _bucket_expr_for(_PLANES24[:k], vec)
 
 
 # radius-1 probe masks in SQL: 0 (own bucket) + one single-bit flip per

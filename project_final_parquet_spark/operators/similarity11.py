@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load
-from .similarity import _DIM, _DOT_SQL, _NORM_SQL
+from .similarity import _DIM, _DOT_SQL, _NORM_SQL, _bucket_expr_for
 from .similarity10 import _corpus_count, _PLANES24
 from .vecmath import dot, norm
 
@@ -95,11 +95,7 @@ def _acell_expr(vec, m: int):
     """Adaptive cell id in Spark: exactly m plane bits (m is a plain
     Python int from the corpus count — only the needed dots are in the
     plan). Identical value to the SQL form."""
-    out = F.lit(0)
-    for p in range(m):
-        plane = F.array(*[F.lit(c) for c in _PLANES24[p]])
-        out = out + F.when(dot(vec, plane) > 0, F.lit(1 << p)).otherwise(0)
-    return out
+    return _bucket_expr_for(_PLANES24[:m], vec)
 
 
 # Shared oracle CTEs: celled corpus, per-cell scaled-int centroids, the

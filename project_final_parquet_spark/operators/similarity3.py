@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load
-from .vecmath import dot, norm
+from .vecmath import dot, double_array_lit, norm
 
 _DIM = 64
 _PDIM = 16
@@ -36,12 +36,7 @@ _R = [[_sign(t, j) for j in range(_DIM)] for t in range(_PDIM)]
 
 def _project(emb):
     """The 16-dim projection of ``emb``: one left-fold dot per ±1 row."""
-    return F.array(
-        *[
-            dot(emb, F.array(*[F.lit(float(x)) for x in row]))
-            for row in _R
-        ]
-    )
+    return F.array(*[dot(emb, double_array_lit(row)) for row in _R])
 
 
 def _proj_sql(a: str, t: int) -> str:

@@ -35,7 +35,8 @@ UDF carries no cross-row state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType
 
@@ -58,6 +59,23 @@ def dot(a, b):
     (NULL for a NULL array, a NULL element or a length mismatch)."""
     register_kernels(SparkSession.active())
     return F.call_function(VEC_DOT, a, b)
+
+
+def double_array_lit(a) -> Column:
+    """``F.lit`` of a 1-d float64 array (a plane, a projection row, the
+    k-means centroids), bit for bit (NaN and -0.0 included), built in one
+    py4j transfer: pyspark's numpy converter sets the Java array one
+    element per gateway call, and ``F.array`` of scalar literals makes
+    one call per element. Classes are resolved by fully-qualified name:
+    ``jvm.java.nio.ByteBuffer`` costs a failing class lookup per segment."""
+    sc = SparkSession.active().sparkContext
+    jvm = sc._jvm
+    data = np.asarray(a, dtype="<f8")
+    jarr = sc._gateway.new_array(getattr(jvm, "double"), len(data))
+    buf = getattr(jvm, "java.nio.ByteBuffer").wrap(bytearray(data.tobytes()))
+    order = getattr(jvm, "java.nio.ByteOrder").LITTLE_ENDIAN
+    buf.order(order).asDoubleBuffer().get(jarr)
+    return F.lit(jarr)
 
 
 def norm(a):

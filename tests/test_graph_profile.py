@@ -4,7 +4,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.graph import graph_pagerank
+from project_final_parquet_spark.operators.graph import (
+    copurchase_edges,
+    graph_pagerank,
+)
 from project_final_parquet_spark.operators.pipeline import (
     sample_rebalance_classes,
 )
@@ -12,6 +15,7 @@ from project_final_parquet_spark.operators.profiling import (
     _COLS,
     profile_table,
 )
+from project_final_parquet_spark.tables import load
 
 
 def test_pagerank_properties(spark, sf_dir):
@@ -99,3 +103,77 @@ def test_hll_union_within_bounds(spark, sf_dir):
     rows = q63_hll_sketch_union(spark, sf_dir).collect()
     assert rows
     assert all(r.within_bounds for r in rows)
+
+
+def _nested_pairs(arr):
+    """The nested-``transform`` pair generation ``copurchase_edges``
+    used before its built-in form, kept as the reference."""
+    return arr.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    "ps",
+                    lambda a, i: F.transform(
+                        F.slice(F.col("ps"), i + 2, F.size("ps")),
+                        lambda b: F.struct(a.alias("a"), b.alias("b")),
+                    ),
+                )
+            )
+        ).alias("p")
+    ).select("p.a", "p.b")
+
+
+def _edges_from_pairs(pairs):
+    return (
+        pairs.groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= 2)
+        .select("a", "b")
+    )
+
+
+def _stage_lineitem(tmp_path, rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([o for o, _ in rows], pa.int64()),
+                "l_partkey": pa.array([p for _, p in rows], pa.int64()),
+            }
+        ),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    return str(tmp_path)
+
+
+def _reference_edges(spark, sf_dir):
+    li = load(spark, sf_dir, "lineitem")
+    arr = li.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_set("l_partkey")).alias("ps")
+    )
+    return sorted(map(tuple, _edges_from_pairs(_nested_pairs(arr)).collect()))
+
+
+def test_copurchase_edges_equal_nested_form(spark, sf_dir):
+    got = sorted(map(tuple, copurchase_edges(spark, sf_dir).collect()))
+    assert got == _reference_edges(spark, sf_dir)
+    assert len(got) > 0 and all(a < b for a, b in got)
+
+
+def test_copurchase_edges_small_baskets(spark, tmp_path):
+    """Baskets of one part and of no part (a NULL partkey) yield no
+    pair; two orders sharing three parts yield their three edges."""
+    rows = [(1, 7), (2, None), (3, 1), (3, 2), (3, 5), (4, 5), (4, 2),
+            (4, 1), (5, 9), (5, 9)]
+    sf_dir = _stage_lineitem(tmp_path, rows)
+    got = sorted(map(tuple, copurchase_edges(spark, sf_dir).collect()))
+    assert got == _reference_edges(spark, sf_dir) == [(1, 2), (1, 5), (2, 5)]
+
+
+def test_copurchase_edges_plan_has_no_lambda(spark, sf_dir):
+    df = copurchase_edges(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan.lower(), plan

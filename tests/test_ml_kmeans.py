@@ -18,10 +18,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.ml_kmeans import (
-    _double_array_lit,
-    ml_kmeans,
-)
+from project_final_parquet_spark.operators.ml_kmeans import ml_kmeans
+from project_final_parquet_spark.operators.vecmath import double_array_lit
 from project_final_parquet_spark.registry import all_oracles
 
 
@@ -80,7 +78,7 @@ def test_centroid_literal_is_bit_identical_to_numpy_lit(spark):
     a = np.random.default_rng(0).standard_normal(256)
     a[[3, 7, 9]] = [np.nan, -0.0, np.inf]
     df = spark.range(1).select(
-        F.lit(a).alias("numpy"), _double_array_lit(spark, a).alias("buffer")
+        F.lit(a).alias("numpy"), double_array_lit(a).alias("buffer")
     )
     assert df.schema["numpy"].dataType == df.schema["buffer"].dataType
     row = df.head()

@@ -172,3 +172,47 @@ def test_eager_contract_note_is_complete():
     # every name the note claims is eager must at least be a real query
     documented = {n for n in _REGISTRY if n in doc and "_" in n}
     assert flagged <= documented
+
+
+_PKG = Path(registry_mod.__file__).resolve().parent
+
+
+def test_operators_read_corpus_tables_through_load():
+    """Corpus tables go through ``tables.load``, whose schema comes from
+    the footer with no Spark job. Only ``sources.py``, which reads paths
+    its caller gives, calls ``spark.read.parquet`` itself."""
+    offenders = [
+        f"{py.name}:{n}"
+        for py in sorted((_PKG / "operators").glob("*.py"))
+        if py.name != "sources.py"
+        for n, line in enumerate(py.read_text().splitlines(), 1)
+        if "spark.read.parquet(" in line
+    ]
+    assert not offenders, offenders
+
+
+def test_no_chained_jvm_package_access():
+    """JVM classes are resolved by fully-qualified name in one lookup
+    (``getattr(jvm, "java.nio.ByteBuffer")``): each segment of an
+    attribute chain such as ``_jvm.java.nio.ByteBuffer`` is a failing
+    class lookup of its own."""
+
+    def dotted(node: ast.AST) -> list[str]:
+        names = []
+        while isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        if isinstance(node, ast.Name):
+            names.append(node.id)
+        return names[::-1]
+
+    offenders = set()
+    for py in sorted(_PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(py.read_text())):
+            names = dotted(node) if isinstance(node, ast.Attribute) else []
+            for i, name in enumerate(names[:-2]):
+                if name in ("jvm", "_jvm") and all(
+                    n[0].islower() for n in names[i + 1 : i + 3]
+                ):
+                    offenders.add(f"{py.relative_to(_PKG)}:{node.lineno}")
+    assert not offenders, sorted(offenders)

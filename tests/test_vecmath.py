@@ -23,10 +23,12 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from project_final_parquet_spark.operators.vecmath import (
     VEC_DOT,
     dot,
+    double_array_lit,
     hof_dot,
     norm,
     register_kernels,
@@ -381,3 +383,82 @@ def test_one_dot_product_implementation():
     }
     assert not folds, folds
     assert not defs, defs
+
+
+def test_plane_literal_matches_scalar_literals(spark):
+    """A plane built in one py4j transfer holds the values of ``F.array``
+    over its scalar literals, as doubles, and the dots against it are
+    bit-equal. (Its type is ``F.lit``'s for an array, which marks the
+    elements nullable where ``F.array`` of non-null literals does not.)"""
+    from project_final_parquet_spark.operators.similarity import _PLANES
+    from project_final_parquet_spark.operators.similarity3 import _R
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [([_f32(rng.uniform(-1, 1)) for _ in range(DIM)],) for _ in range(20)],
+        "e array<float>",
+    )
+    for row in (_PLANES[0], [float(x) for x in _R[0]]):
+        scalar = F.array(*[F.lit(c) for c in row])
+        df = emb.select(
+            scalar.alias("s"),
+            double_array_lit(row).alias("b"),
+            dot(F.col("e"), scalar).alias("ds"),
+            dot(F.col("e"), double_array_lit(row)).alias("db"),
+        )
+        assert df.schema["s"].dataType.elementType == DoubleType()
+        assert df.schema["b"].dataType.elementType == DoubleType()
+        for r in df.collect():
+            assert r.s == r.b
+            assert _bits(r.ds) == _bits(r.db)
+
+
+def test_dot_checks_the_catalog_once_per_session(spark, monkeypatch):
+    from project_final_parquet_spark.encryption import pme
+
+    calls = []
+    exists = spark.catalog.functionExists
+    monkeypatch.setattr(
+        spark.catalog, "functionExists", lambda fn: calls.append(fn) or exists(fn)
+    )
+    monkeypatch.delitem(pme._REGISTERED, spark, raising=False)
+    for _ in range(50):
+        dot(F.col("a"), F.col("b"))
+    assert len(calls) <= 2
+    assert spark.range(1).select(
+        dot(F.array(F.lit(2.0)), F.array(F.lit(3.0)))
+    ).head()[0] == 6.0
+
+
+def test_vec_dot_resolves_after_session_restart(tmp_path):
+    """After ``spark.stop()``, a fresh ``get_spark()`` session registers
+    the kernel again."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = str(_PKG.parent)
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import functions as F
+        from project_final_parquet_spark.operators.vecmath import dot
+        from project_final_parquet_spark.session import get_spark
+        for attempt in range(2):
+            spark = get_spark(master="local[1]")
+            spark.sparkContext.setLogLevel("ERROR")
+            v = F.array(F.lit(2.0), F.lit(3.0))
+            print("DOT", attempt, spark.range(1).select(dot(v, v)).head()[0])
+            spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    for attempt in range(2):
+        assert f"DOT {attempt} 13.0" in out.stdout, out.stdout + out.stderr
