@@ -7,13 +7,13 @@ encrypted JSON footer + KMS envelope keys, with selective per-column
 decryption (see SURVEY.md §1.5, §2.1 O1-O15). Here the same capabilities
 are built on Spark primitives:
 
-- cell-level: the ``cell_gcm_encrypt/cell_gcm_decrypt`` JVM kernel
-  (jvm/GcmCell.java; byte layout identical to the reference blobs and to
-  Spark's ``aes_encrypt``: [12B IV][ciphertext][16B tag]) over
-  BinaryType columns inside ordinary DataFrame plans;
+- column-level: Parquet Modular Encryption (parquet-mr, driven by
+  ``df.write``/``spark.read`` options; pme.py), each keyed column under
+  a master key of its own (cell.py maps the key cascade onto it);
 - storage: real Parquet (columnar, footer-last by design) with an
   AES-GCM-encrypted JSON footer sidecar mirroring the reference footer
-  fields (key_type, kms_encrypted_key, row_count);
+  fields (key_type, kms_encrypted_key, row_count; io.py), sealed in the
+  reference's [12B IV][ciphertext][16B tag] blob layout (reffile.py);
 - key management: the reference's resolution cascade (column key → KMS
   envelope data key → fallback → plaintext-with-warning) as engine-level
   config logic, and a mock KMS honoring the GenerateDataKey /

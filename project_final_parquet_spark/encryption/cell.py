@@ -1,4 +1,4 @@
-"""Cell-level AES-GCM column encryption inside DataFrame plans.
+"""Per-column AES-GCM encryption of a table, on Parquet Modular Encryption.
 
 Capability parity with the reference writer/reader pipeline
 (src/parquet_writer.cpp:26-238, src/parquet_reader.cpp:20-187):
@@ -12,19 +12,17 @@ Capability parity with the reference writer/reader pipeline
   cast to string before encryption and come back as strings;
 - missing cells round-trip as "" (src/parquet_writer.cpp:65-71).
 
-Cells are sealed and opened by a JVM kernel registered as the SQL
-functions ``cell_gcm_encrypt`` / ``cell_gcm_decrypt`` (jvm/GcmCell.java,
-built and added by ``pme.ensure_pme_jar``). It emits the blob layout
-[12B IV][ciphertext][16B tag] of Spark's ``aes_encrypt(..., 'GCM')`` and
-of the reference (src/crypto_utils.cpp:63-95), so files produced here are
-bit-compatible at the blob level, and tables sealed by Spark's
-``aes_encrypt`` read back unchanged. Unlike Spark's function, which sets
-up a new Cipher and key schedule per cell, the kernel keeps one Cipher
-per (executor thread, key) and a fresh random IV per cell. Everything
-stays a JVM-side expression inside the DataFrame plan — encryption and
-decryption run on executors, no Python in the data path, which is what
-makes this viable at 100 TB (the reference is single-threaded; here every
-partition encrypts in parallel).
+The reference seals each column as one AES-GCM blob under its own key,
+wraps data keys through a KMS and encrypts the footer: the model of
+Parquet Modular Encryption (PME, pme.py). Every keyed column gets a PME
+master key of its own, whose material is the key the cascade resolved;
+the footer key is the table's master key; a plaintext column is not
+listed. parquet-mr encrypts each column chunk page by page in the write
+tasks, and a scan decrypts only the chunks it reads.
+
+Columns are stored as ``c0..cN``: PME's column-key list cannot carry
+``.``, ``,``, ``:`` or ``;`` in a name. io.py's ``footer.enc`` keeps the
+real names in order, and the read aliases them back.
 """
 
 from __future__ import annotations
@@ -32,9 +30,9 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
+from pyspark.sql import types as T
 
 from . import pme
 from .config import EncryptionConfig, is_valid_aes_key_hex
@@ -44,11 +42,7 @@ log = logging.getLogger(__name__)
 
 ENCRYPTED_PLACEHOLDER = "[ENCRYPTED]"  # reference src/parquet_reader.cpp:99
 GCM = "GCM"
-ENCRYPT_FN, DECRYPT_FN = "cell_gcm_encrypt", "cell_gcm_decrypt"
-_KERNEL_FUNCTIONS = {
-    ENCRYPT_FN: ("sparkgraft.cell.GcmCell$Encrypt", BinaryType()),
-    DECRYPT_FN: ("sparkgraft.cell.GcmCell$Decrypt", BinaryType()),
-}
+_FOOTER_KEY_ID = "footer"
 
 
 @dataclass
@@ -159,71 +153,68 @@ def resolve_read_key(
     raise KeyError(f"no key available to decrypt column {col!r}")
 
 
-def _enc_expr(col: str, key_hex: str) -> Column:
-    return F.call_function(
-        ENCRYPT_FN,
-        F.coalesce(F.col(col).cast("string"), F.lit("")).cast("binary"),
-        F.unhex(F.lit(key_hex)),
-    )
-
-
-def _dec_expr(col: str, key_hex: str) -> Column:
-    return F.call_function(DECRYPT_FN, F.col(col), F.unhex(F.lit(key_hex))).cast(
-        "string"
-    )
-
-
 def encrypt_columns(
     df: DataFrame,
     config: EncryptionConfig,
     kms: MockKMS | None = None,
-    row_count: int | None = None,
-) -> tuple[DataFrame, Footer]:
-    """Encrypt every column of ``df`` per the key cascade.
+) -> tuple[DataFrame, Footer, dict[str, str]]:
+    """Resolve every column's key per the cascade.
 
-    Values are cast to string first (the reference's single value type)
-    and NULL becomes "" (missing-cell semantics). Returns the encrypted
-    frame (BinaryType columns; plaintext columns stay string) and the
-    footer to persist.
-    """
+    Returns the value-model frame (each column cast to string, NULL as
+    "", under its positional name), the footer to persist (its row count
+    is -1 until the write has run) and the PME writer options that
+    encrypt the keyed columns and the Parquet footer."""
     keys, meta = resolve_write_keys(df.columns, config, kms)
-    pme.register_java_functions(df.sparkSession, _KERNEL_FUNCTIONS)
-    exprs = []
-    for c in df.columns:
-        if keys[c] is None:
-            exprs.append(F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c))
-        else:
-            exprs.append(_enc_expr(c, keys[c]).alias(c))
-    n = row_count if row_count is not None else df.count()
-    return df.select(*exprs), Footer(row_count=n, columns=meta)
+    stored = [f"c{i}" for i in range(len(df.columns))]
+    frame = df.toDF(*stored).select(
+        *[F.coalesce(F.col(s).cast("string"), F.lit("")).alias(s) for s in stored]
+    )
+    column_keys = {
+        s: bytes.fromhex(keys[c]) for s, c in zip(stored, df.columns) if keys[c] is not None
+    }
+    options = {}
+    if column_keys:  # parquet-mr refuses an encrypted write with no column key
+        pme.ensure_pme_jar(df.sparkSession)
+        options = pme._crypto_options(
+            {_FOOTER_KEY_ID: bytes.fromhex(config.master_key_hex), **column_keys},
+            footer_key=_FOOTER_KEY_ID,
+            column_keys={s: [s] for s in column_keys},
+        )
+    return frame, Footer(row_count=-1, columns=meta), options
 
 
 def decrypt_columns(
-    df: DataFrame,
+    spark: SparkSession,
+    data_path: str,
     config: EncryptionConfig,
     footer: Footer,
     requested_columns: list[str] | None = None,
     kms: MockKMS | None = None,
 ) -> DataFrame:
-    """Selective decryption with masking (src/parquet_reader.cpp:89-101).
+    """Read the table's data files, decrypting the requested columns only
+    (src/parquet_reader.cpp:89-101).
 
     Empty/None ``requested_columns`` decrypts everything (reference
     semantics). Unrequested columns are returned as the literal
-    ``[ENCRYPTED]`` placeholder — same arity, all-string schema.
-    """
-    requested = set(requested_columns or df.columns)
-    pme.register_java_functions(df.sparkSession, _KERNEL_FUNCTIONS)
-    exprs = []
-    for c in df.columns:
-        meta = footer.columns[c]
-        if c not in requested:
-            exprs.append(F.lit(ENCRYPTED_PLACEHOLDER).alias(c))
-        elif meta.key_type == "plaintext":
-            exprs.append(F.col(c).cast("string").alias(c))
-        else:
-            key = resolve_read_key(c, config, meta, kms)
-            exprs.append(_dec_expr(c, key).alias(c))
-    return df.select(*exprs)
+    ``[ENCRYPTED]`` placeholder — same arity, all-string schema. Keys,
+    KMS unwraps included, are resolved for the requested encrypted
+    columns only, and the scan reads no other column."""
+    names = list(footer.columns)
+    if not names:  # a table of empty rows stores no data files (io.py)
+        return spark.range(footer.row_count).select()
+    requested = set(requested_columns or names)
+    stored = {c: f"c{i}" for i, c in enumerate(names)}
+    keys = {
+        stored[c]: bytes.fromhex(resolve_read_key(c, config, m, kms))
+        for c, m in footer.columns.items()
+        if c in requested and m.key_type != "plaintext"
+    }
+    pme.ensure_pme_jar(spark)
+    options = pme._crypto_options({_FOOTER_KEY_ID: bytes.fromhex(config.master_key_hex), **keys})
+    schema = T.StructType([T.StructField(s, T.StringType()) for s in stored.values()])
+    df = spark.read.schema(schema).options(**options).parquet(data_path)
+    masked = F.lit(ENCRYPTED_PLACEHOLDER)
+    return df.select(*[(F.col(s) if c in requested else masked).alias(c) for c, s in stored.items()])
 
 
 def sparse_rows_df(spark, rows: list[dict[str, str]]) -> DataFrame:
@@ -231,8 +222,6 @@ def sparse_rows_df(spark, rows: list[dict[str, str]]) -> DataFrame:
     lexicographic union of per-row column names and missing cells are ""
     (reference src/parquet_writer.cpp:55-71; an all-empty row is legal,
     src/main.cpp:123)."""
-    from pyspark.sql import types as T
-
     cols = sorted({k for r in rows for k in r})
     schema = T.StructType([T.StructField(c, T.StringType(), False) for c in cols])
     data = [tuple(r.get(c, "") for c in cols) for r in rows]

@@ -10,7 +10,7 @@ import org.apache.parquet.crypto.keytools.LocalWrapKmsClient;
 
 /**
  * In-memory KMS for Parquet Modular Encryption: master keys arrive via the
- * Hadoop configuration property {@code sparkgraft.pme.key.list} as
+ * Hadoop configuration property {@code sparkgraft.pme.secret.key.list} as
  * comma-separated {@code keyId:base64Key} entries (the same contract as
  * parquet-mr's test mock, re-stated here because the mock ships only in
  * test jars).
@@ -24,7 +24,10 @@ import org.apache.parquet.crypto.keytools.LocalWrapKmsClient;
  * key metadata.
  */
 public class InMemoryKmsClient extends LocalWrapKmsClient {
-  public static final String KEY_LIST_PROPERTY = "sparkgraft.pme.key.list";
+  // "secret" in the name makes Spark's default spark.redaction.regex mask
+  // the value wherever it prints writer options, e.g. the write command in
+  // the SQL status store and event log.
+  public static final String KEY_LIST_PROPERTY = "sparkgraft.pme.secret.key.list";
 
   private Map<String, byte[]> masterKeys;
 

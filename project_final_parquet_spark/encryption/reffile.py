@@ -18,14 +18,12 @@ src/parquet_reader.cpp:45-78):
 This layer exists for FORMAT parity — the format is single-file by
 construction (one blob per column, offsets in one footer), so the writer
 pivots via the driver exactly like the reference's single process; the
-scalable path for real data is io.py / pme.py. Cell values (cell.py)
-are sealed by the ``cell_gcm_encrypt``/``cell_gcm_decrypt`` JVM kernel
-inside the query plan. Blobs sealed or opened outside a plan go through
-one codec, ``make_reffile_codec``, on ``cryptography``'s AESGCM: this format's
-column blobs and footer (the driver writer/reader here and the
-``reffile`` Data Source, operators/reffile_source.py) and the cell
-path's ``footer.enc`` (io.py). Both implementations emit the same
-[12B IV][ct][16B tag] layout.
+scalable path for real data is io.py / pme.py, where parquet-mr
+encrypts the column chunks. Every blob of this engine's own goes through
+one codec, ``make_reffile_codec``, on ``cryptography``'s AESGCM: this
+format's column blobs and footer (the driver writer/reader here and the
+``reffile`` Data Source, operators/reffile_source.py) and io.py's
+``footer.enc``, all in the [12B IV][ct][16B tag] layout.
 
 Note: the reference repo's committed ``test_kms.parquet`` artifact does
 NOT authenticate against any key in its current main.cpp config (footer

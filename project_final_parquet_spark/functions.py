@@ -8,7 +8,6 @@ factory, composable inside arbitrary DataFrame plans.
 from __future__ import annotations
 
 from .display import truncate_for_display
-from .encryption.cell import decrypt_columns, encrypt_columns
 from .operators.asof import asof_join
 from .operators.dedup import _ngrams as ngrams
 from .operators.dedup import _shingles3 as shingles3
@@ -21,10 +20,8 @@ from .streaming.events import session_windows, sliding_counts, tumbling_counts
 __all__ = [
     "asof_join",
     "davg",
-    "decrypt_columns",
     "dot_product",
     "dsum",
-    "encrypt_columns",
     "l2_norm",
     "ngrams",
     "salted_join",

@@ -1,10 +1,12 @@
 """Driver-gate queries exercising the encryption operators on the
 documents corpus (reference O1-O3, O8-O12 — SURVEY.md §2.1).
 
-Encrypted bytes are never hash-comparable (random IV per value, same as
-the reference's per-column random IV, src/crypto_utils.cpp:35-47,61), so
-— exactly like the reference's own validator (src/main.cpp:61-97) — the
-oracle checks DECRYPTED results.
+Encrypted bytes are never hash-comparable (a random nonce per encrypted
+module, as the reference draws a random IV per column,
+src/crypto_utils.cpp:35-47,61), so — exactly like the reference's own
+validator (src/main.cpp:61-97) — the oracle checks DECRYPTED results.
+Each query writes its encrypted tables under a temp dir of its own at
+construction and returns the lazy read.
 """
 
 from __future__ import annotations
@@ -15,8 +17,12 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..encryption import EncryptionConfig, MockKMS
-from ..encryption.cell import decrypt_columns, encrypt_columns
+from ..encryption import (
+    EncryptionConfig,
+    MockKMS,
+    read_encrypted_table,
+    write_encrypted_table,
+)
 from ..registry import query
 from ..tables import load
 
@@ -32,11 +38,25 @@ _CONFIG = EncryptionConfig(
 )
 
 
-def _encrypted_documents(spark: SparkSession, sf_dir: str):
-    docs = load(spark, sf_dir, "documents")
+def _encrypted_table(df: DataFrame, sf_dir: str, name: str, config=_CONFIG):
+    """Write ``df`` as an encrypted table under ``config`` in the temp
+    dir ``name``; returns its path and the KMS that wrapped its keys."""
+    sf = os.path.basename(sf_dir.rstrip("/"))
+    path = os.path.join(tempfile.gettempdir(), "spark_graft_enc", sf, name)
     kms = MockKMS()
-    enc, footer = encrypt_columns(docs, _CONFIG, kms, row_count=-1)
-    return enc, footer, kms
+    write_encrypted_table(df, path, config, kms)
+    return path, kms
+
+
+def _lang_totals(docs: DataFrame) -> DataFrame:
+    return (
+        docs.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.col("n_chars").cast("long")).alias("total_chars"),
+        )
+        .orderBy("lang")
+    )
 
 
 @query(
@@ -55,8 +75,8 @@ def enc_selective_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     only {doc_id, text}: every other column must read back as the
     [ENCRYPTED] placeholder (reference golden-scenario semantics,
     src/main.cpp:130-141)."""
-    enc, footer, kms = _encrypted_documents(spark, sf_dir)
-    return decrypt_columns(enc, _CONFIG, footer, ["doc_id", "text"], kms)
+    path, kms = _encrypted_table(load(spark, sf_dir, "documents"), sf_dir, "enc_selective_mask")
+    return read_encrypted_table(spark, path, _CONFIG, ["doc_id", "text"], kms)
 
 
 @query(
@@ -71,18 +91,10 @@ def enc_selective_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def enc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full encrypt→decrypt round-trip composed with a downstream
-    aggregation — decryption is an ordinary expression, so Catalyst
-    pipelines it into the same stage as the aggregate."""
-    enc, footer, kms = _encrypted_documents(spark, sf_dir)
-    dec = decrypt_columns(enc, _CONFIG, footer, None, kms)
-    return (
-        dec.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("n_chars").cast("long")).alias("total_chars"),
-        )
-        .orderBy("lang")
-    )
+    aggregation — decryption happens in the scan tasks, so the aggregate
+    runs in the same stage as the decrypting scan."""
+    path, kms = _encrypted_table(load(spark, sf_dir, "documents"), sf_dir, "enc_roundtrip_agg")
+    return _lang_totals(read_encrypted_table(spark, path, _CONFIG, None, kms))
 
 
 @query(
@@ -163,24 +175,10 @@ def enc_key_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
     operational path for retiring a compromised or aged key (reference
     key-cascade semantics O8–O12 applied twice; the reference itself
     has no rotation flow — this is the capability its key cascade
-    exists to enable). All three crypto passes are ordinary column
-    expressions, so Catalyst pipelines decrypt(v1)→encrypt(v2) into one
-    map stage with no intermediate materialization; the v1 ciphertext
-    never needs to be co-resident with v2 keys on any executor."""
-    enc_v1, footer_v1, kms = _encrypted_documents(spark, sf_dir)
-    dec_v1 = decrypt_columns(enc_v1, _CONFIG, footer_v1, None, kms)
-    # n_chars comes back as string after the decrypt round-trip; restore
-    # the original typed frame before re-encrypting under v2
-    plain = dec_v1.withColumn("doc_id", F.col("doc_id").cast("long"))
-    enc_v2, footer_v2 = encrypt_columns(
-        plain, _ROTATED_CONFIG, kms, row_count=-1
-    )
-    dec_v2 = decrypt_columns(enc_v2, _ROTATED_CONFIG, footer_v2, None, kms)
-    return (
-        dec_v2.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("n_chars").cast("long")).alias("total_chars"),
-        )
-        .orderBy("lang")
-    )
+    exists to enable). The rotation is one Spark job: the v1 scan
+    decrypts in the same tasks that re-encrypt under v2, with no
+    intermediate materialization."""
+    path, kms = _encrypted_table(load(spark, sf_dir, "documents"), sf_dir, "enc_key_rotation")
+    dec_v1 = read_encrypted_table(spark, path, _CONFIG, None, kms)
+    path, kms = _encrypted_table(dec_v1, sf_dir, "enc_key_rotation_v2", _ROTATED_CONFIG)
+    return _lang_totals(read_encrypted_table(spark, path, _ROTATED_CONFIG, None, kms))

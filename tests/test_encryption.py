@@ -19,8 +19,6 @@ from project_final_parquet_spark.encryption import (
 )
 from project_final_parquet_spark.encryption.cell import (
     ENCRYPTED_PLACEHOLDER,
-    decrypt_columns,
-    encrypt_columns,
     sparse_rows_df,
 )
 from project_final_parquet_spark.encryption.io import read_footer
@@ -140,22 +138,24 @@ def test_kms_envelope_roundtrip():
     assert kms.decrypt_data_key(wrapped, "other-id") != plain
 
 
-def test_fallback_and_plaintext_cascade(spark):
+def test_fallback_and_plaintext_cascade(spark, tmp_path):
     # no column keys, no KMS: fallback key used; without fallback: plaintext
     df = sparse_rows_df(spark, [{"A": "1", "B": "2"}])
     fb = EncryptionConfig(
         master_key_hex="0123456789ABCDEF0123456789ABCDEF",
         fallback_key_hex="00112233445566778899AABBCCDDEEFF",
     )
-    enc, footer = encrypt_columns(df, fb)
+    footer = write_encrypted_table(df, str(tmp_path / "fb"), fb)
     assert footer.columns["A"].key_type == "fallback"
-    assert decrypt_columns(enc, fb, footer, ["A"]).collect()[0]["A"] == "1"
+    got = read_encrypted_table(spark, str(tmp_path / "fb"), fb, ["A"]).collect()
+    assert [tuple(r) for r in got] == [("1", ENCRYPTED_PLACEHOLDER)]
 
     pt = EncryptionConfig(master_key_hex="0123456789ABCDEF0123456789ABCDEF")
-    enc2, footer2 = encrypt_columns(df, pt)
+    footer2 = write_encrypted_table(df, str(tmp_path / "pt"), pt)
     assert footer2.columns["A"].key_type == "plaintext"
     # plaintext columns survive decryption pass-through
-    assert decrypt_columns(enc2, pt, footer2, ["A"]).collect()[0]["A"] == "1"
+    got = read_encrypted_table(spark, str(tmp_path / "pt"), pt, ["A"]).collect()
+    assert [tuple(r) for r in got] == [("1", ENCRYPTED_PLACEHOLDER)]
 
 
 def test_blob_layout_parity(spark):
@@ -228,6 +228,16 @@ def test_spark_sealed_footer_still_reads(spark, tmp_path):
     assert sorted(r["Name"] for r in got) == sorted(r.get("Name", "") for r in EMPLOYEE_ROWS)
 
 
+def test_codec_iv_is_fresh_per_seal():
+    """The footer codec draws a new IV for every seal: 2000 seals of one
+    payload under one key share no IV."""
+    from project_final_parquet_spark.encryption.reffile import make_reffile_codec
+
+    codec = make_reffile_codec()
+    ivs = {codec.seal(KEY_A, b"same")[:12] for _ in range(2000)}
+    assert len(ivs) == 2000
+
+
 @pytest.mark.parametrize("shape", ["no_partitions", "filtered_empty"])
 def test_empty_frame_roundtrip(spark, tmp_path, shape):
     """An empty frame, with no partitions or filtered down to no rows,
@@ -244,124 +254,123 @@ def test_empty_frame_roundtrip(spark, tmp_path, shape):
     assert read_encrypted_table(spark, path, CONFIG).count() == 0
 
 
-# --- the cell AES-GCM kernel (jvm/GcmCell.java) ------------------------------
+def test_table_of_empty_rows_roundtrip(spark, tmp_path):
+    """Rows with no cells at all (legal in the reference, src/main.cpp:123)
+    keep their count: the footer holds it, as no Parquet file can."""
+    path = str(tmp_path / "t")
+    assert write_encrypted_table(sparse_rows_df(spark, [{}, {}]), path, CONFIG).row_count == 2
+    got = read_encrypted_table(spark, path, CONFIG)
+    assert got.columns == [] and got.count() == 2
+
+
+# --- tables on Parquet Modular Encryption ------------------------------------
 
 KEY_A = "00112233445566778899AABBCCDDEEFF"
 KEY_B = "FFEEDDCCBBAA99887766554433221100"
-COLUMN_KEY_CONFIG = EncryptionConfig(
-    column_keys={"a": KEY_A, "b": KEY_B},
-    master_key_hex="0123456789ABCDEF0123456789ABCDEF",
-)
 
 
-def _read_keys(footer):
-    from project_final_parquet_spark.encryption.cell import resolve_read_key
-
-    return {c: resolve_read_key(c, CONFIG, m, MockKMS()) for c, m in footer.columns.items()}
+def _sorted_rows(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def test_cells_open_with_spark_aes_and_python_codec(spark, table_path):
-    """Cells the kernel sealed open with Spark's aes_decrypt and with the
-    reference-format codec (``cryptography``'s AESGCM)."""
-    from pyspark.sql import functions as F
-
-    from project_final_parquet_spark.encryption.reffile import make_reffile_codec
-
-    keys = _read_keys(read_footer(spark, table_path, CONFIG))
-    raw = spark.read.parquet(f"{table_path}/data")
-    want = sorted(tuple(r.get(c, "") for c in ALL_COLS) for r in EMPLOYEE_ROWS)
-    by_spark = raw.select(
-        *[F.aes_decrypt(c, F.unhex(F.lit(keys[c])), F.lit("GCM")).cast("string").alias(c)
-          for c in ALL_COLS]
-    ).collect()
-    assert sorted(tuple(r) for r in by_spark) == want
-    codec = make_reffile_codec()
-    by_codec = [
-        tuple(codec.unseal(keys[c], bytes(r[c])).decode() for c in ALL_COLS)
-        for r in raw.collect()
-    ]
-    assert sorted(by_codec) == want
-
-
-def test_spark_sealed_cells_still_read(spark, tmp_path):
-    """A table whose cells Spark's aes_encrypt sealed (every table written
-    before the kernel) reads back through read_encrypted_table."""
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "t")
-    df = sparse_rows_df(spark, EMPLOYEE_ROWS)
-    keys = _read_keys(write_encrypted_table(df, path, CONFIG))
-    df.select(
-        *[F.aes_encrypt(F.col(c), F.unhex(F.lit(keys[c])), F.lit("GCM")).alias(c)
-          for c in ALL_COLS]
-    ).write.mode("overwrite").parquet(f"{path}/data")
-    got = read_encrypted_table(spark, path, CONFIG).collect()
-    assert sorted(tuple(r[c] for c in ALL_COLS) for r in got) == sorted(
-        tuple(r.get(c, "") for c in ALL_COLS) for r in EMPLOYEE_ROWS
-    )
-
-
-def test_every_iv_is_fresh(spark):
-    """2000 identical cells over 4 partitions, one key per column: no IV
-    repeats, within a column or across them."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(1000).repartition(4).select(
-        F.lit("same").alias("a"), F.lit("same").alias("b")
-    )
-    enc, footer = encrypt_columns(df, COLUMN_KEY_CONFIG, row_count=1000)
-    rows = enc.collect()
-    ivs = [bytes(r[c])[:12] for r in rows for c in ("a", "b")]
-    assert len(ivs) == 2000 and len(set(ivs)) == 2000
-    dec = decrypt_columns(enc, COLUMN_KEY_CONFIG, footer).collect()
-    assert {(r["a"], r["b"]) for r in dec} == {("same", "same")}
-
-
-def _sealed(spark, plain: str) -> bytes:
-    df = spark.createDataFrame([(plain,)], "a string")
-    enc, _ = encrypt_columns(df, COLUMN_KEY_CONFIG, row_count=1)
-    return bytes(enc.head()["a"])
-
-
-def _open(spark, blob, config=COLUMN_KEY_CONFIG):
-    from project_final_parquet_spark.encryption.cell import ColumnMeta, Footer
-
-    df = spark.createDataFrame([(blob,)], "a binary")
-    footer = Footer(row_count=1, columns={"a": ColumnMeta(mode="GCM", key_type="column")})
-    return decrypt_columns(df, config, footer).collect()
-
-
-@pytest.mark.parametrize("damage", ["flipped_byte", "wrong_key", "short_blob"])
-def test_damaged_cell_fails_the_read(spark, damage):
-    """A tag mismatch, a wrong key or a blob shorter than IV + tag fails
-    the read; it never yields NULL or wrong text."""
-    blob = _sealed(spark, "secret value")
-    assert _open(spark, blob)[0]["a"] == "secret value"
-    config = COLUMN_KEY_CONFIG
+@pytest.mark.parametrize("damage", ["flipped_byte", "truncated"])
+def test_damaged_data_file_fails_the_read(spark, tmp_path, damage):
+    """One flipped byte inside a ``data/`` part file fails GCM
+    authentication, and a truncated part file fails too: the read raises,
+    it never yields wrong text."""
+    path = tmp_path / "t"
+    write_encrypted_table(sparse_rows_df(spark, EMPLOYEE_ROWS), str(path), CONFIG)
+    read = lambda: read_encrypted_table(spark, str(path), CONFIG).collect()  # noqa: E731
+    assert len(read()) == len(EMPLOYEE_ROWS)
+    part = max((path / "data").glob("part-*.parquet"), key=lambda p: p.stat().st_size)
+    raw = bytearray(part.read_bytes())
     if damage == "flipped_byte":
-        blob = blob[:14] + bytes([blob[14] ^ 0x01]) + blob[15:]
-    elif damage == "wrong_key":
-        config = EncryptionConfig(column_keys={"a": KEY_B}, master_key_hex=config.master_key_hex)
+        raw[len(raw) // 2] ^= 0x01
     else:
-        blob = blob[:27]
+        raw = raw[: len(raw) // 2]
+    part.write_bytes(bytes(raw))
     with pytest.raises(Exception):
-        _open(spark, blob, config)
+        read()
 
 
-def test_null_cell_decrypts_to_null(spark):
-    from pyspark.sql import functions as F
+class _CountingKMS(MockKMS):
+    def __init__(self):
+        self.unwraps = 0
 
-    assert _open(spark, None)[0]["a"] is None
-    spark_null = spark.range(1).select(
-        F.aes_decrypt(F.lit(None).cast("binary"), F.unhex(F.lit(KEY_A)), F.lit("GCM"))
-    ).head()[0]
-    assert spark_null is None
+    def decrypt_data_key(self, wrapped: bytes, kms_key_id: str) -> bytes:
+        self.unwraps += 1
+        return super().decrypt_data_key(wrapped, kms_key_id)
 
 
-def test_more_keys_than_the_cipher_cache_holds(spark):
-    """One task seals and opens 40 columns, each under its own key: more
-    keys than a thread's Cipher cache holds, so entries are evicted and
-    re-created while the rows round-trip."""
+@pytest.mark.parametrize(
+    "requested, unwraps",
+    [(["Name"], 0), (["Location"], 1), (["Department", "Name", "Salary"], 2), (None, 3)],
+    ids=["Name", "Location", "Department+Name+Salary", "all"],
+)
+def test_read_unwraps_only_requested_kms_keys(spark, tmp_path, requested, unwraps):
+    """A read asks the KMS for the data key of each requested KMS-keyed
+    column, and for no other."""
+    config = EncryptionConfig(
+        column_keys={"Name": KEY_A}, master_key_hex=CONFIG.master_key_hex,
+        use_kms=True, kms_key_id=CONFIG.kms_key_id,
+    )
+    path = str(tmp_path / "t")
+    kms = _CountingKMS()
+    write_encrypted_table(sparse_rows_df(spark, EMPLOYEE_ROWS), path, config, kms)
+    got = read_encrypted_table(spark, path, config, requested, kms)
+    assert kms.unwraps == unwraps
+    assert _sorted_rows(got, ALL_COLS) == sorted(
+        tuple(r[c] for c in ALL_COLS) for r in expected_rows(requested or ALL_COLS)
+    )
+
+
+def test_names_outside_the_pme_key_syntax_roundtrip(spark, tmp_path):
+    """Column names holding ``.``, ``,``, ``:`` or ``;`` cannot be written
+    into PME's column-key list; the table stores positional names and
+    the read restores the real ones."""
+    names = ["a.b", "c,d", "e:f", "g;h"]
+    df = spark.createDataFrame(
+        [("1", "2", "3", None), ("5", "6", "7", "8")],
+        ", ".join(f"`{n}` string" for n in names),
+    )
+    config = EncryptionConfig(
+        column_keys={n: KEY_A for n in names[:2]} | {n: KEY_B for n in names[2:]},
+        master_key_hex=CONFIG.master_key_hex,
+    )
+    path = str(tmp_path / "t")
+    write_encrypted_table(df, path, config)
+    got = read_encrypted_table(spark, path, config)
+    assert got.columns == names
+    assert _sorted_rows(got, names) == [("1", "2", "3", ""), ("5", "6", "7", "8")]
+    masked = read_encrypted_table(spark, path, config, ["e:f"])
+    assert _sorted_rows(masked, names) == [
+        (ENCRYPTED_PLACEHOLDER, ENCRYPTED_PLACEHOLDER, v, ENCRYPTED_PLACEHOLDER)
+        for v in ("3", "7")
+    ]
+
+
+def test_read_under_a_new_key_list_builds_with_no_job(spark, tmp_path, jobs_run_by):
+    """A read whose key list the JVM has never seen builds with no Spark
+    job (the schema comes from the footer) and its scan tasks still load
+    the KmsClient from the session's jar."""
+    import os
+
+    cols = ["a", "b"]
+    config = EncryptionConfig(
+        column_keys={c: os.urandom(16).hex() for c in cols},
+        master_key_hex=os.urandom(16).hex(),
+    )
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([("x", "1"), ("y", "2")], "a string, b string")
+    write_encrypted_table(df, path, config)
+    # the writer's key list holds both column keys; this one holds one
+    jobs, got = jobs_run_by(lambda: read_encrypted_table(spark, path, config, ["b"]))
+    assert jobs == 0
+    assert _sorted_rows(got, cols) == [(ENCRYPTED_PLACEHOLDER, "1"), (ENCRYPTED_PLACEHOLDER, "2")]
+
+
+def test_more_keys_than_the_cipher_cache_holds(spark, tmp_path):
+    """One task writes and reads 40 columns, each under its own key."""
     from pyspark.sql import functions as F
 
     cols = [f"c{i:02d}" for i in range(40)]
@@ -372,11 +381,12 @@ def test_more_keys_than_the_cipher_cache_holds(spark):
     df = spark.range(50).coalesce(1).select(
         *[F.concat(F.lit(f"{c}:"), F.col("id").cast("string")).alias(c) for c in cols]
     )
-    enc, footer = encrypt_columns(df, config, row_count=50)
-    dec = decrypt_columns(enc, config, footer)
+    path = str(tmp_path / "t")
+    footer = write_encrypted_table(df, path, config)
+    assert {m.key_type for m in footer.columns.values()} == {"column"}
+    dec = read_encrypted_table(spark, path, config)
     assert dec.rdd.getNumPartitions() == 1
-    got = sorted(tuple(r) for r in dec.collect())
-    assert got == sorted(tuple(f"{c}:{i}" for c in cols) for i in range(50))
+    assert _sorted_rows(dec, cols) == sorted(tuple(f"{c}:{i}" for c in cols) for i in range(50))
 
 
 @pytest.fixture(scope="module")
@@ -387,24 +397,73 @@ def orders_table(spark, sf_dir, tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "requested, decrypts", [(["o_custkey", "o_orderdate"], 2), (None, 6)], ids=["masked", "full"]
+    "requested", [["o_custkey", "o_orderdate"], None], ids=["masked", "full"]
 )
-def test_executed_plan_decrypts_only_requested_columns(spark, orders_table, requested, decrypts):
-    """Selective decryption, read from the plan that ran: one decrypt per
-    requested column, none for masked ones."""
-    from project_final_parquet_spark.encryption.cell import DECRYPT_FN
+def test_executed_plan_decrypts_only_requested_columns(spark, orders_table, requested):
+    """Selective decryption, read from the plan that ran: the scan reads
+    the requested columns only, so it never fetches or decrypts the
+    masked ones."""
+    import re
 
     path, footer = orders_table
     df = read_encrypted_table(spark, path, CONFIG, requested)
     assert len(df.collect()) == footer.row_count
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count(f"{DECRYPT_FN}(") == decrypts
+    read_schema = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert len(read_schema) == 1, plan
+    names = list(footer.columns)
+    want = [f"c{names.index(c)}:string" for c in (requested or names)]
+    assert sorted(read_schema[0].split(",")) == sorted(want)
+
+
+def test_stored_bytes_near_plain_parquet(spark, sf_dir, orders_table):
+    """Encryption adds little to the stored table: ``data/`` is at most
+    1.2x the plain Parquet of the same value-model frame."""
+    from project_final_parquet_spark.encryption.cell import encrypt_columns
+
+    path, _ = orders_table
+    plain = f"{path}_plain"
+    frame, _, _ = encrypt_columns(spark.read.parquet(f"{sf_dir}/orders.parquet"), CONFIG, MockKMS())
+    frame.write.mode("overwrite").parquet(plain)
+
+    def size(d):
+        from pathlib import Path
+
+        return sum(p.stat().st_size for p in Path(d).glob("part-*"))
+
+    assert size(f"{path}/data") <= 1.2 * size(plain)
+
+
+def test_no_key_material_in_plan_text(spark, tmp_path):
+    """Keys travel as per-operation options: neither the read's plans nor
+    the plans the status store keeps of the write and the read (which the
+    SQL UI and the event log show) print a key, hex or base64."""
+    import base64
+    import os
+
+    config = EncryptionConfig(
+        column_keys={"Name": os.urandom(16).hex()}, master_key_hex=os.urandom(16).hex()
+    )
+    path = str(tmp_path / "t")
+    write_encrypted_table(sparse_rows_df(spark, EMPLOYEE_ROWS), path, config)
+    df = read_encrypted_table(spark, path, config)
+    df.collect()
+    qe = df._jdf.queryExecution()
+    store = spark._jsparkSession.sharedState().statusStore()
+    recent = store.executionsList(max(0, store.executionsCount() - 10), 10)
+    texts = [qe.toString(), qe.executedPlan().toString()]
+    texts += [recent.apply(i).physicalPlanDescription() for i in range(recent.size())]
+    text = "\n".join(texts)
+    assert "InsertIntoHadoopFsRelationCommand" in text
+    for key in [*config.column_keys.values(), config.master_key_hex]:
+        assert key.lower() not in text.lower()
+        assert base64.b64encode(bytes.fromhex(key)).decode() not in text
 
 
 def test_vanilla_session_roundtrip_survives_restart(tmp_path):
     """A plain session from a cwd outside the checkout round-trips a table;
-    after ``spark.stop()`` a new session in the same process registers the
-    kernel again and round-trips once more."""
+    after ``spark.stop()`` a new session in the same process adds the jar
+    again and round-trips once more."""
     import os
     import subprocess
     import sys
