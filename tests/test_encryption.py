@@ -273,15 +273,28 @@ def _sorted_rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-@pytest.mark.parametrize("damage", ["flipped_byte", "truncated"])
+@pytest.mark.parametrize("damage", ["flipped_byte", "truncated", "wrong_key"])
 def test_damaged_data_file_fails_the_read(spark, tmp_path, damage):
     """One flipped byte inside a ``data/`` part file fails GCM
-    authentication, and a truncated part file fails too: the read raises,
-    it never yields wrong text."""
+    authentication, a truncated part file fails too, and so does an intact
+    part file opened under a wrong key for one of its columns: the read
+    raises, it never yields wrong text."""
     path = tmp_path / "t"
     write_encrypted_table(sparse_rows_df(spark, EMPLOYEE_ROWS), str(path), CONFIG)
-    read = lambda: read_encrypted_table(spark, str(path), CONFIG).collect()  # noqa: E731
+    read = lambda config=CONFIG: read_encrypted_table(  # noqa: E731
+        spark, str(path), config
+    ).collect()
     assert len(read()) == len(EMPLOYEE_ROWS)
+    if damage == "wrong_key":
+        bad = EncryptionConfig(
+            column_keys={**CONFIG.column_keys, "Salary": "22222222222222222222222222222222"},
+            master_key_hex=CONFIG.master_key_hex,
+            use_kms=True,
+            kms_key_id=CONFIG.kms_key_id,
+        )
+        with pytest.raises(Exception):
+            read(bad)
+        return
     part = max((path / "data").glob("part-*.parquet"), key=lambda p: p.stat().st_size)
     raw = bytearray(part.read_bytes())
     if damage == "flipped_byte":
