@@ -36,6 +36,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType
 
+from ..tables import read_parquet
+
 
 def _master_key(key_id: str) -> bytes:
     """Deterministic mock master-key derivation (stand-in for a real KMS
@@ -212,8 +214,11 @@ def read_pme_distributed(
 ) -> DataFrame:
     """Executor-parallel PME read: footer/column decryption happens in
     the scan tasks; column pruning still applies INSIDE the encrypted
-    file (unrequested encrypted chunks are never fetched or decrypted)."""
+    file (unrequested encrypted chunks are never fetched or decrypted).
+    The schema comes from one encrypted footer, opened on the driver
+    with the same keys, so building the frame runs no Spark job and a
+    missing or wrong footer key raises here."""
     ensure_pme_jar(spark)
     keys = {kid: _master_key(kid) for kid in key_ids}
-    return spark.read.options(**_crypto_options(keys)).parquet(path)
+    return read_parquet(spark, path, _crypto_options(keys))
 

@@ -272,12 +272,15 @@ def _lloyd(
 
 
 def _cluster_sizes(assigned: DataFrame) -> DataFrame:
+    # k rows: sorted on one partition, with no range-partition sampling
+    # job and no second shuffle
     return (
         assigned.groupBy(F.col("cid").alias("cluster_id"))
         .agg(
             F.count(F.lit(1)).alias("n_points"),
             F.min("vec_id").alias("min_vec_id"),
         )
+        .coalesce(1)
         .orderBy("cluster_id")
     )
 

@@ -185,8 +185,9 @@ def graph_modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one copurchase_edges derivation (basket-bounded pair
     generation, ONE pair shuffle), two broadcast lookups sharing one
-    broadcast exchange, one partial-aggregated brand rollup, then a
-    single-partition window over ≤ |brands|+2 rows. Adding the
+    broadcast exchange, one partial-aggregated brand rollup coalesced
+    to one partition, then the window and the sort over those
+    ≤ |brands|+2 rows with no further exchange. Adding the
     contributions gives Q with zero extra passes."""
     from .graph import copurchase_edges
 
@@ -228,9 +229,15 @@ def graph_modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.*")
     )
-    comm = ends.groupBy("known", "brand").agg(
-        F.count(F.lit(1)).cast("long").alias("degree_sum"),
-        F.sum("within").cast("long").alias("m_within"),
+    # ≤ |brands|+2 rows: on one partition, the window and the sort
+    # below need no single-partition shuffle and no range sampling job
+    comm = (
+        ends.groupBy("known", "brand")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("degree_sum"),
+            F.sum("within").cast("long").alias("m_within"),
+        )
+        .coalesce(1)
     )
     m = F.sum("degree_sum").over(W.partitionBy()) / 2
     dd = F.col("degree_sum").cast("double") / (2 * F.col("m"))

@@ -10,6 +10,8 @@ chosen to also be the right default on a large multi-executor cluster:
 - Session timezone pinned to UTC so timestamp semantics are stable and
   oracle-comparable (DuckDB timestamps are UTC-naive).
 - Arrow enabled for any pandas-UDF path (the sanctioned slow path).
+- PySpark's per-call call-site capture off: it is a fixed driver cost
+  on every Column built, paid before any row moves.
 """
 
 from __future__ import annotations
@@ -60,6 +62,18 @@ def get_spark(
         # parquet reader rejects; read it as raw nanos and normalize in
         # tables.load (distributed, no driver materialization).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark wraps F.col and every Column method in a call-site
+        # capture (pyspark.errors.utils._with_origin): an active-session
+        # lookup, a conf read, a Python stack walk and a JVM origin
+        # set/clear per call. Off, F.col("x").alias("y") makes 4 py4j
+        # round trips instead of 24, and a perfbench vector_graph pass
+        # 1,155 from the driver thread instead of 2,339. The cost: a
+        # runtime error raised from a DataFrame-API expression keeps its
+        # error class and message, but its "== DataFrame ==" context no
+        # longer names the Python file:line that built the expression.
+        # PySpark reads this flag once per process, from the first
+        # session that asks.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

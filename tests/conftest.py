@@ -40,3 +40,17 @@ def jobs_run_by(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group)), result
 
     return run
+
+
+@pytest.fixture
+def final_plan():
+    """``final_plan(df)`` -> the executed (AQE final) plan of ``df``,
+    which must have run, as a string. ``explain()`` shows only the
+    initial plan."""
+
+    def plan(df) -> str:
+        adaptive = df._jdf.queryExecution().executedPlan()
+        assert adaptive.isFinalPlan()
+        return adaptive.executedPlan().toString()
+
+    return plan

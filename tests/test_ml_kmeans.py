@@ -11,6 +11,8 @@ in DuckDB over the same file.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import numpy as np
 import pyarrow as pa
@@ -18,9 +20,16 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.ml_kmeans import ml_kmeans
+from project_final_parquet_spark.operators.ml_kmeans import (
+    _cluster_sizes,
+    _lloyd,
+    ml_cluster_purity,
+    ml_kmeans,
+    ml_kmeans_converged,
+)
 from project_final_parquet_spark.operators.vecmath import double_array_lit
 from project_final_parquet_spark.registry import all_oracles
+from project_final_parquet_spark.tables import load
 
 
 def _stage(tmp_path, sf_dir, edit):
@@ -41,13 +50,13 @@ def _stage(tmp_path, sf_dir, edit):
     return str(tmp_path)
 
 
-def _oracle(sf_dir):
+def _oracle(sf_dir, name="ml_kmeans"):
     con = duckdb.connect()
     con.sql(
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{sf_dir}/embeddings.parquet')"
     )
-    return con.sql(all_oracles()["ml_kmeans"]).fetchall()
+    return con.sql(all_oracles()[name]).fetchall()
 
 
 def _null_element(emb):
@@ -72,6 +81,27 @@ def test_degenerate_inputs_match_oracle(spark, sf_dir, tmp_path, edit):
     assert got == want
     # one NULL must not pull every row into a single cluster
     assert len(want) > 1
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_cluster_sizes_sort_on_one_partition(spark, sf_dir, sf, final_plan):
+    """The k-row cluster-size rollup is coalesced to one partition, so
+    its sort needs no range partitioning (and no sampling job). Every
+    query built on ``_lloyd`` still gives its oracle's answer, and the
+    early-stopping form the fixed-iteration one."""
+    sf_dir = os.path.join(os.path.dirname(sf_dir), sf)
+    df = ml_kmeans(spark, sf_dir)
+    assert [tuple(r) for r in df.collect()] == _oracle(sf_dir)
+    assert "rangepartitioning" not in final_plan(df)
+
+    purity = [tuple(r) for r in ml_cluster_purity(spark, sf_dir).collect()]
+    assert purity == _oracle(sf_dir, "ml_cluster_purity")
+
+    sizes, rounds = ml_kmeans_converged(spark, sf_dir, max_iters=25)
+    got = [tuple(r) for r in sizes.collect()]
+    assert "rangepartitioning" not in final_plan(sizes)
+    fixed, _ = _lloyd(load(spark, sf_dir, "embeddings"), rounds + 2)
+    assert got == [tuple(r) for r in _cluster_sizes(fixed).collect()]
 
 
 def test_centroid_literal_is_bit_identical_to_numpy_lit(spark):

@@ -11,6 +11,8 @@ DuckDB's answer for the registered oracle SQL.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -31,12 +33,10 @@ def test_construction_runs_no_job_beyond_schema_reads(spark, sf_dir, jobs_run_by
     assert df.count() > 0
 
 
-def test_executed_plan_scans_lineitem_once(spark, sf_dir):
+def test_executed_plan_scans_lineitem_once(spark, sf_dir, final_plan):
     df = graph_modularity_brands(spark, sf_dir)
     df.collect()
-    adaptive = df._jdf.queryExecution().executedPlan()
-    assert adaptive.isFinalPlan()
-    plan = adaptive.executedPlan().toString()
+    plan = final_plan(df)
     scans = [
         line
         for line in plan.splitlines()
@@ -131,3 +131,18 @@ def test_degenerate_inputs_match_oracle(spark, tmp_path, orders, brands, want):
     )
     assert got == oracle
     assert got == sorted(want, key=_key)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_brand_rollup_is_windowed_and_sorted_on_one_partition(spark, sf_dir, sf, final_plan):
+    """The ≤ |brands|+2-row rollup is coalesced to one partition, so the
+    total-edges window and the final sort add no exchange: no shuffle
+    to a single partition and no range partitioning (with its sampling
+    job). The answer is still the oracle's."""
+    sf_dir = os.path.join(os.path.dirname(sf_dir), sf)
+    df = graph_modularity_brands(spark, sf_dir)
+    got = sorted(map(tuple, df.collect()), key=_key)
+    assert got == sorted(_oracle(sf_dir), key=_key)
+    plan = final_plan(df)
+    assert "rangepartitioning" not in plan, plan
+    assert "Exchange SinglePartition" not in plan, plan

@@ -149,3 +149,21 @@ def test_jvm_pme_encrypts_unlisted_columns(spark, tmp_path):
     assert raw.count(b"plainmarker-") == 0
     got = pme.read_pme_distributed(spark, path, ["k-footer", "k-id"])
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_jvm_pme_read_takes_its_schema_from_the_encrypted_footer(
+    spark, jvm_pme_dir, jobs_run_by
+):
+    """Building a PME read runs no Spark job: the schema comes from one
+    encrypted footer opened on the driver with the reader's keys, and it
+    equals the schema Spark's inference job reads. A wrong footer key
+    still raises while the frame is built."""
+    path, _ = jvm_pme_dir
+    key_ids = ["footer-master-key", "key-text", "key-meta"]
+    jobs, df = jobs_run_by(lambda: pme.read_pme_distributed(spark, path, key_ids))
+    assert jobs == 0
+    keys = {kid: pme._master_key(kid) for kid in key_ids}
+    inferred = spark.read.options(**pme._crypto_options(keys)).parquet(path)
+    assert df.schema == inferred.schema
+    with pytest.raises(Exception, match="unknown master key"):
+        pme.read_pme_distributed(spark, path, ["wrong-footer", "key-text", "key-meta"])

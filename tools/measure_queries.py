@@ -4,7 +4,9 @@ For each named query: bench-style isolation (gc + clearCache +
 unpersist-all + JVM full GC), then time construction + noop-sink
 execution (the bench's exact timed region), record the Spark job count
 the query issued (statusTracker job-id delta — construction-eager
-queries issue many), and optionally dump ``explain('formatted')`` to a
+queries issue many) and the py4j round trips its construction made
+(calls to the gateway client's ``send_command``, the driver's fixed
+cost per query), and optionally dump ``explain('formatted')`` to a
 plans directory.
 
 Usage:
@@ -22,6 +24,7 @@ import argparse
 import gc
 import json
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -40,6 +43,24 @@ def isolate(spark) -> None:
         spark._jvm.System.gc()
     except Exception:
         pass
+
+
+def count_round_trips(spark) -> list[int]:
+    """Wrap the gateway client's ``send_command`` so every py4j round
+    trip this thread makes bumps the returned one-element counter. The
+    deletes py4j's finalizer thread sends for collected JVM references
+    are left out: when they fall is up to Python's garbage collector."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    count = [0]
+
+    def counting(*args, **kwargs):
+        count[0] += threading.get_ident() == caller
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    return count
 
 
 def main() -> None:
@@ -66,6 +87,7 @@ def main() -> None:
     ):
         queries[w](spark, tiny).write.format("noop").mode("overwrite").save()
 
+    round_trips = count_round_trips(spark)
     results: dict[str, dict] = {}
     for name in args.names:
         if name not in queries:
@@ -73,21 +95,23 @@ def main() -> None:
             continue
         tracker = spark.sparkContext.statusTracker()
         reps = []
-        jobs = None
+        jobs = py4j = None
         df = None
         for r in range(args.reps):
             isolate(spark)
             j0 = tracker.getJobIdsForGroup(None)
             n0 = max(j0) if j0 else -1
             t0 = time.perf_counter()
+            c0 = round_trips[0]
             df = queries[name](spark, args.sf_dir)
+            py4j = round_trips[0] - c0
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             j1 = tracker.getJobIdsForGroup(None)
             n1 = max(j1) if j1 else -1
             jobs = n1 - n0
             reps.append(round(dt, 3))
-            print(f"{name} rep{r}: {dt:.3f}s jobs={jobs}", flush=True)
+            print(f"{name} rep{r}: {dt:.3f}s jobs={jobs} py4j={py4j}", flush=True)
         if args.plans and df is not None:
             import contextlib
             import io
@@ -98,7 +122,7 @@ def main() -> None:
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
             (pdir / f"{name}_{args.suffix}.txt").write_text(buf.getvalue())
-        results[name] = {"reps": reps, "min": min(reps), "jobs": jobs}
+        results[name] = {"reps": reps, "min": min(reps), "jobs": jobs, "py4j": py4j}
 
     line = json.dumps(results, separators=(",", ":"))
     print(line)
