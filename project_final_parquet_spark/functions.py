@@ -8,9 +8,9 @@ factory, composable inside arbitrary DataFrame plans.
 from __future__ import annotations
 
 from .display import truncate_for_display
-from .operators.asof import asof_join
-from .operators.dedup import _ngrams as ngrams
 from .operators.dedup import _shingles3 as shingles3
+from .operators.dedup import ngrams
+from .operators.relational import asof_join
 from .operators.skew import salted_join
 from .operators.vecmath import dot as dot_product
 from .operators.vecmath import norm as l2_norm

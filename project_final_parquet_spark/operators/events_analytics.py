@@ -1,11 +1,14 @@
-"""Event-analytics operators: funnel conversion, cohort retention, and
-transition paths — the product-analytics query family (Amplitude/
-Mixpanel-style) over the events stream.
+"""Product analytics over the ``events`` stream: funnels, cohort
+retention, transitions and Markov stationary distributions,
+sessionization, rolling and distinct-user windows, streaks, RFM,
+attribution, anomaly and change-point detection, A/B checks, forecasts
+and distribution statistics.
 
-All time math is integer epoch-microseconds (ts_us) per the TZ
-convention; every per-user computation is a window or aggregation
-partitioned on user_id, so the family costs one user_id shuffle and
-scales with users × events-per-user, not events².
+All time math is integer epoch microseconds (``ts_us``, and
+``registry.DAY_US``/``HOUR_US``), so results do not depend on the
+session time zone. Per-user work is a window or aggregation partitioned
+on user_id: the family costs one user_id (or day) shuffle and scales
+with events per user, never events².
 """
 
 from __future__ import annotations
@@ -13,11 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..registry import DSUM_SQL, dsum, query
+from ..ckpt import checkpoint, release
+from ..registry import DAY_US, DSUM_SQL, HOUR_US, dsum, query
 from ..tables import load
-
-_DAY_US = 86_400_000_000
-_HOUR_US = 3_600_000_000
 
 
 @query(
@@ -75,7 +76,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(
                 (F.col("event_type") == "click")
                 & (F.col("ts_us") > F.col("t_view"))
-                & (F.col("ts_us") <= F.col("t_view") + _HOUR_US),
+                & (F.col("ts_us") <= F.col("t_view") + HOUR_US),
                 F.col("ts_us"),
             )
         ).over(w),
@@ -86,7 +87,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(
                 (F.col("event_type") == "purchase")
                 & (F.col("ts_us") > F.col("t_click"))
-                & (F.col("ts_us") <= F.col("t_click") + _HOUR_US),
+                & (F.col("ts_us") <= F.col("t_click") + HOUR_US),
                 F.col("ts_us"),
             )
         ).over(w),
@@ -109,7 +110,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_cohort_retention",
     oracle=f"""
     WITH d AS (
-      SELECT user_id, epoch_us(ts) // {_DAY_US} AS day
+      SELECT user_id, epoch_us(ts) // {DAY_US} AS day
       FROM events
     ),
     firsts AS (
@@ -130,7 +131,7 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cohort × offset) grid is tiny at any corpus size."""
     ev = load(spark, sf_dir, "events")
     d = ev.select(
-        "user_id", F.expr(f"ts_us div {_DAY_US}").alias("day")
+        "user_id", F.expr(f"ts_us div {DAY_US}").alias("day")
     )
     w = W.partitionBy("user_id")
     joined = d.withColumn("cohort_day", F.min("day").over(w))
@@ -184,7 +185,7 @@ def events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_gap_fill",
     oracle=f"""
     WITH hours AS (
-      SELECT user_id, epoch_us(ts) // {_HOUR_US} AS h
+      SELECT user_id, epoch_us(ts) // {HOUR_US} AS h
       FROM events GROUP BY user_id, h
     ),
     spans AS (
@@ -228,7 +229,7 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the missing-hour rows themselves."""
     ev = load(spark, sf_dir, "events")
     hours = (
-        ev.select("user_id", F.expr(f"ts_us div {_HOUR_US}").alias("h"))
+        ev.select("user_id", F.expr(f"ts_us div {HOUR_US}").alias("h"))
         .distinct()
     )
     spans = hours.groupBy("user_id").agg(
@@ -267,7 +268,7 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_anomaly_zscore",
     oracle=f"""
     WITH d AS (
-      SELECT user_id, epoch_us(ts) // {_DAY_US} AS day,
+      SELECT user_id, epoch_us(ts) // {DAY_US} AS day,
              CAST(COUNT(*) AS DOUBLE) AS c
       FROM events GROUP BY user_id, day
     ),
@@ -299,7 +300,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is a vanishing fraction of the input at any scale."""
     ev = load(spark, sf_dir, "events")
     d = (
-        ev.select("user_id", F.expr(f"ts_us div {_DAY_US}").alias("day"))
+        ev.select("user_id", F.expr(f"ts_us div {DAY_US}").alias("day"))
         .groupBy("user_id", "day")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
     )
@@ -1297,3 +1298,855 @@ def events_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("decile")
     )
+
+
+_GAP_US = 1_800_000_000  # 30-minute inactivity gap
+
+
+@query(
+    "events_sessionize",
+    oracle=f"""
+    WITH o AS (
+      SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+             LAG(epoch_us(ts)) OVER
+               (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+               AS prev_us
+      FROM events
+    ),
+    f AS (
+      SELECT *, CASE WHEN prev_us IS NULL
+                       OR ts_us - prev_us > {_GAP_US} THEN 1 ELSE 0 END
+                  AS new_session
+      FROM o
+    ),
+    s AS (
+      SELECT *, SUM(new_session) OVER
+                  (PARTITION BY user_id ORDER BY ts_us, event_id
+                   ROWS UNBOUNDED PRECEDING) AS session_id
+      FROM f
+    ),
+    per AS (
+      SELECT user_id, session_id,
+             CAST(COUNT(*) AS BIGINT) AS n_events,
+             MAX(ts_us) - MIN(ts_us) AS dur_us
+      FROM s GROUP BY user_id, session_id
+    )
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n_sessions,
+           CAST(MAX(n_events) AS BIGINT) AS max_session_events,
+           CAST(SUM(dur_us) AS BIGINT) AS total_active_us
+    FROM per GROUP BY user_id ORDER BY user_id
+    """,
+)
+def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch sessionization (30-min inactivity gap) — the gaps-and-
+    islands pattern applied to user activity: a lag() flags session
+    starts, a running sum of flags numbers the sessions, and two
+    grouped aggregations roll up to per-session then per-user stats.
+    The lag, the running sum, and the first groupBy all share the
+    user_id partitioning, so Catalyst plans ONE shuffle for the whole
+    chain; (ts_us, event_id) is a total order, making session ids
+    deterministic under ties. This is the batch twin of
+    streaming/events.py's session_window aggregation."""
+    ev = load(spark, sf_dir, "events")
+    wo = W.partitionBy("user_id").orderBy("ts_us", "event_id")
+    flagged = ev.select("user_id", "event_id", "ts_us").withColumn(
+        "new_session",
+        F.when(
+            F.lag("ts_us").over(wo).isNull()
+            | (F.col("ts_us") - F.lag("ts_us").over(wo) > F.lit(_GAP_US)),
+            1,
+        ).otherwise(0),
+    )
+    sessioned = flagged.withColumn(
+        "session_id", F.sum("new_session").over(wo.rowsBetween(W.unboundedPreceding, 0))
+    )
+    per = sessioned.groupBy("user_id", "session_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        (F.max("ts_us") - F.min("ts_us")).alias("dur_us"),
+    )
+    return (
+        per.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_sessions"),
+            F.max("n_events").alias("max_session_events"),
+            F.sum("dur_us").alias("total_active_us"),
+        )
+        .orderBy("user_id")
+    )
+
+
+@query(
+    "events_rolling_distinct",
+    oracle=f"""
+    WITH d AS (
+      SELECT epoch_us(ts) // {DAY_US} AS day,
+             list(DISTINCT user_id) AS ul,
+             CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users_1d
+      FROM events GROUP BY day
+    )
+    SELECT day, users_1d,
+           CAST(len(list_distinct(flatten(list(ul) OVER
+             (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))))
+             AS BIGINT) AS users_7d
+    FROM d ORDER BY day
+    """,
+)
+def events_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling 7-day distinct users — COUNT(DISTINCT) over a sliding
+    window, which no engine supports directly. The scalable form:
+    collapse to day grain first (collect_set per day — one shuffle on
+    a bounded-cardinality key), then merge the per-day sets over a
+    7-row frame and count the union. The frame runs over day-grain
+    rows (≤ a few thousand for years of data), so the unpartitioned
+    window is a deliberate post-aggregation single-task step on a
+    tiny frame, not a scale hazard; the heavy distinct work happened
+    map-side in collect_set. "7 days" = the last 7 observed activity
+    days (rows-frame), identical on both engines."""
+    ev = load(spark, sf_dir, "events")
+    daily = ev.groupBy(F.expr(f"ts_us div {DAY_US}").alias("day")).agg(
+        F.collect_set("user_id").alias("ul"),
+        F.countDistinct("user_id").alias("users_1d"),
+    )
+    w7 = W.orderBy("day").rowsBetween(-6, 0)
+    return (
+        daily.select(
+            "day",
+            "users_1d",
+            F.size(F.array_distinct(F.flatten(F.collect_list("ul").over(w7))))
+            .cast("long")
+            .alias("users_7d"),
+        )
+        .orderBy("day")
+    )
+
+
+@query(
+    "events_rolling_distinct_hll",
+    oracle=f"""
+    WITH d AS (
+      SELECT epoch_us(ts) // {DAY_US} AS day,
+             list(DISTINCT user_id) AS ul
+      FROM events GROUP BY day
+    )
+    SELECT day,
+           CAST(len(list_distinct(flatten(list(ul) OVER
+             (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))))
+             AS BIGINT) AS users_7d,
+           TRUE AS within_bounds
+    FROM d ORDER BY day
+    """,
+)
+def events_rolling_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling 7-day distinct users via mergeable HLL sketches — the
+    scale substitute for events_rolling_distinct's exact per-day
+    collect_set. The exact form's day-grain cells grow with DAU (a
+    100 M-DAU day is a 100 M-element array in one window task); here
+    each day collapses to a ~KB HLL sketch (registers are max-of-
+    hashes: mergeable, order-insensitive, constant size), and the
+    7-row frame unions sketches in constant memory at ANY daily
+    cardinality. SCALE.md names the DAU crossover where this path
+    must take over.
+
+    Gate: the estimate must sit within HLL's relative error of the
+    exact rolling count (computed alongside; the oracle pins
+    within_bounds TRUE), and users_7d itself is the exact value so
+    the hash comparison is deterministic."""
+    ev = load(spark, sf_dir, "events")
+    daily = ev.groupBy(F.expr(f"ts_us div {DAY_US}").alias("day")).agg(
+        F.collect_set("user_id").alias("ul"),
+        F.hll_sketch_agg("user_id").alias("sk"),
+    )
+    w7 = W.orderBy("day").rowsBetween(-6, 0)
+    return (
+        daily.select(
+            "day",
+            F.size(F.array_distinct(F.flatten(F.collect_list("ul").over(w7))))
+            .cast("long")
+            .alias("users_7d"),
+            F.hll_sketch_estimate(F.hll_union_agg("sk").over(w7)).alias(
+                "est_7d"
+            ),
+        )
+        .select(
+            "day",
+            "users_7d",
+            (
+                F.abs(F.col("est_7d") - F.col("users_7d"))
+                <= F.lit(0.05) * F.col("users_7d") + F.lit(1.0)
+            ).alias("within_bounds"),
+        )
+        .orderBy("day")
+    )
+
+
+# --- exponentially weighted moving average ---------------------------------
+
+# EWMA needs a recursive state; the cross-engine-exact form bounds the
+# memory to 8 taps so the whole thing is ONE fixed arithmetic expression
+# over lag() columns — identical text on both engines, so IEEE-double
+# evaluation order is identical and the result is bit-exact. (The
+# geometric tail beyond 8 taps is < 0.4% of the weight at alpha=0.5.)
+_EWMA_EXPR = (
+    "("
+    "value"
+    + "".join(f" + {0.5 ** k!r} * COALESCE(l{k}, 0.0)" for k in range(1, 8))
+    + ") / (1.0"
+    + "".join(
+        f" + CASE WHEN l{k} IS NULL THEN 0.0 ELSE {0.5 ** k!r} END"
+        for k in range(1, 8)
+    )
+    + ")"
+)
+
+
+@query(
+    "events_ewma",
+    oracle=f"""
+    WITH lagged AS (
+      SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
+             {", ".join(
+               f"LAG(value, {k}) OVER (PARTITION BY user_id "
+               f"ORDER BY epoch_us(ts), event_id) AS l{k}"
+               for k in range(1, 8))}
+      FROM events WHERE user_id < 5
+    )
+    SELECT user_id, event_id, ts_us,
+           {_EWMA_EXPR} AS ewma8
+    FROM lagged
+    ORDER BY user_id, ts_us, event_id
+    """,
+)
+def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user exponentially weighted moving average (alpha=0.5) over
+    each user's ordered event values, truncated at 8 taps — the
+    trend-smoothing signal of monitoring/feature pipelines. Weights
+    renormalize over the taps actually present, so early rows are
+    unbiased rather than damped toward zero.
+
+    Scale: one user_id shuffle; the 8 lag() columns share a single
+    window sort (one pass per partition run). The 8-tap truncation is
+    what makes EWMA distributable-exact: the untruncated recurrence
+    needs sequential state, while this form is a stateless expression
+    any engine evaluates identically."""
+    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 5)
+    w = W.partitionBy("user_id").orderBy("ts_us", "event_id")
+    lagged = ev.select(
+        "user_id",
+        "event_id",
+        "ts_us",
+        "value",
+        *[F.lag("value", k).over(w).alias(f"l{k}") for k in range(1, 8)],
+    )
+    return lagged.select(
+        "user_id",
+        "event_id",
+        "ts_us",
+        F.expr(_EWMA_EXPR).alias("ewma8"),
+    ).orderBy("user_id", "ts_us", "event_id")
+
+
+# --- sequence mining: top user paths ---------------------------------------
+
+_PATH_K = 10
+
+
+@query(
+    "events_user_path_topk",
+    oracle=f"""
+    WITH seq AS (
+      SELECT user_id, event_type,
+             LEAD(event_type, 1) OVER w AS t1,
+             LEAD(event_type, 2) OVER w AS t2
+      FROM events
+      WINDOW w AS (PARTITION BY user_id
+                   ORDER BY epoch_us(ts), event_id)
+    ),
+    paths AS (
+      SELECT event_type || '>' || t1 || '>' || t2 AS path,
+             CAST(COUNT(*) AS BIGINT) AS n
+      FROM seq WHERE t1 IS NOT NULL AND t2 IS NOT NULL
+      GROUP BY path
+    )
+    SELECT path, n FROM paths
+    ORDER BY n DESC, path
+    LIMIT {_PATH_K}
+    """,
+)
+def events_user_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequential-pattern mining, n-gram form: the top-{_PATH_K} most
+    frequent 3-event paths across all user timelines (the "what do
+    users actually do" query behind funnel design; same trigram trick
+    the text side uses for boilerplate detection, applied to event
+    streams). Paths never cross users because lead() is framed by the
+    user partition.
+
+    Scale: one user_id shuffle for the window, then the path groupBy is
+    map-side combined over at most |event_type|³ = 125 distinct keys —
+    the aggregate is tiny no matter how many events flow in. Total
+    ordering (count, path) makes the top-k unique."""
+    ev = load(spark, sf_dir, "events").select("user_id", "event_type", "ts_us", "event_id")
+    w = W.partitionBy("user_id").orderBy("ts_us", "event_id")
+    seq = ev.select(
+        "event_type",
+        F.lead("event_type", 1).over(w).alias("t1"),
+        F.lead("event_type", 2).over(w).alias("t2"),
+    )
+    return (
+        seq.filter(F.col("t1").isNotNull() & F.col("t2").isNotNull())
+        .select(
+            F.concat_ws(">", "event_type", "t1", "t2").alias("path")
+        )
+        .groupBy("path")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .orderBy(F.desc("n"), "path")
+        .limit(_PATH_K)
+    )
+
+
+# --- data-quality: freshness SLA per stream --------------------------------
+
+_FRESH_SLA_US = 6 * 3600 * 1_000_000  # 6 h staleness budget
+
+
+@query(
+    "dq_freshness_by_type",
+    oracle=f"""
+    WITH g AS (SELECT MAX(epoch_us(ts)) AS global_max FROM events),
+    per AS (
+      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
+             MAX(epoch_us(ts)) AS max_ts_us
+      FROM events GROUP BY event_type
+    )
+    SELECT event_type, n_events, max_ts_us,
+           CAST(g.global_max - max_ts_us AS BIGINT) AS lag_us,
+           (g.global_max - max_ts_us) > {_FRESH_SLA_US} AS stale
+    FROM per CROSS JOIN g
+    ORDER BY event_type
+    """,
+)
+def dq_freshness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Freshness SLA check — the operational data-quality probe next to
+    ``dq_constraint_checks``'s value constraints: per event stream, how
+    far its newest record trails the table's high-water mark, flagged
+    against a 6 h staleness budget. Integer epoch-us throughout
+    (TZ-free).
+
+    Scale: both aggregates are map-side combined single passes; the
+    1-row global watermark broadcasts. This is the query a freshness
+    monitor runs every few minutes, so it must never shuffle the fact
+    table — and this plan doesn't."""
+    ev = load(spark, sf_dir, "events").select("event_type", "ts_us")
+    g = ev.agg(F.max("ts_us").alias("global_max"))
+    per = ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.max("ts_us").alias("max_ts_us"),
+    )
+    return (
+        per.crossJoin(F.broadcast(g))
+        .select(
+            "event_type",
+            "n_events",
+            "max_ts_us",
+            (F.col("global_max") - F.col("max_ts_us"))
+            .cast("long")
+            .alias("lag_us"),
+            (
+                (F.col("global_max") - F.col("max_ts_us"))
+                > F.lit(_FRESH_SLA_US)
+            ).alias("stale"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --- activity heatmap: day-of-week × hour ----------------------------------
+
+
+@query(
+    "events_heatmap_dow_hour",
+    oracle=f"""
+    SELECT CAST((epoch_us(ts) // {DAY_US} + 3) % 7 AS BIGINT) AS dow,
+           CAST((epoch_us(ts) // {HOUR_US}) % 24 AS BIGINT) AS hour,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR)
+                AS DOUBLE) AS total_value
+    FROM events
+    GROUP BY dow, hour ORDER BY dow, hour
+    """,
+)
+def events_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-of-week × hour activity heatmap (0 = Monday; epoch day 0 was
+    a Thursday, hence the +3) — the load-profile view behind capacity
+    planning and send-time optimization. All bucketing is integer
+    epoch-us arithmetic (TZ-free by the repo convention — this is a UTC
+    heatmap; a local-time variant would join a timezone dimension).
+
+    Scale: pure map-side bucketing into ≤168 keys with partial
+    aggregation — the shuffle carries 168 rows per task at any event
+    volume."""
+    ev = load(spark, sf_dir, "events").select("ts_us", "value")
+    return (
+        ev.select(
+            ((F.expr(f"ts_us div {DAY_US}") + 3) % 7).alias("dow"),
+            (F.expr(f"ts_us div {HOUR_US}") % 24).alias("hour"),
+            "value",
+        )
+        .groupBy("dow", "hour")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(38,10)"))
+            .cast("double")
+            .alias("total_value"),
+        )
+        .orderBy("dow", "hour")
+    )
+
+
+# --- Markov steady-state of the event-type chain ---------------------------
+
+_MKV_S = 1_000_000  # transition-probability quantum: floor(c_ij*S/r_i)
+_MKV_XS = 1_000_000  # per-round state rescale magnitude
+_MKV_ROUNDS = 4
+
+
+def _mkv_oracle() -> str:
+    rounds = []
+    for r in range(1, _MKV_ROUNDS + 1):
+        prev = f"x{r - 1}" if r > 1 else "x0"
+        rounds.append(f"""
+    y{r} AS (
+      SELECT t.dst AS s, CAST(SUM(t.tp * x.x) AS BIGINT) AS y
+      FROM t JOIN {prev} x ON t.src = x.s GROUP BY t.dst
+    ),
+    m{r} AS (SELECT MAX(y) AS mx FROM y{r}),
+    x{r} AS (
+      SELECT s, CAST(floor(CAST(y AS DOUBLE) * {_MKV_XS}.0
+                           / CAST(mx AS DOUBLE)) AS BIGINT) AS x
+      FROM y{r} CROSS JOIN m{r}
+    )""")
+    last = f"x{_MKV_ROUNDS}"
+    return f"""
+    WITH seq AS (
+      SELECT event_type AS src,
+             LEAD(event_type) OVER (
+               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
+             ) AS dst
+      FROM events
+    ),
+    c AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS n
+          FROM seq WHERE dst IS NOT NULL GROUP BY src, dst),
+    r AS (SELECT src, CAST(SUM(n) AS BIGINT) AS rs FROM c GROUP BY src),
+    t AS (SELECT c.src, c.dst, CAST(c.n * {_MKV_S} // r.rs AS BIGINT) AS tp
+          FROM c JOIN r USING (src)),
+    x0 AS (SELECT DISTINCT event_type AS s, CAST(1 AS BIGINT) AS x
+           FROM events),
+    {",".join(rounds)},
+    tot AS (SELECT CAST(SUM(x) AS BIGINT) AS tx FROM {last})
+    SELECT l.s AS event_type,
+           CAST(l.x AS DOUBLE) / tot.tx AS stationary
+    FROM {last} l CROSS JOIN tot
+    ORDER BY event_type
+    """
+
+
+@query("events_markov_stationary", oracle=_mkv_oracle())
+def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Steady-state distribution of the event-type Markov chain — where
+    user behavior settles if the observed transition dynamics persist
+    (the long-run share each event type commands; complements
+    ``events_transitions``'s one-step matrix). {_MKV_ROUNDS} unrolled
+    power-iteration rounds in the integer-exact style of
+    ``embeddings_top_eigenvector``: transition probabilities are
+    floor-scaled integers c_ij·S div r_i, each round is an integer
+    mat-vec rescaled by floor(y·K/max y) (all entries non-negative, so
+    floor-vs-truncate never diverges), and the final normalization
+    divides exact integers.
+
+    Scale: the data-scale work is ONE user-partitioned lead() window +
+    a ≤25-key pair count; the chain itself is |event_type|² — iteration
+    cost is independent of data volume."""
+    ev = load(spark, sf_dir, "events")
+    w = W.partitionBy("user_id").orderBy("ts_us", "event_id")
+    seq = ev.select(
+        F.col("event_type").alias("src"),
+        F.lead("event_type").over(w).alias("dst"),
+    ).filter(F.col("dst").isNotNull())
+    c = seq.groupBy("src", "dst").agg(
+        F.count(F.lit(1)).cast("long").alias("n")
+    )
+    r = c.groupBy("src").agg(F.sum("n").cast("long").alias("rs"))
+    t = checkpoint(
+        c.join(r, "src").select(
+            "src", "dst", F.expr(f"n * {_MKV_S} div rs").cast("long").alias("tp")
+        )
+    )
+    x = ev.select(F.col("event_type").alias("s")).distinct().select(
+        "s", F.lit(1).cast("long").alias("x")
+    )
+    for _ in range(_MKV_ROUNDS):
+        prev = x
+        y = (
+            t.join(x, t.src == x.s)
+            .groupBy(F.col("dst").alias("s"))
+            .agg(F.sum(F.col("tp") * F.col("x")).cast("long").alias("y"))
+        )
+        m = y.agg(F.max("y").alias("mx"))
+        x = checkpoint(
+            y.crossJoin(F.broadcast(m)).select(
+                "s",
+                F.floor(
+                    F.col("y").cast("double")
+                    * F.lit(float(_MKV_XS))
+                    / F.col("mx").cast("double")
+                )
+                .cast("long")
+                .alias("x"),
+            )
+        )
+        release(prev)
+    # the final x is materialized: the transition matrix is dead
+    release(t)
+    tot = x.agg(F.sum("x").cast("long").alias("tx"))
+    return (
+        x.crossJoin(F.broadcast(tot))
+        .select(
+            F.col("s").alias("event_type"),
+            (F.col("x").cast("double") / F.col("tx")).alias("stationary"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --- CUSUM changepoint detection --------------------------------------------
+
+
+@query(
+    "events_changepoint_cusum",
+    oracle="""
+    WITH daily AS (
+      SELECT epoch_us(ts) // 86400000000 AS day, CAST(COUNT(*) AS BIGINT) AS x
+      FROM events GROUP BY 1
+    ),
+    tot AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS nd, CAST(SUM(x) AS BIGINT) AS tx
+      FROM daily
+    ),
+    pre AS (
+      SELECT day, x,
+             SUM(nd * x - tx) OVER (ORDER BY day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pfx
+      FROM daily CROSS JOIN tot
+    ),
+    cus AS (
+      SELECT day, x,
+             pfx - LEAST(MIN(pfx) OVER (ORDER BY day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS s
+      FROM pre
+    )
+    SELECT CAST(day AS BIGINT) AS day, x AS n_events,
+           CAST(s AS BIGINT) AS cusum_scaled
+    FROM cus ORDER BY s DESC, day LIMIT 5
+    """,
+)
+def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Upward-shift changepoint detection on the daily event-count
+    series via one-sided CUSUM, computed in CLOSED FORM: the textbook
+    recursion S_t = max(0, S_{t-1} + (x_t - mean)) solves to
+    S_t = prefix_t - min(0, min_{j<=t} prefix_j), so two window
+    functions (running sum, running min) replace the sequential scan —
+    no iteration, no UDF. The mean subtraction is scaled through by
+    n_days (y_t = nd*x_t - total), keeping every intermediate an exact
+    integer in both engines; top-5 alarm days reported.
+
+    Scale: the day-grain frame is tiny at any corpus size (|days|
+    rows after one map-side-combined count), so the unpartitioned
+    ordered windows run on one task over thousands of rows — the same
+    bounded-frame argument as the seasonality/DAU family. Per-segment
+    (e.g. per event_type) monitoring partitions the windows by that
+    key and scales out."""
+    ev = load(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        F.expr(f"ts_us div {DAY_US}").alias("day")
+    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    tot = daily.agg(
+        F.count(F.lit(1)).cast("long").alias("nd"),
+        F.sum("x").cast("long").alias("tx"),
+    )
+    w = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
+    pre = daily.crossJoin(F.broadcast(tot)).withColumn(
+        "pfx",
+        F.sum(F.col("nd") * F.col("x") - F.col("tx")).over(w),
+    )
+    cus = pre.withColumn(
+        "s", F.col("pfx") - F.least(F.min("pfx").over(w), F.lit(0))
+    )
+    return (
+        cus.select(
+            "day",
+            F.col("x").alias("n_events"),
+            F.col("s").cast("long").alias("cusum_scaled"),
+        )
+        .orderBy(F.desc("cusum_scaled"), "day")
+        .limit(5)
+    )
+
+
+# --- robust anomaly detection: median absolute deviation --------------------
+
+
+@query(
+    "events_anomaly_mad",
+    oracle=f"""
+    WITH d AS (
+      SELECT event_type, epoch_us(ts) // {DAY_US} AS day,
+             {DSUM_SQL.format(expr="value")} AS total
+      FROM events GROUP BY event_type, day
+    ),
+    r AS (
+      SELECT *, ROW_NUMBER() OVER
+                  (PARTITION BY event_type ORDER BY total, day) AS rn,
+             COUNT(*) OVER (PARTITION BY event_type) AS n
+      FROM d
+    ),
+    m AS (
+      SELECT event_type,
+             (MAX(CASE WHEN rn = (n + 1) // 2 THEN total END)
+              + MAX(CASE WHEN rn = n // 2 + 1 THEN total END)) / 2 AS med
+      FROM r GROUP BY event_type
+    ),
+    a AS (
+      SELECT d.event_type, d.day, d.total, m.med,
+             ABS(d.total - m.med) AS absdev
+      FROM d JOIN m USING (event_type)
+    ),
+    r2 AS (
+      SELECT *, ROW_NUMBER() OVER
+                  (PARTITION BY event_type ORDER BY absdev, day) AS rn,
+             COUNT(*) OVER (PARTITION BY event_type) AS n
+      FROM a
+    ),
+    md AS (
+      SELECT event_type,
+             (MAX(CASE WHEN rn = (n + 1) // 2 THEN absdev END)
+              + MAX(CASE WHEN rn = n // 2 + 1 THEN absdev END)) / 2 AS mad
+      FROM r2 GROUP BY event_type
+    )
+    SELECT a.event_type, CAST(a.day AS BIGINT) AS day, a.total, a.med,
+           md.mad, a.absdev / md.mad AS robust_score
+    FROM a JOIN md USING (event_type)
+    WHERE md.mad > 0 AND a.absdev > 3 * md.mad
+    ORDER BY event_type, day
+    """,
+)
+def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Robust daily-revenue anomalies per event type: days whose
+    DECIMAL-exact daily value total deviates from the type's MEDIAN by
+    more than 3x the median absolute deviation. The mean/stddev z-score
+    (events_anomaly_zscore) is itself dragged by the outliers it hunts;
+    the median/MAD pair has a 50% breakdown point — the robust twin
+    every production monitor runs alongside it.
+
+    Cross-engine medians WITHOUT trusting either engine's interpolation
+    kernel: rank the group (row_number, day tiebreak), then avg the
+    values at positions (n+1)//2 and n//2+1 explicitly — for odd n both
+    land on the middle row ((a+a)/2 == a exactly), for even n this is
+    (a+b)/2 computed with the same two IEEE ops in both engines. Spark's
+    percentile interpolation (lower + (higher-lower)*frac) and DuckDB's
+    quantile_cont are NOT guaranteed bit-identical, so neither is used.
+
+    Scale: daily totals are one map-side-combined shuffle on
+    (event_type, day); everything after runs on the |types| x |days|
+    aggregate frame (tiny at any corpus size), and the two ranking
+    windows partition on event_type — no unpartitioned window, no
+    second pass over raw events."""
+    ev = load(spark, sf_dir, "events")
+    d = (
+        ev.select(
+            "event_type",
+            F.expr(f"ts_us div {DAY_US}").alias("day"),
+            "value",
+        )
+        .groupBy("event_type", "day")
+        .agg(dsum(F.col("value")).alias("total"))
+    )
+    by_type = W.partitionBy("event_type")
+
+    def group_median(frame: DataFrame, val: str, out: str) -> DataFrame:
+        r = frame.withColumn(
+            "rn", F.row_number().over(by_type.orderBy(val, "day"))
+        ).withColumn("n", F.count(F.lit(1)).over(by_type))
+        lo = F.max(F.when(F.expr("rn = (n + 1) div 2"), F.col(val)))
+        hi = F.max(F.when(F.expr("rn = n div 2 + 1"), F.col(val)))
+        return r.groupBy("event_type").agg(((lo + hi) / 2).alias(out))
+
+    m = group_median(d, "total", "med")
+    a = d.join(m, "event_type").withColumn(
+        "absdev", F.abs(F.col("total") - F.col("med"))
+    )
+    md = group_median(a, "absdev", "mad")
+    return (
+        a.join(md, "event_type")
+        .filter((F.col("mad") > 0) & (F.col("absdev") > 3 * F.col("mad")))
+        .select(
+            "event_type",
+            F.col("day").cast("long").alias("day"),
+            "total",
+            "med",
+            "mad",
+            (F.col("absdev") / F.col("mad")).alias("robust_score"),
+        )
+        .orderBy("event_type", "day")
+    )
+
+
+# --- A/B sample-ratio-mismatch check ---------------------------------------
+
+
+@query(
+    "events_ab_srm_check",
+    oracle="""
+    WITH exposed AS (
+      SELECT DISTINCT event_type, user_id FROM events
+    ),
+    counts AS (
+      SELECT event_type,
+             CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_a,
+             CAST(SUM(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_b
+      FROM exposed GROUP BY event_type
+    )
+    SELECT event_type, n_a, n_b,
+           CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b) AS chi2,
+           CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b)
+             > 3.841 AS srm_flag
+    FROM counts ORDER BY event_type
+    """,
+)
+def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sample-ratio-mismatch guardrail for the A/B assignment that
+    events_abtest_lift analyzes (user_id % 2 — the same hash split):
+    per exposure surface (event_type), count distinct users landing in
+    each arm and chi-square-test the observed split against the
+    designed 50/50. For two cells with expected n/2 the statistic
+    collapses to the closed form (n_a−n_b)²/n — exact BIGINT algebra
+    until one final double division — flagged at the 95% critical
+    value 3.841. SRM is the first gate every experimentation platform
+    runs: a lift read on a mismatched split is invalid regardless of
+    its p-value.
+
+    Scale: one distinct on (event_type, user_id) — map-side combined,
+    the only shuffle — then a bounded-cardinality rollup; no raw-event
+    second pass, no per-user state."""
+    ev = load(spark, sf_dir, "events")
+    exposed = ev.select("event_type", "user_id").distinct()
+    counts = exposed.groupBy("event_type").agg(
+        F.sum(F.when(F.col("user_id") % 2 == 0, 1).otherwise(0))
+        .cast("long")
+        .alias("n_a"),
+        F.sum(F.when(F.col("user_id") % 2 == 1, 1).otherwise(0))
+        .cast("long")
+        .alias("n_b"),
+    )
+    diff = F.col("n_a") - F.col("n_b")
+    chi2 = (diff * diff).cast("double") / (F.col("n_a") + F.col("n_b"))
+    return counts.select(
+        "event_type",
+        "n_a",
+        "n_b",
+        chi2.alias("chi2"),
+        (chi2 > 3.841).alias("srm_flag"),
+    ).orderBy("event_type")
+
+
+# --- forecast baseline backtest ---------------------------------------------
+
+
+@query(
+    "events_forecast_backtest",
+    oracle=f"""
+    WITH d AS (
+      SELECT event_type, epoch_us(ts) // {DAY_US} AS day,
+             {DSUM_SQL.format(expr="value")} AS total
+      FROM events GROUP BY event_type, day
+    ),
+    l AS (
+      SELECT *,
+             LAG(total, 1) OVER (PARTITION BY event_type ORDER BY day)
+               AS f_naive,
+             LAG(total, 7) OVER (PARTITION BY event_type ORDER BY day)
+               AS f_seas
+      FROM d
+    ),
+    a AS (
+      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days_tested,
+             {DSUM_SQL.format(expr="abs(total - f_naive)")} / COUNT(*)
+               AS mae_naive,
+             {DSUM_SQL.format(expr="abs(total - f_seas)")} / COUNT(*)
+               AS mae_seasonal
+      FROM l WHERE f_naive IS NOT NULL AND f_seas IS NOT NULL
+      GROUP BY event_type
+    )
+    SELECT event_type, n_days_tested, mae_naive, mae_seasonal,
+           CASE WHEN mae_seasonal < mae_naive THEN 'seasonal'
+                WHEN mae_seasonal > mae_naive THEN 'naive'
+                ELSE 'tie' END AS winner
+    FROM a ORDER BY event_type
+    """,
+)
+def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forecast-baseline backtest per event type: walk the daily-value
+    series and score the two baselines every forecasting effort must
+    beat — naive (yesterday's total) and seasonal-naive (the total 7
+    observed days back) — by mean absolute error over every day where
+    both have history. The winner column is the one-line answer to
+    "does this series have weekly structure worth modeling".
+
+    Lags are ROWS-based over OBSERVED days (gap days don't shift the
+    seasonal index — the convention events_gap_fill exists to change);
+    daily totals and both MAE numerators use the DECIMAL(38,10)
+    order-independent sum, so every emitted double is deterministic.
+
+    Scale: one map-side-combined shuffle to day grain; the lag window
+    and the backtest aggregate both partition on event_type over the
+    |types|×|days| frame — no second pass over raw events, same shape
+    as events_anomaly_mad."""
+    ev = load(spark, sf_dir, "events")
+    d = (
+        ev.select(
+            "event_type",
+            F.expr(f"ts_us div {DAY_US}").alias("day"),
+            "value",
+        )
+        .groupBy("event_type", "day")
+        .agg(dsum(F.col("value")).alias("total"))
+    )
+    w = W.partitionBy("event_type").orderBy("day")
+    l = d.select(
+        "event_type",
+        "total",
+        F.lag("total", 1).over(w).alias("f_naive"),
+        F.lag("total", 7).over(w).alias("f_seas"),
+    ).filter(F.col("f_naive").isNotNull() & F.col("f_seas").isNotNull())
+    a = l.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_days_tested"),
+        (
+            dsum(F.abs(F.col("total") - F.col("f_naive")))
+            / F.count(F.lit(1))
+        ).alias("mae_naive"),
+        (
+            dsum(F.abs(F.col("total") - F.col("f_seas")))
+            / F.count(F.lit(1))
+        ).alias("mae_seasonal"),
+    )
+    return a.select(
+        "event_type",
+        "n_days_tested",
+        "mae_naive",
+        "mae_seasonal",
+        F.when(F.col("mae_seasonal") < F.col("mae_naive"), "seasonal")
+        .when(F.col("mae_seasonal") > F.col("mae_naive"), "naive")
+        .otherwise("tie")
+        .alias("winner"),
+    ).orderBy("event_type")

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import DAY_US, query
 from ..tables import load
 
 _BITS = 8  # per-dimension quantization
@@ -106,7 +106,6 @@ def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- small-file compaction planning ----------------------------------------
 
-_DAY_US = 86_400_000_000
 _FILE_BYTES_PER_ROW = 1000  # synthetic manifest: day-file size proxy
 _COMPACT_TARGET = 2_000_000  # bin capacity in bytes
 
@@ -137,7 +136,7 @@ def assign_compaction_bins(
     "layout_compaction_plan",
     oracle=f"""
     WITH manifest AS (
-      SELECT epoch_us(ts) // {_DAY_US} AS file_id,
+      SELECT epoch_us(ts) // {DAY_US} AS file_id,
              CAST(COUNT(*) * {_FILE_BYTES_PER_ROW} AS BIGINT) AS size_bytes
       FROM events GROUP BY file_id
     ),
@@ -172,7 +171,7 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently. Integer epoch-us day math (TZ-free)."""
     ev = load(spark, sf_dir, "events").select("ts_us")
     manifest = (
-        ev.groupBy(F.expr(f"ts_us div {_DAY_US}").alias("file_id"))
+        ev.groupBy(F.expr(f"ts_us div {DAY_US}").alias("file_id"))
         .agg(
             (F.count(F.lit(1)) * _FILE_BYTES_PER_ROW)
             .cast("long")

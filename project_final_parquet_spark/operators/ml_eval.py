@@ -26,13 +26,14 @@ from pyspark.sql import Window as W
 
 from ..registry import DSUM_SQL, dsum, query
 from ..tables import load
-from .vector_stats import _DIM, _VSCALE, PROBE_SCORED_CTES, probe_scores
+from .similarity import DIM
+from .vector_stats import PROBE_SCORED_CTES, VSCALE, probe_scores
 
 # Knuth-hash batch split shared with dedup_incremental /
 # dq_distribution_drift (pipeline4.py) — the SAME 20% "new batch"
 # definition, applied to vec_id, so the drift monitors across text and
 # embedding modalities audit one consistent ingest batch.
-from .pipeline4 import _INC_HASH, _INC_MOD, _INC_THRESH  # noqa: F401
+from .pipeline4 import INC_HASH, INC_MOD, INC_THRESH
 
 _N_DECILES = 10
 _PCTS = [10, 25, 50]  # top-p% operating points for the confusion table
@@ -313,11 +314,11 @@ def ml_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH flat AS (
       SELECT label, i AS dim,
              CAST(FLOOR(CAST(embedding[i + 1] AS DOUBLE)
-                        * {_VSCALE}) AS BIGINT) AS fv,
-             ((vec_id % {_INC_MOD}) * {_INC_HASH}) % {_INC_MOD}
-               < {_INC_THRESH} AS is_batch
+                        * {VSCALE}) AS BIGINT) AS fv,
+             ((vec_id % {INC_MOD}) * {INC_HASH}) % {INC_MOD}
+               < {INC_THRESH} AS is_batch
       FROM embeddings
-      CROSS JOIN (SELECT unnest(range({_DIM})) AS i) idx
+      CROSS JOIN (SELECT unnest(range({DIM})) AS i) idx
     ),
     per AS (
       SELECT label, dim,
@@ -329,8 +330,8 @@ def ml_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dims AS (
       SELECT label, n_h, n_b,
-             CAST(s_h AS DOUBLE) / n_h / {_VSCALE} AS ch,
-             CAST(s_b AS DOUBLE) / n_b / {_VSCALE} AS cb
+             CAST(s_h AS DOUBLE) / n_h / {VSCALE} AS ch,
+             CAST(s_b AS DOUBLE) / n_b / {VSCALE} AS cb
       FROM per WHERE n_h > 0 AND n_b > 0
     )
     SELECT CAST(label AS INT) AS label,
@@ -361,8 +362,8 @@ def embeddings_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     output double is bit-identical cross-engine."""
     emb = load(spark, sf_dir, "embeddings")
     is_batch = (
-        (F.col("vec_id") % _INC_MOD) * F.lit(_INC_HASH)
-    ) % F.lit(_INC_MOD) < F.lit(_INC_THRESH)
+        (F.col("vec_id") % INC_MOD) * F.lit(INC_HASH)
+    ) % F.lit(INC_MOD) < F.lit(INC_THRESH)
     flat = emb.select(
         "label",
         is_batch.alias("is_batch"),
@@ -371,7 +372,7 @@ def embeddings_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "dim",
         "is_batch",
-        F.floor(F.col("vf").cast("double") * _VSCALE).cast("long").alias("fv"),
+        F.floor(F.col("vf").cast("double") * VSCALE).cast("long").alias("fv"),
     )
     per = flat.groupBy("label", "dim").agg(
         F.sum(F.when(F.col("is_batch"), 0).otherwise(F.col("fv")))
@@ -391,8 +392,8 @@ def embeddings_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "n_h",
         "n_b",
-        (F.col("s_h").cast("double") / F.col("n_h") / _VSCALE).alias("ch"),
-        (F.col("s_b").cast("double") / F.col("n_b") / _VSCALE).alias("cb"),
+        (F.col("s_h").cast("double") / F.col("n_h") / VSCALE).alias("ch"),
+        (F.col("s_b").cast("double") / F.col("n_b") / VSCALE).alias("cb"),
     )
     diff = F.col("cb") - F.col("ch")
     return (

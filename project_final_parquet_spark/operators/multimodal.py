@@ -1,24 +1,19 @@
-"""Multimodal (binary) column operators.
-
-Images/audio/video are carried as opaque ``binary`` payloads plus typed
-metadata — the pattern for multimodal training-data pipelines at 100 TB:
-blobs stay columnar in parquet (never parsed by the engine), metadata
-columns drive pruning/filtering, and decode/feature-extraction runs as
+"""Multimodal (binary) column operators: images, audio and video carried
+as opaque ``binary`` payloads plus typed metadata. Blobs stay columnar
+in Parquet, metadata columns drive pruning, and decoding runs as
 Arrow-batched ``mapInPandas`` over partitions.
 
-The corpus has no real media, so two payload tiers exist:
+The corpus has no real media, so there are two payload tiers:
 
 - ``media_frame`` synthesizes payloads from ``documents.text`` bytes
-  (deterministic → oracle-checkable) and ``fake_decode_features``
-  computes byte-level features with the exact Spark-side plumbing —
-  schema contract, Arrow batching, partition mapping — a codec uses.
-- ``mm_real_decode_stats`` goes further: it GENERATES real media blobs
+  (deterministic, so oracle-checkable); ``fake_decode_features`` and
+  ``mm_frame_sample`` exercise the codec plumbing (schema contract,
+  Arrow batching, partition mapping) over them.
+- ``mm_real_decode_stats`` and the queries after it generate real media
   (binary PPM P6 images and RIFF/WAVE PCM16 audio, deterministic from
-  doc_id) and DECODES them with genuine pure-numpy parsers — magic
-  bytes, ASCII header / RIFF chunk walk, ``np.frombuffer`` payload —
-  so the decode step is real for the two classic uncompressed formats
-  this container can handle without codec libraries. The oracle
-  recomputes the features in closed form from doc_id.
+  doc_id) and decode them with pure-numpy parsers (magic bytes, header
+  and RIFF chunk walk, ``np.frombuffer``). The oracles recompute the
+  features in closed form from doc_id.
 """
 
 from __future__ import annotations
@@ -26,7 +21,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1202,4 +1196,294 @@ def mm_wav_loudness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_sq").cast("double") / F.col("n_samples")
         ).alias("rms"),
         (F.col("sum_sq") > F.lit(thr2) * F.col("n_samples")).alias("kept"),
+    ).orderBy("doc_id")
+
+
+_CHUNK_SAMPLES = 50  # fixed featurizer window
+
+
+def make_wav_length_stage():
+    """mapInPandas stage: doc_id → real WAV blob → REAL parse →
+    (doc_id, n_samples, sample_rate). Everything nested so executors
+    get by-value pickles (the round-4 ModuleNotFoundError lesson)."""
+
+    _, encode_wav = _make_encoders()
+    _, parse_wav = _make_parsers()
+
+    def wav_lengths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as _pd
+
+        for pdf in batches:
+            out = {"doc_id": [], "n_samples": [], "sample_rate": []}
+            for doc_id in pdf["doc_id"]:
+                n, sr, _ = parse_wav(encode_wav(int(doc_id)))
+                out["doc_id"].append(doc_id)
+                out["n_samples"].append(n)
+                out["sample_rate"].append(sr)
+            yield _pd.DataFrame(out)
+
+    return wav_lengths
+
+
+@query(
+    "mm_audio_chunk_plan",
+    oracle=f"""
+    WITH params AS (
+      SELECT doc_id, 64 + CAST(doc_id % 64 AS INT) AS n
+      FROM documents WHERE doc_id % 2 = 1
+    ),
+    plan AS (
+      SELECT doc_id, CAST(n AS BIGINT) AS n_samples, i AS chunk_idx,
+             (n + {_CHUNK_SAMPLES - 1}) // {_CHUNK_SAMPLES} AS n_chunks
+      FROM params
+      CROSS JOIN (SELECT unnest(range(
+        (127 + {_CHUNK_SAMPLES - 1}) // {_CHUNK_SAMPLES})) AS i)
+      WHERE i < (n + {_CHUNK_SAMPLES - 1}) // {_CHUNK_SAMPLES}
+    )
+    SELECT doc_id, n_samples, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+           CAST(chunk_idx * {_CHUNK_SAMPLES} AS BIGINT) AS start_sample,
+           CAST(least(n_samples, (chunk_idx + 1) * {_CHUNK_SAMPLES})
+                AS BIGINT) AS end_sample,
+           CAST(CASE WHEN chunk_idx = n_chunks - 1
+                     THEN n_chunks * {_CHUNK_SAMPLES} - n_samples
+                     ELSE 0 END AS BIGINT) AS pad_samples
+    FROM plan ORDER BY doc_id, chunk_idx
+    """,
+)
+def mm_audio_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-window audio batching plan: every audio clip (odd doc_ids,
+    the corpus's WAV modality) is decoded FOR REAL (RIFF walk on the
+    generated PCM16 bytes — never trusting metadata) and split into
+    {_CHUNK_SAMPLES}-sample featurizer windows; each chunk row carries
+    its sample range and the final chunk's zero-pad amount. This is the
+    work list a Whisper-style encoder or VAD fans out over — the
+    Spark-side plumbing (blob → Arrow decode stage → exploded plan) is
+    the real operator; only the model call is out of scope here.
+
+    Determinism: the oracle recomputes clip lengths in closed form from
+    doc_id, so any decode or ceil-division bug is a hash mismatch; all
+    arithmetic is integer.
+
+    Scale: blobs stay on executors (mapInPandas, zero shuffle); the
+    plan explode is map-side sequence arithmetic — output is
+    Σ ceil(len/chunk) rows, written straight to the featurizer's queue
+    with no aggregation at all."""
+    docs = (
+        load(spark, sf_dir, "documents")
+        .select("doc_id")
+        .filter(F.col("doc_id") % 2 == 1)
+    )
+    lens = docs.mapInPandas(
+        make_wav_length_stage(),
+        schema="doc_id long, n_samples long, sample_rate long",
+    )
+    n_chunks = F.expr(
+        f"(n_samples + {_CHUNK_SAMPLES - 1}) div {_CHUNK_SAMPLES}"
+    )
+    plan = lens.select(
+        "doc_id",
+        "n_samples",
+        n_chunks.alias("n_chunks"),
+        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
+    )
+    return plan.select(
+        "doc_id",
+        "n_samples",
+        F.col("chunk_idx").cast("long").alias("chunk_idx"),
+        (F.col("chunk_idx") * _CHUNK_SAMPLES).cast("long").alias(
+            "start_sample"
+        ),
+        F.least(
+            F.col("n_samples"), (F.col("chunk_idx") + 1) * _CHUNK_SAMPLES
+        )
+        .cast("long")
+        .alias("end_sample"),
+        F.when(
+            F.col("chunk_idx") == F.col("n_chunks") - 1,
+            F.col("n_chunks") * _CHUNK_SAMPLES - F.col("n_samples"),
+        )
+        .otherwise(0)
+        .cast("long")
+        .alias("pad_samples"),
+    ).orderBy("doc_id", "chunk_idx")
+
+
+_TILE = 2  # featurizer patch size (pixels per side)
+
+
+def make_ppm_dims_stage():
+    """mapInPandas stage: doc_id → real PPM blob → REAL parse →
+    (doc_id, width, height). Nested for by-value pickling."""
+
+    encode_ppm, _ = _make_encoders()
+    parse_ppm, _ = _make_parsers()
+
+    def ppm_dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as _pd
+
+        for pdf in batches:
+            out = {"doc_id": [], "width": [], "height": []}
+            for doc_id in pdf["doc_id"]:
+                w, h, _sum = parse_ppm(encode_ppm(int(doc_id)))
+                out["doc_id"].append(doc_id)
+                out["width"].append(w)
+                out["height"].append(h)
+            yield _pd.DataFrame(out)
+
+    return ppm_dims
+
+
+@query(
+    "mm_image_tile_grid",
+    oracle=f"""
+    WITH params AS (
+      SELECT doc_id,
+             4 + CAST(doc_id % 5 AS INT) AS w,
+             3 + CAST(doc_id % 3 AS INT) AS h
+      FROM documents WHERE doc_id % 2 = 0
+    ),
+    grid AS (
+      SELECT doc_id, w, h, tx, ty,
+             (w + {_TILE - 1}) // {_TILE} AS nx,
+             (h + {_TILE - 1}) // {_TILE} AS ny
+      FROM params
+      CROSS JOIN (SELECT unnest(range(4)) AS tx)
+      CROSS JOIN (SELECT unnest(range(3)) AS ty)
+      WHERE tx < (w + {_TILE - 1}) // {_TILE}
+        AND ty < (h + {_TILE - 1}) // {_TILE}
+    )
+    SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+           CAST(tx AS BIGINT) AS tile_x, CAST(ty AS BIGINT) AS tile_y,
+           CAST(tx * {_TILE} AS BIGINT) AS x0,
+           CAST(ty * {_TILE} AS BIGINT) AS y0,
+           CAST(least(w, (tx + 1) * {_TILE}) AS BIGINT) AS x1,
+           CAST(least(h, (ty + 1) * {_TILE}) AS BIGINT) AS y1,
+           CAST(nx * {_TILE} - w AS BIGINT) * CAST(tx = nx - 1 AS BIGINT)
+             + CAST(ny * {_TILE} - h AS BIGINT) * CAST(ty = ny - 1 AS BIGINT)
+             AS pad_px_axes
+    FROM grid ORDER BY doc_id, tile_y, tile_x
+    """,
+)
+def mm_image_tile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image patching plan (the ViT-style tile grid): every image clip
+    (even doc_ids, the corpus's PPM modality) is decoded FOR REAL
+    (ASCII header walk on the generated P6 bytes) and split into
+    {_TILE}×{_TILE} patches; each tile row carries its pixel bounds and
+    the edge tiles' pad amount (right/bottom overhang, summed per
+    axis). The audio sibling is mm_audio_chunk_plan; together they are
+    the fan-out work lists a multimodal featurizer consumes.
+
+    Determinism: the oracle recomputes dimensions in closed form from
+    doc_id; any header/offset decode bug is a hash mismatch; all
+    arithmetic is integer.
+
+    Scale: blobs stay on executors (mapInPandas, zero shuffle); the
+    grid explode is a bounded map-side sequence product — output is
+    Σ ceil(w/t)·ceil(h/t) rows, no aggregation."""
+    docs = (
+        load(spark, sf_dir, "documents")
+        .select("doc_id")
+        .filter(F.col("doc_id") % 2 == 0)
+    )
+    dims = docs.mapInPandas(
+        make_ppm_dims_stage(), schema="doc_id long, width long, height long"
+    )
+    nx = F.expr(f"(width + {_TILE - 1}) div {_TILE}")
+    ny = F.expr(f"(height + {_TILE - 1}) div {_TILE}")
+    grid = dims.select(
+        "doc_id",
+        "width",
+        "height",
+        nx.alias("nx"),
+        ny.alias("ny"),
+        F.explode(F.sequence(F.lit(0), nx - 1)).alias("tile_x"),
+    ).select(
+        "*", F.explode(F.sequence(F.lit(0), F.col("ny") - 1)).alias("tile_y")
+    )
+    pad = (
+        (F.col("nx") * _TILE - F.col("width"))
+        * (F.col("tile_x") == F.col("nx") - 1).cast("long")
+        + (F.col("ny") * _TILE - F.col("height"))
+        * (F.col("tile_y") == F.col("ny") - 1).cast("long")
+    )
+    return grid.select(
+        "doc_id",
+        "width",
+        "height",
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        (F.col("tile_x") * _TILE).cast("long").alias("x0"),
+        (F.col("tile_y") * _TILE).cast("long").alias("y0"),
+        F.least(F.col("width"), (F.col("tile_x") + 1) * _TILE)
+        .cast("long")
+        .alias("x1"),
+        F.least(F.col("height"), (F.col("tile_y") + 1) * _TILE)
+        .cast("long")
+        .alias("y1"),
+        pad.cast("long").alias("pad_px_axes"),
+    ).orderBy("doc_id", "tile_y", "tile_x")
+
+
+# --- multimodal frame sampling ---------------------------------------------
+
+_FRAME_STRIDE = 8
+
+
+def make_frame_sampler(stride: int):
+    """Stride sampler with the real frame-sampling operator's shape:
+    Arrow batches of (doc_id, kind, payload) in, per-item sampled-frame
+    stats out. A real video path would seek key frames here; the
+    deterministic stand-in takes every ``stride``-th codepoint so the
+    DuckDB oracle can reproduce it exactly. Nested closure on purpose —
+    cloudpickle ships it by value, executors never import this module."""
+
+    def sample_frames(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        import pandas as _pd
+
+        for pdf in batches:
+            texts = pdf["payload"].map(lambda b: b.decode("utf-8"))
+            frames = texts.map(lambda s: s[::stride])
+            yield _pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "kind": pdf["kind"],
+                    "n_frames": frames.map(len).astype("int32"),
+                    "frame_cp_sum": frames.map(
+                        lambda s: sum(map(ord, s))
+                    ).astype("int64"),
+                }
+            )
+
+    return sample_frames
+
+
+@query(
+    "mm_frame_sample",
+    oracle=f"""
+    SELECT doc_id,
+           ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
+           CAST((length(text) + {_FRAME_STRIDE - 1}) // {_FRAME_STRIDE}
+                AS INT) AS n_frames,
+           CAST(COALESCE(list_aggregate(
+                 list_transform(range((length(text) + {_FRAME_STRIDE - 1})
+                                      // {_FRAME_STRIDE}),
+                   i -> ascii(substr(text, i * {_FRAME_STRIDE} + 1, 1))),
+                 'sum'), 0) AS BIGINT) AS frame_cp_sum
+    FROM documents
+    ORDER BY doc_id
+    """,
+)
+def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame sampling over multimodal payloads: every {_FRAME_STRIDE}-th
+    unit of each blob via Arrow-batched ``mapInPandas`` — the decode/
+    sample/extract plumbing of a video pipeline with a deterministic
+    stand-in sampler (real codecs aren't in this container; the Spark
+    side — schema, batching, partition mapping — is the production
+    shape)."""
+    mf = media_frame(spark, sf_dir).select("doc_id", "kind", "payload")
+    return mf.mapInPandas(
+        make_frame_sampler(_FRAME_STRIDE),
+        schema="doc_id long, kind string, n_frames int, frame_cp_sum long",
     ).orderBy("doc_id")

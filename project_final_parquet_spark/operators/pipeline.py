@@ -547,11 +547,11 @@ def ivm_merge_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _e2e_oracle() -> str:
-    from .dedup import _minhash_pairs_sql
+    from .dedup import minhash_pairs_sql
 
     return f"""
     WITH RECURSIVE pairs AS (
-      SELECT doc_a, doc_b FROM ({_minhash_pairs_sql()}) p
+      SELECT doc_a, doc_b FROM ({minhash_pairs_sql()}) p
     ),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM pairs
@@ -618,15 +618,15 @@ def pipeline_e2e_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     end in one lazy job (iterative CC executes at construction, per the
     registry contract)."""
     from .dedup import (
-        _minhash_pairs_materialized,
         connected_components_converged,
+        minhash_pairs_materialized,
     )
 
     docs = load(spark, sf_dir, "documents")
 
     # sig-checkpointed pair materialization (optimization r13 — the
     # shingle→minhash tree is evaluated once, not three times)
-    pairs = _minhash_pairs_materialized(spark, sf_dir)
+    pairs = minhash_pairs_materialized(spark, sf_dir)
     edges = pairs.union(
         pairs.select(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")

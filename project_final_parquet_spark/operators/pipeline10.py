@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..registry import DSUM_SQL, dsum, query
+from ..registry import DAY_US, DSUM_SQL, EPOCH_US_SQL, HOUR_US, dsum, query
 from ..tables import load
-from .pipeline5 import _CHURN_WINDOW_DAYS, _DAY_US, _EPOCH_US
+from .pipeline5 import CHURN_WINDOW_DAYS
 
 # lead-lag sweep for the daily view→purchase cross-correlation
 _XCORR_MAX_LAG = 7
@@ -45,14 +45,14 @@ _FUNNEL_PCTS = [25, 50, 75, 90]
     oracle=f"""
     WITH u AS (
       SELECT o_custkey,
-             MIN(epoch_us(o_orderdate) // {_DAY_US}) AS f,
-             MAX(epoch_us(o_orderdate) // {_DAY_US}) AS l
+             MIN(epoch_us(o_orderdate) // {DAY_US}) AS f,
+             MAX(epoch_us(o_orderdate) // {DAY_US}) AS l
       FROM orders GROUP BY o_custkey
     ),
     obs AS (SELECT MAX(l) AS end_day FROM u),
     lt AS (
       SELECT (l - f) // 7 AS dur,
-             (l < end_day - {_CHURN_WINDOW_DAYS - 1}) AS churned
+             (l < end_day - {CHURN_WINDOW_DAYS - 1}) AS churned
       FROM u CROSS JOIN obs
     ),
     g AS (
@@ -113,7 +113,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fold all run single-partition over that bounded frame by
     design — the same bounded-frame argument as events_churn_hazard."""
     ev = load(spark, sf_dir, "orders")
-    day = f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}"
+    day = f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
     u = (
         ev.select("o_custkey", F.expr(day).alias("day"))
         .groupBy("o_custkey")
@@ -122,7 +122,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = u.agg(F.max("l").alias("end_day"))
     lt = u.crossJoin(F.broadcast(obs)).select(
         F.expr("(l - f) div 7").alias("dur"),
-        (F.col("l") < F.col("end_day") - (_CHURN_WINDOW_DAYS - 1)).alias(
+        (F.col("l") < F.col("end_day") - (CHURN_WINDOW_DAYS - 1)).alias(
             "churned"
         ),
     )
@@ -178,7 +178,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_cross_correlation",
     oracle=f"""
     WITH e AS (
-      SELECT epoch_us(ts) // {_DAY_US} AS day, event_type FROM events
+      SELECT epoch_us(ts) // {DAY_US} AS day, event_type FROM events
     ),
     b AS (SELECT MIN(day) AS mn, MAX(day) AS mx FROM e),
     spine AS (SELECT unnest(range(mn, mx + 1)) AS day FROM b),
@@ -242,7 +242,7 @@ def events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows here, ~3650 for a decade — never corpus-sized), so the
     join is a broadcast no matter the corpus size."""
     ev = load(spark, sf_dir, "events").select(
-        F.expr(f"ts_us div {_DAY_US}").alias("day"), "event_type"
+        F.expr(f"ts_us div {DAY_US}").alias("day"), "event_type"
     )
     b = ev.agg(F.min("day").alias("mn"), F.max("day").alias("mx"))
     spine = b.select(
@@ -360,8 +360,8 @@ def events_funnel_time_to_convert(
     click to first-qualifying-purchase, strictly ordered per user.
 
     Determinism: step times come from chained conditional window
-    minima over exact epoch-µs integers (the events_funnel recipe,
-    events_analytics.py:58); delays are integer subtraction;
+    minima over exact epoch-µs integers (the events_funnel recipe);
+    delays are integer subtraction;
     percentiles are rank-selected pass-through values (ceil(p·n) by
     integer arithmetic, user_id tiebreak — the events_percentiles_exact
     recipe); the mean is DSUM / n.
@@ -638,7 +638,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_new_vs_returning",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, epoch_us(ts) // {_DAY_US} AS day FROM events
+      SELECT user_id, epoch_us(ts) // {DAY_US} AS day FROM events
     ),
     ud AS (SELECT DISTINCT user_id, day FROM e),
     frst AS (SELECT user_id, MIN(day) AS f FROM ud GROUP BY user_id)
@@ -670,7 +670,7 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     state a production pipeline keeps as a keyed table — this query is
     its full-recompute spec."""
     e = load(spark, sf_dir, "events").select(
-        "user_id", F.expr(f"ts_us div {_DAY_US}").alias("day")
+        "user_id", F.expr(f"ts_us div {DAY_US}").alias("day")
     )
     ud = e.distinct()
     frst = ud.groupBy("user_id").agg(F.min("day").alias("f"))
@@ -783,7 +783,6 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HOUR_US = 3_600_000_000
 _BASE_WEEKS = 3  # baseline window for the seasonal-residual monitor
 
 
@@ -791,9 +790,9 @@ _BASE_WEEKS = 3  # baseline window for the seasonal-residual monitor
     "events_seasonal_residual_anomaly",
     oracle=f"""
     WITH e AS (
-      SELECT epoch_us(ts) // ({_DAY_US} * 7) AS week,
-             (epoch_us(ts) // {_DAY_US} + 3) % 7 AS dow,
-             (epoch_us(ts) // {_HOUR_US}) % 24 AS hour
+      SELECT epoch_us(ts) // ({DAY_US} * 7) AS week,
+             (epoch_us(ts) // {DAY_US} + 3) % 7 AS dow,
+             (epoch_us(ts) // {HOUR_US}) % 24 AS hour
       FROM events
     ),
     mn AS (SELECT MIN(week) AS w0 FROM e),
@@ -851,9 +850,9 @@ def events_seasonal_residual_anomaly(
     (weeks·168 rows at any event volume). The production form keeps
     the 168-cell baseline as a broadcast dimension updated weekly."""
     e = load(spark, sf_dir, "events").select(
-        F.expr(f"ts_us div ({_DAY_US} * 7)").alias("week"),
-        ((F.expr(f"ts_us div {_DAY_US}") + 3) % 7).alias("dow"),
-        (F.expr(f"ts_us div {_HOUR_US}") % 24).alias("hour"),
+        F.expr(f"ts_us div ({DAY_US} * 7)").alias("week"),
+        ((F.expr(f"ts_us div {DAY_US}") + 3) % 7).alias("dow"),
+        (F.expr(f"ts_us div {HOUR_US}") % 24).alias("hour"),
     )
     mn = e.agg(F.min("week").alias("w0"))
     cells = e.groupBy("week", "dow", "hour").agg(
@@ -893,7 +892,7 @@ def events_seasonal_residual_anomaly(
     )
 
 
-_ATTR_WINDOW_US = 7 * _DAY_US  # attribution lookback
+_ATTR_WINDOW_US = 7 * DAY_US  # attribution lookback
 
 
 @query(
@@ -1010,7 +1009,7 @@ _HOLT_BETA = "0.3"
     oracle=f"""
     WITH RECURSIVE d AS (
       SELECT day, x, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM (
-        SELECT epoch_us(ts) // {_DAY_US} AS day,
+        SELECT epoch_us(ts) // {DAY_US} AS day,
                CAST(COUNT(*) AS DOUBLE) AS x
         FROM events GROUP BY day
       )
@@ -1061,7 +1060,7 @@ def events_holt_linear_forecast(
     arithmetic."""
     d = (
         load(spark, sf_dir, "events")
-        .select(F.expr(f"ts_us div {_DAY_US}").alias("day"))
+        .select(F.expr(f"ts_us div {DAY_US}").alias("day"))
         .groupBy("day")
         .agg(F.count(F.lit(1)).cast("double").alias("x"))
     )
@@ -1288,7 +1287,7 @@ _TSPLIT_PCT = 80
     "sample_time_split_leakage",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, epoch_us(ts) // {_DAY_US} AS day FROM events
+      SELECT user_id, epoch_us(ts) // {DAY_US} AS day FROM events
     ),
     days AS (
       SELECT day, ROW_NUMBER() OVER (ORDER BY day) AS rn,
@@ -1340,7 +1339,7 @@ def sample_time_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with map-side distinct — nothing after the (user, split)
     dedup is corpus-sized."""
     e = load(spark, sf_dir, "events").select(
-        "user_id", F.expr(f"ts_us div {_DAY_US}").alias("day")
+        "user_id", F.expr(f"ts_us div {DAY_US}").alias("day")
     )
     days = (
         e.select("day")

@@ -14,19 +14,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..ckpt import checkpoint
-from ..registry import query, dsum, DSUM_SQL
+from ..registry import DAY_US, DSUM_SQL, HOUR_US, dsum, query
 from ..tables import load
 from .graph import copurchase_edges
-from .similarity import _DIM, _DOT_SQL, _NORM_SQL
+from .similarity import DIM, DOT_SQL, NORM_SQL
 from .vecmath import dot, norm
 from .vector_stats import PROBE_SCORED_CTES, probe_scores
 
 _N_QUERIES = 20  # retrieval-eval query set: vec_id < this
 
 _COS = (
-    f"{_DOT_SQL.format(dim=_DIM, a='q.qv', b='c.embedding')}"
-    f" / ({_NORM_SQL.format(dim=_DIM, a='q.qv')}"
-    f" * {_NORM_SQL.format(dim=_DIM, a='c.embedding')})"
+    f"{DOT_SQL.format(dim=DIM, a='q.qv', b='c.embedding')}"
+    f" / ({NORM_SQL.format(dim=DIM, a='q.qv')}"
+    f" * {NORM_SQL.format(dim=DIM, a='c.embedding')})"
 )
 
 # shared retrieval-eval CTEs: per-query rank of the first same-label
@@ -426,23 +426,20 @@ def text_ttr_length_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DAY_US = 86_400_000_000
-
-
 @query(
     "orders_repeat_purchase_curve",
     oracle=f"""
     WITH seq AS (
       SELECT o_custkey,
-             epoch_us(o_orderdate) // {_DAY_US} AS day,
+             epoch_us(o_orderdate) // {DAY_US} AS day,
              o_orderkey,
              ROW_NUMBER() OVER (
                PARTITION BY o_custkey
-               ORDER BY epoch_us(o_orderdate) // {_DAY_US}, o_orderkey
+               ORDER BY epoch_us(o_orderdate) // {DAY_US}, o_orderkey
              ) AS purchase_idx,
-             LAG(epoch_us(o_orderdate) // {_DAY_US}) OVER (
+             LAG(epoch_us(o_orderdate) // {DAY_US}) OVER (
                PARTITION BY o_custkey
-               ORDER BY epoch_us(o_orderdate) // {_DAY_US}, o_orderkey
+               ORDER BY epoch_us(o_orderdate) // {DAY_US}, o_orderkey
              ) AS prev_day
       FROM orders
     )
@@ -477,7 +474,7 @@ def orders_repeat_purchase_curve(
     # LTZ and an LTZ cast would route through the session timezone)
     day = F.expr(
         "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00',"
-        f" o_orderdate) div {_DAY_US}"
+        f" o_orderdate) div {DAY_US}"
     )
     w = W.partitionBy("o_custkey").orderBy("day", "o_orderkey")
     seq = (
@@ -791,9 +788,6 @@ def orders_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("ym", "priority")
 
 
-_HOUR_US = 3_600_000_000
-
-
 @query(
     "dq_uniqueness_audit",
     oracle="""
@@ -884,7 +878,7 @@ def dq_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_dau_wau_stickiness",
     oracle=f"""
     WITH du AS (
-      SELECT DISTINCT epoch_us(ts) // {_DAY_US} AS day, user_id
+      SELECT DISTINCT epoch_us(ts) // {DAY_US} AS day, user_id
       FROM events
     ),
     dau AS (
@@ -920,7 +914,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, never a range self-join; both counts combine map-side."""
     ev = load(spark, sf_dir, "events")
     du = ev.select(
-        F.expr(f"ts_us div {_DAY_US}").alias("day"),
+        F.expr(f"ts_us div {DAY_US}").alias("day"),
         "user_id",
     ).distinct()
     dau = du.groupBy("day").agg(
@@ -975,10 +969,10 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(w.w_hours AS INT) AS w_hours,
            CAST(COUNT(*) AS BIGINT) AS n_viewers,
            CAST(SUM(CASE WHEN j.t_click IS NOT NULL
-                    AND j.t_click <= j.t_view + w.w_hours * {_HOUR_US}
+                    AND j.t_click <= j.t_view + w.w_hours * {HOUR_US}
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_converted,
            CAST(SUM(CASE WHEN j.t_click IS NOT NULL
-                    AND j.t_click <= j.t_view + w.w_hours * {_HOUR_US}
+                    AND j.t_click <= j.t_view + w.w_hours * {HOUR_US}
                     THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
              AS conversion_rate
     FROM ws w CROSS JOIN joined j
@@ -1028,7 +1022,7 @@ def events_conversion_window_sensitivity(
         F.explode(F.array(F.lit(1), F.lit(6), F.lit(24))).alias("w_hours")
     )
     converted = F.col("t_click").isNotNull() & (
-        F.col("t_click") <= F.col("t_view") + F.col("w_hours") * _HOUR_US
+        F.col("t_click") <= F.col("t_view") + F.col("w_hours") * HOUR_US
     )
     return (
         joined.crossJoin(F.broadcast(ws))
@@ -1236,7 +1230,7 @@ _SLA_NUM = 4
     "events_error_rate_sla",
     oracle=f"""
     WITH hourly AS (
-      SELECT epoch_us(ts) // {_HOUR_US} AS hour_bucket,
+      SELECT epoch_us(ts) // {HOUR_US} AS hour_bucket,
              CAST(COUNT(*) AS BIGINT) AS n_events,
              CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_errors
@@ -1264,7 +1258,7 @@ def events_error_rate_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums only; top-24 is TakeOrderedAndProject."""
     ev = load(spark, sf_dir, "events")
     hourly = ev.groupBy(
-        F.expr(f"ts_us div {_HOUR_US}").alias("hour_bucket")
+        F.expr(f"ts_us div {HOUR_US}").alias("hour_bucket")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
@@ -1345,7 +1339,7 @@ def orders_seasonality_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH typed AS (
       SELECT event_type, value,
-             ((epoch_us(ts) // {_DAY_US}) + 4) % 7 AS dow
+             ((epoch_us(ts) // {DAY_US}) + 4) % 7 AS dow
       FROM events
     )
     SELECT event_type,
@@ -1379,7 +1373,7 @@ def events_weekday_weekend_lift(
     Scale: one (event_type) rollup, all conditional sums map-side
     combinable; |types| rows out."""
     ev = load(spark, sf_dir, "events")
-    dow = (F.expr(f"ts_us div {_DAY_US}") + 4) % 7
+    dow = (F.expr(f"ts_us div {DAY_US}") + 4) % 7
     weekend = dow.isin(0, 6)
     typed = ev.select("event_type", "value", weekend.alias("is_we"))
     return (

@@ -22,9 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..registry import DSUM_SQL, dsum, query
+from ..registry import DAY_US, DSUM_SQL, EPOCH_US_SQL, dsum, query
 from ..tables import load
-from .pipeline5 import _DAY_US, _EPOCH_US
 
 # U-shaped (position-based) attribution weights, written as literals so
 # both engines parse identical doubles: 40% first touch, 40% last touch,
@@ -32,14 +31,14 @@ from .pipeline5 import _DAY_US, _EPOCH_US
 _POS_FIRST = "0.4"
 _POS_LAST = "0.4"
 _POS_MID = "0.2"
-_ATTR_WINDOW_US = 7 * _DAY_US  # same lookback as the linear/last-touch pair
+_ATTR_WINDOW_US = 7 * DAY_US  # same lookback as the linear/last-touch pair
 
 
 @query(
     "events_growth_accounting",
     oracle=f"""
     WITH act AS (
-      SELECT DISTINCT user_id, epoch_us(ts) // {_DAY_US} AS day FROM events
+      SELECT DISTINCT user_id, epoch_us(ts) // {DAY_US} AS day FROM events
     ),
     mx AS (SELECT MAX(day) AS max_day FROM act),
     seq AS (
@@ -93,7 +92,7 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     act = (
         load(spark, sf_dir, "events")
-        .select("user_id", F.expr(f"ts_us div {_DAY_US}").alias("day"))
+        .select("user_id", F.expr(f"ts_us div {DAY_US}").alias("day"))
         .distinct()
     )
     mx = act.agg(F.max("day").alias("max_day"))
@@ -155,7 +154,7 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_concurrency_peak",
     oracle=f"""
     WITH span AS (
-      SELECT user_id, epoch_us(ts) // {_DAY_US} AS day,
+      SELECT user_id, epoch_us(ts) // {DAY_US} AS day,
              MIN(epoch_us(ts)) AS s, MAX(epoch_us(ts)) AS e
       FROM events GROUP BY user_id, day
     ),
@@ -205,7 +204,7 @@ def events_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval self-join (the naive concurrent-users query is O(n²))."""
     span = (
         load(spark, sf_dir, "events")
-        .groupBy("user_id", F.expr(f"ts_us div {_DAY_US}").alias("day"))
+        .groupBy("user_id", F.expr(f"ts_us div {DAY_US}").alias("day"))
         .agg(F.min("ts_us").alias("s"), F.max("ts_us").alias("e"))
     )
     delta = span.select(
@@ -239,7 +238,7 @@ def events_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_power_user_curve",
     oracle=f"""
     WITH act AS (
-      SELECT DISTINCT user_id, epoch_us(ts) // {_DAY_US} AS day FROM events
+      SELECT DISTINCT user_id, epoch_us(ts) // {DAY_US} AS day FROM events
     ),
     per_user AS (
       SELECT user_id, CAST(COUNT(*) AS BIGINT) AS active_days
@@ -272,7 +271,7 @@ def events_power_user_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny frame regardless of corpus size."""
     act = (
         load(spark, sf_dir, "events")
-        .select("user_id", F.expr(f"ts_us div {_DAY_US}").alias("day"))
+        .select("user_id", F.expr(f"ts_us div {DAY_US}").alias("day"))
         .distinct()
     )
     per_user = act.groupBy("user_id").agg(
@@ -391,7 +390,7 @@ def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- bloom prefilter for incremental dedup ---------------------------------
 # Bloom geometry: M bits (power of two), K Knuth multiplicative hashes.
-# The doc fingerprint is the shared md5-prefix BIGINT (dedup.py:151); it
+# The doc fingerprint is the shared md5-prefix BIGINT (dedup.py); it
 # is folded to < 2^31 before multiplying so fp*h stays under int64 in
 # BOTH engines (DuckDB errors on BIGINT overflow; Spark would wrap).
 _BLOOM_M = 4096
@@ -613,7 +612,7 @@ _MIG_TILES = 3  # spend terciles: 1 = top third, 3 = bottom third
     oracle=f"""
     WITH d AS (
       SELECT o_custkey,
-             epoch_us(o_orderdate) // {_DAY_US} AS day,
+             epoch_us(o_orderdate) // {DAY_US} AS day,
              CAST(o_totalprice AS DECIMAL(38,10)) AS price
       FROM orders
     ),
@@ -665,7 +664,7 @@ def orders_customer_migration_matrix(
     matrix frame is at most 16 rows."""
     d = load(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}").alias(
+        F.expr(f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}").alias(
             "day"
         ),
         F.col("o_totalprice").cast("decimal(38,10)").alias("price"),

@@ -19,10 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..registry import DSUM_SQL, dsum, query
+from ..registry import DAY_US, DSUM_SQL, EPOCH_US_SQL, dsum, query
 from ..tables import load
+from .similarity import DIM
 
-_DIM = 64
 _NEG_TOPK = 20
 
 
@@ -32,7 +32,7 @@ _NEG_TOPK = 20
     WITH flat AS (
       SELECT vec_id, i AS dim, CAST(embedding[i + 1] AS DOUBLE) AS v
       FROM embeddings
-      CROSS JOIN (SELECT unnest(range({_DIM})) AS i)
+      CROSS JOIN (SELECT unnest(range({DIM})) AS i)
     ),
     r AS (
       SELECT dim, v,
@@ -285,8 +285,6 @@ def profile_column_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SLA_DAYS = 100  # ship within 100 days of order date
-_DAY_US = 86_400_000_000
-_EPOCH_US = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
 
 
 @query(
@@ -295,7 +293,7 @@ _EPOCH_US = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col
     WITH d AS (
       SELECT o.o_orderpriority AS priority,
              (epoch_us(l.l_shipdate) - epoch_us(o.o_orderdate))
-               // {_DAY_US} AS delay_days,
+               // {DAY_US} AS delay_days,
              l.l_orderkey, l.l_linenumber
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     ),
@@ -343,11 +341,11 @@ def orders_ship_delay_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         F.col("o_orderpriority").alias("priority"),
     )
-    ship_us = _EPOCH_US.format(col="l_shipdate")
-    ord_us = _EPOCH_US.format(col="o_orderdate")
+    ship_us = EPOCH_US_SQL.format(col="l_shipdate")
+    ord_us = EPOCH_US_SQL.format(col="o_orderdate")
     d = li.join(o, "l_orderkey").select(
         "priority",
-        F.expr(f"({ship_us} - {ord_us}) div {_DAY_US}").alias("delay_days"),
+        F.expr(f"({ship_us} - {ord_us}) div {DAY_US}").alias("delay_days"),
     )
     hist = d.groupBy("priority", "delay_days").agg(
         F.count(F.lit(1)).alias("c")
@@ -463,7 +461,7 @@ _SLO_PCT = 1
     "events_error_budget_burn",
     oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(ts) // {86_400_000_000} AS day,
+      SELECT epoch_us(ts) // {DAY_US} AS day,
              CAST(COUNT(*) AS BIGINT) AS n_events,
              CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_errors
@@ -497,7 +495,7 @@ def events_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     events."""
     daily = (
         load(spark, sf_dir, "events")
-        .groupBy(F.expr(f"ts_us div {86_400_000_000}").alias("day"))
+        .groupBy(F.expr(f"ts_us div {DAY_US}").alias("day"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
@@ -533,12 +531,12 @@ def events_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orders_open_order_aging",
     oracle=f"""
     WITH mx AS (
-      SELECT MAX(epoch_us(o_orderdate)) // {86_400_000_000} AS end_day
+      SELECT MAX(epoch_us(o_orderdate)) // {DAY_US} AS end_day
       FROM orders
     ),
     aged AS (
       SELECT length(bin(
-               end_day - epoch_us(o_orderdate) // {86_400_000_000} + 1
+               end_day - epoch_us(o_orderdate) // {DAY_US} + 1
              )) AS age_bucket,
              CAST(o_totalprice AS DECIMAL(38,10)) AS price
       FROM orders CROSS JOIN mx
@@ -561,7 +559,7 @@ def orders_open_order_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus-end scalar is a 1-row broadcast; the rest is one
     map-side bucket expression + a ≤|buckets| rollup."""
     orders = load(spark, sf_dir, "orders")
-    day = f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}"
+    day = f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
     mx = orders.agg(F.expr(f"max({day})").alias("end_day"))
     aged = (
         orders.filter(F.col("o_orderstatus") == "O")

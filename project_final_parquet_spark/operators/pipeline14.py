@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..registry import query
+from ..registry import DAY_US, query
 from ..tables import load
 
 
@@ -398,9 +398,6 @@ def orders_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COV_BUCKETS = 16  # hash-range buckets: map-side, no global NTILE sort
-
-
 @query(
     "sample_coverage_curve",
     oracle="""
@@ -579,15 +576,12 @@ def dq_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DAY_US = 86_400_000_000
-
-
 @query(
     "events_gaps_and_islands",
     oracle=f"""
     WITH days AS (
       SELECT DISTINCT user_id,
-             epoch_us(ts) // {_DAY_US} AS day
+             epoch_us(ts) // {DAY_US} AS day
       FROM events
     ),
     grp AS (
@@ -622,7 +616,7 @@ def events_gaps_and_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pipeline11 convention the oracles share."""
     ev = load(spark, sf_dir, "events")
     days = ev.select(
-        "user_id", F.expr(f"ts_us div {_DAY_US}").alias("day")
+        "user_id", F.expr(f"ts_us div {DAY_US}").alias("day")
     ).distinct()
     grp = days.select(
         "user_id",
@@ -649,7 +643,7 @@ def events_gaps_and_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_local_peaks",
     oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(ts) // {_DAY_US} AS day,
+      SELECT epoch_us(ts) // {DAY_US} AS day,
              CAST(COUNT(*) AS BIGINT) AS n_events
       FROM events GROUP BY day
     ),
@@ -680,7 +674,7 @@ def events_local_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same day-frame discipline as events_changepoint_cusum."""
     ev = load(spark, sf_dir, "events")
     daily = (
-        ev.groupBy(F.expr(f"ts_us div {_DAY_US}").alias("day"))
+        ev.groupBy(F.expr(f"ts_us div {DAY_US}").alias("day"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
     )
     w = W.partitionBy().orderBy("day")
@@ -1367,7 +1361,6 @@ def events_type_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 @query(
     "orders_revenue_gini",
     oracle="""
@@ -1449,7 +1442,7 @@ def orders_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_dormancy_reactivation_lag",
     oracle=f"""
     WITH days AS (
-      SELECT DISTINCT user_id, epoch_us(ts) // {_DAY_US} AS day
+      SELECT DISTINCT user_id, epoch_us(ts) // {DAY_US} AS day
       FROM events
     ),
     gaps AS (
@@ -1483,7 +1476,7 @@ def events_dormancy_reactivation_lag(
     over day-grain rows, one ≤~log(max-gap)-key rollup."""
     ev = load(spark, sf_dir, "events")
     days = ev.select(
-        "user_id", F.expr(f"ts_us div {_DAY_US}").alias("day")
+        "user_id", F.expr(f"ts_us div {DAY_US}").alias("day")
     ).distinct()
     gaps = days.select(
         "user_id",
@@ -1688,7 +1681,7 @@ def orders_pareto_8020_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_value_drawdown",
     oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(ts) // {_DAY_US} AS day,
+      SELECT epoch_us(ts) // {DAY_US} AS day,
              CAST(CAST(SUM(CAST(value AS DECIMAL(38,10))) AS VARCHAR)
                   AS DOUBLE) AS v
       FROM events GROUP BY day
@@ -1723,7 +1716,7 @@ def events_value_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_local_peaks discipline; output is one row."""
     ev = load(spark, sf_dir, "events")
     daily = (
-        ev.groupBy(F.expr(f"ts_us div {_DAY_US}").alias("day"))
+        ev.groupBy(F.expr(f"ts_us div {DAY_US}").alias("day"))
         .agg(
             F.sum(F.col("value").cast("decimal(38,10)"))
             .cast("string")

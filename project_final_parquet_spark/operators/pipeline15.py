@@ -21,9 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..ckpt import checkpoint
 from ..registry import query
 from ..tables import load
-from .similarity import _DIM, _DOT_SQL, _NORM_SQL
+from .similarity import DIM, DOT_SQL, NORM_SQL
 from .vecmath import dot, norm
 from .vector_stats import PROBE_SCORED_CTES
 
@@ -41,9 +42,9 @@ _DISC = [int(1e9 / math.log2(r + 1)) for r in range(1, _NDCG_K + 1)]
 _IDCG_CUM = [sum(_DISC[: i + 1]) for i in range(_NDCG_K)]
 
 _COS_QC = (
-    f"{_DOT_SQL.format(dim=_DIM, a='q.qv', b='c.embedding')}"
-    f" / ({_NORM_SQL.format(dim=_DIM, a='q.qv')}"
-    f" * {_NORM_SQL.format(dim=_DIM, a='c.embedding')})"
+    f"{DOT_SQL.format(dim=DIM, a='q.qv', b='c.embedding')}"
+    f" / ({NORM_SQL.format(dim=DIM, a='q.qv')}"
+    f" * {NORM_SQL.format(dim=DIM, a='c.embedding')})"
 )
 
 _DISC_SQL = "[" + ", ".join(str(d) for d in _DISC) + "]"
@@ -548,12 +549,8 @@ def graph_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part")
     )
-    edges = (
-        orders.join(li, "ok")
-        .select("cust", "part")
-        .distinct()
-        .localCheckpoint()  # 4 consumers (see docstring); cluster: checkpoint()
-    )
+    # 4 consumers (see docstring)
+    edges = checkpoint(orders.join(li, "ok").select("cust", "part").distinct())
     a1 = edges.groupBy("part").agg(
         F.count(F.lit(1)).cast("long").alias("a")
     )

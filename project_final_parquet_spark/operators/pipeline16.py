@@ -11,7 +11,7 @@ labeling budget goes.
 Determinism conventions as everywhere: exact BIGINT counts and
 cross-multiplied ECDF gaps (no division until the final scalar),
 hash-derived randomness through the md5-prefix convention
-(dedup.py:199) with Poisson inverse-CDF thresholds precomputed as
+(dedup.py) with Poisson inverse-CDF thresholds precomputed as
 integer literals, decimal sums for doubles, total orderings, IEEE
 single-op divisions/sqrt only.
 """

@@ -44,40 +44,27 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..ckpt import checkpoint
-from ..registry import DSUM_SQL, dsum, query
+from ..registry import (
+    DAY_US,
+    DSUM_SQL,
+    EPOCH_US_SQL,
+    FSUM_SQL,
+    HOUR_US,
+    dsum,
+    fsum,
+    query,
+)
 from ..registry import OFOLD_SQL, ofold
 from ..tables import load
 
-_DAY_US = 86_400_000_000
-_HOUR_US = 3_600_000_000
-# TZ-free epoch micros for the non-events tables (pipeline13 precedent;
-# events ride the loader's ts_us companion instead)
-_EPOCH_US = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
 
-# Floor-scaled integer sums (pipeline8 convention) for COMPUTED doubles
-# whose magnitude scales with the corpus (chi² terms, basket products):
-# the decimal-sum convention re-quantizes through DECIMAL(38,10), which
-# diverges cross-engine once ulp(value) approaches the 1e-10 grid
-# (|value| ≳ 1e6 — the q75/Laspeyres lesson). floor(value·1e6) is exact
-# and identical in both engines, and the integer sum is order-free.
-# [0,1]-bounded computed terms (Hellinger √(p·q), TV |p−p'|, Simpson p²)
-# stay on the decimal convention: at |v| ≤ 1, ulp ≈ 2e-16 ≪ 1e-10, so
-# shortest-repr and exact-binary rounding agree except on values within
-# half an ulp of a grid midpoint — not reachable from these fixed op
-# sequences on this data, and magnitude-stable at any corpus size.
-_FSCALE = 1_000_000.0
-_FSUM_SQL = (
-    "(CAST(CAST(SUM(CAST(FLOOR(({expr}) * 1000000.0) "
-    "AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1000000.0)"
-)
-
-
-def _fsum(col):
-    return (
-        F.sum(F.floor(col * _FSCALE).cast("decimal(38,0)"))
-        .cast("double")
-        / _FSCALE
-    )
+# Corpus-scaled computed doubles (chi² terms, basket products) sum with
+# registry.fsum. [0,1]-bounded computed terms (Hellinger √(p·q), TV
+# |p−p'|, Simpson p²) stay on the decimal convention: at |v| ≤ 1,
+# ulp ≈ 2e-16 ≪ 1e-10, so shortest-repr and exact-binary rounding agree
+# except on values within half an ulp of a grid midpoint — not reachable
+# from these fixed op sequences on this data, and magnitude-stable at any
+# corpus size.
 
 
 # --- histogram-binned winsorized mean (scale twin) ---------------------------
@@ -362,7 +349,7 @@ events_mann_whitney_u.__doc__ = events_mann_whitney_u.__doc__.format(
     "events_wilcoxon_signed_rank",
     oracle=f"""
     WITH d AS (
-      SELECT epoch_us(ts) // {_DAY_US} AS day, user_id, value FROM events
+      SELECT epoch_us(ts) // {DAY_US} AS day, user_id, value FROM events
     ),
     d0 AS (SELECT MIN(day) AS d0 FROM d),
     halves AS (
@@ -439,7 +426,7 @@ def events_wilcoxon_signed_rank(
     aggs), one groupBy over the distinct-|diff| domain, one cumulative
     window over that domain (the rank-statistic price), 1-row out."""
     ev = load(spark, sf_dir, "events").select(
-        F.expr(f"ts_us div {_DAY_US}").alias("day"), "user_id", "value"
+        F.expr(f"ts_us div {DAY_US}").alias("day"), "user_id", "value"
     )
     d0 = ev.agg(F.min("day").alias("d0"))
     first = F.col("day") < F.col("d0") + 15
@@ -512,7 +499,7 @@ _TAU_VBIN = 50  # value-bucket width; buckets bounded by max(value)
     "events_kendall_tau_hour",
     oracle=f"""
     WITH cells AS (
-      SELECT CAST((epoch_us(ts) // {_HOUR_US}) % 24 AS BIGINT) AS x,
+      SELECT CAST((epoch_us(ts) // {HOUR_US}) % 24 AS BIGINT) AS x,
              CAST(FLOOR(value / {_TAU_VBIN}) AS BIGINT) AS y,
              CAST(COUNT(*) AS BIGINT) AS c
       FROM events GROUP BY 1, 2
@@ -574,7 +561,7 @@ def events_kendall_tau_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals are rollups of the same tiny frame. No row-level sort,
     no row-pair join — the trick that makes τ computable at 100 TB."""
     ev = load(spark, sf_dir, "events").select(
-        (F.expr(f"ts_us div {_HOUR_US}") % 24).alias("x"),
+        (F.expr(f"ts_us div {HOUR_US}") % 24).alias("x"),
         F.floor(F.col("value") / _TAU_VBIN).cast("long").alias("y"),
     )
     cells = ev.groupBy("x", "y").agg(
@@ -656,7 +643,7 @@ _SEN_BIN = 1000.0  # slope-bin width for the two-phase median selection
     "orders_theil_sen_trend",
     oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(o_orderdate) // {_DAY_US} AS d,
+      SELECT epoch_us(o_orderdate) // {DAY_US} AS d,
              {DSUM_SQL.format(expr="o_totalprice")} AS rev
       FROM orders GROUP BY 1
     ),
@@ -709,7 +696,7 @@ def orders_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation."""
     orders = load(spark, sf_dir, "orders").select(
         F.expr(
-            f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}"
+            f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
         ).alias("d"),
         "o_totalprice",
     )
@@ -926,7 +913,7 @@ text_hellinger_sources.__doc__ = text_hellinger_sources.__doc__.replace(
     oracle=f"""
     WITH cells AS (
       SELECT event_type AS x,
-             CAST((epoch_us(ts) // {_DAY_US} + 3) % 7 AS BIGINT) AS y,
+             CAST((epoch_us(ts) // {DAY_US} + 3) % 7 AS BIGINT) AS y,
              CAST(COUNT(*) AS BIGINT) AS o
       FROM events GROUP BY 1, 2
     ),
@@ -980,7 +967,7 @@ def dq_cramers_v_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-proportional work is the first aggregation."""
     ev = load(spark, sf_dir, "events").select(
         F.col("event_type").alias("x"),
-        ((F.expr(f"ts_us div {_DAY_US}") + 3) % 7).cast("long").alias("y"),
+        ((F.expr(f"ts_us div {DAY_US}") + 3) % 7).cast("long").alias("y"),
     )
     cells = ev.groupBy("x", "y").agg(
         F.count(F.lit(1)).cast("long").alias("o")
@@ -1028,7 +1015,7 @@ def dq_cramers_v_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_type_mix_tv_drift",
     oracle=f"""
     WITH cnts AS (
-      SELECT epoch_us(ts) // {_DAY_US} AS day, event_type,
+      SELECT epoch_us(ts) // {DAY_US} AS day, event_type,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM events GROUP BY 1, 2
     ),
@@ -1083,7 +1070,7 @@ def events_type_mix_tv_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     operate on that tiny frame (the per-type LAG partitions by type,
     no single-partition window)."""
     ev = load(spark, sf_dir, "events").select(
-        F.expr(f"ts_us div {_DAY_US}").alias("day"), "event_type"
+        F.expr(f"ts_us div {DAY_US}").alias("day"), "event_type"
     )
     cnts = ev.groupBy("day", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -1664,7 +1651,7 @@ def q76_nth_value_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         "o_totalprice",
-        F.expr(_EPOCH_US.format(col="o_orderdate")).alias("ts"),
+        F.expr(EPOCH_US_SQL.format(col="o_orderdate")).alias("ts"),
     )
     w = (
         W.partitionBy("o_custkey")
@@ -1714,7 +1701,8 @@ def q76_nth_value_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # === batch 4: price-index economics and column-completeness DQ ===============
 
-_PERIOD_US = 30 * _DAY_US  # 30-day periods: TZ-free integer bucketing
+_PERIOD_US = 30 * DAY_US  # 30-day periods: TZ-free integer bucketing
+
 
 # The basket sums aggregate PRODUCTS OF COMPUTED DOUBLES (unit price ×
 # base quantity); the decimal-sum convention is unsafe there (the q75
@@ -1741,8 +1729,8 @@ _PERIOD_US = 30 * _DAY_US  # 30-day periods: TZ-free integer bucketing
     )
     SELECT CAST(pp.period AS BIGINT) AS period,
            CAST(COUNT(*) AS BIGINT) AS n_parts_matched,
-           {_FSUM_SQL.format(expr="pp.price * base.qty0")}
-             / {_FSUM_SQL.format(expr="base.price0 * base.qty0")}
+           {FSUM_SQL.format(expr="pp.price * base.qty0")}
+             / {FSUM_SQL.format(expr="base.price0 * base.qty0")}
              AS laspeyres_index
     FROM pp JOIN base ON base.part = pp.part
     GROUP BY pp.period ORDER BY period
@@ -1776,7 +1764,7 @@ def orders_laspeyres_price_index(
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("part"),
         F.expr(
-            f"{_EPOCH_US.format(col='l_shipdate')} div {_PERIOD_US}"
+            f"{EPOCH_US_SQL.format(col='l_shipdate')} div {_PERIOD_US}"
         ).alias("period"),
         "l_extendedprice",
         "l_quantity",
@@ -1813,8 +1801,8 @@ def orders_laspeyres_price_index(
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_parts_matched"),
             (
-                _fsum(F.col("price") * F.col("qty0"))
-                / _fsum(F.col("price0") * F.col("qty0"))
+                fsum(F.col("price") * F.col("qty0"))
+                / fsum(F.col("price0") * F.col("qty0"))
             ).alias("laspeyres_index"),
         )
         .select(

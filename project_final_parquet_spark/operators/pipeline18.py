@@ -54,34 +54,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..ckpt import checkpoint
-from ..registry import DSUM_SQL, dsum, query
+from ..registry import (
+    DAY_US,
+    DSUM_SQL,
+    EPOCH_US_SQL,
+    FSUM_SQL,
+    dsum,
+    fsum,
+    query,
+)
 from ..tables import load
 
-_DAY_US = 86_400_000_000
-_PERIOD_US = 30 * _DAY_US  # Laspeyres-family 30-day periods
-# TZ-free epoch micros for non-events tables (pipeline13 precedent)
-_EPOCH_US = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
-
-# floor-scaled integer sum for corpus-scaled computed doubles
-# (pipeline17 module note: decimal re-quantization diverges cross-
-# engine at |v| ≳ 1e6; floor(v·1e6) is exact and identical everywhere)
-_FSCALE = 1_000_000.0
-_FSUM_SQL = (
-    "(CAST(CAST(SUM(CAST(FLOOR(({expr}) * 1000000.0) "
-    "AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1000000.0)"
-)
-
-
-def _fsum(col):
-    return (
-        F.sum(F.floor(col * _FSCALE).cast("decimal(38,0)"))
-        .cast("double")
-        / _FSCALE
-    )
+_PERIOD_US = 30 * DAY_US  # Laspeyres-family 30-day periods
 
 
 _DAILY_REV_SQL = f"""daily AS (
-      SELECT epoch_us(o_orderdate) // {_DAY_US} AS d,
+      SELECT epoch_us(o_orderdate) // {DAY_US} AS d,
              {DSUM_SQL.format(expr="o_totalprice")} AS y
       FROM orders GROUP BY 1
     )"""
@@ -93,7 +81,7 @@ def _daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy(
         F.expr(
-            f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}"
+            f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
         ).alias("d")
     ).agg(dsum(F.col("o_totalprice")).alias("y"))
 
@@ -469,7 +457,7 @@ def events_bowley_skewness(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_poisson_dispersion",
     oracle=f"""
     WITH cells AS (
-      SELECT event_type, epoch_us(ts) // {_DAY_US} AS day,
+      SELECT event_type, epoch_us(ts) // {DAY_US} AS day,
              CAST(COUNT(*) AS BIGINT) AS x
       FROM events GROUP BY 1, 2
     ),
@@ -513,7 +501,7 @@ def events_poisson_dispersion(
     cell frame, one |types|-key aggregate — row-proportional work is
     only the first pass."""
     ev = load(spark, sf_dir, "events").select(
-        "event_type", F.expr(f"ts_us div {_DAY_US}").alias("day")
+        "event_type", F.expr(f"ts_us div {DAY_US}").alias("day")
     )
     cells = ev.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).cast("long").alias("x")
@@ -559,11 +547,11 @@ def events_poisson_dispersion(
     idx AS (
       SELECT CAST(pp.period AS BIGINT) AS period,
              CAST(COUNT(*) AS BIGINT) AS n_parts_matched,
-             {_FSUM_SQL.format(expr="pp.price * base.qty0")}
-               / NULLIF({_FSUM_SQL.format(expr="base.price0 * base.qty0")}, 0)
+             {FSUM_SQL.format(expr="pp.price * base.qty0")}
+               / NULLIF({FSUM_SQL.format(expr="base.price0 * base.qty0")}, 0)
                AS laspeyres,
-             {_FSUM_SQL.format(expr="pp.price * pp.qty")}
-               / NULLIF({_FSUM_SQL.format(expr="base.price0 * pp.qty")}, 0)
+             {FSUM_SQL.format(expr="pp.price * pp.qty")}
+               / NULLIF({FSUM_SQL.format(expr="base.price0 * pp.qty")}, 0)
                AS paasche
       FROM pp JOIN base ON base.part = pp.part
       GROUP BY pp.period
@@ -600,7 +588,7 @@ def orders_paasche_fisher_index(
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("part"),
         F.expr(
-            f"{_EPOCH_US.format(col='l_shipdate')} div {_PERIOD_US}"
+            f"{EPOCH_US_SQL.format(col='l_shipdate')} div {_PERIOD_US}"
         ).alias("period"),
         "l_extendedprice",
         "l_quantity",
@@ -632,12 +620,12 @@ def orders_paasche_fisher_index(
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_parts_matched"),
             F.try_divide(
-                _fsum(F.col("price") * F.col("qty0")),
-                _fsum(F.col("price0") * F.col("qty0")),
+                fsum(F.col("price") * F.col("qty0")),
+                fsum(F.col("price0") * F.col("qty0")),
             ).alias("laspeyres"),
             F.try_divide(
-                _fsum(F.col("price") * F.col("qty")),
-                _fsum(F.col("price0") * F.col("qty")),
+                fsum(F.col("price") * F.col("qty")),
+                fsum(F.col("price0") * F.col("qty")),
             ).alias("paasche"),
         )
     )

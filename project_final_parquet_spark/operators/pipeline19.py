@@ -73,29 +73,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..ckpt import checkpoint
-from ..registry import DSUM_SQL, dsum, query
-from ..tables import load
-
-_DAY_US = 86_400_000_000
-_HOUR_US = 3_600_000_000
-# TZ-free epoch micros for non-events tables (pipeline13 precedent)
-_EPOCH_US = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
-
-# floor-scaled integer sum for corpus-scaled computed doubles
-# (pipeline17 module note: decimal re-quantization diverges cross-
-# engine at |v| ≳ 1e6; floor(v·1e6) is exact and identical everywhere)
-_FSCALE = 1_000_000.0
-_FSUM_SQL = (
-    "(CAST(CAST(SUM(CAST(FLOOR(({expr}) * 1000000.0) "
-    "AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1000000.0)"
+from ..registry import (
+    DAY_US,
+    DSUM_SQL,
+    EPOCH_US_SQL,
+    HOUR_US,
+    dsum,
+    fsum,
+    query,
 )
-
-
-def _fsum(col):
-    return (
-        F.sum(F.floor(col * _FSCALE).cast("decimal(38,0)")).cast("double")
-        / _FSCALE
-    )
+from ..tables import load
 
 
 # ordered sequential fold over a bounded key domain — the shared
@@ -105,7 +92,7 @@ from ..registry import ofold as _ofold  # noqa: E402
 
 
 _DAILY_REV_SQL = f"""daily AS (
-      SELECT epoch_us(o_orderdate) // {_DAY_US} AS d,
+      SELECT epoch_us(o_orderdate) // {DAY_US} AS d,
              {DSUM_SQL.format(expr="o_totalprice")} AS y
       FROM orders GROUP BY 1
     )"""
@@ -118,7 +105,7 @@ def _daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy(
         F.expr(
-            f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}"
+            f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
         ).alias("d")
     ).agg(dsum(F.col("o_totalprice")).alias("y"))
 
@@ -290,7 +277,7 @@ def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_friedman_dow",
     oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(ts) // {_DAY_US} AS d,
+      SELECT epoch_us(ts) // {DAY_US} AS d,
              CAST(COUNT(*) AS BIGINT) AS c
       FROM events GROUP BY 1
     ),
@@ -358,7 +345,7 @@ def events_friedman_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks, and devs all live on the (week × 7) calendar domain."""
     daily = (
         load(spark, sf_dir, "events")
-        .groupBy(F.expr(f"ts_us div {_DAY_US}").alias("d"))
+        .groupBy(F.expr(f"ts_us div {DAY_US}").alias("d"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     # d ≥ 0 for the whole corpus epoch, so integer div and % agree
@@ -419,7 +406,7 @@ _CA_POS = "error"  # the monitored outcome class
     "events_cochran_armitage_hour",
     oracle=f"""
     WITH hourly AS (
-      SELECT CAST((epoch_us(ts) // {_HOUR_US}) % 24 AS BIGINT) AS h,
+      SELECT CAST((epoch_us(ts) // {HOUR_US}) % 24 AS BIGINT) AS h,
              CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CASE WHEN event_type = '{_CA_POS}' THEN 1 ELSE 0 END)
                   AS BIGINT) AS r
@@ -473,7 +460,7 @@ def events_cochran_armitage_hour(
     hourly = (
         load(spark, sf_dir, "events")
         .select(
-            (F.expr(f"ts_us div {_HOUR_US}") % 24).alias("h"),
+            (F.expr(f"ts_us div {HOUR_US}") % 24).alias("h"),
             F.when(F.col("event_type") == _CA_POS, 1)
             .otherwise(0)
             .alias("pos"),
@@ -754,8 +741,8 @@ def events_levene_brown_forsythe(
     )
     per_g = z.groupBy("g").agg(
         F.count(F.lit(1)).cast("long").alias("ng"),
-        _fsum(F.col("z")).alias("sz"),
-        _fsum(F.col("z") * F.col("z")).alias("sz2"),
+        fsum(F.col("z")).alias("sz"),
+        fsum(F.col("z") * F.col("z")).alias("sz2"),
     )
     tsum = per_g.agg(
         _ofold(
@@ -769,8 +756,8 @@ def events_levene_brown_forsythe(
     ).crossJoin(
         F.broadcast(
             z.agg(
-                _fsum(F.col("z")).alias("s_tot"),
-                _fsum(F.col("z") * F.col("z")).alias("q_tot"),
+                fsum(F.col("z")).alias("s_tot"),
+                fsum(F.col("z") * F.col("z")).alias("q_tot"),
             )
         )
     )
@@ -920,7 +907,7 @@ _LB_LAGS = 7  # weekly horizon: lags 1..7 of the daily series
     "events_ljung_box",
     oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(ts) // {_DAY_US} AS d,
+      SELECT epoch_us(ts) // {DAY_US} AS d,
              CAST(COUNT(*) AS BIGINT) AS c
       FROM events GROUP BY 1
     ),
@@ -983,7 +970,7 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     Nothing row-scale after the first groupBy."""
     daily = (
         load(spark, sf_dir, "events")
-        .groupBy(F.expr(f"ts_us div {_DAY_US}").alias("d"))
+        .groupBy(F.expr(f"ts_us div {DAY_US}").alias("d"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     nn = daily.agg(

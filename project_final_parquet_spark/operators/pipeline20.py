@@ -40,16 +40,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..ckpt import checkpoint
-from ..registry import DSUM_SQL, OFOLD_SQL, dsum, ofold, query
+from ..registry import (
+    DAY_US,
+    DSUM_SQL,
+    EPOCH_US_SQL,
+    OFOLD_SQL,
+    dsum,
+    ofold,
+    query,
+)
 from ..tables import load
 
-_DAY_US = 86_400_000_000
-_EPOCH_US = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
 
 _MWU_A, _MWU_B = "click", "purchase"  # the pipeline17 MWU group pair
 
 _DAILY_REV_SQL = f"""daily AS (
-      SELECT epoch_us(o_orderdate) // {_DAY_US} AS d,
+      SELECT epoch_us(o_orderdate) // {DAY_US} AS d,
              {DSUM_SQL.format(expr="o_totalprice")} AS y
       FROM orders GROUP BY 1
     )"""
@@ -59,7 +65,7 @@ def _daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy(
         F.expr(
-            f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}"
+            f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
         ).alias("d")
     ).agg(dsum(F.col("o_totalprice")).alias("y"))
 

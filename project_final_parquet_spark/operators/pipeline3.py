@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import DSUM_SQL, query
+from ..registry import DAY_US, DSUM_SQL, EPOCH_US_SQL, query
 from ..tables import load
 
 # --- temperature-scaled language/source mixing -----------------------------
@@ -366,7 +366,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- sub-document (chunk-level) dedup --------------------------------------
 
-_CHUNK_TOK = 16  # tokens per chunk (fixed windows, C4-style granularity)
+CHUNK_TOK = 16  # tokens per chunk (fixed windows, C4-style granularity)
 _CHUNK_TOPK = 20
 
 
@@ -379,11 +379,11 @@ _CHUNK_TOPK = 20
     chunks AS (
       SELECT doc_id, i AS chunk_idx,
              md5(array_to_string(
-               list_slice(toks, i * {_CHUNK_TOK} + 1,
-                          (i + 1) * {_CHUNK_TOK}), ' ')) AS chunk_hash
+               list_slice(toks, i * {CHUNK_TOK} + 1,
+                          (i + 1) * {CHUNK_TOK}), ' ')) AS chunk_hash
       FROM tok
       CROSS JOIN (SELECT unnest(range(16)) AS i) idx
-      WHERE len(toks) >= (i + 1) * {_CHUNK_TOK}
+      WHERE len(toks) >= (i + 1) * {CHUNK_TOK}
     ),
     dups AS (
       SELECT chunk_hash,
@@ -424,15 +424,15 @@ def text_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                         " ",
                         F.slice(
                             F.col("toks"),
-                            i * _CHUNK_TOK + 1,
-                            _CHUNK_TOK,
+                            i * CHUNK_TOK + 1,
+                            CHUNK_TOK,
                         ),
                     ),
                 )
             ).alias("chunk_idx", "chunk_text"),
         )
         .filter(
-            F.size(F.split(F.col("chunk_text"), " ")) == _CHUNK_TOK
+            F.size(F.split(F.col("chunk_text"), " ")) == CHUNK_TOK
         )
         .select(
             "doc_id", "chunk_idx", F.md5("chunk_text").alias("chunk_hash")
@@ -455,24 +455,19 @@ def text_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- order backlog timeseries (interval event-ification) -------------------
 
-_BL_DAY_US = 86_400_000_000
-_BL_EPOCH_US = (
-    "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
-)
-
 
 @query(
     "orders_backlog_timeseries",
     oracle=f"""
     WITH opened AS (
-      SELECT epoch_us(o_orderdate) // {_BL_DAY_US} AS day,
+      SELECT epoch_us(o_orderdate) // {DAY_US} AS day,
              CAST(COUNT(*) AS BIGINT) AS n_opened
       FROM orders GROUP BY day
     ),
     closed AS (
       SELECT day, CAST(COUNT(*) AS BIGINT) AS n_closed FROM (
         SELECT l_orderkey,
-               MAX(epoch_us(l_shipdate)) // {_BL_DAY_US} AS day
+               MAX(epoch_us(l_shipdate)) // {DAY_US} AS day
         FROM lineitem GROUP BY l_orderkey
       ) t GROUP BY day
     ),
@@ -506,9 +501,9 @@ def orders_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     o_day = F.expr(
-        f"{_BL_EPOCH_US.format(col='o_orderdate')} div {_BL_DAY_US}"
+        f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
     )
-    s_us = F.expr(_BL_EPOCH_US.format(col="l_shipdate"))
+    s_us = F.expr(EPOCH_US_SQL.format(col="l_shipdate"))
     opened = orders.groupBy(o_day.alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("n_opened")
     )
@@ -516,7 +511,7 @@ def orders_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_orderkey")
         .agg(F.max(s_us).alias("max_ship_us"))
         .select(
-            F.expr(f"max_ship_us div {_BL_DAY_US}").alias("day")
+            F.expr(f"max_ship_us div {DAY_US}").alias("day")
         )
         .groupBy("day")
         .agg(F.count(F.lit(1)).cast("long").alias("n_closed"))

@@ -31,9 +31,9 @@ from ..tables import load
 # doc_id % 5 residue would correlate with the corpus's id-derived
 # source labels). Fingerprint = first-5-token prefix, the template-
 # cluster fingerprint dedup_fingerprint_prefix established.
-_INC_HASH = 2_654_435_761
-_INC_MOD = 65_536
-_INC_THRESH = 13_107  # floor(0.2 * 2^16)
+INC_HASH = 2_654_435_761
+INC_MOD = 65_536
+INC_THRESH = 13_107  # floor(0.2 * 2^16)
 
 _INC_FP_SQL = """concat_ws(' ', string_split(text,' ')[1],
       string_split(text,' ')[2], string_split(text,' ')[3],
@@ -45,8 +45,8 @@ _INC_FP_SQL = """concat_ws(' ', string_split(text,' ')[1],
     oracle=f"""
     WITH t AS (
       SELECT doc_id, source, {_INC_FP_SQL} AS fp,
-             ((doc_id % {_INC_MOD}) * {_INC_HASH}) % {_INC_MOD}
-               < {_INC_THRESH} AS is_batch
+             ((doc_id % {INC_MOD}) * {INC_HASH}) % {INC_MOD}
+               < {INC_THRESH} AS is_batch
       FROM documents
     ),
     batch AS (
@@ -93,8 +93,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     fp = F.concat_ws(" ", F.slice(F.split(F.col("text"), " "), 1, 5))
     is_batch = (
-        (F.col("doc_id") % _INC_MOD) * F.lit(_INC_HASH)
-    ) % F.lit(_INC_MOD) < F.lit(_INC_THRESH)
+        (F.col("doc_id") % INC_MOD) * F.lit(INC_HASH)
+    ) % F.lit(INC_MOD) < F.lit(INC_THRESH)
     t = docs.select(
         "doc_id", "source", fp.alias("fp"), is_batch.alias("is_batch")
     )
@@ -316,8 +316,8 @@ def sample_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT lang,
-             ((doc_id % {_INC_MOD}) * {_INC_HASH}) % {_INC_MOD}
-               < {_INC_THRESH} AS is_batch
+             ((doc_id % {INC_MOD}) * {INC_HASH}) % {INC_MOD}
+               < {INC_THRESH} AS is_batch
       FROM documents
     ),
     per AS (
@@ -360,8 +360,8 @@ def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     is_batch = (
-        (F.col("doc_id") % _INC_MOD) * F.lit(_INC_HASH)
-    ) % F.lit(_INC_MOD) < F.lit(_INC_THRESH)
+        (F.col("doc_id") % INC_MOD) * F.lit(INC_HASH)
+    ) % F.lit(INC_MOD) < F.lit(INC_THRESH)
     per = docs.groupBy("lang").agg(
         F.sum(F.when(is_batch, 0).otherwise(1)).cast("long").alias("n_hist"),
         F.sum(F.when(is_batch, 1).otherwise(0)).cast("long").alias("n_batch"),

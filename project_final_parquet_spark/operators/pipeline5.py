@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..ckpt import checkpoint
+from ..registry import DAY_US, EPOCH_US_SQL, query
 from ..tables import load
 
 # --- referential integrity audit --------------------------------------------
@@ -107,11 +108,7 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- churn hazard life table -------------------------------------------------
 
-_DAY_US = 86_400_000_000
-_CHURN_WINDOW_DAYS = 90  # last order within 90 days of corpus end = censored
-# NTZ-safe epoch microseconds (no LTZ round-trip — session TZ unknown),
-# the pipeline3 orders-day recipe.
-_EPOCH_US = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
+CHURN_WINDOW_DAYS = 90  # last order within 90 days of corpus end = censored
 
 
 @query(
@@ -119,14 +116,14 @@ _EPOCH_US = "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col
     oracle=f"""
     WITH u AS (
       SELECT o_custkey,
-             MIN(epoch_us(o_orderdate) // {_DAY_US}) AS f,
-             MAX(epoch_us(o_orderdate) // {_DAY_US}) AS l
+             MIN(epoch_us(o_orderdate) // {DAY_US}) AS f,
+             MAX(epoch_us(o_orderdate) // {DAY_US}) AS l
       FROM orders GROUP BY o_custkey
     ),
     obs AS (SELECT MAX(l) AS end_day FROM u),
     lt AS (
       SELECT (l - f) // 7 AS dur,
-             (l < end_day - {_CHURN_WINDOW_DAYS - 1}) AS churned
+             (l < end_day - {CHURN_WINDOW_DAYS - 1}) AS churned
       FROM u CROSS JOIN obs
     ),
     g AS (
@@ -172,7 +169,7 @@ def events_churn_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_rolling_distinct. The observation end is a broadcast
     1-row aggregate."""
     ev = load(spark, sf_dir, "orders")
-    day = f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}"
+    day = f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
     u = (
         ev.select("o_custkey", F.expr(day).alias("day"))
         .groupBy("o_custkey")
@@ -181,7 +178,7 @@ def events_churn_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = u.agg(F.max("l").alias("end_day"))
     lt = u.crossJoin(F.broadcast(obs)).select(
         F.expr("(l - f) div 7").alias("dur"),  # integer div, never double
-        (F.col("l") < F.col("end_day") - (_CHURN_WINDOW_DAYS - 1)).alias(
+        (F.col("l") < F.col("end_day") - (CHURN_WINDOW_DAYS - 1)).alias(
             "churned"
         ),
     )
@@ -275,7 +272,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster jobs swap in checkpoint())."""
     from .graph import copurchase_edges
 
-    edges = copurchase_edges(spark, sf_dir).localCheckpoint()
+    edges = checkpoint(copurchase_edges(spark, sf_dir))
     stages = [edges]
     for _ in range(_KCORE_ROUNDS):
         prev = stages[-1]
@@ -286,11 +283,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= _KCORE_K).select("v")
-        nxt = (
+        nxt = checkpoint(
             prev.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint()
         )
         stages.append(nxt)
     rows = []

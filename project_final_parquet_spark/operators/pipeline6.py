@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ckpt import checkpoint
 from ..registry import DSUM_SQL, dsum, query
 from ..tables import load
 
@@ -102,7 +103,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine. At 100 TB the identical plan holds; only the DSUM
     precision ceiling would move the sums to DECIMAL(38,0) on raw
     integers."""
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint()
+    edges = checkpoint(_copurchase_edges(spark, sf_dir))
     deg = (
         edges.select(F.col("a").alias("v"))
         .unionAll(edges.select(F.col("b").alias("v")))

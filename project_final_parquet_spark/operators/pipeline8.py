@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..registry import DSUM_SQL, dsum, query
+from ..registry import DSUM_SQL, dsum, fsum, query
 from ..tables import load
 
 # Daily revenue series CTE (shared shape with the anomaly/forecast
@@ -52,20 +52,10 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sum of the floors is exact at any row count. Same convention as
 # vector_stats' floor-scaled BIGINT sums, widened to decimal.
 _FSCALE = "1000000.0"
-_FSUM_SQL = (
+FSUM_BARE_SQL = (
     "CAST(CAST(SUM(CAST(FLOOR(({expr}) * " + _FSCALE + ") "
     "AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / " + _FSCALE
 )
-
-
-def _fsum(col):
-    from pyspark.sql import functions as F
-
-    return (
-        F.sum(F.floor(col * float(_FSCALE)).cast("decimal(38,0)"))
-        .cast("double")
-        / float(_FSCALE)
-    )
 
 
 @query(
@@ -76,7 +66,7 @@ def _fsum(col):
       SELECT day % 7 AS dow,
              CAST(COUNT(*) AS BIGINT) AS n_g,
              {DSUM_SQL.format(expr="y")} AS s_g,
-             {_FSUM_SQL.format(expr="y * y")} AS ss_g
+             {FSUM_BARE_SQL.format(expr="y * y")} AS ss_g
       FROM daily GROUP BY 1
     ),
     tot AS (
@@ -84,7 +74,7 @@ def _fsum(col):
              CAST(COUNT(*) AS BIGINT) AS k,
              {DSUM_SQL.format(expr="s_g")} AS s,
              {DSUM_SQL.format(expr="ss_g")} AS ss,
-             {_FSUM_SQL.format(expr="(s_g / n_g) * s_g")} AS sb_raw
+             {FSUM_BARE_SQL.format(expr="(s_g / n_g) * s_g")} AS sb_raw
       FROM g
     )
     SELECT n AS n_days, k AS k_groups,
@@ -114,14 +104,14 @@ def events_anova_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = daily.groupBy((F.col("day") % 7).alias("dow")).agg(
         F.count(F.lit(1)).cast("long").alias("n_g"),
         dsum(F.col("y")).alias("s_g"),
-        _fsum(F.col("y") * F.col("y")).alias("ss_g"),
+        fsum(F.col("y") * F.col("y")).alias("ss_g"),
     )
     tot = g.agg(
         F.sum("n_g").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("k"),
         dsum(F.col("s_g")).alias("s"),
         dsum(F.col("ss_g")).alias("ss"),
-        _fsum((F.col("s_g") / F.col("n_g")) * F.col("s_g")).alias(
+        fsum((F.col("s_g") / F.col("n_g")) * F.col("s_g")).alias(
             "sb_raw"
         ),
     )
@@ -285,14 +275,14 @@ _ACF_LAGS = [1, 2, 3]
       FROM daily
     ),
     den AS (
-      SELECT {_FSUM_SQL.format(expr="(y - s / n) * (y - s / n)")} AS d0
+      SELECT {FSUM_BARE_SQL.format(expr="(y - s / n) * (y - s / n)")} AS d0
       FROM daily CROSS JOIN mu
     ),
     num AS (
       SELECT lg.lag,
              CAST(COUNT(CASE lg.lag WHEN 1 THEN y1 WHEN 2 THEN y2
                         ELSE y3 END) AS BIGINT) AS n_pairs,
-             {_FSUM_SQL.format(
+             {FSUM_BARE_SQL.format(
                  expr="CASE WHEN (CASE lg.lag WHEN 1 THEN y1 WHEN 2 "
                  "THEN y2 ELSE y3 END) IS NULL THEN 0.0 ELSE "
                  "(y - s / n) * ((CASE lg.lag WHEN 1 THEN y1 WHEN 2 "
@@ -337,7 +327,7 @@ def events_order_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mean = F.col("s") / F.col("n")
     den = daily.crossJoin(F.broadcast(mu)).agg(
-        _fsum((F.col("y") - mean) * (F.col("y") - mean)).alias("d0")
+        fsum((F.col("y") - mean) * (F.col("y") - mean)).alias("d0")
     )
     lags = spark.range(1).select(
         F.explode(F.array(*[F.lit(l) for l in _ACF_LAGS])).alias("lag")
@@ -353,7 +343,7 @@ def events_order_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lag")
         .agg(
             F.count(ylag).cast("long").alias("n_pairs"),
-            _fsum(
+            fsum(
                 F.when(ylag.isNull(), 0.0).otherwise(
                     (F.col("y") - mean) * (ylag - mean)
                 )

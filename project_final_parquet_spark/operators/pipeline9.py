@@ -23,18 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..registry import DSUM_SQL, dsum, query
+from ..registry import DAY_US, DSUM_SQL, EPOCH_US_SQL, dsum, fsum, query
 from ..tables import load
-from .pipeline4 import _INC_HASH, _INC_MOD, _INC_THRESH
-from .pipeline8 import _FSUM_SQL, _fsum
+from .pipeline4 import INC_HASH, INC_MOD, INC_THRESH
+from .pipeline8 import FSUM_BARE_SQL
 
-_DAY_US = 86_400_000_000
-_WEEK_US = 7 * _DAY_US
+_WEEK_US = 7 * DAY_US
 _GAP_US = 30 * 60 * 1_000_000  # 30-min session gap
-# NTZ-safe epoch microseconds (no LTZ round-trip), pipeline5's recipe
-_EPOCH_US = (
-    "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
-)
 
 
 @query(
@@ -78,7 +73,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the join is bounded by weeks², not users. Pure integer math
     throughout (epoch-week floor division, ppm floor division)."""
     ev = load(spark, sf_dir, "events")
-    week = F.expr(f"{_EPOCH_US.format(col='ts')} div {_WEEK_US}")
+    week = F.expr(f"{EPOCH_US_SQL.format(col='ts')} div {_WEEK_US}")
     uw = ev.select("user_id", week.alias("week")).distinct()
     coh = uw.groupBy("user_id").agg(F.min("week").alias("cohort"))
     sizes = coh.groupBy("cohort").agg(
@@ -164,7 +159,7 @@ def events_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.select(
         "user_id",
         "event_id",
-        F.expr(_EPOCH_US.format(col="ts")).alias("ts_us"),
+        F.expr(EPOCH_US_SQL.format(col="ts")).alias("ts_us"),
     )
     wo = W.partitionBy("user_id").orderBy("ts_us", "event_id")
     lagd = e.select(
@@ -213,7 +208,7 @@ def events_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH per AS (
       SELECT o_custkey,
-             MAX(epoch_us(o_orderdate) // {_DAY_US}) AS last_day,
+             MAX(epoch_us(o_orderdate) // {DAY_US}) AS last_day,
              CAST(COUNT(*) AS BIGINT) AS freq,
              {DSUM_SQL.format(expr="o_totalprice")} AS monetary
       FROM orders GROUP BY o_custkey
@@ -232,7 +227,7 @@ def events_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_customers,
            CAST(MIN(recency_days) AS BIGINT) AS min_recency_days,
            CAST(MAX(freq) AS BIGINT) AS max_freq,
-           {_FSUM_SQL.format(expr="monetary")} AS cell_revenue
+           {FSUM_BARE_SQL.format(expr="monetary")} AS cell_revenue
     FROM scored GROUP BY r_q, f_q, m_q
     ORDER BY r_q, f_q, m_q
     """,
@@ -255,7 +250,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     DSUM end-to-end; quartile boundaries are deterministic because
     every ORDER BY carries the unique custkey."""
     o = load(spark, sf_dir, "orders")
-    day = F.expr(f"{_EPOCH_US.format(col='o_orderdate')} div {_DAY_US}")
+    day = F.expr(f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}")
     per = o.groupBy("o_custkey").agg(
         F.max(day).alias("last_day"),
         F.count(F.lit(1)).cast("long").alias("freq"),
@@ -290,11 +285,11 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_customers"),
             F.min("recency_days").cast("long").alias("min_recency_days"),
             F.max("freq").cast("long").alias("max_freq"),
-            # _fsum, not dsum: monetary is a COMPUTED double, and
+            # fsum, not dsum: monetary is a COMPUTED double, and
             # CAST(x AS DECIMAL(38,10)) can land on a half-ulp where the
             # engines' rounding modes disagree (SCALE.md cross-engine
             # note; caught by the gate on this very query)
-            _fsum(F.col("monetary")).alias("cell_revenue"),
+            fsum(F.col("monetary")).alias("cell_revenue"),
         )
         .orderBy("r_q", "f_q", "m_q")
     )
@@ -315,11 +310,11 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     agg AS (
       SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_customers,
-             {_FSUM_SQL.format(expr="spend")} AS revenue
+             {FSUM_BARE_SQL.format(expr="spend")} AS revenue
       FROM ranked GROUP BY decile
     ),
     tot AS (
-      SELECT {_FSUM_SQL.format(expr="spend")} AS total_rev FROM ranked
+      SELECT {FSUM_BARE_SQL.format(expr="spend")} AS total_rev FROM ranked
     )
     SELECT decile, n_customers, revenue,
            revenue / total_rev AS revenue_share,
@@ -352,7 +347,7 @@ def profile_pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("decile"),
     )
-    # _fsum for the decile/total revenue (spend is a COMPUTED double —
+    # fsum for the decile/total revenue (spend is a COMPUTED double —
     # the decimal-cast tie hazard, SCALE.md cross-engine note); the
     # total is an exact broadcast singleton, NOT an unordered window sum
     # of doubles (whose accumulation order differs across engines). The
@@ -360,9 +355,9 @@ def profile_pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engines fold the same 10 doubles in the same sequence.
     agg = ranked.groupBy("decile").agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
-        _fsum(F.col("spend")).alias("revenue"),
+        fsum(F.col("spend")).alias("revenue"),
     )
-    tot = ranked.agg(_fsum(F.col("spend")).alias("total_rev"))
+    tot = ranked.agg(fsum(F.col("spend")).alias("total_rev"))
     w_cum = W.orderBy("decile").rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
@@ -461,8 +456,8 @@ def sample_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH flagged AS (
       SELECT *,
-             ((doc_id % {_INC_MOD}) * {_INC_HASH}) % {_INC_MOD}
-               < {_INC_THRESH} AS is_batch
+             ((doc_id % {INC_MOD}) * {INC_HASH}) % {INC_MOD}
+               < {INC_THRESH} AS is_batch
       FROM documents
     ),
     wide AS (
@@ -543,8 +538,8 @@ def dq_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine."""
     docs = load(spark, sf_dir, "documents")
     is_batch = (
-        (F.col("doc_id") % _INC_MOD) * F.lit(_INC_HASH)
-    ) % F.lit(_INC_MOD) < F.lit(_INC_THRESH)
+        (F.col("doc_id") % INC_MOD) * F.lit(INC_HASH)
+    ) % F.lit(INC_MOD) < F.lit(INC_THRESH)
     flagged = docs.withColumn("is_batch", is_batch)
     b = F.col("is_batch")
     empty = F.col("text").isNull() | (F.col("text") == "")

@@ -38,7 +38,7 @@ from pyspark.sql.window import Window as W
 from ..ckpt import checkpoint, release
 from ..registry import query
 from ..tables import load
-from .similarity import _DIM, _DOT_SQL, _NORM_SQL
+from .similarity import DIM, DOT_SQL, NORM_SQL
 from .text_index import BM25_BYDOC_SQL, BM25_SCORED_CTES, bm25_doc_scores
 from .vecmath import dot, norm
 
@@ -47,9 +47,9 @@ _RRF_N = 50  # per-retriever shortlist depth
 _RRF_OUT = 15
 
 _COS_SQL = (
-    f"{_DOT_SQL.format(dim=_DIM, a='e.embedding', b='q.qv')}"
-    f" / ({_NORM_SQL.format(dim=_DIM, a='e.embedding')}"
-    f" * {_NORM_SQL.format(dim=_DIM, a='q.qv')})"
+    f"{DOT_SQL.format(dim=DIM, a='e.embedding', b='q.qv')}"
+    f" / ({NORM_SQL.format(dim=DIM, a='e.embedding')}"
+    f" * {NORM_SQL.format(dim=DIM, a='q.qv')})"
 )
 
 
@@ -164,9 +164,9 @@ def _mmr_oracle() -> str:
     ties break on vec_id). Generated programmatically so the SQL stays
     in lockstep with the Spark loop."""
     pair_cos = (
-        f"{_DOT_SQL.format(dim=_DIM, a='a.embedding', b='b.embedding')}"
-        f" / ({_NORM_SQL.format(dim=_DIM, a='a.embedding')}"
-        f" * {_NORM_SQL.format(dim=_DIM, a='b.embedding')})"
+        f"{DOT_SQL.format(dim=DIM, a='a.embedding', b='b.embedding')}"
+        f" / ({NORM_SQL.format(dim=DIM, a='a.embedding')}"
+        f" * {NORM_SQL.format(dim=DIM, a='b.embedding')})"
     )
     ctes = [
         f"""q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
@@ -314,7 +314,7 @@ def _kc_dist_sql(m: str, p: str) -> str:
     """Cosine distance 1 - dot/(norm·norm) with PRE-HOISTED norms (nv
     carried on both frames — the same fold both engines run)."""
     return (
-        f"1 - {_DOT_SQL.format(dim=_DIM, a=f'{m}.embedding', b=f'{p}.embedding')}"
+        f"1 - {DOT_SQL.format(dim=DIM, a=f'{m}.embedding', b=f'{p}.embedding')}"
         f" / ({m}.nv * {p}.nv)"
     )
 
@@ -323,7 +323,7 @@ def _kcenter_oracle() -> str:
     """Greedy farthest-point unrolled as MATERIALIZED chained CTEs (the
     sim_mmr_diversify lesson: inlined, each round re-expands the whole
     prefix exponentially)."""
-    norm = _NORM_SQL.format(dim=_DIM, a="embedding")
+    norm = NORM_SQL.format(dim=DIM, a="embedding")
     ctes = [
         f"n AS MATERIALIZED (SELECT vec_id, embedding, {norm} AS nv"
         "  FROM embeddings)",
@@ -455,9 +455,9 @@ def _rag_oracle() -> str:
     keep embedding-less docs eligible for pick 1 via a NULL max-sim
     while Spark cannot pick them at all (round-7 ADVICE fix)."""
     pair_cos = (
-        f"{_DOT_SQL.format(dim=_DIM, a='a.embedding', b='b.embedding')}"
-        f" / ({_NORM_SQL.format(dim=_DIM, a='a.embedding')}"
-        f" * {_NORM_SQL.format(dim=_DIM, a='b.embedding')})"
+        f"{DOT_SQL.format(dim=DIM, a='a.embedding', b='b.embedding')}"
+        f" / ({NORM_SQL.format(dim=DIM, a='a.embedding')}"
+        f" * {NORM_SQL.format(dim=DIM, a='b.embedding')})"
     )
     ctes = [
         f"""{BM25_SCORED_CTES},

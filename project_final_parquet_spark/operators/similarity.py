@@ -1,40 +1,36 @@
-"""Embedding similarity-search operators over ``embeddings``
-(array<float> dim=64).
+"""Exact embedding similarity over ``embeddings`` (array<float>, dim 64):
+brute-force scoring, filtered and batched top-k, centroids, and the
+exact mining audits (reciprocal nearest neighbours, hard negatives,
+isotropy).
 
-Driver-mandated extension surface. Every dot and norm is
-``vecmath.dot``/``vecmath.norm``: the ``vec_dot`` JVM kernel, a left
-fold bit-identical to DuckDB's list folds, so the DuckDB oracles are
-exact, including cosine scores.
+Every dot and norm is ``vecmath.dot``/``vecmath.norm``: the ``vec_dot``
+JVM kernel, a left fold bit-identical to DuckDB's list folds
+(``DOT_SQL``/``NORM_SQL``), so the oracles match exactly, cosine scores
+included. Every top-k is totally ordered by (score, vec_id).
 
-Scale design (100 TB):
-- top-k vs a query vector: the query row is broadcast (crossJoin of a
-  1-row frame); scoring is map-side; TakeOrderedAndProject keeps only k
-  rows per partition before the final merge.
-- all-pairs near-dup: label blocking bounds the quadratic step (same
-  role as LSH banding in dedup).
-- ANN: random-hyperplane LSH — plane coefficients are precomputed
-  literals (deterministic md5-derived), bucketing is map-side, and only
-  bucket-mates of the query are scored. At 1000 executors this is the
-  path that avoids scoring 100 TB of vectors per query.
+Scale: the query row is broadcast (a cross join with a 1-row frame),
+scoring is map-side, and TakeOrderedAndProject keeps k rows per
+partition before the final merge. All-pairs scoring is bounded by label
+blocking; the bucketed and indexed forms are in ``ann.py`` and the
+compressed codes in ``quantization.py``.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import DSUM_SQL, dsum, query
 from ..tables import load
-from .vecmath import dot, double_array_lit, norm, with_pair_cosine
 
-_DIM = 64
+from .vecmath import dot, norm, with_pair_cosine
+
+DIM = 64
 
 
-_DOT_SQL = """list_aggregate(list_transform(range({dim}),
+DOT_SQL = """list_aggregate(list_transform(range({dim}),
     j -> CAST({a}[j+1] AS DOUBLE) * CAST({b}[j+1] AS DOUBLE)), 'sum')"""
-_NORM_SQL = """sqrt(list_aggregate(list_transform(range({dim}),
+NORM_SQL = """sqrt(list_aggregate(list_transform(range({dim}),
     j -> CAST({a}[j+1] AS DOUBLE) * CAST({a}[j+1] AS DOUBLE)), 'sum'))"""
 
 
@@ -43,9 +39,9 @@ _NORM_SQL = """sqrt(list_aggregate(list_transform(range({dim}),
     oracle=f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
     SELECT e.vec_id, e.label,
-           {_DOT_SQL.format(dim=_DIM, a='e.embedding', b='q.qv')}
-             / ({_NORM_SQL.format(dim=_DIM, a='e.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='q.qv')}) AS cosine
+           {DOT_SQL.format(dim=DIM, a='e.embedding', b='q.qv')}
+             / ({NORM_SQL.format(dim=DIM, a='e.embedding')}
+                * {NORM_SQL.format(dim=DIM, a='q.qv')}) AS cosine
     FROM embeddings e CROSS JOIN q
     WHERE e.vec_id <> 0
     ORDER BY cosine DESC, e.vec_id
@@ -77,14 +73,14 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_pairs_label_block",
     oracle=f"""
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
-           {_DOT_SQL.format(dim=_DIM, a='a.embedding', b='b.embedding')}
-             / ({_NORM_SQL.format(dim=_DIM, a='a.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='b.embedding')}) AS cosine
+           {DOT_SQL.format(dim=DIM, a='a.embedding', b='b.embedding')}
+             / ({NORM_SQL.format(dim=DIM, a='a.embedding')}
+                * {NORM_SQL.format(dim=DIM, a='b.embedding')}) AS cosine
     FROM embeddings a JOIN embeddings b
       ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_DOT_SQL.format(dim=_DIM, a='a.embedding', b='b.embedding')}
-             / ({_NORM_SQL.format(dim=_DIM, a='a.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='b.embedding')}) >= 0.35
+    WHERE {DOT_SQL.format(dim=DIM, a='a.embedding', b='b.embedding')}
+             / ({NORM_SQL.format(dim=DIM, a='a.embedding')}
+                * {NORM_SQL.format(dim=DIM, a='b.embedding')}) >= 0.35
     ORDER BY vec_a, vec_b
     """,
 )
@@ -99,7 +95,7 @@ def sim_pairs_label_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     data. It is retained as the oracle-diverse exact baseline that
     recall audits compare against; the serving path at corpus scale is
     the corpus-adaptive LSH tier (sim_pair_margin_adaptive /
-    sim_range_search_adaptive, similarity10 — ≤1.5× at 10×), whose
+    sim_range_search_adaptive in ann.py — ≤1.5× at 10×), whose
     bucket width tracks √n. Run this form only on eval-sized slices
     (the dedup_eval_recall sample-the-universe pattern).
 
@@ -133,299 +129,6 @@ def sim_pairs_label_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         with_pair_cosine(pairs, keep=["vec_a", "vec_b", "label"])
         .filter(F.col("cosine") >= 0.35)
-        .orderBy("vec_a", "vec_b")
-    )
-
-
-# --- random-hyperplane LSH ANN --------------------------------------------
-
-_N_PLANES = 6
-
-
-def _plane_coeff(p: int, j: int) -> float:
-    """Deterministic pseudo-random plane coefficient in [-1, 1] — md5-
-    derived so the Python-embedded literals are identical in the Spark
-    plan and the DuckDB oracle."""
-    h = int(hashlib.md5(f"{p}_{j}".encode()).hexdigest()[:15], 16)
-    return (h % 2001 - 1000) / 1000.0
-
-
-def _plane_coeff_ns(ns: str, p: int, j: int) -> float:
-    """Namespaced variant for additional independent LSH tables."""
-    h = int(hashlib.md5(f"{ns}_{p}_{j}".encode()).hexdigest()[:15], 16)
-    return (h % 2001 - 1000) / 1000.0
-
-
-_PLANES = [[_plane_coeff(p, j) for j in range(_DIM)] for p in range(_N_PLANES)]
-
-
-def _bucket_sql(vec: str) -> str:
-    terms = []
-    for p in range(_N_PLANES):
-        plane_lit = "[" + ",".join(repr(c) for c in _PLANES[p]) + "]"
-        dot_sql = _DOT_SQL.format(dim=_DIM, a=vec, b=plane_lit)
-        terms.append(f"(CASE WHEN {dot_sql} > 0 THEN {1 << p} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
-
-def _bucket_expr(vec):
-    return _bucket_expr_for(_PLANES, vec)
-
-
-@query(
-    "sim_ann_lsh",
-    oracle=f"""
-    WITH buck AS (
-      SELECT vec_id, label, embedding, {_bucket_sql('embedding')} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT embedding AS qv, bucket AS qb FROM buck WHERE vec_id = 0)
-    SELECT b.vec_id, b.label,
-           {_DOT_SQL.format(dim=_DIM, a='b.embedding', b='q.qv')}
-             / ({_NORM_SQL.format(dim=_DIM, a='b.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='q.qv')}) AS cosine
-    FROM buck b CROSS JOIN q
-    WHERE b.bucket = q.qb AND b.vec_id <> 0
-    ORDER BY cosine DESC, b.vec_id
-    LIMIT 10
-    """,
-)
-def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10: random-hyperplane LSH (6 planes → 64 buckets)
-    prunes to the query's bucket before exact cosine ranking. The
-    scale path: per-vector bucketing is map-side and the candidate set
-    shrinks ~2^planes-fold; recall tunes with plane count / multiprobe."""
-    emb = load(spark, sf_dir, "embeddings")
-    buck = emb.select(
-        "vec_id", "label", "embedding", _bucket_expr(F.col("embedding")).alias("bucket")
-    )
-    q = buck.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"),
-        F.col("bucket").alias("qb"),
-        norm(F.col("embedding")).alias("nq"),
-    )
-    cosine = dot(F.col("embedding"), F.col("qv")) / (
-        norm(F.col("embedding")) * F.col("nq")
-    )
-    return (
-        buck.crossJoin(F.broadcast(q))
-        .filter((F.col("bucket") == F.col("qb")) & (F.col("vec_id") != 0))
-        .select("vec_id", "label", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(10)
-    )
-
-
-_PROBE_RADIUS = 2  # Hamming ball probed around the query bucket
-
-
-def ann_multiprobe(
-    spark: SparkSession, sf_dir: str, radius: int = _PROBE_RADIUS
-) -> DataFrame:
-    """Multiprobe LSH ANN: score every vector whose bucket lies within
-    Hamming ``radius`` plane-bit flips of the query's bucket —
-    ``bit_count(bucket XOR qb) <= radius`` is one map-side expression
-    against the broadcast 1-row query, no bucket enumeration.
-
-    Multiprobe is THE recall knob for hyperplane LSH without
-    re-bucketing: this corpus's true top-10 sit at cosine ≈ 0.27–0.33
-    (≈71° — each plane agrees with only p ≈ 0.6), so they land at
-    Hamming 1–4 from the query bucket and measured recall@10 climbs
-    0.0 → 0.2 → 0.7 → 0.9 for radius 0..3 (tests/test_recall.py) while
-    the scanned fraction is Σ C(6,i)/64 ≈ 2%, 11%, 34%, 66%. Production
-    corpora with tighter neighbors (cosine ≥ 0.7) get high recall at
-    radius ≤ 1; the orthogonal lever is multiple independent plane
-    tables (union of per-table probes)."""
-    emb = load(spark, sf_dir, "embeddings")
-    buck = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        _bucket_expr(F.col("embedding")).alias("bucket"),
-    )
-    q = buck.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"),
-        F.col("bucket").alias("qb"),
-        norm(F.col("embedding")).alias("nq"),
-    )
-    probe = (
-        F.bit_count(F.col("bucket").bitwiseXOR(F.col("qb"))) <= radius
-    )
-    cosine = dot(F.col("embedding"), F.col("qv")) / (
-        norm(F.col("embedding")) * F.col("nq")
-    )
-    return (
-        buck.crossJoin(F.broadcast(q))
-        .filter(probe & (F.col("vec_id") != 0))
-        .select("vec_id", "label", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(10)
-    )
-
-
-@query(
-    "sim_ann_multiprobe",
-    oracle=f"""
-    WITH buck AS (
-      SELECT vec_id, label, embedding, {_bucket_sql('embedding')} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT embedding AS qv, bucket AS qb FROM buck WHERE vec_id = 0)
-    SELECT b.vec_id, b.label,
-           {_DOT_SQL.format(dim=_DIM, a='b.embedding', b='q.qv')}
-             / ({_NORM_SQL.format(dim=_DIM, a='b.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='q.qv')}) AS cosine
-    FROM buck b CROSS JOIN q
-    WHERE bit_count(xor(b.bucket, q.qb)) <= {_PROBE_RADIUS}
-      AND b.vec_id <> 0
-    ORDER BY cosine DESC, b.vec_id
-    LIMIT 10
-    """,
-)
-def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Radius-{_PROBE_RADIUS} multiprobe ANN (see ``ann_multiprobe``)."""
-    return ann_multiprobe(spark, sf_dir, _PROBE_RADIUS)
-
-
-# --- IVF-style probe search ------------------------------------------------
-
-_IVF_SCALE = 1_000_000_000_000  # 1e12: (c-q)^2 distances are ~1e-4
-
-
-@query(
-    "sim_ivf_probe",
-    oracle=f"""
-    WITH cent AS (
-      SELECT label, j,
-             (CAST(SUM(CAST(floor(CAST(embedding[j+1] AS DOUBLE)
-                   * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0)
-               / COUNT(*) AS c
-      FROM embeddings CROSS JOIN (SELECT unnest(range(64)) AS j) dims
-      GROUP BY label, j
-    ),
-    q AS (
-      SELECT j, CAST(embedding[j+1] AS DOUBLE) AS qv
-      FROM embeddings CROSS JOIN (SELECT unnest(range(64)) AS j) dims
-      WHERE vec_id = 0
-    ),
-    dist AS (
-      SELECT cent.label,
-             SUM(CAST(floor((cent.c - q.qv) * (cent.c - q.qv)
-                 * {_IVF_SCALE}.0) AS BIGINT)) AS d2
-      FROM cent JOIN q ON cent.j = q.j
-      GROUP BY cent.label
-    ),
-    best AS (SELECT label FROM dist ORDER BY d2, label LIMIT 1)
-    SELECT e.vec_id, e.label,
-           {_DOT_SQL.format(dim=_DIM, a='e.embedding', b='qq.embedding')}
-             / ({_NORM_SQL.format(dim=_DIM, a='e.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='qq.embedding')}) AS cosine
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) qq
-    WHERE e.label = (SELECT label FROM best) AND e.vec_id <> 0
-    ORDER BY cosine DESC, e.vec_id
-    LIMIT 10
-    """,
-)
-def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN with nprobe=1: coarse cells are the label partitions,
-    the query probes its nearest cell centroid, and only that cell is
-    scored exactly. Distances to centroids sum as floor-scaled integers
-    so the argmin cell is bit-deterministic cross-engine.
-
-    At 100 TB the inverted-file layout is a bucket/partition column:
-    probing reads one partition per (query, probe) instead of the corpus."""
-    emb = load(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("j", "val")
-    ).withColumn("val", F.col("val").cast("double"))
-    cent = (
-        dims.groupBy("label", "j")
-        .agg(
-            (
-                (
-                    F.sum(F.floor(F.col("val") * 1e9)).cast("double") / 1e9
-                )
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-    )
-    qdims = dims.filter(F.col("vec_id") == 0).select(
-        F.col("j").alias("qj"), F.col("val").alias("qv")
-    )
-    dist = (
-        cent.join(F.broadcast(qdims), cent.j == qdims.qj)
-        .groupBy("label")
-        .agg(
-            F.sum(
-                F.floor((F.col("c") - F.col("qv")) * (F.col("c") - F.col("qv")) * _IVF_SCALE)
-            ).alias("d2")
-        )
-    )
-    best = dist.orderBy("d2", "label").limit(1).select(F.col("label").alias("best_label"))
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
-    )
-    cosine = dot(F.col("embedding"), F.col("qv")) / (
-        norm(F.col("embedding")) * F.col("nq")
-    )
-    return (
-        emb.join(F.broadcast(best), emb.label == F.col("best_label"))
-        .filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(10)
-    )
-
-
-@query(
-    "dedup_embedding_cosine",
-    oracle=f"""
-    WITH buck AS (
-      SELECT vec_id, embedding, {_bucket_sql('embedding')} AS bucket
-      FROM embeddings
-    )
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           {_DOT_SQL.format(dim=_DIM, a='a.embedding', b='b.embedding')}
-             / ({_NORM_SQL.format(dim=_DIM, a='a.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='b.embedding')}) AS cosine
-    FROM buck a JOIN buck b
-      ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE {_DOT_SQL.format(dim=_DIM, a='a.embedding', b='b.embedding')}
-             / ({_NORM_SQL.format(dim=_DIM, a='a.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='b.embedding')}) >= 0.3
-    ORDER BY vec_a, vec_b
-    """,
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate detection, LSH-bucketed: candidate
-    pairs share a hyperplane bucket (no label blocking — semantic dups
-    cross labels), then exact cosine ≥ 0.3 verifies. The embedding-space
-    sibling of MinHash dedup: bucket fan-in bounds the pair space at
-    100 TB; recall tunes with plane count / multiprobe."""
-    emb = load(spark, sf_dir, "embeddings")
-    buck = emb.select(
-        "vec_id", "embedding", _bucket_expr(F.col("embedding")).alias("bucket")
-    )
-    a = buck.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        "bucket",
-        norm(F.col("embedding")).alias("na"),
-    )
-    b = buck.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("bucket").alias("bucket_b"),
-        norm(F.col("embedding")).alias("nb"),
-    )
-    # norms hoisted out of the pair expression (O(N·dim), not O(pairs·dim))
-    cosine = dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    return (
-        a.join(b, (a.bucket == b.bucket_b) & (F.col("vec_a") < F.col("vec_b")))
-        .select("vec_a", "vec_b", cosine.alias("cosine"))
-        .filter(F.col("cosine") >= 0.3)
         .orderBy("vec_a", "vec_b")
     )
 
@@ -465,80 +168,45 @@ def sim_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_FILT_LABEL = 3
+_FILT_K = 10
+
+_COS_EQ = (
+    f"{DOT_SQL.format(dim=DIM, a='e.embedding', b='q.qv')}"
+    f" / ({NORM_SQL.format(dim=DIM, a='e.embedding')}"
+    f" * {NORM_SQL.format(dim=DIM, a='q.qv')})"
+)
+
+
 @query(
-    "sim_ivf_multiprobe",
+    "sim_filtered_topk",
     oracle=f"""
-    WITH cent AS (
-      SELECT label, j,
-             (CAST(SUM(CAST(floor(CAST(embedding[j+1] AS DOUBLE)
-                   * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0)
-               / COUNT(*) AS c
-      FROM embeddings CROSS JOIN (SELECT unnest(range(64)) AS j) dims
-      GROUP BY label, j
-    ),
-    q AS (
-      SELECT j, CAST(embedding[j+1] AS DOUBLE) AS qv
-      FROM embeddings CROSS JOIN (SELECT unnest(range(64)) AS j) dims
-      WHERE vec_id = 0
-    ),
-    dist AS (
-      SELECT cent.label,
-             SUM(CAST(floor((cent.c - q.qv) * (cent.c - q.qv)
-                 * {_IVF_SCALE}.0) AS BIGINT)) AS d2
-      FROM cent JOIN q ON cent.j = q.j
-      GROUP BY cent.label
-    ),
-    best2 AS (SELECT label FROM dist ORDER BY d2, label LIMIT 2)
-    SELECT e.vec_id, e.label,
-           {_DOT_SQL.format(dim=_DIM, a='e.embedding', b='qq.embedding')}
-             / ({_NORM_SQL.format(dim=_DIM, a='e.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='qq.embedding')}) AS cosine
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) qq
-    WHERE e.label IN (SELECT label FROM best2) AND e.vec_id <> 0
+    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+    SELECT e.vec_id, CAST(e.label AS INT) AS label,
+           {_COS_EQ} AS cosine
+    FROM embeddings e CROSS JOIN q
+    WHERE e.label = {_FILT_LABEL} AND e.vec_id <> 0
     ORDER BY cosine DESC, e.vec_id
-    LIMIT 10
+    LIMIT {_FILT_K}
     """,
 )
-def sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with nprobe=2: the recall knob of the inverted-file family —
-    probe the TWO nearest coarse cells instead of one, scoring 2/k of
-    the corpus. Same deterministic scaled-integer centroid distances as
-    sim_ivf_probe; tests/test_recall.py-style comparison against the
-    exact baseline shows where the extra probe pays. At 100 TB nprobe
-    is the per-query cost dial: cells-read scales linearly with it
-    while recall saturates."""
+def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Filtered vector search: top-10 by cosine against the
+    vec_id=0 query, restricted to label=3 — the
+    metadata-predicate + ANN combination every retrieval serving layer
+    needs (RAG with tenant/language/source filters). Pre-filtering is
+    the exact strategy: the predicate prunes BEFORE any scoring, so
+    recall is 1.0 by construction (versus post-filtering a global
+    top-k, which can starve selective filters — the trade-off this
+    operator's shape makes explicit).
+
+    Scale: the label predicate is pushed to the parquet scan
+    (plan-asserted: PushedFilters carries it), scoring is map-side
+    against the broadcast query row, and the top-k is
+    TakeOrderedAndProject. On the bucketed/IVF paths the same
+    predicate simply rides along the candidate stream — filter first,
+    score the survivors, never materialize the unfiltered ranking."""
     emb = load(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("j", "val")
-    ).withColumn("val", F.col("val").cast("double"))
-    cent = dims.groupBy("label", "j").agg(
-        (
-            (F.sum(F.floor(F.col("val") * 1e9)).cast("double") / 1e9)
-            / F.count(F.lit(1))
-        ).alias("c")
-    )
-    qdims = dims.filter(F.col("vec_id") == 0).select(
-        F.col("j").alias("qj"), F.col("val").alias("qv")
-    )
-    dist = (
-        cent.join(F.broadcast(qdims), cent.j == qdims.qj)
-        .groupBy("label")
-        .agg(
-            F.sum(
-                F.floor(
-                    (F.col("c") - F.col("qv"))
-                    * (F.col("c") - F.col("qv"))
-                    * _IVF_SCALE
-                )
-            ).alias("d2")
-        )
-    )
-    best2 = (
-        dist.orderBy("d2", "label")
-        .limit(2)
-        .select(F.col("label").alias("best_label"))
-    )
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"), norm(F.col("embedding")).alias("nq")
     )
@@ -546,111 +214,341 @@ def sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm(F.col("embedding")) * F.col("nq")
     )
     return (
-        emb.join(F.broadcast(best2), emb.label == F.col("best_label"))
-        .filter(F.col("vec_id") != 0)
+        emb.filter((F.col("label") == _FILT_LABEL) & (F.col("vec_id") != 0))
         .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(10)
+        .select(
+            "vec_id",
+            F.col("label").cast("int").alias("label"),
+            cosine.alias("cosine"),
+        )
+        .orderBy(F.desc("cosine"), "vec_id")
+        .limit(_FILT_K)
     )
 
 
-# --- multi-table LSH --------------------------------------------------------
+_BATCH_QIDS = [0, 1, 2, 3, 4]
+_BATCH_K = 5
 
-# Second independent hyperplane table (seed-namespaced coefficients).
-# Table 0 is _PLANES itself, so the multi-table candidate set is a
-# strict superset of sim_ann_multiprobe's and recall can only rise.
-_PLANES_T1 = [
-    [_plane_coeff_ns("t1", p, j) for j in range(_DIM)]
-    for p in range(_N_PLANES)
-]
-
-
-def _bucket_sql_for(planes, vec: str) -> str:
-    terms = []
-    for p in range(_N_PLANES):
-        plane_lit = "[" + ",".join(repr(c) for c in planes[p]) + "]"
-        dot_sql = _DOT_SQL.format(dim=_DIM, a=vec, b=plane_lit)
-        terms.append(f"(CASE WHEN {dot_sql} > 0 THEN {1 << p} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
-
-def _bucket_expr_for(planes, vec):
-    """The bucket id of ``vec``: bit p is set when it lies on the
-    positive side of ``planes[p]``."""
-    out = F.lit(0)
-    for p, plane in enumerate(planes):
-        side = dot(vec, double_array_lit(plane))
-        out = out + F.when(side > 0, F.lit(1 << p)).otherwise(0)
-    return out
+_COS_BATCH = (
+    f"{DOT_SQL.format(dim=DIM, a='e.embedding', b='q.qv')}"
+    f" / ({NORM_SQL.format(dim=DIM, a='e.embedding')}"
+    f" * {NORM_SQL.format(dim=DIM, a='q.qv')})"
+)
 
 
 @query(
-    "sim_ann_multitable",
+    "sim_multi_query_topk",
     oracle=f"""
-    WITH buck AS (
-      SELECT vec_id, label, embedding,
-             {_bucket_sql_for(_PLANES, 'embedding')} AS b0,
-             {_bucket_sql_for(_PLANES_T1, 'embedding')} AS b1
-      FROM embeddings
+    WITH q AS (
+      SELECT vec_id AS qid, embedding AS qv FROM embeddings
+      WHERE vec_id IN ({", ".join(map(str, _BATCH_QIDS))})
     ),
-    q AS (
-      SELECT embedding AS qv, b0 AS qb0, b1 AS qb1
-      FROM buck WHERE vec_id = 0
+    scored AS (
+      SELECT q.qid, e.vec_id, {_COS_BATCH} AS cosine
+      FROM embeddings e CROSS JOIN q
+      WHERE e.vec_id <> q.qid
+    ),
+    ranked AS (
+      SELECT qid, vec_id, cosine,
+             CAST(row_number() OVER (PARTITION BY qid
+                  ORDER BY cosine DESC, vec_id) AS BIGINT) AS rank
+      FROM scored
     )
-    SELECT b.vec_id, b.label,
-           {_DOT_SQL.format(dim=_DIM, a='b.embedding', b='q.qv')}
-             / ({_NORM_SQL.format(dim=_DIM, a='b.embedding')}
-                * {_NORM_SQL.format(dim=_DIM, a='q.qv')}) AS cosine
-    FROM buck b CROSS JOIN q
-    WHERE (bit_count(xor(b.b0, q.qb0)) <= {_PROBE_RADIUS}
-           OR bit_count(xor(b.b1, q.qb1)) <= {_PROBE_RADIUS})
-      AND b.vec_id <> 0
-    ORDER BY cosine DESC, b.vec_id
-    LIMIT 10
+    SELECT qid, rank, vec_id, cosine FROM ranked
+    WHERE rank <= {_BATCH_K}
+    ORDER BY qid, rank
     """,
 )
-def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table LSH ANN: TWO independent 6-plane tables, each probed
-    at Hamming radius 2, candidates = the UNION of per-table probes —
-    the orthogonal recall lever to multiprobe radius (multiprobe widens
-    ONE partition of the sphere; an independent table REPARTITIONS it,
-    rescuing neighbors that straddle table-0 plane boundaries). Table 0
-    reuses sim_ann_multiprobe's planes, so the candidate set is a strict
-    superset and measured recall can only rise (tests/test_recall.py
-    pins both facts).
+def sim_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batched multi-query top-k: five query vectors scored against
+    the whole corpus in ONE pass (broadcast query frame, per-query
+    rank window) — the amortized serving shape: a query batch costs
+    one corpus scan, not one per query, which is how embedding-search
+    backfills and evaluation harnesses run at scale.
 
-    Scale: still one map-side pass — both buckets are per-row
-    expressions, the query row broadcasts both its bucket ids, and the
-    OR-of-two-popcounts filter runs before any shuffle; candidate
-    fan-in doubles at most. At 100 TB, tables trade storage/scan
-    (T× bucket columns) for recall without re-bucketing the corpus."""
+    Scale: the corpus crosses the wire once; the 5-row query frame
+    broadcasts; each row fans out 5x map-side (bounded by batch size).
+    The rank window partitions BY QUERY, so no unpartitioned window
+    exists — each partition ranks one query's scores, and at
+    production scale the same plan becomes per-query
+    TakeOrdered-style heaps via window top-k pushdown (Spark rewrites
+    rank<=k filters into per-partition limits)."""
     emb = load(spark, sf_dir, "embeddings")
-    buck = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        _bucket_expr_for(_PLANES, F.col("embedding")).alias("b0"),
-        _bucket_expr_for(_PLANES_T1, F.col("embedding")).alias("b1"),
-    )
-    q = buck.filter(F.col("vec_id") == 0).select(
+    q = emb.filter(F.col("vec_id").isin(_BATCH_QIDS)).select(
+        F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
-        F.col("b0").alias("qb0"),
-        F.col("b1").alias("qb1"),
         norm(F.col("embedding")).alias("nq"),
-    )
-    probe = (
-        F.bit_count(F.col("b0").bitwiseXOR(F.col("qb0"))) <= _PROBE_RADIUS
-    ) | (
-        F.bit_count(F.col("b1").bitwiseXOR(F.col("qb1"))) <= _PROBE_RADIUS
     )
     cosine = dot(F.col("embedding"), F.col("qv")) / (
         norm(F.col("embedding")) * F.col("nq")
     )
+    scored = (
+        emb.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", cosine.alias("cosine"))
+    )
+    ranked = scored.select(
+        "qid",
+        "vec_id",
+        "cosine",
+        F.row_number()
+        .over(W.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id"))
+        .cast("long")
+        .alias("rank"),
+    )
     return (
-        buck.crossJoin(F.broadcast(q))
-        .filter(probe & (F.col("vec_id") != 0))
-        .select("vec_id", "label", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(10)
+        ranked.filter(F.col("rank") <= _BATCH_K)
+        .select("qid", "rank", "vec_id", "cosine")
+        .orderBy("qid", "rank")
+    )
+
+
+# --- reciprocal nearest neighbors -------------------------------------------
+
+_RNN_N = 300  # self-contained audit subset (oracle tractability)
+
+
+@query(
+    "sim_reciprocal_nn",
+    oracle=f"""
+    WITH s AS (
+      SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_RNN_N}
+    ),
+    scored AS (
+      SELECT a.vec_id AS src, b.vec_id AS dst,
+             {DOT_SQL.format(dim=DIM, a='a.embedding', b='b.embedding')}
+               / ({NORM_SQL.format(dim=DIM, a='a.embedding')}
+                  * {NORM_SQL.format(dim=DIM, a='b.embedding')}) AS cosine
+      FROM s a JOIN s b ON a.vec_id <> b.vec_id
+    ),
+    nn AS (
+      SELECT src, dst, cosine FROM (
+        SELECT src, dst, cosine,
+               ROW_NUMBER() OVER (
+                 PARTITION BY src ORDER BY cosine DESC, dst) AS rn
+        FROM scored
+      ) t WHERE rn = 1
+    )
+    SELECT n1.src AS a, n1.dst AS b, n1.cosine
+    FROM nn n1 JOIN nn n2 ON n2.src = n1.dst AND n2.dst = n1.src
+    WHERE n1.src < n1.dst
+    ORDER BY a
+    """,
+)
+def sim_reciprocal_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reciprocal nearest neighbors: pairs (a, b) where each is the
+    other's cosine top-1 — the high-precision pairing rule semantic
+    dedup and cross-lingual mining use (Artetxe/Schwenk margin-based
+    mining keeps RNN pairs; one-directional NN is noise-prone). Runs on
+    a self-contained id-prefix subset so the mutual property is closed
+    under the oracle's relation; pairs report once, oriented a < b.
+
+    Determinism: the SAME left-fold dot / hoisted-norm cosine as
+    sim_knn_graph, top-1 totally ordered by (cosine DESC, dst), and the
+    reciprocity self-join is exact id equality.
+
+    Scale: the subset broadcasts (it is the audit frame); the corpus
+    form shards sources exactly like sim_knn_graph — each shard's NN
+    pass is one broadcast map-side scan, and reciprocity is a
+    co-partitioned self-join of the |V| NN edges on (src, dst) — never
+    pairwise at corpus scale; LSH/IVF blocking (the gated bucketed
+    shapes) bounds each shard's candidate set."""
+    emb = load(spark, sf_dir, "embeddings")
+    s = emb.filter(F.col("vec_id") < _RNN_N).select(
+        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
+    )
+    a = s.select(
+        F.col("vec_id").alias("src"),
+        F.col("embedding").alias("ea"),
+        F.col("nrm").alias("na"),
+    )
+    b = s.select(
+        F.col("vec_id").alias("dst"),
+        F.col("embedding").alias("eb"),
+        F.col("nrm").alias("nb"),
+    )
+
+    scored = with_pair_cosine(
+        a.crossJoin(F.broadcast(b)).filter(F.col("src") != F.col("dst")),
+        keep=["src", "dst"],
+    )
+    w = W.partitionBy("src").orderBy(F.desc("cosine"), "dst")
+    nn = (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("src", "dst", "cosine")
+    )
+    n2 = nn.select(
+        F.col("src").alias("r_src"), F.col("dst").alias("r_dst")
+    )
+    return (
+        nn.join(
+            n2,
+            (F.col("r_src") == F.col("dst"))
+            & (F.col("r_dst") == F.col("src")),
+        )
+        .filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("a"), F.col("dst").alias("b"), "cosine")
+        .orderBy("a")
+    )
+
+
+# --- hard-negative mining ----------------------------------------------------
+
+_HN_ANCHORS = 200   # anchors: vec_id < this
+_HN_POOL = 1000     # negative pool: vec_id < this, label differs
+
+
+@query(
+    "sample_hard_negatives",
+    oracle=f"""
+    WITH a AS (
+      SELECT vec_id, embedding, label FROM embeddings
+      WHERE vec_id < {_HN_ANCHORS}
+    ),
+    pool AS (
+      SELECT vec_id, embedding, label FROM embeddings
+      WHERE vec_id < {_HN_POOL}
+    ),
+    scored AS (
+      SELECT a.vec_id AS anchor, CAST(a.label AS INT) AS anchor_label,
+             p.vec_id AS negative, CAST(p.label AS INT) AS negative_label,
+             {DOT_SQL.format(dim=DIM, a='a.embedding', b='p.embedding')}
+               / ({NORM_SQL.format(dim=DIM, a='a.embedding')}
+                  * {NORM_SQL.format(dim=DIM, a='p.embedding')}) AS cosine
+      FROM a JOIN pool p ON p.label <> a.label
+    )
+    SELECT anchor, anchor_label, negative, negative_label, cosine FROM (
+      SELECT *, ROW_NUMBER() OVER (
+               PARTITION BY anchor ORDER BY cosine DESC, negative) AS rn
+      FROM scored
+    ) t WHERE rn = 1
+    ORDER BY anchor
+    """,
+)
+def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for contrastive training: per anchor, the
+    most cosine-similar vector with a DIFFERENT label — the negative
+    that actually moves a contrastive/metric-learning loss (random
+    negatives are trivially separated; the hard ones define the
+    decision boundary). Anchors are an id-prefix audit set against a
+    larger cross-label pool; pairs report (anchor, negative, both
+    labels, cosine).
+
+    Determinism: the shared left-fold dot / hoisted-norm cosine, top-1
+    totally ordered by (cosine DESC, negative id).
+
+    Scale: the pool broadcasts at audit size; the corpus form is
+    sim_knn_graph's sharded broadcast scan with a label-inequality
+    residual filter, or the IVF-bucketed variant when anchors ≈ corpus
+    — mining cost is one corpus pass per anchor shard either way, and
+    the per-anchor top-1 keeps the shuffle at |anchors| rows."""
+    emb = load(spark, sf_dir, "embeddings")
+    a = emb.filter(F.col("vec_id") < _HN_ANCHORS).select(
+        F.col("vec_id").alias("anchor"),
+        F.col("label").cast("int").alias("anchor_label"),
+        F.col("embedding").alias("ea"),
+        norm(F.col("embedding")).alias("na"),
+    )
+    pool = emb.filter(F.col("vec_id") < _HN_POOL).select(
+        F.col("vec_id").alias("negative"),
+        F.col("label").cast("int").alias("negative_label"),
+        F.col("embedding").alias("ep"),
+        norm(F.col("embedding")).alias("np_"),
+    )
+
+    scored = with_pair_cosine(
+        a.crossJoin(F.broadcast(pool)).filter(
+            F.col("negative_label") != F.col("anchor_label")
+        ),
+        keep=["anchor", "anchor_label", "negative", "negative_label"],
+        eb="ep",
+        nb="np_",
+    )
+    w = W.partitionBy("anchor").orderBy(F.desc("cosine"), "negative")
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "anchor", "anchor_label", "negative", "negative_label", "cosine"
+        )
+        .orderBy("anchor")
+    )
+
+
+@query(
+    "embeddings_isotropy_audit",
+    oracle=f"""
+    WITH nrm AS (
+      SELECT vec_id,
+             list_transform(range({DIM}),
+               j -> CAST(embedding[j+1] AS DOUBLE)
+                    / {NORM_SQL.format(dim=DIM, a='embedding')}) AS u
+      FROM embeddings
+    ),
+    flat AS (
+      SELECT j AS dim, u[j+1] AS uv
+      FROM nrm CROSS JOIN (SELECT unnest(range({DIM})) AS j)
+    ),
+    dims AS (
+      SELECT dim, {DSUM_SQL.format(expr="uv")} AS s
+      FROM flat GROUP BY dim
+    ),
+    scalars AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
+             {DSUM_SQL.format(
+                 expr=DOT_SQL.format(dim=DIM, a='u', b='u')
+             )} AS sum_sq
+      FROM nrm
+    )
+    SELECT n_vecs, sum_sq,
+           ({DSUM_SQL.format(expr="s * s")} - sum_sq)
+             / (CAST(n_vecs AS DOUBLE) * (n_vecs - 1))
+             AS mean_pairwise_cosine
+    FROM dims CROSS JOIN scalars
+    GROUP BY n_vecs, sum_sq
+    """,
+)
+def embeddings_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus isotropy in ONE aggregation pass: the mean pairwise
+    cosine over ALL n·(n-1) ordered vector pairs, computed WITHOUT any
+    pair join via the sum-vector identity
+    Σ_{i≠k} û_i·û_k = ‖Σ_i û_i‖² − Σ_i ‖û_i‖². A high mean cosine
+    means the space is anisotropic (everything points the same way —
+    the classic "narrow cone" pathology that makes cosine retrieval
+    uninformative); near-zero means isotropic. The diagonal mass
+    (sum_sq ≈ n) is computed explicitly with the SAME folds rather
+    than assumed, so the identity is exact in both engines.
+
+    Scale: O(n·dim) map-side normalization, one 64-key per-dim DSUM,
+    one global DSUM — no shuffle bigger than 64 rows, no pair space.
+    The naive form of this number is an n² cosine join; this is the
+    identity every embedding-QA pipeline should use instead."""
+    emb = load(spark, sf_dir, "embeddings")
+    nrm = emb.select(
+        "vec_id", "embedding", norm(F.col("embedding")).alias("n")
+    ).select(
+        "vec_id",
+        F.transform(
+            "embedding", lambda x: x.cast("double") / F.col("n")
+        ).alias("u"),
+    )
+    flat = nrm.select(F.posexplode("u").alias("dim", "uv"))
+    dims = flat.groupBy("dim").agg(dsum(F.col("uv")).alias("s"))
+    scalars = nrm.agg(
+        F.count(F.lit(1)).cast("long").alias("n_vecs"),
+        dsum(dot(F.col("u"), F.col("u"))).alias("sum_sq"),
+    )
+    return (
+        dims.crossJoin(F.broadcast(scalars))
+        .groupBy("n_vecs", "sum_sq")
+        .agg(dsum(F.col("s") * F.col("s")).alias("sum_s2"))
+        .select(
+            "n_vecs",
+            "sum_sq",
+            (
+                (F.col("sum_s2") - F.col("sum_sq"))
+                / (F.col("n_vecs").cast("double") * (F.col("n_vecs") - 1))
+            ).alias("mean_pairwise_cosine"),
+        )
     )

@@ -195,7 +195,7 @@ def text_bigram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the heart of BPE merge learning and collocation mining. Bigrams are
     built with the slice+zip construction (NOT element_at inside a HOF
     lambda — Catalyst re-evaluates the split per element, the measured
-    O(tokens²) trap documented at dedup._ngrams), WITHOUT the
+    O(tokens²) trap documented at dedup.ngrams), WITHOUT the
     per-document dedup the shingle path applies: counts here are
     occurrences, not document frequencies. One token shuffle after a
     map-side explode."""

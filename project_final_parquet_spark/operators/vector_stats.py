@@ -24,10 +24,10 @@ from pyspark.sql import functions as F
 from ..ckpt import checkpoint, release
 from ..registry import DSUM_SQL, dsum, query
 from ..tables import load
+from .similarity import DIM
 from .vecmath import dot, norm
 
-_DIM = 64
-_VSCALE = 1_000_000_000_000  # 1e-12 granularity; 64·N·0.5·1e12 ≪ 2^63
+VSCALE = 1_000_000_000_000  # 1e-12 granularity; 64·N·0.5·1e12 ≪ 2^63
 
 
 @query(
@@ -36,23 +36,23 @@ _VSCALE = 1_000_000_000_000  # 1e-12 granularity; 64·N·0.5·1e12 ≪ 2^63
     WITH flat AS (
       SELECT i AS dim, CAST(embedding[i + 1] AS DOUBLE) AS v
       FROM embeddings
-      CROSS JOIN (SELECT unnest(range({_DIM})) AS i) idx
+      CROSS JOIN (SELECT unnest(range({DIM})) AS i) idx
     ),
     agg AS (
       SELECT dim,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(floor(v * {_VSCALE}.0) AS BIGINT)) AS BIGINT)
+             CAST(SUM(CAST(floor(v * {VSCALE}.0) AS BIGINT)) AS BIGINT)
                AS s1,
-             CAST(SUM(CAST(floor(v * v * {_VSCALE}.0) AS BIGINT)) AS BIGINT)
+             CAST(SUM(CAST(floor(v * v * {VSCALE}.0) AS BIGINT)) AS BIGINT)
                AS s2,
              MIN(v) AS min_val, MAX(v) AS max_val
       FROM flat GROUP BY dim
     )
     SELECT dim,
-           CAST(s1 AS DOUBLE) / {_VSCALE}.0 / n AS mean_val,
-           sqrt(CAST(s2 AS DOUBLE) / {_VSCALE}.0 / n
-                - (CAST(s1 AS DOUBLE) / {_VSCALE}.0 / n)
-                  * (CAST(s1 AS DOUBLE) / {_VSCALE}.0 / n)) AS std_val,
+           CAST(s1 AS DOUBLE) / {VSCALE}.0 / n AS mean_val,
+           sqrt(CAST(s2 AS DOUBLE) / {VSCALE}.0 / n
+                - (CAST(s1 AS DOUBLE) / {VSCALE}.0 / n)
+                  * (CAST(s1 AS DOUBLE) / {VSCALE}.0 / n)) AS std_val,
            min_val, max_val
     FROM agg ORDER BY dim
     """,
@@ -69,7 +69,7 @@ def embeddings_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat = emb.select(
         F.posexplode("embedding").alias("dim", "vf")
     ).select("dim", F.col("vf").cast("double").alias("v"))
-    scale = F.lit(float(_VSCALE))
+    scale = F.lit(float(VSCALE))
     agg = flat.groupBy("dim").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.floor(F.col("v") * scale).cast("long")).cast("long").alias("s1"),
@@ -251,7 +251,7 @@ def _pca_oracle() -> str:
     WITH flat AS (
       SELECT vec_id, i, CAST(embedding[i + 1] AS DOUBLE) AS vi
       FROM embeddings
-      CROSS JOIN (SELECT unnest(range({_DIM})) AS i) idx
+      CROSS JOIN (SELECT unnest(range({DIM})) AS i) idx
     ),
     g AS (
       SELECT a.i AS i, b.i AS j,
@@ -260,7 +260,7 @@ def _pca_oracle() -> str:
       FROM flat a JOIN flat b ON a.vec_id = b.vec_id
       GROUP BY a.i, b.i
     ),
-    x0 AS (SELECT unnest(range({_DIM})) AS j, CAST(1 AS BIGINT) AS x),
+    x0 AS (SELECT unnest(range({DIM})) AS j, CAST(1 AS BIGINT) AS x),
     {",".join(rounds)},
     nrm AS (SELECT sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm FROM {last}),
     num AS (
@@ -303,8 +303,8 @@ def embeddings_top_eigenvector(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     # g stays resident: the returned plan's Rayleigh quotient reads it.
     # It is 64x64 keys — O(dim^2), corpus-size-independent.
-    g = _gram(emb).localCheckpoint()
-    x = spark.range(_DIM).select(
+    g = checkpoint(_gram(emb))
+    x = spark.range(DIM).select(
         F.col("id").alias("j"), F.lit(1).cast("long").alias("x")
     )
     for _ in range(_PCA_ROUNDS):
@@ -351,20 +351,20 @@ PROBE_SCORED_CTES = f"""
     w AS (
       SELECT i AS dim,
              SUM(CAST(FLOOR(CAST(embedding[i + 1] AS DOUBLE)
-                            * {_VSCALE}) AS BIGINT)) AS s,
+                            * {VSCALE}) AS BIGINT)) AS s,
              COUNT(*) AS c
       FROM embeddings
-      CROSS JOIN (SELECT unnest(range({_DIM})) AS i) idx
+      CROSS JOIN (SELECT unnest(range({DIM})) AS i) idx
       WHERE label = 0
       GROUP BY i
     ),
     wl AS (
-      SELECT list(CAST(s AS DOUBLE) / c / {_VSCALE} ORDER BY dim) AS wv
+      SELECT list(CAST(s AS DOUBLE) / c / {VSCALE} ORDER BY dim) AS wv
       FROM w
     ),
     scored AS (
       SELECT e.vec_id, e.label,
-             list_aggregate(list_transform(range({_DIM}),
+             list_aggregate(list_transform(range({DIM}),
                j -> CAST(e.embedding[j + 1] AS DOUBLE) * wv[j + 1]),
                'sum') AS score
       FROM embeddings e CROSS JOIN wl
@@ -384,14 +384,14 @@ def probe_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = flat.groupBy("dim").agg(
         F.sum(
-            F.floor(F.col("v").cast("double") * _VSCALE).cast("long")
+            F.floor(F.col("v").cast("double") * VSCALE).cast("long")
         ).alias("s"),
         F.count(F.lit(1)).alias("c"),
     )
     wl = w.select(
         F.struct(
             "dim",
-            (F.col("s").cast("double") / F.col("c") / _VSCALE).alias("wj"),
+            (F.col("s").cast("double") / F.col("c") / VSCALE).alias("wj"),
         ).alias("p")
     ).agg(
         F.transform(
@@ -492,7 +492,7 @@ def ml_linear_probe_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH flat AS (
       SELECT vec_id, i, CAST(embedding[i + 1] AS DOUBLE) AS vi
       FROM embeddings
-      CROSS JOIN (SELECT unnest(range({_DIM})) AS i) idx
+      CROSS JOIN (SELECT unnest(range({DIM})) AS i) idx
     ),
     g AS (
       SELECT a.i AS i, b.i AS j,
@@ -509,11 +509,11 @@ def ml_linear_probe_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM g
     ),
     n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors FROM embeddings)
-    SELECT CAST({_DIM} AS BIGINT) AS dim, n_vectors, trg AS gram_trace,
+    SELECT CAST({DIM} AS BIGINT) AS dim, n_vectors, trg AS gram_trace,
            (CAST(trg AS DOUBLE) * CAST(trg AS DOUBLE))
              / CAST(trg2 AS DOUBLE) AS effective_rank,
            (CAST(trg AS DOUBLE) * CAST(trg AS DOUBLE))
-             / CAST(trg2 AS DOUBLE) / {_DIM} AS isotropy_ratio
+             / CAST(trg2 AS DOUBLE) / {DIM} AS isotropy_ratio
     FROM tr CROSS JOIN n
     """,
 )
@@ -552,11 +552,11 @@ def embeddings_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("trg").cast("double") * F.col("trg").cast("double")
     ) / F.col("trg2").cast("double")
     return tr.crossJoin(F.broadcast(n)).select(
-        F.lit(_DIM).cast("long").alias("dim"),
+        F.lit(DIM).cast("long").alias("dim"),
         "n_vectors",
         F.col("trg").alias("gram_trace"),
         er.alias("effective_rank"),
-        (er / _DIM).alias("isotropy_ratio"),
+        (er / DIM).alias("isotropy_ratio"),
     )
 
 
@@ -571,7 +571,7 @@ def embeddings_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
              CASE WHEN CAST(embedding[i + 1] AS DOUBLE) >= 0
                   THEN 1 ELSE 0 END AS s
       FROM embeddings
-      CROSS JOIN (SELECT unnest(range({_DIM})) AS i) idx
+      CROSS JOIN (SELECT unnest(range({DIM})) AS i) idx
     ),
     cells AS (
       SELECT dim, label, s, CAST(COUNT(*) AS BIGINT) AS o
@@ -692,9 +692,9 @@ def ml_feature_chi2_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH flat AS (
       SELECT label, i AS dim,
              CAST(FLOOR(CAST(embedding[i + 1] AS DOUBLE)
-                        * {_VSCALE}) AS BIGINT) AS fv
+                        * {VSCALE}) AS BIGINT) AS fv
       FROM embeddings
-      CROSS JOIN (SELECT unnest(range({_DIM})) AS i) idx
+      CROSS JOIN (SELECT unnest(range({DIM})) AS i) idx
     ),
     per AS (
       SELECT label, dim, CAST(SUM(fv) AS BIGINT) AS s,
@@ -703,7 +703,7 @@ def ml_feature_chi2_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     coord AS (
       SELECT label, dim,
-             CAST(s AS DOUBLE) / {_VSCALE} / n AS c
+             CAST(s AS DOUBLE) / {VSCALE} / n AS c
       FROM per
     ),
     pair AS (
@@ -749,7 +749,7 @@ def embeddings_class_separation(
     ).select(
         "label",
         "dim",
-        F.floor(F.col("vf").cast("double") * _VSCALE).cast("long").alias(
+        F.floor(F.col("vf").cast("double") * VSCALE).cast("long").alias(
             "fv"
         ),
     )
@@ -760,7 +760,7 @@ def embeddings_class_separation(
     coord = per.select(
         "label",
         "dim",
-        (F.col("s").cast("double") / _VSCALE / F.col("n")).alias("c"),
+        (F.col("s").cast("double") / VSCALE / F.col("n")).alias("c"),
     )
     a = coord.select(
         F.col("label").alias("label_a"), "dim", F.col("c").alias("ca")

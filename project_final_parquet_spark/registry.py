@@ -69,9 +69,9 @@ and the corpus-adaptive LSH family
 ml_knn_purity_adaptive, sample_hard_negatives_adaptive,
 sim_reciprocal_nn_adaptive, sim_ann_recall_adaptive,
 dedup_embedding_adaptive, sim_topk_adaptive,
-sim_adaptive_occupancy_profile — a driver-side parquet
-FOOTER-metadata row count picks the plane count; no Spark job, with a
-count() fallback for non-file sources).
+sim_adaptive_occupancy_profile — ``tables.row_count`` reads the
+corpus size from the Parquet footers on the driver and picks the plane
+count; no Spark job runs).
 Every
 other query returns a fully lazy plan. (tests/test_registry_lint.py
 keeps this list honest against the construction sites.)
@@ -196,6 +196,37 @@ def dsum(col):
 # not correctly rounded (verified: 289473120.0300000000 → …03000003), but
 # DECIMAL→VARCHAR→DOUBLE is, and matches Spark's BigDecimal.doubleValue.
 DSUM_SQL = "CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"
+
+# Floor-scaled integer sum for COMPUTED doubles whose magnitude grows
+# with the corpus (chi² terms, basket products). The DECIMAL(38,10) sum
+# re-quantizes each term to the 1e-10 grid, which diverges across engines
+# once ulp(value) nears that grid (|value| ≳ 1e6). floor(value·1e6) is
+# exact in both engines, so the sum of the floors is exact at any row
+# count.
+FSUM_SQL = (
+    "(CAST(CAST(SUM(CAST(FLOOR(({expr}) * 1000000.0) "
+    "AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1000000.0)"
+)
+
+
+def fsum(col):
+    """Floor-scaled SUM of a double expression, the Spark twin of
+    ``FSUM_SQL``."""
+    from pyspark.sql import functions as F
+
+    return (
+        F.sum(F.floor(col * 1_000_000.0).cast("decimal(38,0)")).cast("double")
+        / 1_000_000.0
+    )
+
+
+# Time conventions: event times are compared as TZ-free epoch
+# microseconds (convention #4).
+DAY_US = 86_400_000_000
+HOUR_US = 3_600_000_000
+EPOCH_US_SQL = (
+    "timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
+)
 
 
 # ORDERED-FOLD convention (round 13, pipeline19 module note): the

@@ -157,6 +157,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def row_count(sf_dir: str, name: str) -> int:
+    """Row count of table ``name`` from its Parquet footers (``num_rows``
+    is footer metadata): no data page is read and no Spark job runs. It
+    equals the oracle's ``COUNT(*)`` over the same file(s)."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    root = Path(sf_dir) / f"{name}.parquet"
+    files = sorted(root.glob("*.parquet")) if root.is_dir() else [root]
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every corpus table as a temp view (for the SQL API)."""
     for name in TABLE_NAMES:

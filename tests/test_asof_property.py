@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.asof import asof_join
+from project_final_parquet_spark.operators.relational import asof_join
 
 _key = st.integers(min_value=0, max_value=2)
 _time = st.integers(min_value=0, max_value=50)

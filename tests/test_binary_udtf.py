@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.similarity5 import sim_binary_quant
+from project_final_parquet_spark.operators.quantization import sim_binary_quant
 from project_final_parquet_spark.operators.udtf_ops import udtf_token_positions
 
 

@@ -65,6 +65,14 @@ _LEFTOVER_BUDGET = {
     "ml_kmeans": 0,
     # one lazy aggregation over the edge list: no checkpoint at all
     "graph_modularity_brands": 0,
+    # the edge list, read by the returned plan
+    "graph_jaccard_link_prediction": 1,
+    "graph_degree_assortativity": 1,
+    "graph_hits_authorities": 1,
+    # the edge list and every peel round: the returned plan counts each
+    "graph_kcore": 4,
+    # final distribution only (transition matrix + earlier rounds released)
+    "events_markov_stationary": 1,
 }
 
 

@@ -7,7 +7,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.asof import asof_join
+from project_final_parquet_spark.operators.relational import asof_join
 from project_final_parquet_spark.tables import load
 
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from project_final_parquet_spark.operators.dedup2 import dedup_eval_recall
+from project_final_parquet_spark.operators.dedup import dedup_eval_recall
 from project_final_parquet_spark.operators.events_analytics import (
     events_percentiles_exact,
     events_rolling_1h,
@@ -89,7 +89,7 @@ def test_asof_nearest_prefers_backward_on_ties(spark, sf_dir):
 
 
 def test_containment_bounds(spark, sf_dir):
-    from project_final_parquet_spark.operators.dedup2 import dedup_containment
+    from project_final_parquet_spark.operators.dedup import dedup_containment
 
     rows = dedup_containment(spark, sf_dir).collect()
     for r in rows:
@@ -164,7 +164,7 @@ def test_ivm_merge_equals_full_recompute(spark, sf_dir):
 
 
 def test_ols_slope_positive_price_vs_qty(spark, sf_dir):
-    from project_final_parquet_spark.operators.relational4 import (
+    from project_final_parquet_spark.operators.relational import (
         q64_groupwise_ols,
     )
 

@@ -73,7 +73,7 @@ def test_negative_sampling_properties(spark, sf_dir):
 
 def test_nested_lines_match_flat_agg(spark, sf_dir):
     from pyspark.sql import functions as F
-    from project_final_parquet_spark.operators.relational4 import (
+    from project_final_parquet_spark.operators.relational import (
         q62_nested_order_lines,
     )
 
@@ -96,7 +96,7 @@ def test_nested_lines_match_flat_agg(spark, sf_dir):
 
 
 def test_hll_union_within_bounds(spark, sf_dir):
-    from project_final_parquet_spark.operators.relational4 import (
+    from project_final_parquet_spark.operators.relational import (
         q63_hll_sketch_union,
     )
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from project_final_parquet_spark.operators import dedup, llm_text, multimodal, similarity
+from project_final_parquet_spark.operators.ann import sim_ann_lsh
 
 
 def test_minhash_lsh_recall_vs_bruteforce(spark, sf_dir):
@@ -18,7 +19,7 @@ def test_minhash_lsh_recall_vs_bruteforce(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents")
     sh = docs.select(
-        "doc_id", dedup._shingles3(dedup._toks()).alias("sh")
+        "doc_id", dedup._shingles3(dedup.text_tokens()).alias("sh")
     )
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -50,7 +51,7 @@ def test_ann_results_subset_of_bruteforce_ranking(spark, sf_dir):
     """Every ANN hit must carry the same cosine the brute-force ranking
     assigns it (ANN prunes candidates, never rescores)."""
     topk = {r.vec_id: r.cosine for r in similarity.sim_topk_cosine(spark, sf_dir).collect()}
-    ann = similarity.sim_ann_lsh(spark, sf_dir).collect()
+    ann = sim_ann_lsh(spark, sf_dir).collect()
     assert len(ann) > 0
     for r in ann:
         if r.vec_id in topk:

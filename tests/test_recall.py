@@ -6,10 +6,8 @@ so the recall values are stable constants, not flaky thresholds.
 
 from __future__ import annotations
 
-from project_final_parquet_spark.operators.similarity import (
-    ann_multiprobe,
-    sim_topk_cosine,
-)
+from project_final_parquet_spark.operators.ann import ann_multiprobe
+from project_final_parquet_spark.operators.similarity import sim_topk_cosine
 
 
 def _ids(df):
@@ -36,9 +34,7 @@ def test_multitable_union_dominates_single_table(spark, sf_dir):
     """A second independent plane table at the same radius: candidates
     are a strict superset of sim_ann_multiprobe's (table 0 IS its
     planes), so recall can only rise — and on this corpus it does."""
-    from project_final_parquet_spark.operators.similarity import (
-        sim_ann_multitable,
-    )
+    from project_final_parquet_spark.operators.ann import sim_ann_multitable
 
     exact = set(_ids(sim_topk_cosine(spark, sf_dir)))
     single = len(set(_ids(ann_multiprobe(spark, sf_dir, radius=2))) & exact)

@@ -216,3 +216,35 @@ def test_no_chained_jvm_package_access():
                 ):
                     offenders.add(f"{py.relative_to(_PKG)}:{node.lineno}")
     assert not offenders, sorted(offenders)
+
+
+def test_operator_modules_import_no_private_names_from_each_other():
+    """A helper another operator module needs is a public name in its
+    home module: no module under ``operators/`` imports an
+    ``_``-prefixed name from a sibling."""
+    siblings = {py.stem for py in (_PKG / "operators").glob("*.py")}
+    offenders = [
+        f"{py.name}:{node.lineno} {node.module}.{alias.name}"
+        for py in sorted((_PKG / "operators").glob("*.py"))
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.ImportFrom)
+        and node.level == 1
+        and node.module in siblings
+        for alias in node.names
+        if alias.name.startswith("_")
+    ]
+    assert not offenders, offenders
+
+
+def test_local_checkpoints_go_through_ckpt():
+    """Every eager checkpoint is ``ckpt.checkpoint``, which records the
+    blocks it creates so ``ckpt.release`` can free them: no raw
+    ``.localCheckpoint(`` call outside ``ckpt.py``."""
+    offenders = [
+        f"{py.relative_to(_PKG)}:{n}"
+        for py in sorted(_PKG.rglob("*.py"))
+        if py.name != "ckpt.py"
+        for n, line in enumerate(py.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+    ]
+    assert not offenders, offenders

@@ -13,8 +13,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.similarity10 import (
+from project_final_parquet_spark.operators.ann import (
     _MAX_PLANES,
+    _N_PLANES,
     _PLANES24,
     _TARGET_OCC,
     adaptive_planes,
@@ -22,7 +23,6 @@ from project_final_parquet_spark.operators.similarity10 import (
     sim_pair_margin_adaptive,
     sim_range_search_adaptive,
 )
-from project_final_parquet_spark.operators.similarity import _N_PLANES
 
 SF = "/root/testdata/sf0.001"
 
@@ -64,7 +64,7 @@ def test_adaptive_planes_occupancy_contract():
 def test_adaptive_planes_extend_fixed_index():
     """Planes 0..5 of the adaptive index ARE the fixed index — same
     md5-derived seed, so small corpora are bit-identical."""
-    from project_final_parquet_spark.operators.similarity import _PLANES
+    from project_final_parquet_spark.operators.ann import _PLANES
 
     assert _PLANES == _PLANES24[:_N_PLANES]
 
@@ -76,9 +76,7 @@ def test_range_search_adaptive_equals_fixed_at_small_corpus(spark):
     """At the driver SFs (n ≤ 2048) the adaptive index floors at the
     fixed index's 6 planes, so the two range searches must return the
     IDENTICAL pair set."""
-    from project_final_parquet_spark.operators.similarity9 import (
-        sim_range_search_lsh,
-    )
+    from project_final_parquet_spark.operators.ann import sim_range_search_lsh
 
     adapt = sim_range_search_adaptive(spark, SF)
     fixed = sim_range_search_lsh(spark, SF)
@@ -219,7 +217,7 @@ def test_q71_prefix_distinct_is_exact(spark):
     value must equal the TRUE number of distinct priorities among the
     customer's orders with o_orderkey ≤ this one (the oracle mirrors
     the construction, so only an independent replay can catch this)."""
-    from project_final_parquet_spark.operators.relational5 import (
+    from project_final_parquet_spark.operators.relational import (
         q71_window_distinct_count,
     )
 
@@ -297,13 +295,11 @@ def test_hard_negatives_adaptive_equals_fixed_at_small_corpus(spark):
     """Same small-corpus bit-identity contract for the mining twins:
     at n ≤ 2048 the adaptive index IS the 6-plane index, so hardest
     negatives and reciprocal-NN pairs must match the r8 fixed forms."""
-    from project_final_parquet_spark.operators.similarity8 import (
-        sample_hard_negatives_bucketed,
-        sim_reciprocal_nn_bucketed,
-    )
-    from project_final_parquet_spark.operators.similarity10 import (
+    from project_final_parquet_spark.operators.ann import (
         sample_hard_negatives_adaptive,
+        sample_hard_negatives_bucketed,
         sim_reciprocal_nn_adaptive,
+        sim_reciprocal_nn_bucketed,
     )
 
     hn_a = [tuple(r) for r in
@@ -475,7 +471,7 @@ def test_pareto_frontier_replay(spark):
 def test_ann_recall_adaptive_replay(spark, big_corpus):
     """Recall@10 audit replay on the 7-plane corpus: exact top-10 truth
     and radius-1 candidate sets recomputed in numpy."""
-    from project_final_parquet_spark.operators.similarity10 import (
+    from project_final_parquet_spark.operators.ann import (
         sim_ann_recall_adaptive,
     )
 
@@ -574,8 +570,8 @@ def test_functional_dependency_replay(spark):
 def test_gaps_and_islands_replay(spark):
     from collections import defaultdict
 
+    from project_final_parquet_spark.registry import DAY_US
     from project_final_parquet_spark.operators.pipeline14 import (
-        _DAY_US,
         events_gaps_and_islands,
     )
 
@@ -588,7 +584,7 @@ def test_gaps_and_islands_replay(spark):
     days = defaultdict(set)
     for r in ev:
         us = int((r["ts"] - epoch).total_seconds() * 1_000_000)
-        days[r["user_id"]].add(us // _DAY_US)
+        days[r["user_id"]].add(us // DAY_US)
     hist = defaultdict(lambda: [0, set()])
     for u, ds in days.items():
         run = 1
@@ -615,8 +611,8 @@ def test_gaps_and_islands_replay(spark):
 def test_local_peaks_replay(spark):
     from collections import Counter
 
+    from project_final_parquet_spark.registry import DAY_US
     from project_final_parquet_spark.operators.pipeline14 import (
-        _DAY_US,
         events_local_peaks,
     )
 
@@ -625,7 +621,7 @@ def test_local_peaks_replay(spark):
 
     epoch = datetime.datetime(1970, 1, 1)
     daily = Counter(
-        int((r["ts"] - epoch).total_seconds() * 1_000_000) // _DAY_US
+        int((r["ts"] - epoch).total_seconds() * 1_000_000) // DAY_US
         for r in ev
     )
     days = sorted(daily)
@@ -822,7 +818,7 @@ def test_dedup_embedding_adaptive_replay(spark, big_corpus):
     """Seniority-rule dedup replay on the 7-plane corpus: dropped ==
     any vector with a lower-id same-bucket neighbor at cosine ≥ τ,
     keeper == the minimum such id."""
-    from project_final_parquet_spark.operators.similarity10 import (
+    from project_final_parquet_spark.operators.ann import (
         dedup_embedding_adaptive,
     )
 
@@ -856,7 +852,7 @@ def test_topk_adaptive_subset_of_exact(spark):
     """The adaptive top-10 must equal the exact top-10 RESTRICTED to
     the radius-1 candidate set (numpy replay), and every returned
     cosine must be a true cosine of the query pair."""
-    from project_final_parquet_spark.operators.similarity10 import (
+    from project_final_parquet_spark.operators.ann import (
         adaptive_planes,
         sim_topk_adaptive,
     )
@@ -1063,7 +1059,7 @@ def test_adaptive_occupancy_profile_replay(spark, big_corpus):
     what the mining tier pays)."""
     from collections import Counter, defaultdict
 
-    from project_final_parquet_spark.operators.similarity10 import (
+    from project_final_parquet_spark.operators.ann import (
         sim_adaptive_occupancy_profile,
     )
 
@@ -1089,8 +1085,8 @@ def test_dormancy_lag_replay(spark):
     import datetime
     from collections import defaultdict
 
+    from project_final_parquet_spark.registry import DAY_US
     from project_final_parquet_spark.operators.pipeline14 import (
-        _DAY_US,
         events_dormancy_reactivation_lag,
     )
 
@@ -1101,7 +1097,7 @@ def test_dormancy_lag_replay(spark):
     days = defaultdict(set)
     for r in ev:
         us = int((r["ts"] - epoch).total_seconds() * 1_000_000)
-        days[r["user_id"]].add(us // _DAY_US)
+        days[r["user_id"]].add(us // DAY_US)
     bins = defaultdict(lambda: [0, set(), 10**9, -1])
     for u, ds in days.items():
         sd = sorted(ds)
@@ -1200,8 +1196,8 @@ def test_value_drawdown_replay(spark):
     from collections import defaultdict
     from decimal import Decimal
 
+    from project_final_parquet_spark.registry import DAY_US
     from project_final_parquet_spark.operators.pipeline14 import (
-        _DAY_US,
         events_value_drawdown,
     )
 
@@ -1212,7 +1208,7 @@ def test_value_drawdown_replay(spark):
     daily = defaultdict(Decimal)
     for r in ev:
         us = int((r["ts"] - epoch).total_seconds() * 1_000_000)
-        daily[us // _DAY_US] += Decimal(repr(r["value"]))
+        daily[us // DAY_US] += Decimal(repr(r["value"]))
     peak, mdd, trough = float("-inf"), float("-inf"), None
     n = 0
     for day in sorted(daily):

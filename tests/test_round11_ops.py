@@ -12,12 +12,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.similarity10 import _PLANES24
-from project_final_parquet_spark.operators.similarity11 import (
+from project_final_parquet_spark.operators.ann import (
+    NPROBE,
     _CELL_CAP,
     _CENT_SCALE,
     _DIST_SCALE,
-    _NPROBE,
+    _PLANES24,
     adaptive_cell_bits,
     sim_ivf_adaptive,
     sim_ivf_adaptive_occupancy,
@@ -101,7 +101,7 @@ def _np_best_cells(vecs: np.ndarray, cells: np.ndarray, q: np.ndarray):
         cent = np.floor(sub * _CENT_SCALE).sum(axis=0) / _CENT_SCALE / len(sub)
         d2 = int(np.floor((cent - q) ** 2 * _DIST_SCALE).sum())
         out[int(cell)] = d2
-    return sorted(out, key=lambda c: (out[c], c))[:_NPROBE]
+    return sorted(out, key=lambda c: (out[c], c))[:NPROBE]
 
 
 def test_ivf_adaptive_topk_replay(spark, ivf_corpus):
@@ -544,7 +544,7 @@ def test_adaptive_rows_per_band_formula_matches_duckdb():
     corpus size (dense sweep + the 2^12 / 2^20 boundaries)."""
     import duckdb
 
-    from project_final_parquet_spark.operators.dedup4 import (
+    from project_final_parquet_spark.operators.dedup import (
         adaptive_rows_per_band,
     )
 
@@ -566,10 +566,8 @@ def test_minhash_adaptive_equals_fixed_at_small_corpus(spark):
     pipeline's 2, so the verified pair set must be IDENTICAL to
     dedup_near_minhash_lsh."""
     from project_final_parquet_spark.operators.dedup import (
-        dedup_near_minhash_lsh,
-    )
-    from project_final_parquet_spark.operators.dedup4 import (
         dedup_minhash_adaptive_bands,
+        dedup_near_minhash_lsh,
     )
 
     adapt = dedup_minhash_adaptive_bands(spark, SF).collect()
@@ -620,8 +618,6 @@ def test_minhash_adaptive_grows_and_matches_python_replay(spark, big_docs):
         _MH_B,
         _MH_P,
         _MINHASH_K,
-    )
-    from project_final_parquet_spark.operators.dedup4 import (
         adaptive_rows_per_band,
         dedup_minhash_adaptive_bands,
     )

@@ -31,14 +31,12 @@ from project_final_parquet_spark.operators.pipeline17 import (
     orders_theil_sen_trend,
     text_hellinger_sources,
 )
-from project_final_parquet_spark.operators.similarity11 import (
+from project_final_parquet_spark.operators.ann import (
+    NPROBE,
     _CENT_SCALE,
     _DIST_SCALE,
-    _NPROBE,
-    adaptive_cell_bits,
-)
-from project_final_parquet_spark.operators.similarity12 import (
     _NSHARDS,
+    adaptive_cell_bits,
     sim_ivf_sharded,
 )
 
@@ -376,7 +374,7 @@ def test_ivf_sharded_replay(spark, shard_corpus):
             d2s[int(cell)] = int(
                 np.floor((cent - q) ** 2 * _DIST_SCALE).sum()
             )
-        for cell in sorted(d2s, key=lambda c: (d2s[c], c))[:_NPROBE]:
+        for cell in sorted(d2s, key=lambda c: (d2s[c], c))[:NPROBE]:
             probed.add((s, cell))
     in_probe = np.array(
         [(int(shards[i]), int(cells[i])) in probed for i in range(n)]
@@ -720,7 +718,7 @@ def test_ivf_sharded_occupancy_accounts_per_shard(spark, shard_corpus):
     exactly: per-shard cell and vector totals equal the numpy
     replay's, and every shard appears."""
     from tests.test_round11_ops import _np_cells
-    from project_final_parquet_spark.operators.similarity12 import (
+    from project_final_parquet_spark.operators.ann import (
         sim_ivf_sharded_occupancy,
     )
 
@@ -747,7 +745,7 @@ def test_ivf_sharded_recall_replay(spark, shard_corpus):
     replay — candidate counts are the S·NPROBE probed cells'
     populations (minus self), hits the exact top-10 members inside."""
     from tests.test_round11_ops import _np_cells
-    from project_final_parquet_spark.operators.similarity12 import (
+    from project_final_parquet_spark.operators.ann import (
         sim_ivf_sharded_recall,
     )
 
@@ -776,7 +774,7 @@ def test_ivf_sharded_recall_replay(spark, shard_corpus):
                 d2s[int(cell)] = int(
                     np.floor((cent - v[a]) ** 2 * _DIST_SCALE).sum()
                 )
-            for cell in sorted(d2s, key=lambda c: (d2s[c], c))[:_NPROBE]:
+            for cell in sorted(d2s, key=lambda c: (d2s[c], c))[:NPROBE]:
                 probed.add((s, cell))
         in_probe = np.array(
             [(int(shards[i]), int(cells[i])) in probed for i in range(n)]

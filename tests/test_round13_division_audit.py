@@ -1,7 +1,7 @@
 """Round-13 division audit: degenerate LEGAL inputs that zero a
 statistic's denominator must produce NULL, never an ANSI
-DIVIDE_BY_ZERO abort (the r12-judge crash class, swept registry-wide
-this round — see ROUND13_NOTES "Division audit").
+DIVIDE_BY_ZERO abort. Every statistic with a division was swept for
+this crash class.
 
 Each test builds the smallest corpus that zeroes one denominator:
 constant columns, single-row groups, single-class labels, regular
@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 from project_final_parquet_spark.operators.events_analytics import (
     events_time_weighted_avg,
 )
-from project_final_parquet_spark.operators.llm_text4 import (
+from project_final_parquet_spark.operators.llm_text import (
     text_bpe_fertility_by_lang,
 )
 from project_final_parquet_spark.operators.ml_eval import (
@@ -40,7 +40,7 @@ from project_final_parquet_spark.operators.pipeline16 import (
     ml_auc_delong_ci,
     orders_spearman_price_items,
 )
-from project_final_parquet_spark.operators.relational4 import (
+from project_final_parquet_spark.operators.relational import (
     q59_stat_moments,
     q64_groupwise_ols,
 )

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.events_analytics2 import events_ewma
-from project_final_parquet_spark.operators.llm_text3 import (
+from project_final_parquet_spark.operators.events_analytics import events_ewma
+from project_final_parquet_spark.operators.llm_text import (
     _N_BOOT,
     bootstrap_token_stats,
     text_boilerplate_ngrams,
@@ -22,7 +22,7 @@ from project_final_parquet_spark.operators.pipeline2 import (
 from project_final_parquet_spark.operators.profiling import (
     embeddings_norm_audit,
 )
-from project_final_parquet_spark.operators.relational5 import (
+from project_final_parquet_spark.operators.relational import (
     q68_revenue_mom_change,
     q69_variant_shred,
 )
@@ -230,7 +230,7 @@ def test_bucketed_join_query_is_exchange_free_until_agg(spark, sf_dir):
 
 
 def test_semantic_dedup_drop_invariants(spark, sf_dir):
-    from project_final_parquet_spark.operators.dedup3 import (
+    from project_final_parquet_spark.operators.dedup import (
         _K,
         _TAU,
         dedup_semantic,
@@ -246,7 +246,7 @@ def test_semantic_dedup_drop_invariants(spark, sf_dir):
 
 
 def test_trained_pq_valid_codes_and_ordering(spark, sf_dir):
-    from project_final_parquet_spark.operators.similarity4 import (
+    from project_final_parquet_spark.operators.quantization import (
         _K,
         _M,
         sim_pq_trained,

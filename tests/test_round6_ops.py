@@ -6,7 +6,7 @@ from __future__ import annotations
 from collections import Counter, defaultdict
 
 from project_final_parquet_spark.operators.pipeline5 import (
-    _CHURN_WINDOW_DAYS,
+    CHURN_WINDOW_DAYS,
     _FK_EDGES,
     _KCORE_K,
     _KCORE_ROUNDS,
@@ -80,7 +80,7 @@ def test_churn_hazard_matches_python_replay(spark, sf_dir):
     c_cnt: Counter = Counter()
     for _, (f, l) in per.iterrows():
         dur = (l - f) // 7
-        if l < end - (_CHURN_WINDOW_DAYS - 1):
+        if l < end - (CHURN_WINDOW_DAYS - 1):
             d_cnt[dur] += 1
         else:
             c_cnt[dur] += 1

@@ -16,9 +16,9 @@ from project_final_parquet_spark.operators.ml_eval import (
     ml_score_deciles_lift,
 )
 from project_final_parquet_spark.operators.pipeline4 import (
-    _INC_HASH,
-    _INC_MOD,
-    _INC_THRESH,
+    INC_HASH,
+    INC_MOD,
+    INC_THRESH,
 )
 from project_final_parquet_spark.operators.pipeline6 import (
     dq_l_diversity,
@@ -34,7 +34,7 @@ from project_final_parquet_spark.operators.pipeline7 import (
     text_keyphrase_rake,
 )
 from project_final_parquet_spark.operators.vector_stats import (
-    _VSCALE,
+    VSCALE,
     probe_scores,
 )
 from project_final_parquet_spark.plans import physical_plan, plan_facts
@@ -59,8 +59,8 @@ def _probe_scores_py(sf_dir):
     dim = len(vecs[0])
     wv = []
     for j in range(dim):
-        s = sum(math.floor(float(v[j]) * _VSCALE) for v in lab0)
-        wv.append(s / len(lab0) / _VSCALE)
+        s = sum(math.floor(float(v[j]) * VSCALE) for v in lab0)
+        wv.append(s / len(lab0) / VSCALE)
     scores = []
     for v in vecs:
         acc = 0.0
@@ -185,17 +185,17 @@ def test_centroid_drift_matches_numpy_replay(spark, sf_dir):
     emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
     vecs = np.stack([np.asarray(v, dtype=np.float32) for v in emb["embedding"]])
     is_batch = (
-        (emb["vec_id"].to_numpy() % _INC_MOD) * _INC_HASH
-    ) % _INC_MOD < _INC_THRESH
+        (emb["vec_id"].to_numpy() % INC_MOD) * INC_HASH
+    ) % INC_MOD < INC_THRESH
     for lab in sorted(set(emb["label"])):
         m = emb["label"].to_numpy() == lab
         vh, vb = vecs[m & ~is_batch], vecs[m & is_batch]
         r = rows[lab]
         assert r.n_hist == len(vh) and r.n_batch == len(vb)
-        fh = np.floor(vh.astype(np.float64) * _VSCALE).sum(axis=0)
-        fb = np.floor(vb.astype(np.float64) * _VSCALE).sum(axis=0)
-        ch = fh / len(vh) / _VSCALE
-        cb = fb / len(vb) / _VSCALE
+        fh = np.floor(vh.astype(np.float64) * VSCALE).sum(axis=0)
+        fb = np.floor(vb.astype(np.float64) * VSCALE).sum(axis=0)
+        ch = fh / len(vh) / VSCALE
+        cb = fb / len(vb) / VSCALE
         assert _close(r.l2_drift, float(np.sqrt(((cb - ch) ** 2).sum())))
         cos = float(
             (ch * cb).sum()
@@ -672,7 +672,7 @@ def _cosines_py(sf_dir):
 
 
 def test_filtered_topk_matches_python_replay(spark, sf_dir):
-    from project_final_parquet_spark.operators.similarity6 import (
+    from project_final_parquet_spark.operators.similarity import (
         _FILT_K,
         _FILT_LABEL,
         sim_filtered_topk,
@@ -702,7 +702,7 @@ def test_filtered_topk_pushes_label_predicate(spark):
 
 
 def test_multi_query_topk_matches_python_replay(spark, sf_dir):
-    from project_final_parquet_spark.operators.similarity6 import (
+    from project_final_parquet_spark.operators.similarity import (
         _BATCH_K,
         _BATCH_QIDS,
         sim_multi_query_topk,

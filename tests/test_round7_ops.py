@@ -172,13 +172,13 @@ def test_stratified_exact_matches_replay(spark, sf_dir):
 
 def test_schema_drift_matches_replay(spark, sf_dir):
     from project_final_parquet_spark.operators.pipeline4 import (
-        _INC_HASH,
-        _INC_MOD,
-        _INC_THRESH,
+        INC_HASH,
+        INC_MOD,
+        INC_THRESH,
     )
 
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
-    b = ((docs["doc_id"] % _INC_MOD) * _INC_HASH) % _INC_MOD < _INC_THRESH
+    b = ((docs["doc_id"] % INC_MOD) * INC_HASH) % INC_MOD < INC_THRESH
     h, bt = docs[~b], docs[b]
     exp = {
         ("rows", "count"): (len(h), len(bt)),
@@ -262,10 +262,7 @@ def test_ivf_balance_matches_replay(spark, sf_dir):
 
 
 def test_recall_curve_matches_replay(spark, sf_dir):
-    from project_final_parquet_spark.operators.similarity import (
-        _N_PLANES,
-        _PLANES,
-    )
+    from project_final_parquet_spark.operators.ann import _N_PLANES, _PLANES
 
     emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
     vecs = {
@@ -406,11 +403,7 @@ def test_eval_harness_two_scans_one_sort(spark):
 
 
 def test_pq_recall_audit_matches_replay(spark, sf_dir):
-    from project_final_parquet_spark.operators.similarity4 import (
-        _K,
-        _M,
-        _SUB,
-    )
+    from project_final_parquet_spark.operators.quantization import _K, _M, _SUB
 
     emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
     vecs = {

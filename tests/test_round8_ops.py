@@ -11,10 +11,7 @@ import math
 
 import pandas as pd
 
-from project_final_parquet_spark.operators.similarity import (
-    _PLANES,
-)
-from project_final_parquet_spark.operators.similarity8 import _PROBE_MASKS
+from project_final_parquet_spark.operators.ann import _PLANES, _PROBE_MASKS
 from project_final_parquet_spark.plans import plan_facts
 from project_final_parquet_spark.registry import all_queries
 

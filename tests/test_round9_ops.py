@@ -12,7 +12,7 @@ from collections import Counter, defaultdict
 
 import pandas as pd
 
-from project_final_parquet_spark.operators.similarity import _PLANES
+from project_final_parquet_spark.operators.ann import _PLANES
 from project_final_parquet_spark.plans import plan_facts
 from project_final_parquet_spark.registry import all_queries
 
@@ -348,16 +348,16 @@ def test_ivm_delta_join_equals_full_recompute(spark):
 def test_chunk_dedup_impact_matches_replay(spark):
     import hashlib
 
-    from project_final_parquet_spark.operators.pipeline3 import _CHUNK_TOK
+    from project_final_parquet_spark.operators.pipeline3 import CHUNK_TOK
 
     docs = pd.read_parquet(f"{SMALL_SF}/documents.parquet")
     occ = defaultdict(list)  # hash -> [(site, source)]
     for r in docs.itertuples():
         toks = r.text.split(" ")
         for i in range(16):
-            if len(toks) < (i + 1) * _CHUNK_TOK:
+            if len(toks) < (i + 1) * CHUNK_TOK:
                 break
-            chunk = " ".join(toks[i * _CHUNK_TOK : (i + 1) * _CHUNK_TOK])
+            chunk = " ".join(toks[i * CHUNK_TOK : (i + 1) * CHUNK_TOK])
             h = hashlib.md5(chunk.encode()).hexdigest()
             occ[h].append((r.doc_id * 1000 + i, r.source))
     per_src = defaultdict(lambda: [0, 0])  # chunks, removed
@@ -373,7 +373,7 @@ def test_chunk_dedup_impact_matches_replay(spark):
         ).collect()
     }
     assert got == {
-        src: (c, d, d * _CHUNK_TOK) for src, (c, d) in per_src.items()
+        src: (c, d, d * CHUNK_TOK) for src, (c, d) in per_src.items()
     }
 
 

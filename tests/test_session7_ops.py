@@ -7,7 +7,7 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.events_analytics2 import (
+from project_final_parquet_spark.operators.events_analytics import (
     events_anomaly_mad,
 )
 from project_final_parquet_spark.operators.graph import (
@@ -241,7 +241,7 @@ def test_linear_probe_auc_matches_numpy_replay(spark, sf_dir):
     import pandas as pd
 
     from project_final_parquet_spark.operators.vector_stats import (
-        _VSCALE,
+        VSCALE,
         ml_linear_probe_auc,
     )
 
@@ -253,8 +253,8 @@ def test_linear_probe_auc_matches_numpy_replay(spark, sf_dir):
     X = np.array([np.asarray(v, dtype=np.float64) for v in emb.embedding])
     labels = emb.label.to_numpy()
     pos = X[labels == 0]
-    s = np.floor(pos * _VSCALE).astype(np.int64).sum(axis=0)
-    w = s.astype(np.float64) / len(pos) / _VSCALE
+    s = np.floor(pos * VSCALE).astype(np.int64).sum(axis=0)
+    w = s.astype(np.float64) / len(pos) / VSCALE
     # left-fold dot to mirror the engines' fold order
     scores = np.zeros(len(X))
     for j in range(X.shape[1]):
@@ -276,7 +276,7 @@ def test_linear_probe_auc_matches_numpy_replay(spark, sf_dir):
 
 
 def test_srm_chi2_closed_form_and_counts(spark, sf_dir):
-    from project_final_parquet_spark.operators.events_analytics2 import (
+    from project_final_parquet_spark.operators.events_analytics import (
         events_ab_srm_check,
     )
     from project_final_parquet_spark.tables import load

@@ -16,7 +16,7 @@ from collections import Counter, defaultdict
 
 import pytest
 
-from project_final_parquet_spark.operators.events_analytics2 import (
+from project_final_parquet_spark.operators.events_analytics import (
     events_forecast_backtest,
 )
 from project_final_parquet_spark.operators.graph import (

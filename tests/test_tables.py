@@ -14,7 +14,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.tables import TABLE_NAMES, load, read_parquet
+from project_final_parquet_spark.tables import (
+    TABLE_NAMES,
+    load,
+    read_parquet,
+    row_count,
+)
 
 _REPO = Path(__file__).resolve().parent.parent
 _CORPORA = sorted(
@@ -110,3 +115,14 @@ def test_directory_without_data_file_names_the_path(spark, tmp_path):
     (empty / ".part-0.parquet.crc").write_text("")
     with pytest.raises(FileNotFoundError, match=re.escape(str(empty))):
         read_parquet(spark, str(empty))
+
+
+@pytest.mark.parametrize("table", ["embeddings", "documents"])
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_row_count_equals_count(spark, jobs_run_by, sf, table):
+    """``row_count`` reads the Parquet footers with no Spark job and
+    equals the row count a scan of the table gives."""
+    sf_dir = f"/root/testdata/{sf}"
+    jobs, counts = jobs_run_by(lambda: [row_count(sf_dir, table)])
+    assert jobs == 0
+    assert counts[0] == load(spark, sf_dir, table).count() > 0

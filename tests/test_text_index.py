@@ -10,7 +10,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from project_final_parquet_spark.operators.similarity4 import _K, _M, sim_pq_adc
+from project_final_parquet_spark.operators.quantization import (
+    _K,
+    _M,
+    sim_pq_adc,
+)
 from project_final_parquet_spark.operators.text_index import (
     _POSTINGS_HEAD,
     _TERMS,

@@ -101,7 +101,7 @@ def test_seasonality_covers_all_events(spark, sf_dir):
 
 
 def test_matryoshka_scores_bounded(spark, sf_dir):
-    from project_final_parquet_spark.operators.similarity5 import (
+    from project_final_parquet_spark.operators.quantization import (
         sim_matryoshka_prefix,
     )
 

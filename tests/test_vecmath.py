@@ -377,9 +377,8 @@ def test_one_dot_product_implementation():
                 defs.append(f"{path.name}:{node.lineno}")
     assert zip_with == {
         "vecmath.py",
-        "similarity2.py",
-        "similarity4.py",
-        "dedup3.py",
+        "quantization.py",
+        "dedup.py",
     }
     assert not folds, folds
     assert not defs, defs
@@ -390,8 +389,8 @@ def test_plane_literal_matches_scalar_literals(spark):
     over its scalar literals, as doubles, and the dots against it are
     bit-equal. (Its type is ``F.lit``'s for an array, which marks the
     elements nullable where ``F.array`` of non-null literals does not.)"""
-    from project_final_parquet_spark.operators.similarity import _PLANES
-    from project_final_parquet_spark.operators.similarity3 import _R
+    from project_final_parquet_spark.operators.ann import _PLANES
+    from project_final_parquet_spark.operators.quantization import _R
 
     rng = random.Random(5)
     emb = spark.createDataFrame(

@@ -13,9 +13,9 @@ Usage:
   python tools/measure_queries.py [--sf-dir DIR] [--plans DIR] \
       [--reps N] [--out FILE] query [query ...]
 
-Timings print per rep; the minimum rep is the recorded number (the
-page-cache / JIT-warmup guidance from ROUND13_NOTES: trust isolated
-re-timings, compare like against like).
+Timings print per rep; the minimum rep is the recorded number: the
+first reps pay the page cache and JIT warm-up, so only isolated
+re-timings are trusted, and like is compared against like.
 """
 
 from __future__ import annotations
