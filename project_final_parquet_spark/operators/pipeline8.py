@@ -50,7 +50,10 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on a half-ulp rounds HALF_UP in Spark but differently in DuckDB —
 # caught by the oracle gate on this very query), and the DECIMAL(38,0)
 # sum of the floors is exact at any row count. Same convention as
-# vector_stats' floor-scaled BIGINT sums, widened to decimal.
+# vector_stats' floor-scaled BIGINT sums, widened to decimal. The Spark
+# side is registry.fsum; this SQL is registry.FSUM_SQL without its outer
+# parentheses, the spelling these oracles (and pipeline9's) were written
+# with.
 _FSCALE = "1000000.0"
 FSUM_BARE_SQL = (
     "CAST(CAST(SUM(CAST(FLOOR(({expr}) * " + _FSCALE + ") "
