@@ -62,7 +62,7 @@ def _resolve_dep_jar(jars: Path, pat: str) -> str:
         raise FileNotFoundError(
             f"JVM build dependency {pat!r} not found in {jars} "
             f"(SPARK_HOME={os.environ.get('SPARK_HOME', '<unset>')}). "
-            "The JVM sources need the parquet/hadoop/spark-sql-api/scala jars "
+            "The JVM sources need the parquet/hadoop/spark/scala jars "
             "Spark ships."
         )
     # Deterministic pick: highest version sorts last.
@@ -70,8 +70,11 @@ def _resolve_dep_jar(jars: Path, pat: str) -> str:
 
 
 def _build_jar(sources: list[Path], jar: Path) -> None:
-    """Compile ``sources`` into ``jar`` (javac 17 + the parquet/hadoop/
-    spark-sql-api/scala-library jars Spark already ships)."""
+    """Compile ``sources`` into ``jar`` (javac 17 + the parquet, hadoop,
+    Spark and scala-library jars Spark already ships). The k-means
+    statistics kernel needs the Dataset and RDD API: spark-sql,
+    spark-catalyst and spark-core, ``Logging`` from spark-common-utils
+    and ``Function2`` from spark-common-utils-java."""
     spark_home = os.environ.get("SPARK_HOME", "/opt/spark")
     jars = Path(spark_home) / "jars"
     cp = os.pathsep.join(
@@ -81,6 +84,11 @@ def _build_jar(sources: list[Path], jar: Path) -> None:
             "parquet-common-*.jar",
             "hadoop-client-api-*.jar",
             "spark-sql-api_*.jar",
+            "spark-sql_*.jar",
+            "spark-catalyst_*.jar",
+            "spark-core_*.jar",
+            "spark-common-utils_*.jar",
+            "spark-common-utils-java*.jar",
             "scala-library-*.jar",
         )
     )
@@ -107,6 +115,8 @@ def _build_jar(sources: list[Path], jar: Path) -> None:
 _REGISTERED: weakref.WeakKeyDictionary[SparkSession, set[str]] = (
     weakref.WeakKeyDictionary()
 )
+# Per live session: the static kernel methods ``call_static`` has looked up.
+_METHODS: weakref.WeakKeyDictionary[SparkSession, dict] = weakref.WeakKeyDictionary()
 
 
 @functools.cache
@@ -159,6 +169,30 @@ def register_java_functions(
         for fn, (cls, return_type) in functions.items():
             spark.udf.registerJavaFunction(fn, cls, return_type)
     registered.update(functions)
+
+
+def call_static(spark: SparkSession, cls: str, method: str, *args):
+    """``cls.method(*args)``: a public static method of the ``jvm/`` jar.
+
+    The class is loaded through the session's jar class loader and the
+    ``java.lang.reflect.Method`` kept, once per session: a py4j ``jvm``
+    lookup goes through the calling thread's context class loader, and
+    only the JVM thread that ran ``ADD JAR`` has the jar on that loader
+    (from any other thread the name resolves to a ``JavaPackage``)."""
+    methods = _METHODS.setdefault(spark, {})
+    key = f"{cls}.{method}"
+    if key not in methods:
+        ensure_pme_jar(spark)
+        loader = spark._jsparkSession.sharedState().jarClassLoader()
+        methods[key] = next(
+            m for m in loader.loadClass(cls).getMethods() if m.getName() == method
+        )
+    jargs = spark.sparkContext._gateway.new_array(
+        getattr(spark._jvm, "java.lang.Object"), len(args)
+    )
+    for i, arg in enumerate(args):
+        jargs[i] = arg
+    return methods[key].invoke(None, jargs)
 
 
 def _crypto_options(keys: dict[str, bytes], footer_key=None, column_keys=None) -> dict[str, str]:

@@ -48,6 +48,7 @@ from .vecmath import norm, with_pair_cosine
 
 
 def text_tokens():
+    """The tokens of ``documents.text``, which is space-separated."""
     return F.split(F.col("text"), " ")
 
 

@@ -29,11 +29,6 @@ from .dedup import ngrams, text_tokens
 from .pipeline3 import CHUNK_TOK
 
 
-# Shared tokenizer: documents.text is space-separated tokens.
-def _tokens(col: str = "text"):
-    return F.split(F.col(col), " ")
-
-
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
 _STOP_SQL = "['" + "','".join(STOPWORDS) + "']"
@@ -55,7 +50,7 @@ _STOP_SQL = "['" + "','".join(STOPWORDS) + "']"
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counting + distinct-token and length statistics."""
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = text_tokens()
     return docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -94,7 +89,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality signals: stopword ratio, uniqueness ratio, bucket."""
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = text_tokens()
     stop = F.array(*[F.lit(s) for s in STOPWORDS])
     n = F.size(toks)
     uniq_ratio = F.size(F.array_distinct(toks)).cast("double") / n
@@ -167,7 +162,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword-overlap language ID; returns the (actual, predicted)
     confusion counts. Ties break lexicographically (de<en<es<fr<zh)."""
     docs = load(spark, sf_dir, "documents")
-    uniq = F.array_distinct(_tokens())
+    uniq = F.array_distinct(text_tokens())
     scores = {
         lang: F.size(
             F.array_intersect(uniq, F.array(*[F.lit(m) for m in markers]))
@@ -208,7 +203,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import ngrams
 
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = text_tokens()
     # _ngrams (slice+zip) avoids the quadratic lambda-inlining trap; the
     # reference fingerprint is over ALL shingles incl. duplicates, but
     # md5-min over distinct shingles is identical (min ignores repeats).
@@ -243,7 +238,7 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(_tokens()).alias("ws_tokens"),
+        F.size(text_tokens()).alias("ws_tokens"),
         F.size(
             F.regexp_extract_all(
                 F.col("text"), F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), 0
@@ -321,7 +316,7 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretraining pipeline. Declarative: explode over chunk indices +
     array slice; no UDTF needed, fully distributed, last chunk ragged."""
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = text_tokens()
     n_chunks = F.ceil(F.size(toks) / F.lit(float(_CHUNK))).cast("int")
     t = docs.select("doc_id", toks.alias("toks"), n_chunks.alias("nc"))
     exploded = t.select(
@@ -372,7 +367,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     t = docs.select(
-        "doc_id", "lang", F.size(_tokens()).cast("long").alias("n_tokens")
+        "doc_id", "lang", F.size(text_tokens()).cast("long").alias("n_tokens")
     )
     w = (
         W.partitionBy("lang")
@@ -411,7 +406,7 @@ def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide term frequency top-20 (explode → partial agg → top-k)."""
     docs = load(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(_tokens()).alias("term"))
+        docs.select(F.explode(text_tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.col("freq").desc(), F.col("term"))

@@ -13,19 +13,21 @@ iterative float algorithm):
   convergence loop).
 
 Scale (100 TB): the iteration state is k×64 doubles and lives on the
-DRIVER (the MLlib pattern): each round ships the centroids as one array
-literal into the ``kmeans_assign`` JVM kernel (see ``_assign_col`` for
-why built-in HOFs lose here), then ONE aggregation over a posexplode of
-the floor-scaled values collects k×dim rows of (count, scaled-integer
-sum) back to the driver — no crossJoin, no per-vector window shuffle, no
-localCheckpoint blocks, no Python worker. Per round the cluster shuffles
-k×dim partial sums per task (map-side partial aggs) and the driver holds
-k×64 doubles; data rows never shuffle at all. The returned assignment
-frame is a fully LAZY projection over the source — the only eager work
-at construction is the (iters-1) tiny stats collects. (The round-5
-form — crossJoin + row_number window + localCheckpoint per round —
-measured 6.1 s at sf0.1 isolated and 151.7 s under suite memory
-pressure, BENCH_r05; this form is one map-side pass per round.)
+DRIVER (the MLlib pattern). Each Lloyd update is ONE Spark job: the
+``kmeansStats`` JVM kernel (``vecmath.kmeans_stats``) runs one
+``treeAggregate`` over the scan that assigns every row with
+``kmeans_assign``'s arithmetic and adds its floor-scaled values into
+per-task partial sums of k×dim numbers, merged tree-wise as MLlib's
+KMeans does — no data row shuffles, no SQL aggregation is planned or
+re-optimised, no Python worker starts. The returned assignment frame is
+a fully LAZY projection over the source (the centroids ride into the
+``kmeans_assign`` SQL kernel as one array literal; see ``_assign_col``
+for why built-in HOFs lose here), so the only eager work at
+construction is the init collect and the (iters-1) stats jobs. (The
+round-5 form — crossJoin + row_number window + localCheckpoint per
+round — measured 6.1 s at sf0.1 isolated and 151.7 s under suite memory
+pressure, BENCH_r05; a posexplode aggregation per round then took two
+jobs and two adaptive re-plans.)
 
 NULLs follow the oracle: a NULL element or a NULL row drops out of the
 distance and of the centroid sums but counts in the cluster size.
@@ -136,18 +138,25 @@ def _assign_col(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> Column:
     centroid dimension travels as NaN, which the kernel drops as a NULL
     term. The kernel returns the centroid's position and ``ids`` maps it
     to the cid: a cluster that emptied has no centroid next round."""
-    spark = emb.sparkSession
-    vecmath.register_kernels(spark)
-    ids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    flat = np.array([c for _, c in cents], dtype=np.float64).reshape(-1)
+    vecmath.register_kernels(emb.sparkSession)
+    ids, flat = _centroid_array(cents)
     pos = F.call_function(
         vecmath.KMEANS_ASSIGN,
         F.col("embedding"),
-        vecmath.double_array_lit(flat),
+        vecmath.double_array_lit(flat.reshape(-1)),
         F.lit(_DIM),
         F.lit(float(_DSCALE)),
     )
     return F.lit(ids)[pos]
+
+
+def _centroid_array(
+    cents: list[tuple[int, list[float]]],
+) -> tuple[np.ndarray, np.ndarray]:
+    """The centroids' ids and their k×dim float64 values, in cid order."""
+    ids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    flat = np.array([c for _, c in cents], dtype=np.float64).reshape(-1, _DIM)
+    return ids, flat
 
 
 def _fixed_dim(vec) -> list[float]:
@@ -171,47 +180,22 @@ def _collect_init(emb: DataFrame) -> list[tuple[int, list[float]]]:
 def _collect_stats(
     emb: DataFrame, cents: list[tuple[int, list[float]]]
 ) -> list[tuple[int, int, tuple[int | None, ...]]]:
-    """One aggregation pass: per (cluster, dim), the floor-scaled integer
-    sum and the cluster row count — k×dim tiny rows back to the driver.
+    """One Lloyd round's statistics from ONE Spark job: per cluster, its
+    row count and, per dim, the exact sum of ``floor(v_d · CSCALE)``
+    over its rows (the oracle's BIGINT terms), for every cluster that
+    kept a row.
 
-    The assignment is projected BEFORE the explode, so the kernel runs
-    once per row (a select holding both would evaluate it above the
-    Generate, once per element). ``posexplode_outer`` keeps a NULL or
-    empty row as one (NULL, NULL) element, so COUNT(*) counts it as the
-    oracle does while SUM skips it: a cluster's row count is its d = 0
-    count plus its d = NULL count. A (cluster, dim) whose every value is
-    NULL has a NULL sum, the oracle's NULL centroid dimension."""
-    assigned = emb.select(_assign_col(emb, cents).alias("cid"), "embedding")
-    rows = (
-        assigned.select(
-            "cid",
-            F.posexplode_outer(
-                F.transform(
-                    "embedding", lambda x: F.floor(x.cast("double") * _CSCALE)
-                )
-            ).alias("d", "sv"),
-        )
-        .groupBy("cid", "d")
-        # DECIMAL(38,0): Spark's integral SUM overflows int64 silently;
-        # with CSCALE=1e9 and |v|~0.1 the long headroom is ~1e11 rows
-        # per (cid, dim) — under the 100 TB design point (ADVICE r6)
-        .agg(
-            F.sum(F.col("sv").cast("decimal(38,0)")).alias("sv"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    sums: dict[tuple[int, int], int] = {}
-    counts: dict[int, int] = {}
-    for r in rows:
-        cid, d = int(r["cid"]), r["d"]
-        if d in (0, None):
-            counts[cid] = counts.get(cid, 0) + int(r["n"])
-        if r["sv"] is not None:
-            sums[cid, d] = int(r["sv"])
+    The ``kmeansStats`` kernel (``vecmath.kmeans_stats``) assigns each
+    row with ``kmeans_assign``'s arithmetic and sums inside a
+    ``treeAggregate`` over the scan: no data row shuffles and no SQL
+    aggregation is planned. NULLs follow the oracle: every row counts
+    in its cluster's size, a NULL element or a NULL row adds no term,
+    and a (cluster, dim) with no term has a NULL sum, the oracle's NULL
+    centroid dimension."""
+    ids, flat = _centroid_array(cents)
+    counts, sums = vecmath.kmeans_stats(emb, "embedding", flat, _DSCALE, _CSCALE)
     return sorted(
-        (cid, n, tuple(sums.get((cid, d)) for d in range(_DIM)))
-        for cid, n in counts.items()
+        (int(cid), n, tuple(row)) for cid, n, row in zip(ids, counts, sums) if n
     )
 
 
@@ -250,9 +234,9 @@ def _lloyd(
     the update pass already collected: free.
 
     The returned assignment frame is fully LAZY (a projection with the
-    final centroids as literals); the construction-time work is the
-    (rounds - 1) k-row stats collects. See the module docstring for the
-    scale story."""
+    final centroids as literals); the construction-time work is the init
+    collect and one stats job per update. See the module docstring for
+    the scale story."""
     cents = _collect_init(emb)
     rounds = 0
     prev_stats: list | None = None

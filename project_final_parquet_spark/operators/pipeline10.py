@@ -892,7 +892,7 @@ def events_seasonal_residual_anomaly(
     )
 
 
-_ATTR_WINDOW_US = 7 * DAY_US  # attribution lookback
+ATTR_WINDOW_US = 7 * DAY_US  # attribution lookback
 
 
 @query(
@@ -909,7 +909,7 @@ _ATTR_WINDOW_US = 7 * DAY_US  # attribution lookback
     touch AS (
       SELECT p.pid, t.event_type
       FROM p JOIN t ON t.user_id = p.user_id
-                   AND t.tt < p.pt AND t.tt >= p.pt - {_ATTR_WINDOW_US}
+                   AND t.tt < p.pt AND t.tt >= p.pt - {ATTR_WINDOW_US}
     ),
     per AS (
       SELECT pid, event_type, CAST(COUNT(*) AS BIGINT) AS c
@@ -960,7 +960,7 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     touch = p.join(t, "user_id").filter(
         (F.col("tt") < F.col("pt"))
-        & (F.col("tt") >= F.col("pt") - _ATTR_WINDOW_US)
+        & (F.col("tt") >= F.col("pt") - ATTR_WINDOW_US)
     )
     per = touch.groupBy("pid", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("c")

@@ -21,7 +21,7 @@ from .similarity import DIM, DOT_SQL, NORM_SQL
 from .vecmath import dot, norm
 from .vector_stats import PROBE_SCORED_CTES, probe_scores
 
-_N_QUERIES = 20  # retrieval-eval query set: vec_id < this
+N_QUERIES = 20  # retrieval-eval query set: vec_id < this
 
 _COS = (
     f"{DOT_SQL.format(dim=DIM, a='q.qv', b='c.embedding')}"
@@ -34,11 +34,11 @@ _COS = (
 # ml_topk_accuracy read the same relation)
 _HITS_CTES = f"""q AS (
       SELECT vec_id AS qid, CAST(label AS INT) AS qlabel, embedding AS qv
-      FROM embeddings WHERE vec_id < {_N_QUERIES}
+      FROM embeddings WHERE vec_id < {N_QUERIES}
     ),
     corpus AS (
       SELECT vec_id, CAST(label AS INT) AS label, embedding
-      FROM embeddings WHERE vec_id >= {_N_QUERIES}
+      FROM embeddings WHERE vec_id >= {N_QUERIES}
     ),
     scored AS (
       SELECT q.qid, q.qlabel, c.label,
@@ -57,13 +57,13 @@ def _first_hit_ranks(spark: SparkSession, sf_dir: str):
     rank). The query set broadcasts; scoring is map-side; the rank is
     a window keyed by query id."""
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("label").cast("int").alias("qlabel"),
         F.col("embedding").alias("qv"),
         norm(F.col("embedding")).alias("nq"),
     )
-    corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
+    corpus = emb.filter(F.col("vec_id") >= N_QUERIES).select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
         "embedding",
@@ -100,7 +100,7 @@ def _first_hit_ranks(spark: SparkSession, sf_dir: str):
 )
 def ml_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean-reciprocal-rank audit of the embedding space as a
-    retrieval index: each of the first {_N_QUERIES} vectors queries the
+    retrieval index: each of the first {N_QUERIES} vectors queries the
     rest of the corpus, and its reciprocal rank is 1/position of the
     first SAME-label neighbor in the exact cosine ranking — the
     retrieval-eval twin of ml_linear_probe_auc (there: global

@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 
 from ..registry import DAY_US, DSUM_SQL, EPOCH_US_SQL, dsum, query
 from ..tables import load
+from .pipeline10 import ATTR_WINDOW_US
 
 # U-shaped (position-based) attribution weights, written as literals so
 # both engines parse identical doubles: 40% first touch, 40% last touch,
@@ -31,7 +32,6 @@ from ..tables import load
 _POS_FIRST = "0.4"
 _POS_LAST = "0.4"
 _POS_MID = "0.2"
-_ATTR_WINDOW_US = 7 * DAY_US  # same lookback as the linear/last-touch pair
 
 
 @query(
@@ -308,7 +308,7 @@ def events_power_user_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     touch AS (
       SELECT p.pid, t.tid, t.event_type, t.tt
       FROM p JOIN t ON t.user_id = p.user_id
-                   AND t.tt < p.pt AND t.tt >= p.pt - {_ATTR_WINDOW_US}
+                   AND t.tt < p.pt AND t.tt >= p.pt - {ATTR_WINDOW_US}
     ),
     pos AS (
       SELECT pid, event_type,
@@ -361,7 +361,7 @@ def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     touch = p.join(t, "user_id").filter(
         (F.col("tt") < F.col("pt"))
-        & (F.col("tt") >= F.col("pt") - _ATTR_WINDOW_US)
+        & (F.col("tt") >= F.col("pt") - ATTR_WINDOW_US)
     )
     w_pos = W.partitionBy("pid").orderBy("tt", "tid")
     w_n = W.partitionBy("pid")

@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 from ..ckpt import checkpoint
 from ..registry import query
 from ..tables import load
+from .pipeline11 import N_QUERIES
 from .similarity import DIM, DOT_SQL, NORM_SQL
 from .vecmath import dot, norm
 from .vector_stats import PROBE_SCORED_CTES
@@ -31,7 +32,6 @@ from .vector_stats import PROBE_SCORED_CTES
 # --- NDCG@10 over the shared retrieval-eval frame ---------------------------
 
 _NDCG_K = 10
-_N_QUERIES = 20  # the pipeline11 retrieval-eval query set: vec_id < 20
 
 # log2 discounts as INTEGER literals (floor(1e9 / log2(rank + 1))),
 # precomputed once in Python and embedded verbatim in BOTH engines —
@@ -56,11 +56,11 @@ _IDCG_SQL = "[" + ", ".join(str(c) for c in _IDCG_CUM) + "]"
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS qid, CAST(label AS INT) AS qlabel, embedding AS qv
-      FROM embeddings WHERE vec_id < {_N_QUERIES}
+      FROM embeddings WHERE vec_id < {N_QUERIES}
     ),
     corpus AS (
       SELECT vec_id, CAST(label AS INT) AS label, embedding
-      FROM embeddings WHERE vec_id >= {_N_QUERIES}
+      FROM embeddings WHERE vec_id >= {N_QUERIES}
     ),
     scored AS (
       SELECT q.qid, q.qlabel, c.label,
@@ -109,13 +109,13 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     At production scale the exact ranking swaps for the gated ANN
     shortlists (sim_topk_adaptive et al.) in the same pipeline shape."""
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("label").cast("int").alias("qlabel"),
         F.col("embedding").alias("qv"),
         norm(F.col("embedding")).alias("nq"),
     )
-    corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
+    corpus = emb.filter(F.col("vec_id") >= N_QUERIES).select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
         "embedding",

@@ -214,7 +214,7 @@ def events_winsorized_mean_binned(
 
 # --- exact Mann–Whitney U ----------------------------------------------------
 
-_MWU_A, _MWU_B = "click", "purchase"
+MWU_A, MWU_B = "click", "purchase"
 
 
 @query(
@@ -222,11 +222,11 @@ _MWU_A, _MWU_B = "click", "purchase"
     oracle=f"""
     WITH pool AS (
       SELECT event_type, value FROM events
-      WHERE event_type IN ('{_MWU_A}', '{_MWU_B}')
+      WHERE event_type IN ('{MWU_A}', '{MWU_B}')
     ),
     per_v AS (
       SELECT value AS v,
-             CAST(SUM(CASE WHEN event_type = '{_MWU_A}' THEN 1 ELSE 0 END)
+             CAST(SUM(CASE WHEN event_type = '{MWU_A}' THEN 1 ELSE 0 END)
                   AS BIGINT) AS a,
              CAST(COUNT(*) AS BIGINT) AS t
       FROM pool GROUP BY value
@@ -285,11 +285,11 @@ def events_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     KS-test shape — a range-partitioned sort of the value DOMAIN, the
     price of any exact rank statistic), a 1-row reduce."""
     ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(_MWU_A, _MWU_B)
+        F.col("event_type").isin(MWU_A, MWU_B)
     )
     per_v = ev.groupBy(F.col("value").alias("v")).agg(
         F.sum(
-            F.when(F.col("event_type") == _MWU_A, 1).otherwise(0)
+            F.when(F.col("event_type") == MWU_A, 1).otherwise(0)
         )
         .cast("long")
         .alias("a"),
@@ -338,7 +338,7 @@ def events_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 events_mann_whitney_u.__doc__ = events_mann_whitney_u.__doc__.format(
-    A=_MWU_A, B=_MWU_B
+    A=MWU_A, B=MWU_B
 )
 
 
@@ -636,7 +636,7 @@ events_kendall_tau_hour.__doc__ = events_kendall_tau_hour.__doc__.replace(
 
 # --- Theil–Sen robust trend ---------------------------------------------------
 
-_SEN_BIN = 1000.0  # slope-bin width for the two-phase median selection
+SEN_BIN = 1000.0  # slope-bin width for the two-phase median selection
 
 
 @query(
@@ -734,14 +734,14 @@ def orders_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # two-phase median selection (the dq_tukey_outlier_fences trick,
     # applied to the slope frame): phase 1 buckets slopes into
-    # _SEN_BIN-wide bins and finds the bins holding the two middle
+    # SEN_BIN-wide bins and finds the bins holding the two middle
     # ranks from the bin-domain cumulative counts; phase 2 ranks ONLY
     # those bins' rows. bin = floor(s/W) is monotone in s and slope
     # ties share a bin, so the selection is exact under the same
     # (s, d1, d2) total order the oracle ranks globally — no 2.9M-row
     # single-partition sort on the Spark side.
     binned = slopes.withColumn(
-        "sbin", F.floor(F.col("s") / _SEN_BIN).cast("long")
+        "sbin", F.floor(F.col("s") / SEN_BIN).cast("long")
     )
     per_bin = binned.groupBy("sbin").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -1701,7 +1701,7 @@ def q76_nth_value_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # === batch 4: price-index economics and column-completeness DQ ===============
 
-_PERIOD_US = 30 * DAY_US  # 30-day periods: TZ-free integer bucketing
+PERIOD_US = 30 * DAY_US  # 30-day periods: TZ-free integer bucketing
 
 
 # The basket sums aggregate PRODUCTS OF COMPUTED DOUBLES (unit price ×
@@ -1716,7 +1716,7 @@ _PERIOD_US = 30 * DAY_US  # 30-day periods: TZ-free integer bucketing
     oracle=f"""
     WITH pp AS (
       SELECT l_partkey AS part,
-             epoch_us(l_shipdate) // {_PERIOD_US} AS period,
+             epoch_us(l_shipdate) // {PERIOD_US} AS period,
              {DSUM_SQL.format(expr="l_extendedprice")}
                / {DSUM_SQL.format(expr="l_quantity")} AS price,
              {DSUM_SQL.format(expr="l_quantity")} AS qty
@@ -1764,7 +1764,7 @@ def orders_laspeyres_price_index(
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("part"),
         F.expr(
-            f"{EPOCH_US_SQL.format(col='l_shipdate')} div {_PERIOD_US}"
+            f"{EPOCH_US_SQL.format(col='l_shipdate')} div {PERIOD_US}"
         ).alias("period"),
         "l_extendedprice",
         "l_quantity",

@@ -64,18 +64,16 @@ from ..registry import (
     query,
 )
 from ..tables import load
+from .pipeline17 import PERIOD_US
 
-_PERIOD_US = 30 * DAY_US  # Laspeyres-family 30-day periods
-
-
-_DAILY_REV_SQL = f"""daily AS (
+DAILY_REV_SQL = f"""daily AS (
       SELECT epoch_us(o_orderdate) // {DAY_US} AS d,
              {DSUM_SQL.format(expr="o_totalprice")} AS y
       FROM orders GROUP BY 1
     )"""
 
 
-def _daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
+def daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily order revenue — the shared calendar-bounded series the
     trend/randomness tests run on (orders_theil_sen_trend's frame)."""
     orders = load(spark, sf_dir, "orders")
@@ -92,7 +90,7 @@ def _daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "orders_mann_kendall_trend",
     oracle=f"""
-    WITH {_DAILY_REV_SQL},
+    WITH {DAILY_REV_SQL},
     pairs AS (
       SELECT COALESCE(CAST(SUM(CASE WHEN b.y > a.y THEN 1
                                     WHEN b.y < a.y THEN -1
@@ -143,7 +141,7 @@ def orders_mann_kendall_trend(
     corpus size (the theil_sen precedent: row-proportional work is
     only the first map-side daily rollup); the broadcast self-join
     never touches row-scale data."""
-    daily = _daily_rev(spark, sf_dir)
+    daily = daily_rev(spark, sf_dir)
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(F.broadcast(b), F.col("b.d") > F.col("a.d")).agg(
         F.coalesce(
@@ -196,7 +194,7 @@ def orders_mann_kendall_trend(
 @query(
     "orders_runs_test_median",
     oracle=f"""
-    WITH {_DAILY_REV_SQL},
+    WITH {DAILY_REV_SQL},
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM daily),
     med AS (
       SELECT y AS m FROM (
@@ -246,7 +244,7 @@ def orders_runs_test_median(
     the lag window both run over ≤ |days| rows — the MWU "domain sort"
     price, never a row-scale sort; row-proportional work is only the
     first map-side rollup."""
-    daily = _daily_rev(spark, sf_dir)
+    daily = daily_rev(spark, sf_dir)
     nn = daily.agg(F.count(F.lit(1)).cast("long").alias("n"))
     ranked = daily.select(
         "y", F.row_number().over(W.orderBy("y", "d")).alias("rn")
@@ -533,7 +531,7 @@ def events_poisson_dispersion(
     oracle=f"""
     WITH pp AS (
       SELECT l_partkey AS part,
-             epoch_us(l_shipdate) // {_PERIOD_US} AS period,
+             epoch_us(l_shipdate) // {PERIOD_US} AS period,
              {DSUM_SQL.format(expr="l_extendedprice")}
                / {DSUM_SQL.format(expr="l_quantity")} AS price,
              {DSUM_SQL.format(expr="l_quantity")} AS qty
@@ -588,7 +586,7 @@ def orders_paasche_fisher_index(
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("part"),
         F.expr(
-            f"{EPOCH_US_SQL.format(col='l_shipdate')} div {_PERIOD_US}"
+            f"{EPOCH_US_SQL.format(col='l_shipdate')} div {PERIOD_US}"
         ).alias("period"),
         "l_extendedprice",
         "l_quantity",

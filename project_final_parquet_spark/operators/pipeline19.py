@@ -73,41 +73,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..ckpt import checkpoint
-from ..registry import (
-    DAY_US,
-    DSUM_SQL,
-    EPOCH_US_SQL,
-    HOUR_US,
-    dsum,
-    fsum,
-    query,
-)
+from ..registry import DAY_US, HOUR_US, fsum, query
 from ..tables import load
+from .pipeline18 import DAILY_REV_SQL, daily_rev
 
 
 # ordered sequential fold over a bounded key domain — the shared
 # convention helpers (registry.py; module note above)
 from ..registry import OFOLD_SQL as _OFOLD_SQL  # noqa: E402
 from ..registry import ofold as _ofold  # noqa: E402
-
-
-_DAILY_REV_SQL = f"""daily AS (
-      SELECT epoch_us(o_orderdate) // {DAY_US} AS d,
-             {DSUM_SQL.format(expr="o_totalprice")} AS y
-      FROM orders GROUP BY 1
-    )"""
-
-
-def _daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily order revenue — the shared calendar-bounded series
-    (pipeline18._daily_rev twin, kept local so each module's frame
-    derivation is self-contained for the oracle reader)."""
-    orders = load(spark, sf_dir, "orders")
-    return orders.groupBy(
-        F.expr(
-            f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
-        ).alias("d")
-    ).agg(dsum(F.col("o_totalprice")).alias("y"))
 
 
 # --- Kruskal–Wallis rank ANOVA -------------------------------------------------
@@ -513,7 +487,7 @@ events_cochran_armitage_hour.__doc__ = (
 @query(
     "dq_grubbs_extreme_day",
     oracle=f"""
-    WITH {_DAILY_REV_SQL},
+    WITH {DAILY_REV_SQL},
     nn AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              {_OFOLD_SQL.format(term="y", key="d")} AS sy
@@ -559,7 +533,7 @@ def dq_grubbs_extreme_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two day-domain aggregate passes (mean, then centered
     moments — the floor-scaled convention needs ȳ first) and one
     day-domain top-1 sort (TakeOrderedAndProject)."""
-    daily = _daily_rev(spark, sf_dir)
+    daily = daily_rev(spark, sf_dir)
     nn = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         _ofold(F.col("y"), F.col("d")).alias("sy"),
@@ -784,7 +758,7 @@ _HL_BIN = 1000.0  # Walsh-average bin width for the two-phase median
 @query(
     "orders_hodges_lehmann",
     oracle=f"""
-    WITH {_DAILY_REV_SQL},
+    WITH {DAILY_REV_SQL},
     nd AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
              CAST(COUNT(*) * (COUNT(*) + 1) // 2 AS BIGINT) AS np
@@ -830,7 +804,7 @@ def orders_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins' rows rank — no single-partition sort of the pair frame (the
     oracle ranks globally; same order statistics). Row-proportional
     work is only the map-side daily aggregation."""
-    daily = _daily_rev(spark, sf_dir)
+    daily = daily_rev(spark, sf_dir)
     a = daily.select(F.col("d").alias("d1"), F.col("y").alias("y1"))
     b = daily.select(F.col("d").alias("d2"), F.col("y").alias("y2"))
     walsh = checkpoint(
@@ -1031,7 +1005,7 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "orders_durbin_watson",
     oracle=f"""
-    WITH {_DAILY_REV_SQL},
+    WITH {DAILY_REV_SQL},
     sums AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(d) AS BIGINT) AS sd,
@@ -1093,7 +1067,7 @@ def orders_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side daily rollup, one 5-aggregate reduce for the
     fit, one lag window + 2-aggregate reduce over the calendar
     domain."""
-    daily = _daily_rev(spark, sf_dir)
+    daily = daily_rev(spark, sf_dir)
     sums = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("d").cast("long").alias("sd"),

@@ -40,34 +40,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..ckpt import checkpoint
-from ..registry import (
-    DAY_US,
-    DSUM_SQL,
-    EPOCH_US_SQL,
-    OFOLD_SQL,
-    dsum,
-    ofold,
-    query,
-)
+from ..registry import OFOLD_SQL, ofold, query
 from ..tables import load
-
-
-_MWU_A, _MWU_B = "click", "purchase"  # the pipeline17 MWU group pair
-
-_DAILY_REV_SQL = f"""daily AS (
-      SELECT epoch_us(o_orderdate) // {DAY_US} AS d,
-             {DSUM_SQL.format(expr="o_totalprice")} AS y
-      FROM orders GROUP BY 1
-    )"""
-
-
-def _daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders")
-    return orders.groupBy(
-        F.expr(
-            f"{EPOCH_US_SQL.format(col='o_orderdate')} div {DAY_US}"
-        ).alias("d")
-    ).agg(dsum(F.col("o_totalprice")).alias("y"))
+from .pipeline17 import MWU_A, MWU_B, SEN_BIN
+from .pipeline18 import DAILY_REV_SQL, daily_rev
 
 
 # --- Mood's median test --------------------------------------------------------
@@ -230,11 +206,11 @@ def events_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH cells AS (
       SELECT value AS v,
-             CAST(SUM(CASE WHEN event_type = '{_MWU_A}' THEN 1 ELSE 0 END)
+             CAST(SUM(CASE WHEN event_type = '{MWU_A}' THEN 1 ELSE 0 END)
                   AS BIGINT) AS a,
-             CAST(SUM(CASE WHEN event_type = '{_MWU_B}' THEN 1 ELSE 0 END)
+             CAST(SUM(CASE WHEN event_type = '{MWU_B}' THEN 1 ELSE 0 END)
                   AS BIGINT) AS b
-      FROM events WHERE event_type IN ('{_MWU_A}', '{_MWU_B}')
+      FROM events WHERE event_type IN ('{MWU_A}', '{MWU_B}')
       GROUP BY 1
     ),
     cum AS (
@@ -283,13 +259,13 @@ def events_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side groupBy into the distinct-value domain, one
     domain window, one reduce."""
     ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(_MWU_A, _MWU_B)
+        F.col("event_type").isin(MWU_A, MWU_B)
     )
     cells = ev.groupBy(F.col("value").alias("v")).agg(
-        F.sum(F.when(F.col("event_type") == _MWU_A, 1).otherwise(0))
+        F.sum(F.when(F.col("event_type") == MWU_A, 1).otherwise(0))
         .cast("long")
         .alias("a"),
-        F.sum(F.when(F.col("event_type") == _MWU_B, 1).otherwise(0))
+        F.sum(F.when(F.col("event_type") == MWU_B, 1).otherwise(0))
         .cast("long")
         .alias("b"),
     )
@@ -328,8 +304,8 @@ def events_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 events_cliffs_delta.__doc__ = events_cliffs_delta.__doc__.replace(
-    "{A}", _MWU_A
-).replace("{B}", _MWU_B)
+    "{A}", MWU_A
+).replace("{B}", MWU_B)
 
 
 # --- Page's trend test ---------------------------------------------------------
@@ -338,7 +314,7 @@ events_cliffs_delta.__doc__ = events_cliffs_delta.__doc__.replace(
 @query(
     "orders_page_trend_test",
     oracle=f"""
-    WITH {_DAILY_REV_SQL},
+    WITH {DAILY_REV_SQL},
     wk AS (
       SELECT d // 7 AS w, d % 7 AS dow, y FROM daily
     ),
@@ -389,7 +365,7 @@ def orders_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-side daily rollup; ranks on the (week × 7) calendar
     domain; one reduce."""
-    daily = _daily_rev(spark, sf_dir)
+    daily = daily_rev(spark, sf_dir)
     wk = daily.select(
         F.expr("d div 7").alias("w"),
         (F.col("d") % 7).alias("dow"),
@@ -429,11 +405,11 @@ def orders_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH cells AS (
       SELECT value AS v,
-             CAST(SUM(CASE WHEN event_type = '{_MWU_A}' THEN 1 ELSE 0 END)
+             CAST(SUM(CASE WHEN event_type = '{MWU_A}' THEN 1 ELSE 0 END)
                   AS BIGINT) AS a,
-             CAST(SUM(CASE WHEN event_type = '{_MWU_B}' THEN 1 ELSE 0 END)
+             CAST(SUM(CASE WHEN event_type = '{MWU_B}' THEN 1 ELSE 0 END)
                   AS BIGINT) AS b
-      FROM events WHERE event_type IN ('{_MWU_A}', '{_MWU_B}')
+      FROM events WHERE event_type IN ('{MWU_A}', '{MWU_B}')
       GROUP BY 1
     ),
     cum AS (
@@ -527,13 +503,13 @@ def events_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side groupBy into distinct values; three window
     passes and two folds over that bounded domain; a 1-row reduce."""
     ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(_MWU_A, _MWU_B)
+        F.col("event_type").isin(MWU_A, MWU_B)
     )
     cells = ev.groupBy(F.col("value").alias("v")).agg(
-        F.sum(F.when(F.col("event_type") == _MWU_A, 1).otherwise(0))
+        F.sum(F.when(F.col("event_type") == MWU_A, 1).otherwise(0))
         .cast("long")
         .alias("a"),
-        F.sum(F.when(F.col("event_type") == _MWU_B, 1).otherwise(0))
+        F.sum(F.when(F.col("event_type") == MWU_B, 1).otherwise(0))
         .cast("long")
         .alias("b"),
     )
@@ -618,19 +594,16 @@ def events_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 events_brunner_munzel.__doc__ = events_brunner_munzel.__doc__.replace(
-    "{A}", _MWU_A
-).replace("{B}", _MWU_B)
+    "{A}", MWU_A
+).replace("{B}", MWU_B)
 
 
 # --- Theil–Sen slope confidence interval --------------------------------------
 
-_SEN_BIN = 1000.0  # slope-bin width (orders_theil_sen_trend's constant)
-
-
 @query(
     "orders_sen_slope_ci",
     oracle=f"""
-    WITH {_DAILY_REV_SQL},
+    WITH {DAILY_REV_SQL},
     nd AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
              CAST(COUNT(*) * (COUNT(*) - 1) // 2 AS BIGINT) AS np
@@ -700,7 +673,7 @@ def orders_sen_slope_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to orders_theil_sen_trend — days² pair universe
     is calendar-bounded, two-phase selection avoids any full sort of
     the pair frame, row-proportional work is the daily rollup."""
-    daily = _daily_rev(spark, sf_dir)
+    daily = daily_rev(spark, sf_dir)
     nd = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.expr("count(1) * (count(1) - 1) div 2")
@@ -756,7 +729,7 @@ def orders_sen_slope_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     binned = slopes.withColumn(
-        "sbin", F.floor(F.col("s") / _SEN_BIN).cast("long")
+        "sbin", F.floor(F.col("s") / SEN_BIN).cast("long")
     )
     per_bin = binned.groupBy("sbin").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")

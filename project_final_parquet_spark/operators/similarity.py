@@ -109,14 +109,21 @@ def sim_pairs_label_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     defeats codegen; the kernel replays the identical IEEE fold with no
     Python worker). Catalyst pushes the ``cosine >= 0.35`` filter into
     the join condition, so a pair that passes is scored twice: once
-    there and once in the projection."""
+    there and once in the projection.
+
+    The probe side is range-partitioned on ``vec_a`` before the
+    broadcast join, and the join keeps that partitioning, which
+    satisfies the ``(vec_a, vec_b)`` ordering: the final sort is local,
+    with no exchange above the join. Ordering the join's output instead
+    would sample it with a job of its own, which runs the whole join
+    and its scoring a second time (sf0.1: 1.15 → 0.59 CPU-s)."""
     emb = load(spark, sf_dir, "embeddings")
     a = emb.select(
         F.col("vec_id").alias("vec_a"),
         "label",
         F.col("embedding").alias("ea"),
         norm(F.col("embedding")).alias("na"),
-    )
+    ).repartitionByRange("vec_a")
     b = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col("label").alias("label_b"),

@@ -1,6 +1,7 @@
 """JVM vector kernels: the one embedding dot product (``dot``/``norm``,
 used by every similarity, retrieval and mining operator), pair cosine
-(``with_pair_cosine``) and the k-means assignment (``ml_kmeans``).
+(``with_pair_cosine``), and for ``ml_kmeans`` the assignment SQL
+function and the per-round statistics (``kmeans_stats``).
 
 Every double-precision embedding dot is the left fold
 
@@ -31,6 +32,13 @@ Scale note (100 TB): the kernel is linear in the elements it folds —
 the same asymptotics as the HOF. Candidate-pair volume stays bounded
 by the LSH/blocking design; this changes per-element cost only. The
 UDF carries no cross-row state.
+
+``kmeans_stats`` is not a SQL function but a static Java method called
+from the driver: one Lloyd round as one ``treeAggregate`` job over the
+query's rows, whose tasks return k×dim partial sums (a ``long[]``), and
+whose result comes back as one byte string. ``tests/test_ml_kmeans.py``
+asserts it equal, bit for bit, to the posexplode aggregation it
+replaced.
 """
 
 from __future__ import annotations
@@ -61,21 +69,64 @@ def dot(a, b):
     return F.call_function(VEC_DOT, a, b)
 
 
-def double_array_lit(a) -> Column:
-    """``F.lit`` of a 1-d float64 array (a plane, a projection row, the
-    k-means centroids), bit for bit (NaN and -0.0 included), built in one
-    py4j transfer: pyspark's numpy converter sets the Java array one
-    element per gateway call, and ``F.array`` of scalar literals makes
-    one call per element. Classes are resolved by fully-qualified name:
-    ``jvm.java.nio.ByteBuffer`` costs a failing class lookup per segment."""
-    sc = SparkSession.active().sparkContext
+def double_array(spark: SparkSession, a):
+    """A Java ``double[]`` holding the 1-d float64 array ``a``, bit for
+    bit (NaN and -0.0 included), built in one py4j transfer: pyspark's
+    numpy converter sets the Java array one element per gateway call.
+    Classes are resolved by fully-qualified name: ``jvm.java.nio.ByteBuffer``
+    costs a failing class lookup per segment."""
+    sc = spark.sparkContext
     jvm = sc._jvm
     data = np.asarray(a, dtype="<f8")
     jarr = sc._gateway.new_array(getattr(jvm, "double"), len(data))
     buf = getattr(jvm, "java.nio.ByteBuffer").wrap(bytearray(data.tobytes()))
     order = getattr(jvm, "java.nio.ByteOrder").LITTLE_ENDIAN
     buf.order(order).asDoubleBuffer().get(jarr)
-    return F.lit(jarr)
+    return jarr
+
+
+def double_array_lit(a) -> Column:
+    """``F.lit`` of a 1-d float64 array (a plane, a projection row, the
+    k-means centroids), from ``double_array``: ``F.array`` of scalar
+    literals makes one gateway call per element."""
+    return F.lit(double_array(SparkSession.active(), a))
+
+
+def kmeans_stats(
+    df: DataFrame,
+    column: str,
+    centroids: np.ndarray,
+    dist_scale: float,
+    sum_scale: float,
+) -> tuple[list[int], list[list[int | None]]]:
+    """One Lloyd round over the array column ``column`` of ``df`` in ONE
+    Spark job, through the ``kmeansStats`` JVM kernel: each row goes to
+    its nearest of the ``centroids`` (a k×dim float64 array, NaN for a
+    NULL dimension) by ``kmeans_assign``'s arithmetic. Returns the row
+    count per centroid position and, per (position, dim), the exact sum
+    of ``floor(v[d] * sum_scale)`` over the position's rows, NULL where
+    no row has a term (the SQL ``SUM``). The kernel's 128-bit sums come
+    back in one py4j transfer as a byte string."""
+    spark = df.sparkSession
+    k, dim = centroids.shape
+    raw = pme.call_static(
+        spark,
+        "sparkgraft.vec.VecKernels",
+        "kmeansStats",
+        df._jdf,
+        column,
+        double_array(spark, centroids.reshape(-1)),
+        dim,
+        float(dist_scale),
+        float(sum_scale),
+    )
+    stats = np.frombuffer(raw, "<i8")
+    cells = stats[k:].reshape(k, dim, 3).tolist()
+    sums = [
+        [(hi << 64) + (lo & 0xFFFF_FFFF_FFFF_FFFF) if n else None for n, hi, lo in row]
+        for row in cells
+    ]
+    return stats[:k].tolist(), sums
 
 
 def norm(a):

@@ -4,8 +4,13 @@ via the plans.audit utilities."""
 
 from __future__ import annotations
 
+import os
+
+import duckdb
+import pytest
+
 from project_final_parquet_spark.plans import plan_facts
-from project_final_parquet_spark.registry import all_queries
+from project_final_parquet_spark.registry import all_oracles, all_queries
 
 BIG_SF = "/root/testdata/sf0.01"
 
@@ -455,6 +460,27 @@ def test_pair_cosine_norms_hoisted_below_join(spark):
     p = physical_plan(all_queries()["sim_pairs_label_block"](spark, BIG_SF))
     assert re.search(r"\bna#\d+", p), "hoisted left-side norm column missing"
     assert re.search(r"\bnb#\d+", p), "hoisted right-side norm column missing"
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_pair_cosine_sorts_below_the_join(spark, sf, final_plan):
+    """sim_pairs_label_block range-partitions its probe side before the
+    broadcast join, so its (vec_a, vec_b) order needs no exchange above
+    the join: the one range exchange sits below BroadcastHashJoin, and
+    no sampling job runs the scored join a second time."""
+    sf_dir = os.path.join(os.path.dirname(BIG_SF), sf)
+    df = all_queries()["sim_pairs_label_block"](spark, sf_dir)
+    got = [tuple(r) for r in df.collect()]
+    plan = final_plan(df)
+    assert plan.count("rangepartitioning") == 1, plan
+    assert plan.index("BroadcastHashJoin") < plan.index("rangepartitioning"), plan
+
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    assert got == con.sql(all_oracles()["sim_pairs_label_block"]).fetchall()
 
 
 def test_dynamic_partition_pruning(spark):

@@ -167,3 +167,14 @@ def test_jvm_pme_read_takes_its_schema_from_the_encrypted_footer(
     assert df.schema == inferred.schema
     with pytest.raises(Exception, match="unknown master key"):
         pme.read_pme_distributed(spark, path, ["wrong-footer", "key-text", "key-meta"])
+
+
+def test_missing_build_dependency_is_named(tmp_path):
+    """A jar the JVM sources compile against that SPARK_HOME lacks fails
+    the build with the missing pattern in the message."""
+    (tmp_path / "spark-core_2.13-4.1.2.jar").touch()
+    assert pme._resolve_dep_jar(tmp_path, "spark-core_*.jar").endswith(
+        "spark-core_2.13-4.1.2.jar"
+    )
+    with pytest.raises(FileNotFoundError, match=r"'spark-catalyst_\*\.jar'"):
+        pme._resolve_dep_jar(tmp_path, "spark-catalyst_*.jar")

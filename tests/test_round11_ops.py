@@ -200,10 +200,10 @@ def test_ndcg_at_k_replay(spark):
     binary same-label gain, the embedded integer discounts."""
     import pandas as pd
 
+    from project_final_parquet_spark.operators.pipeline11 import N_QUERIES
     from project_final_parquet_spark.operators.pipeline15 import (
         _DISC,
         _IDCG_CUM,
-        _N_QUERIES,
         ml_ndcg_at_k,
     )
 
@@ -213,9 +213,9 @@ def test_ndcg_at_k_replay(spark):
     labels = pdf["label"].to_numpy()
     ids = pdf["vec_id"].to_numpy()
     norms = np.linalg.norm(v, axis=1)
-    corpus = ids >= _N_QUERIES
-    assert len(got) == _N_QUERIES
-    for qi in range(_N_QUERIES):
+    corpus = ids >= N_QUERIES
+    assert len(got) == N_QUERIES
+    for qi in range(N_QUERIES):
         q = v[ids == qi][0]
         qn = np.linalg.norm(q)
         cos = (v @ q) / (norms * qn)

@@ -18,9 +18,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from project_final_parquet_spark.operators.pipeline17 import (
+    MWU_A,
+    MWU_B,
     _HELL_BIN,
-    _MWU_A,
-    _MWU_B,
     _TAU_VBIN,
     _WCLIP_PCT,
     dq_cramers_v_type_dow,
@@ -145,8 +145,8 @@ def _avg_ranks(vals: np.ndarray) -> np.ndarray:
 def test_mann_whitney_replay(spark):
     """Exact replay at sf0.001: integer 2U, tie-corrected z."""
     pdf = _events_pdf()
-    a = pdf[pdf.event_type == _MWU_A]["value"].to_numpy()
-    b = pdf[pdf.event_type == _MWU_B]["value"].to_numpy()
+    a = pdf[pdf.event_type == MWU_A]["value"].to_numpy()
+    b = pdf[pdf.event_type == MWU_B]["value"].to_numpy()
     pool = np.concatenate([a, b])
     ranks = _avg_ranks(pool)
     n1, n2 = len(a), len(b)
@@ -800,14 +800,14 @@ def test_laspeyres_replay(spark):
     """Fixed-basket index replay at sf0.001 with the same floor-scaled
     sums; index of the base period itself must be exactly 1.0."""
     from project_final_parquet_spark.operators.pipeline17 import (
-        _PERIOD_US,
+        PERIOD_US,
         orders_laspeyres_price_index,
     )
 
     li = pd.read_parquet(f"{SF}/lineitem.parquet")
     period = (
         li["l_shipdate"].astype("datetime64[us]").astype("int64")
-        // _PERIOD_US
+        // PERIOD_US
     )
     li = li.assign(period=period)
     pp = (

@@ -23,8 +23,8 @@ from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from project_final_parquet_spark.operators.pipeline17 import (
-    _MWU_A,
-    _MWU_B,
+    MWU_A,
+    MWU_B,
     _TAU_VBIN,
     dq_tukey_outlier_fences,
     events_kendall_tau_hour,
@@ -35,7 +35,7 @@ from project_final_parquet_spark.operators.pipeline17 import (
 # 4-value domain => massive ties; a couple of larger magnitudes so the
 # winsorized/Tukey bins are not all identical
 _val = st.sampled_from([0.5, 1.0, 1.5, 2.0, 7.25, 151.0])
-_type = st.sampled_from([_MWU_A, _MWU_B, "view"])
+_type = st.sampled_from([MWU_A, MWU_B, "view"])
 _hour = st.integers(min_value=0, max_value=23)
 
 # NO degenerate-case filters (r12 verdict): empty MWU groups, all-tied
@@ -103,8 +103,8 @@ def test_rank_statistics_agree_with_bruteforce(spark, rows, tmp_path_factory):
     n = len(vals)
 
     # --- Mann–Whitney ---------------------------------------------------
-    a = [v for *_, t, v in data if t == _MWU_A]
-    b = [v for *_, t, v in data if t == _MWU_B]
+    a = [v for *_, t, v in data if t == MWU_A]
+    b = [v for *_, t, v in data if t == MWU_B]
     pool = a + b
     r = events_mann_whitney_u(spark, sf).collect()[0]
     if not pool:

@@ -13,11 +13,11 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from project_final_parquet_spark.operators.pipeline17 import (
+    MWU_A,
+    MWU_B,
     events_mann_whitney_u,
 )
 from project_final_parquet_spark.operators.pipeline20 import (
-    _MWU_A,
-    _MWU_B,
     events_brunner_munzel,
     events_cliffs_delta,
     events_mood_median_test,
@@ -84,10 +84,10 @@ def test_mood_median_replay(spark):
 def test_cliffs_delta_replay_and_mwu_identity(spark):
     pdf = _events_pdf()
     xa = np.sort(
-        pdf[pdf["event_type"] == _MWU_A]["value"].to_numpy()
+        pdf[pdf["event_type"] == MWU_A]["value"].to_numpy()
     )
     xb = np.sort(
-        pdf[pdf["event_type"] == _MWU_B]["value"].to_numpy()
+        pdf[pdf["event_type"] == MWU_B]["value"].to_numpy()
     )
     # counts via searchsorted (no pair materialization in the replay
     # either)
@@ -115,8 +115,8 @@ def test_cliffs_delta_replay_and_mwu_identity(spark):
 
 def test_brunner_munzel_replay(spark):
     pdf = _events_pdf()
-    va = pdf[pdf["event_type"] == _MWU_A]["value"].to_numpy()
-    vb = pdf[pdf["event_type"] == _MWU_B]["value"].to_numpy()
+    va = pdf[pdf["event_type"] == MWU_A]["value"].to_numpy()
+    vb = pdf[pdf["event_type"] == MWU_B]["value"].to_numpy()
     n1, n2 = len(va), len(vb)
     pooled = np.concatenate([va, vb])
     pr = pd.Series(pooled).rank(method="average").to_numpy()
@@ -221,7 +221,7 @@ def test_degenerate_effect_sizes(spark, tmp_path_factory):
             i,
             dt.datetime(2024, 1, 4, 6) + dt.timedelta(hours=i),
             i,
-            [_MWU_A, _MWU_B][i % 2],
+            [MWU_A, MWU_B][i % 2],
             3.0,
         )
         for i in range(10)
@@ -242,7 +242,7 @@ def test_degenerate_effect_sizes(spark, tmp_path_factory):
             i,
             dt.datetime(2024, 1, 4, 6) + dt.timedelta(hours=i),
             i,
-            _MWU_A,
+            MWU_A,
             float(i),
         )
         for i in range(6)
